@@ -35,6 +35,7 @@ from my_weather_spark.llm import lm as llm_lm
 from my_weather_spark.llm import packing as llm_packing
 from my_weather_spark import streaming as streaming_mod
 from my_weather_spark.model import UtcPeriod, MEASUREMENT_TYPES
+from my_weather_spark.session import local_frame
 from my_weather_spark.sources.heartbeat import synthetic_series
 
 
@@ -1811,10 +1812,13 @@ def heartbeat_series(spark, sf_dir):
 )
 def order_restore(spark, sf_dir):
     """J2/J3/O1: manifest with query_index carried as data; order
-    restored at the edge by orderBy(query_index)."""
+    restored at the edge by orderBy(query_index). The manifest is a
+    LocalRelation, as in TsEngine.evaluate."""
     e = load_table(spark, sf_dir, "events")
-    manifest = spark.createDataFrame(
-        [(0, "error"), (1, "click"), (2, "view")], "query_index int, event_type string"
+    manifest = local_frame(
+        spark,
+        [(0, "error"), (1, "click"), (2, "view")],
+        "query_index int, event_type string",
     )
     return (
         e.join(F.broadcast(manifest), "event_type")

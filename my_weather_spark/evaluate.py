@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from my_weather_spark.model import SeriesRef, UtcPeriod
-from my_weather_spark.session import EngineSession
+from my_weather_spark.session import EngineSession, local_frame
 from my_weather_spark.store import TsStore
 
 STORE_SCHEME = "shyft"
@@ -93,9 +93,13 @@ class TsEngine:
                     & (F.col("ts") <= F.lit(period.end))
                 )
             # Re-attach query indices: duplicates fan out via the
-            # manifest join (broadcast — the manifest is tiny).
-            manifest = self.spark.createDataFrame(
-                [(i, refs[i].url) for i in idxs], "query_index int, series_id string"
+            # manifest join (broadcast — the manifest is tiny). The
+            # manifest is a LocalRelation: built as a Python RDD it cost
+            # a Python-worker job on every query just to ship its rows.
+            manifest = local_frame(
+                self.spark,
+                [(i, refs[i].url) for i in idxs],
+                "query_index int, series_id string",
             )
             parts.append(data.join(F.broadcast(manifest), "series_id", "inner"))
 

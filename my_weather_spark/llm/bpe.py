@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from my_weather_spark.llm.text import _words
 from my_weather_spark.ops.timeseries import round6_portable
+from my_weather_spark.session import local_frame
 
 # Per-symbol wrappers: C0 control bytes that real text never carries
 # (words containing them are filtered out on both engines). Wrapping
@@ -326,8 +327,8 @@ def learn_bpe(
 def merge_table(spark, merges) -> DataFrame:
     """learn_bpe's merge list as a DataFrame (step, lhs, rhs, merged,
     pair_freq) — T rows of driver metadata lifted back."""
-    return spark.createDataFrame(
-        merges, "step int, lhs string, rhs string, merged string, pair_freq long"
+    return local_frame(
+        spark, merges, "step int, lhs string, rhs string, merged string, pair_freq long"
     )
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from my_weather_spark.llm._util import fan_out as _fan_out
 from my_weather_spark.ops.timeseries import round6_portable
+from my_weather_spark.session import local_frame
 
 
 # ----------------------------------------------------------------------
@@ -236,9 +237,11 @@ def minhash_lsh_pairs(
     # not a window (a window over (band, band_key) would sort-shuffle
     # every band row just to learn its bucket size). The hot table is
     # tiny (≤ corpus/max_bucket rows, empty on healthy data) and is
-    # consumed by every band branch below — materialize it once, with
-    # the hub's full key vector attached (needed to suppress star
-    # pairs already emitted by an earlier band).
+    # consumed by every band branch below — collect it once, with the
+    # hub's full key vector attached (needed to suppress star pairs
+    # already emitted by an earlier band), into a LocalRelation:
+    # branches then carry no copy of the signature plan, and Catalyst
+    # prunes the hub joins and star branches when it is empty.
     tall = wide.select(
         F.col(id_col), F.posexplode("_keys").alias("band", "band_key")
     )
@@ -253,8 +256,8 @@ def minhash_lsh_pairs(
             ),
             "_hub",
         )
-        .localCheckpoint(eager=True)
     )
+    hot = local_frame(df.sparkSession, hot.collect(), hot.schema)
     # Tag every doc with its per-band hub (NULL = that band's bucket is
     # small): n_bands broadcast left-joins against the tiny hot table —
     # the wide rows are never shuffled for the guard.

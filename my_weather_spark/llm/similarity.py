@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from my_weather_spark.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-double dot product of two array columns."""
@@ -383,7 +385,7 @@ def _centroid_matrix(centroids: DataFrame, id_col: str, vec_col: str):
 
 def _centroids_df(spark, mat, vec_col: str) -> DataFrame:
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(mat)]
-    return spark.createDataFrame(rows, f"centroid_id long, {vec_col} array<double>")
+    return local_frame(spark, rows, f"centroid_id long, {vec_col} array<double>")
 
 
 def ivf_centroids(
@@ -605,8 +607,8 @@ def ivf_topk(
             )
     # the query side's OWN vector type: forcing float32 here would
     # truncate double embeddings and let near-tied neighbors swap ranks
-    qprobe = spark.createDataFrame(
-        probe_rows, f"query_id {q_id_type}, centroid_id long, _qv {q_vec_type}"
+    qprobe = local_frame(
+        spark, probe_rows, f"query_id {q_id_type}, centroid_id long, _qv {q_vec_type}"
     )
     # Literal IN-list on the partition column: guarantees static
     # partition pruning at the parquet scan (PartitionFilters), beyond

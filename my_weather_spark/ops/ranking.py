@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from my_weather_spark.session import local_frame
+
 
 def global_row_number(
     df: DataFrame,
@@ -81,8 +83,8 @@ def global_row_number(
             yield pdf
 
     numbered = parted.mapInPandas(_number, schema=schema_out)
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
+    off_df = local_frame(
+        spark, [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
     )
     out = (
         numbered.join(F.broadcast(off_df), "_pid")
@@ -158,10 +160,10 @@ def grouped_prefix_sum(
         .orderBy("_pid")
         .rowsBetween(W.unboundedPreceding, -1)
     )
+    # NULL while the group has no non-NULL value in earlier partitions
+    # (the window's sum is NULL until its first non-NULL value too).
     offsets = partials.select(
-        "_pid",
-        "_pgk",
-        F.coalesce(F.sum("_s").over(w_off), F.lit(0)).alias("_off"),
+        "_pid", "_pgk", F.sum("_s").over(w_off).alias("_off")
     )
 
     gcols = list(group_by)
@@ -180,11 +182,21 @@ def grouped_prefix_sum(
         def _norm_key(row):
             return tuple(None if pd.isna(x) else x for x in row)
 
+        # NULL values are skipped like the window's sum skips them: a
+        # row's sum is NULL only while its group has seen no value yet,
+        # so sum the filled values and count the non-NULL ones.
         carry_key = None
         carry_val = 0
+        carry_seen = 0
         for pdf in batches:
             pdf = pdf.copy()
-            local = pdf.groupby(gcols, sort=False, dropna=False)[value_col].cumsum()
+            v = pdf[value_col]
+            runs = (
+                pdf.assign(_v=v.fillna(0), _n=v.notna())
+                .groupby(gcols, sort=False, dropna=False)[["_v", "_n"]]
+                .cumsum()
+            )
+            local, seen = runs["_v"], runs["_n"]
             if carry_key is not None and len(pdf):
                 first = _norm_key(pdf.iloc[0][gcols])
                 if first == carry_key:
@@ -198,10 +210,12 @@ def grouped_prefix_sum(
                         mask = m if mask is None else (mask & m)
                     run = (~mask).argmax() if not mask.all() else len(pdf)
                     local.iloc[:run] = local.iloc[:run] + carry_val
+                    seen.iloc[:run] = seen.iloc[:run] + carry_seen
             if len(pdf):
                 carry_key = _norm_key(pdf.iloc[-1][gcols])
                 carry_val = local.iloc[-1]
-            pdf["_local"] = local
+                carry_seen = seen.iloc[-1]
+            pdf["_local"] = local.where(seen > 0)
             yield pdf
 
     schema_out = StructType(
@@ -211,7 +225,12 @@ def grouped_prefix_sum(
     return (
         local.withColumn("_pgk", F.struct(*group_by))
         .join(F.broadcast(offsets), ["_pid", "_pgk"])
-        .withColumn(out_col, F.col("_local") + F.col("_off"))
+        .withColumn(
+            out_col,
+            F.coalesce(
+                F.col("_local") + F.col("_off"), F.col("_local"), F.col("_off")
+            ),
+        )
         .drop("_pid", "_pgk", "_local", "_off")
     )
 

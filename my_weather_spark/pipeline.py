@@ -90,18 +90,16 @@ class DataCollectionTask:
         """One read->store cycle; returns number of points stored."""
         period = self.period_spec.period(now)
         result = self.engine.evaluate(self.read_ts, period)
-        # Rebind query ids -> store ids positionally (J2 zip join by
-        # index; reference: data_collection_task.py:121-126).
-        mapping = self.engine.spark.createDataFrame(
-            list(enumerate(self.store_ts)), "query_index int, store_id string"
-        )
-        bound = (
-            result.join(F.broadcast(mapping), "query_index", "inner")
-            .select(
-                F.col("store_id").alias("series_id"),
-                "ts",
-                "value",
-            )
+        # Rebind query ids -> store ids positionally (reference:
+        # data_collection_task.py:121-126). query_index is a dense
+        # position, so a literal-array lookup does it with no join: a
+        # mapping frame built as a Python RDD cost a Python-worker job
+        # on every cycle just to ship its rows.
+        store_ids = F.array(*[F.lit(s) for s in self.store_ts])
+        bound = result.select(
+            F.element_at(store_ids, F.col("query_index") + 1).alias("series_id"),
+            "ts",
+            "value",
         )
         # materialize once: count + store must not re-run the source
         # read (a paginated rate-limited fetch would double its calls)

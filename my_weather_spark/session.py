@@ -14,12 +14,68 @@ Arrow is enabled for the few pandas-UDF code paths.
 from __future__ import annotations
 
 import os
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:
     from my_weather_spark.sources.base import SourceAdapter
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` if set, else half
+    of physical memory in MiB (at least 1 GiB).
+
+    In local mode the driver JVM holds every task, so its heap is the
+    one memory knob. A fixed size larger than the host lets the heap
+    grow without collecting until the kernel kills the process; half
+    of RAM leaves room for the JVM's off-heap use and the Python side.
+    """
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, total // 2 // (1 << 20))}m"
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-side table as a JVM ``LocalRelation``.
+
+    Takes the same (rows, schema) as ``spark.createDataFrame``. A list
+    input plans a Python RDD scan, so every action over it runs a
+    Python-worker job just to ship a handful of rows. An Arrow table is
+    handed to the JVM whole and plans a ``LocalTableScan``, also when
+    ``spark.sql.execution.arrow.pyspark.enabled`` is off (a pandas
+    input would fall back to the RDD path there).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def python_rdd_scans(df: DataFrame) -> int:
+    """Number of scans in ``df``'s optimized plan that read a Python RDD
+    (a ``createDataFrame(list)`` frame). A ``localCheckpoint`` scan is a
+    ``LogicalRDD`` too, but its lineage ends at the checkpoint."""
+    jvm = df.sparkSession._jvm
+    leaves = jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    )
+    return sum(
+        1
+        for leaf in leaves
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+        and "PythonRDD" in leaf.rdd().toDebugString()
+    )
 
 
 def get_spark(
@@ -62,7 +118,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # local mode = driver-only JVM: driver memory is THE memory knob
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from my_weather_spark.domain import Domain
 from my_weather_spark.model import SeriesRef, TSINFO_SCHEMA, UtcPeriod, parse_query_id
+from my_weather_spark.session import local_frame
 from my_weather_spark.sources.base import SourceAdapter
 from my_weather_spark.sources.file_source import ChunkedFileAdapter
 
@@ -74,7 +75,8 @@ class DomainAdapter(SourceAdapter):
                 spark, [SeriesRef.parse(s) for s in store_ids], period
             )
             # rebind store ids -> original query urls (J2 by identity)
-            mapping = spark.createDataFrame(
+            mapping = local_frame(
+                spark,
                 [(m["store_id"], ref.url) for ref, m in entries],
                 "series_id string, query_url string",
             )
@@ -118,7 +120,7 @@ class DomainAdapter(SourceAdapter):
             )
             for m in rows
         ]
-        return spark.createDataFrame(info, TSINFO_SCHEMA)
+        return local_frame(spark, info, TSINFO_SCHEMA)
 
     def healthy(self, spark: SparkSession) -> bool:
         try:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from my_weather_spark.model import SeriesRef, TSINFO_SCHEMA, UtcPeriod
+from my_weather_spark.session import local_frame
 from my_weather_spark.sources.base import SourceAdapter
 
 
@@ -32,7 +33,7 @@ def synthetic_series(
     Generation is chunked by day so a multi-year heartbeat doesn't
     materialize one monster array per series in a single task.
     """
-    ids = spark.createDataFrame([(s,) for s in series_ids], "series_id string")
+    ids = local_frame(spark, [(s,) for s in series_ids], "series_id string")
     days = spark.sql(
         "SELECT explode(sequence(to_date(:s), to_date(:e), interval 1 day)) AS day",
         args={"s": period.start.isoformat(), "e": period.end.isoformat()},
@@ -81,4 +82,4 @@ class HeartbeatAdapter(SourceAdapter):
 
     def find(self, spark, query: SeriesRef) -> DataFrame:
         row = [(query.url, "instant", float(self.dt_seconds), "UTC", None, None, None, None)]
-        return spark.createDataFrame(row, TSINFO_SCHEMA)
+        return local_frame(spark, row, TSINFO_SCHEMA)

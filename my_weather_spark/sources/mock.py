@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from my_weather_spark.model import SeriesRef, TSINFO_SCHEMA, UtcPeriod
+from my_weather_spark.session import local_frame
 from my_weather_spark.sources.base import SourceAdapter
 from my_weather_spark.sources.heartbeat import synthetic_series
 
@@ -35,4 +36,4 @@ class MockAdapter(SourceAdapter):
 
     def find(self, spark, query: SeriesRef) -> DataFrame:
         row = [(query.url, "instant", float(self.dt_seconds), "UTC", None, None, None, None)]
-        return spark.createDataFrame(row, TSINFO_SCHEMA)
+        return local_frame(spark, row, TSINFO_SCHEMA)

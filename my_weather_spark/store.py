@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from my_weather_spark.model import OBSERVATION_SCHEMA, UtcPeriod
 from my_weather_spark.ops.timeseries import merge_dedup, period_filter
+from my_weather_spark.session import local_frame
 
 PARTITION_COLS = ["source", "date"]
 
@@ -113,8 +114,8 @@ class TsStore:
             else:
                 # large vectors: a giant IN-list bloats the plan and
                 # never pushes down — broadcast semi-join instead
-                ids = self.spark.createDataFrame(
-                    [(s,) for s in set(series_ids)], "series_id string"
+                ids = local_frame(
+                    self.spark, [(s,) for s in set(series_ids)], "series_id string"
                 )
                 df = df.join(F.broadcast(ids), "series_id", "left_semi")
         return df.select("series_id", "ts", "value", "ingest_time")

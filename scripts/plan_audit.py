@@ -10,6 +10,12 @@ Checks per query (on the optimized physical plan at sf0.01):
   the query is on the documented allowlist (heartbeat's ids x days
   chunk manifest is intentional and tiny; scalar-subquery one-row
   broadcasts are comparisons, not blowups).
+- NO_PYTHON_RDD_SCAN: no scan of a Python RDD (a ``createDataFrame``
+  over a Python list; read from the optimized logical plan's leaves)
+  unless the query is on the documented allowlist.
+  Every action over such a scan runs a Python-worker job just to ship
+  its rows; small driver-side tables go through
+  ``session.local_frame`` (a JVM LocalRelation) instead.
 - Per-query expectations (EXPECT below): broadcast joins on dimension
   tables, pushed parquet filters where the query is selective.
 
@@ -36,7 +42,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from my_weather_spark.session import get_spark
+from my_weather_spark.session import get_spark, python_rdd_scans
 
 # Queries allowed to contain a nested-loop/cartesian (documented why).
 CARTESIAN_OK = {
@@ -84,6 +90,11 @@ CARTESIAN_OK = {
     "knn_bruteforce",
 }
 
+# Queries allowed to scan a Python RDD: scalar-function probes over a
+# fixed literal input (the list IS the test vector, and the frame is
+# built once per query, not per dashboard request).
+PYTHON_RDD_OK = {"f1_camel_to_snake", "f2_ascii_clean"}
+
 # Per-query positive expectations: substrings that MUST appear in the
 # formatted plan.
 EXPECT: dict[str, list[str]] = {
@@ -114,10 +125,12 @@ EXPECT: dict[str, list[str]] = {
 }
 
 
-def audit(name: str, plan: str) -> list[str]:
+def audit(name: str, plan: str, python_scans: int) -> list[str]:
     problems = []
     if "BatchEvalPython" in plan:
         problems.append("row-at-a-time Python UDF (BatchEvalPython)")
+    if python_scans and name not in PYTHON_RDD_OK:
+        problems.append("Python RDD scan outside allowlist")
     if name not in CARTESIAN_OK and (
         "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
     ):
@@ -167,9 +180,10 @@ def main() -> None:
         "evidence must never be stale, even when no plan changed).",
         "",
         f"Scale dir: {sf_dir}. Checks: no row-at-a-time Python UDFs,",
-        "no undeclared cartesian joins, plus per-query broadcast /",
-        "pushdown expectations. Notes record positive evidence",
-        "(broadcast joins, pushed parquet filters, Arrow maps).",
+        "no undeclared cartesian joins, no undeclared Python RDD scans,",
+        "plus per-query broadcast / pushdown expectations. Notes record",
+        "positive evidence (broadcast joins, pushed parquet filters, Arrow",
+        "maps).",
         "(Generated by scripts/plan_audit.py — regenerate after plan",
         "changes.)",
         "",
@@ -190,7 +204,7 @@ def main() -> None:
             bad += 1
             print(f"ERROR {name}: {exc}", flush=True)
             continue
-        problems = audit(name, plan)
+        problems = audit(name, plan, python_rdd_scans(df))
         if problems:
             bad += 1
             lines.append(f"| {name} | **FAIL** | {'; '.join(problems)} |")

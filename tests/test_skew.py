@@ -341,7 +341,8 @@ def test_sliding_range_count_group_in_id_cols(spark):
 def test_grouped_prefix_sum_null_groups_match_window(spark):
     # NULL-group rows must neither vanish (the offsets join is now
     # null-safe) nor lose their cumsum (pandas groupby dropna=False,
-    # NaN-aware carry across Arrow batches).
+    # NaN-aware carry across Arrow batches). NULL *values* are skipped
+    # like the window's sum skips them, also when a batch ends on one.
     import random
 
     from pyspark.sql import Window as W
@@ -350,26 +351,29 @@ def test_grouped_prefix_sum_null_groups_match_window(spark):
     from my_weather_spark.ops import ranking
 
     rng = random.Random(3)
-    rows = [
+    random_groups = [
         (i, rng.choice(["a", "b", None]), rng.randrange(-50, 50))
         for i in range(301)
     ]
-    df = spark.createDataFrame(rows, "id long, g string, v long")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-    try:
-        got = ranking.grouped_prefix_sum(
-            df, ["g"], ["id"], "v", out_col="cum", num_partitions=4
-        ).select("id", "g", "v", "cum")
-        w = (
-            W.partitionBy("g")
-            .orderBy("id")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        want = df.withColumn("cum", F.sum("v").over(w)).select("id", "g", "v", "cum")
-        assert got.count() == df.count()
-        assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
-    finally:
-        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    null_values = [(i, "a", v) for i, v in enumerate([5, 7, None, 9, 8, None, 4])]
+    cases = [
+        # (rows, maxRecordsPerBatch, partitions)
+        (random_groups, 16, 4),
+        (null_values, 2, 1),
+    ]
+    w = W.partitionBy("g").orderBy("id").rowsBetween(W.unboundedPreceding, W.currentRow)
+    for rows, batch, parts in cases:
+        df = spark.createDataFrame(rows, "id long, g string, v long")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+        try:
+            got = ranking.grouped_prefix_sum(
+                df, ["g"], ["id"], "v", out_col="cum", num_partitions=parts
+            ).select("id", "g", "v", "cum")
+            want = df.withColumn("cum", F.sum("v").over(w)).select("id", "g", "v", "cum")
+            assert got.count() == df.count()
+            assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
+        finally:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
 
 def test_grouped_lag_matches_window(spark):

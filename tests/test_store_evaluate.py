@@ -236,6 +236,96 @@ def test_incremental_collection_idempotent(spark, engine):
     assert all(r["value"] == 7.0 for r in second[:5])
 
 
+def test_collection_duplicate_read_ref_feeds_both_store_ids(engine):
+    # one read ref listed twice under two store ids: the positional
+    # rebind delivers its points to both
+    read_ids = ["mock1://station/3", "mock1://station/5", "mock1://station/3"]
+    store_ids = ["shyft://dup/a", "shyft://dup/b", "shyft://dup/c"]
+    task = DataCollectionTask(
+        "dup", engine, read_ids, store_ids,
+        DataCollectionPeriodAbsolute(_dt(0), _dt(9)),
+    )
+    assert task.collect(now=_dt(100)) == 30
+    values = {}
+    for r in engine.evaluate(store_ids, UtcPeriod(0, 9)).collect():
+        values.setdefault(r["series_id"], []).append(r["value"])
+    assert values == {
+        "shyft://dup/a": [3.0] * 10,
+        "shyft://dup/b": [5.0] * 10,
+        "shyft://dup/c": [3.0] * 10,
+    }
+
+
+def test_query_path_reads_no_python_rdd(spark, engine, tmp_path, monkeypatch):
+    # Small driver-side tables on the query path (evaluate's manifest,
+    # the collection rebind, the store's id semi-join, the heartbeat
+    # ids, the domain rebind) must be LocalRelations: a Python RDD scan
+    # runs a Python-worker job on every query. Checked with Arrow off,
+    # the session __spark_entry__ runs in.
+    from my_weather_spark.domain import Domain
+    from my_weather_spark.model import SeriesRef, create_query_id
+    from my_weather_spark.session import python_rdd_scans
+    from my_weather_spark.sources.domain_source import DomainAdapter
+    from my_weather_spark.sources.file_source import ChunkedFileAdapter
+    from tests.test_domain import MOCK_STATIONS
+
+    sid = "shyft://plans/s/m/t"
+    engine.store_ts(
+        spark.createDataFrame(
+            [(sid, _dt(i), float(i)) for i in range(5)],
+            "series_id string, ts timestamp, value double",
+        ),
+        ingest_time=_dt(1000),
+    )
+    dom = Domain(spark, MOCK_STATIONS)
+    backing_path = str(tmp_path / "cloud")
+    spark.createDataFrame(
+        [(r["store_id"], _dt(0), 1.0) for r in dom.measurements.collect()],
+        "series_id string, ts timestamp, value double",
+    ).write.parquet(backing_path)
+    domain = DomainAdapter("netatmo", dom, ChunkedFileAdapter("shyft", backing_path))
+    qid = create_query_id("netatmo", "Superstation", "Livingroom", "Temperature")
+    period = UtcPeriod(0, 9)
+
+    frame_cls = type(spark.range(1))
+    checkpoint = frame_cls.localCheckpoint
+    checkpointed: list[int] = []
+
+    def recording_checkpoint(self, *args, **kwargs):
+        checkpointed.append(python_rdd_scans(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        frames = {
+            "evaluate store refs": engine.evaluate([sid, sid], period),
+            "evaluate adapter refs": engine.evaluate(
+                ["mock1://a/1", "heartbeat://h"], period
+            ),
+            "store scan, 201 ids": engine.store.scan(
+                series_ids=[sid] + [f"shyft://plans/none{i}" for i in range(200)],
+                period=period,
+            ),
+            "heartbeat read": HeartbeatAdapter().read(
+                spark, [SeriesRef.parse("heartbeat://h")], period
+            ),
+            "domain read": domain.read(spark, [SeriesRef.parse(qid)], period),
+        }
+        assert {k: python_rdd_scans(df) for k, df in frames.items()} == dict.fromkeys(
+            frames, 0
+        )
+        DataCollectionTask(
+            "plans", engine, ["mock1://a/1"], ["shyft://plans/c"],
+            DataCollectionPeriodAbsolute(_dt(0), _dt(9)),
+        ).collect(now=_dt(100))
+        assert checkpointed and set(checkpointed) == {0}
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_engine_healthy(engine):
     assert engine.healthy()
 
