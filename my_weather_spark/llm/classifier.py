@@ -118,22 +118,6 @@ def _model_from_feats(feats: DataFrame, dim: int, alpha: float) -> DataFrame:
     return checked.select(lr.alias("_lr"), "_prior")
 
 
-def nb_model(
-    docs: DataFrame,
-    pos: Column,
-    dim: int = DEFAULT_DIM,
-    alpha: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Standalone model builder (see _model_from_feats for the output
-    contract). nb_scores does NOT call this — it checkpoints the
-    feature frame once and derives model + scores from it."""
-    return _model_from_feats(
-        _featured(docs, pos, dim, text_col, id_col), dim, alpha
-    )
-
-
 def nb_scores(
     docs: DataFrame,
     pos: Column,

@@ -30,6 +30,7 @@ from operator import add
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from my_weather_spark.llm._util import bucket_pairs
 from my_weather_spark.llm._util import fan_out as _fan_out
 from my_weather_spark.ops.timeseries import round6_portable
 from my_weather_spark.session import local_frame
@@ -77,16 +78,6 @@ def md5_prefix_long(col, hex_chars: int):
     return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("long")
 
 
-def word_set(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, word) distinct pairs; single-space tokenization to stay
-    engine-portable."""
-    return (
-        df.select(id_col, F.explode(F.split(F.col(text_col), r"\s+")).alias("word"))
-        .where(F.col("word") != "")
-        .distinct()
-    )
-
-
 # ----------------------------------------------------------------------
 # MinHash signatures + LSH banding.
 #
@@ -128,24 +119,29 @@ def minhash_signatures(
     pass over the corpus instead of an exploded
     (docs x words x hashes) shuffle.
     """
-    wide = _minhash_band_keys(df, num_hashes, band_size, text_col, id_col)
-    return wide.select(
+    # posexplode the key expression in the SAME projection as the
+    # signature: exploding a separately projected wide key column lets
+    # Catalyst collapse the signature into every band's slice lambda
+    # (one md5 + 16-hash rebuild per band, plus one more for the
+    # inferred size(_keys) > 0 filter): 9.5 s against 1.2 s at sf0.1.
+    return _minhash_sigs(df, num_hashes, band_size, text_col, id_col).select(
         F.col(id_col),
-        F.posexplode("_keys").alias("band", "band_key"),
+        F.posexplode(_band_keys(num_hashes, band_size)).alias("band", "band_key"),
     )
 
 
-def _minhash_band_keys(
+def _minhash_sigs(
     df: DataFrame,
     num_hashes: int,
     band_size: int,
     text_col: str,
     id_col: str,
 ) -> DataFrame:
-    """WIDE band-key layout: (id, _keys) with ``_keys[b]`` the band-b
-    key. ``minhash_signatures`` posexplodes this into the tall layout;
-    ``minhash_lsh_pairs`` keeps it wide so each candidate join can see
-    every band's key on one row (exactly-once pair emission)."""
+    """(id, _sigs): the ``num_hashes`` minhash signature of every doc
+    with at least one word. :func:`_band_keys` turns ``_sigs`` into the
+    per-band keys: posexploded by ``minhash_signatures`` (tall layout),
+    kept as one array by ``minhash_lsh_pairs`` (wide layout, so each
+    candidate join sees every band's key on one row)."""
     if num_hashes > len(_MINHASH_A):
         raise ValueError(f"at most {len(_MINHASH_A)} hash functions supported")
     if num_hashes % band_size != 0:
@@ -154,7 +150,6 @@ def _minhash_band_keys(
             f"{band_size} — a remainder band would be silently dropped"
         )
     df = _fan_out(df)
-    n_bands = num_hashes // band_size
     a_arr = F.array(*[F.lit(a) for a in _MINHASH_A[:num_hashes]])
     b_arr = F.array(*[F.lit(b) for b in _MINHASH_B[:num_hashes]])
     words = word_array(text_col)
@@ -179,19 +174,21 @@ def _minhash_band_keys(
             )
         ),
     )
-    with_sigs = with_h.select(F.col(id_col), sigs.alias("_sigs"))
-    return with_sigs.select(
-        F.col(id_col),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda b: F.array_join(
-                F.transform(
-                    F.slice(F.col("_sigs"), b * band_size + 1, band_size),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
+    return with_h.select(F.col(id_col), sigs.alias("_sigs"))
+
+
+def _band_keys(num_hashes: int, band_size: int):
+    """Band-key array over ``_sigs``: element b joins band b's
+    ``band_size`` signature values into one comma-separated key."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes // band_size - 1)),
+        lambda b: F.array_join(
+            F.transform(
+                F.slice(F.col("_sigs"), b * band_size + 1, band_size),
+                lambda x: x.cast("string"),
             ),
-        ).alias("_keys"),
+            ",",
+        ),
     )
 
 
@@ -230,9 +227,11 @@ def minhash_lsh_pairs(
     # pass — Catalyst can't exchange-reuse the subtrees because
     # different filters/projections get pushed into each.
     n_bands = num_hashes // band_size
-    wide = _minhash_band_keys(
-        df, num_hashes, band_size, text_col, id_col
-    ).localCheckpoint(eager=True)
+    wide = (
+        _minhash_sigs(df, num_hashes, band_size, text_col, id_col)
+        .select(F.col(id_col), _band_keys(num_hashes, band_size).alias("_keys"))
+        .localCheckpoint(eager=True)
+    )
     # Hot-bucket detection via ONE aggregate over the exploded keys,
     # not a window (a window over (band, band_key) would sort-shuffle
     # every band row just to learn its bucket size). The hot table is
@@ -341,62 +340,6 @@ def minhash_lsh_pairs(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-# ----------------------------------------------------------------------
-# Exact n-gram Jaccard (the verify step after LSH, or scoped all-pairs).
-def jaccard_pairs(
-    df: DataFrame,
-    pair_scope_col: str | None = None,
-    min_jaccard: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact word-set Jaccard for doc pairs.
-
-    ``pair_scope_col``: restrict candidate pairs to docs sharing this
-    column (e.g. 'source') — the scoped variant of all-pairs for when
-    an LSH pass isn't warranted. At 100 TB you'd feed LSH candidates
-    instead (join with minhash_lsh_pairs output).
-    """
-    # Build the per-doc distinct word array IN-ROW and materialize it
-    # once: explode(array_distinct(...)) is row-for-row the same set
-    # word_set's explode->distinct produces, but needs no distinct
-    # shuffle, and the three consumers below (sizes + both join sides)
-    # would each replay the parse otherwise. Docs with zero words
-    # yield no exploded rows and never reach the inner size-joins —
-    # exactly as before.
-    scope_cols = [pair_scope_col] if pair_scope_col else []
-    d = df.select(
-        F.col(id_col), *scope_cols, word_array(text_col).alias("_ws")
-    ).localCheckpoint(eager=True)
-    sizes = d.select(F.col(id_col), F.size("_ws").alias("n_words"))
-    words = d.select(
-        F.col(id_col), *scope_cols, F.explode("_ws").alias("word")
-    )
-    inter_keys = ["word", *scope_cols]
-    a = words.select(*[F.col(c) for c in inter_keys], F.col(id_col).alias("doc_a"))
-    b = words.select(*[F.col(c) for c in inter_keys], F.col(id_col).alias("doc_b"))
-    inter = (
-        a.join(b, inter_keys)
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_words").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_words").alias("n_b"))
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            round6_portable(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ),
-        )
-        .where(F.col("jaccard") >= min_jaccard)
-    )
-    return out.select("doc_a", "doc_b", "jaccard")
 
 
 # ----------------------------------------------------------------------
@@ -585,16 +528,12 @@ def jaccard_pairs_dense(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Array-based exact Jaccard: self-join docs within the scope
-    group, intersect word-set ARRAYS in-row (array_intersect).
-
-    Chooses the opposite trade-off from :func:`jaccard_pairs`: the
-    explode-join shape wins when vocabulary is large and overlap is
-    sparse (few docs share a word); this dense shape wins when groups
-    are small and vocabulary is dense (every doc shares words with
-    every other, so the word-level join explodes quadratically anyway
-    and per-pair array intersection is cheaper than shuffling the
-    exploded word pairs).
+    """Exact word-set Jaccard for every doc pair sharing
+    ``pair_scope_col`` (e.g. 'source'): self-join docs within the scope
+    group, intersect word-set ARRAYS in-row (array_intersect). The
+    scoped all-pairs variant, for when an LSH pass isn't warranted; at
+    corpus scale feed LSH candidates to :func:`jaccard_for_candidates`
+    instead.
     """
     words = F.array_sort(word_array(text_col))
     # Materialized once: both self-join sides consume d, and an
@@ -625,82 +564,6 @@ def jaccard_pairs_dense(
         .where(F.col("jaccard") >= min_jaccard)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-# ----------------------------------------------------------------------
-# Connected components over the near-dup pair graph: docs A-B and B-C
-# verified as near-dups must land in ONE cluster even though (A, C) was
-# never compared. Iterative smallest-label propagation (the standard
-# large-scale CC algorithm — alternating large/small-star in spirit,
-# simplified to neighbor-min propagation), converging in O(diameter)
-# rounds; near-dup cluster diameters are tiny in practice.
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 20,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    strict: bool = True,
-) -> DataFrame:
-    """(doc_id, component) — component = smallest doc_id reachable.
-
-    Each iteration joins every node's current label against its
-    neighbors' labels and keeps the min; stops early when no label
-    changed. Inputs are undirected pairs (a < b by convention).
-    Iterations localCheckpoint to truncate lineage (a loop of joins
-    otherwise builds an exponentially deep plan).
-
-    Convergence needs O(component diameter) rounds. If labels are
-    still changing after ``max_iter``, components may be silently
-    split — with ``strict=True`` (default) that raises instead.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .unionByName(pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
-        .distinct()
-    )
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.u, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-        # release the superseded label checkpoint's executor blocks
-        # (see connected_components_star for the retention rationale)
-        del new_labels
-        gc.collect()
-    else:
-        if strict:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                f"iterations — raise max_iter (component diameter exceeds it)"
-            )
-    return labels.select(F.col("node").alias("doc_id"), "component")
 
 
 # ----------------------------------------------------------------------
@@ -882,20 +745,6 @@ def simhash(
     return sums.select(id_col, pack.cast("long").alias("simhash"))
 
 
-def simhash_buckets(
-    df: DataFrame, bits: int = 16, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Near-dup candidates: docs with IDENTICAL simhash (bucket join)."""
-    h = simhash(df, bits, text_col, id_col)
-    a = h.select(F.col(id_col).alias("doc_a"), "simhash")
-    b = h.select(F.col(id_col).alias("doc_b"), "simhash")
-    return (
-        a.join(b, "simhash")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "simhash")
-    )
-
-
 def simhash_hamming_pairs(
     df: DataFrame,
     max_hamming: int = 3,
@@ -904,40 +753,21 @@ def simhash_hamming_pairs(
     id_col: str = "doc_id",
     max_bucket: int = 4096,
 ) -> DataFrame:
-    """Candidate pairs within hamming distance ``max_hamming``.
+    """Candidate pairs within hamming distance ``max_hamming``:
+    (doc_a, doc_b, hamming), doc_a < doc_b.
 
     Pigeonhole banding: split the simhash into ``max_hamming + 1``
     bit-bands — any pair within the distance budget must agree EXACTLY
     on at least one band, so an equal-band bucket search finds all
-    true candidates; exact hamming (popcount of xor) then filters
-    false positives. Same candidate-then-verify shape as minhash LSH,
-    with the verify FUSED into the bucket scan the way
-    :func:`~my_weather_spark.llm.similarity.srp_lsh_pairs` fuses its
-    cosine verify: band rows shuffle ONCE on (band, band_val), each
-    sorted partition is scanned by an Arrow-batched kernel that scores
-    every bucket's pairs with one vectorized xor-popcount — no
-    checkpoint, no hot-bucket pre-join, no per-pair shuffle rows
-    (candidate PAIRS are born and filtered inside the kernel; only
-    survivors leave). Hot-bucket guard unchanged: identical docs share
-    a simhash, so one ultra-duplicated page is one (band, band_val)
-    bucket threatening B^2 pairs; over ``max_bucket`` members the
-    kernel degrades that bucket to hub-and-spoke against its min-id
-    member (linear work — also the per-task skew bound, since a bucket
-    is processed by exactly one task; hamming stays exact on the
-    emitted pairs and connectivity through the bucket is preserved for
-    downstream clustering). A cross-band duplicate find carries the
-    identical hamming, so the final distinct() collapses it.
-
-    (Replaced the previous checkpoint + hot-agg + double-join plan:
-    same results, wall time at sf0.1 parity-in-noise — the win is
-    structural: four fewer exchanges, no eager checkpoint job
-    re-running the 60-sum aggregate, no corpus x n_bands block set
-    pinned in executor storage, and per-pair work moves from an SMJ
-    row loop to one vectorized LUT popcount per 256-row block. The
-    remaining toy-scale cost is the simhash aggregate itself plus
-    ~5 stage-scheduling constants; both sides of the ratio scale
-    linearly, the constants do not.)
+    true candidates; exact hamming (LUT popcount of the xor) then
+    filters false positives inside the shared bucket scan
+    (:func:`~my_weather_spark.llm._util.bucket_pairs`), which also
+    applies the ``max_bucket`` hub-and-spoke guard: identical docs
+    share a simhash, so one ultra-duplicated page is one
+    (band, band_val) bucket threatening B^2 pairs.
     """
+    import numpy as np
+
     n_bands = max_hamming + 1
     band_bits = bits // n_bands
     if band_bits == 0:
@@ -955,124 +785,31 @@ def simhash_hamming_pairs(
             )
         ).alias("band", "band_val"),
     )
-    parted = bands.repartition("band", "band_val").sortWithinPartitions(
-        "band", "band_val"
-    )
     id_type = df.schema[id_col].dataType.simpleString()
-
-    def _scan(batches):
-        import numpy as np
-        import pandas as pd
-
-        # 16-bit popcount lookup table (numpy < 2.0 has no native
-        # bitwise_count; unpackbits over 64 bool columns measured 11x
-        # slower than four LUT gathers per long). ~4 ms to build, once
-        # per task.
-        lut = (
-            np.unpackbits(
-                np.arange(65536, dtype=np.uint16)
-                .astype(">u2")
-                .view(np.uint8)
-                .reshape(-1, 2),
-                axis=1,
-            )
-            .sum(axis=1)
-            .astype(np.uint8)
+    # 16-bit popcount lookup table, built once here and shipped with
+    # the scorer (numpy < 2.0 has no native bitwise_count; unpackbits
+    # over 64 bool columns measured 11x slower than four LUT gathers
+    # per long).
+    lut = (
+        np.unpackbits(
+            np.arange(65536, dtype=np.uint16).astype(">u2").view(np.uint8).reshape(-1, 2),
+            axis=1,
         )
+        .sum(axis=1)
+        .astype(np.uint8)
+    )
 
-        def _popcount(x):
-            v = np.ascontiguousarray(x).view(np.uint16).reshape(len(x), 4)
-            return lut[v].sum(axis=1, dtype=np.int32)
+    def prepare(pdf):
+        return pdf["simhash"].to_numpy(dtype="int64")
 
-        def _bucket(ids, sims):
-            n = len(ids)
-            if n < 2:
-                return None
-            if n > max_bucket:
-                # hot bucket: hub-and-spoke against the min-id member
-                hub = int(np.argmin(ids))
-                mask = np.ones(n, dtype=bool)
-                mask[hub] = False
-                ham = _popcount(sims[mask] ^ sims[hub])
-                keep = ham <= max_hamming
-                if not keep.any():
-                    return None
-                return pd.DataFrame(
-                    {
-                        "doc_a": np.full(int(keep.sum()), ids[hub]),
-                        "doc_b": ids[mask][keep],
-                        "hamming": ham[keep],
-                    }
-                )
-            # blocked upper-triangle scan: peak allocation stays
-            # ~block x n longs even for buckets at the max_bucket cap
-            out = []
-            block = 256
-            for s in range(0, n - 1, block):
-                e = min(s + block, n - 1)
-                bi = np.repeat(np.arange(s, e), n - 1 - np.arange(s, e))
-                bj = np.concatenate(
-                    [np.arange(i + 1, n) for i in range(s, e)]
-                )
-                ham = _popcount(sims[bi] ^ sims[bj])
-                keep = ham <= max_hamming
-                if not keep.any():
-                    continue
-                ia, ib = ids[bi[keep]], ids[bj[keep]]
-                swap = ia > ib
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "doc_a": np.where(swap, ib, ia),
-                            "doc_b": np.where(swap, ia, ib),
-                            "hamming": ham[keep],
-                        }
-                    )
-                )
-            if not out:
-                return None
-            return pd.concat(out)
+    def score(xa, xb):
+        x = xa[:, None] ^ xb[None, :]
+        return lut[x.view("uint16").reshape(*x.shape, 4)].sum(axis=-1, dtype="int32")
 
-        # sorted scan with the trailing bucket carried across batches
-        cid = csim = None
-        ckey = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            sims = pdf["simhash"].to_numpy(dtype=np.int64)
-            keys = pdf["band"].to_numpy().astype(np.int64) * (1 << band_bits) + pdf[
-                "band_val"
-            ].to_numpy(dtype=np.int64)
-            if ckey is not None and keys[0] != ckey:
-                # carried bucket ended exactly at the batch boundary
-                r = _bucket(cid, csim)
-                if r is not None:
-                    yield r
-                cid = csim = ckey = None
-            bounds = np.flatnonzero(np.diff(keys)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(keys)]))
-            out = []
-            for s, e in zip(starts, ends):
-                gid, gsim = ids[s:e], sims[s:e]
-                if ckey is not None and keys[s] == ckey:
-                    gid = np.concatenate((cid, gid))
-                    gsim = np.concatenate((csim, gsim))
-                    cid = csim = ckey = None
-                if e == len(keys):
-                    cid, csim, ckey = gid, gsim, keys[s]
-                    break
-                r = _bucket(gid, gsim)
-                if r is not None:
-                    out.append(r)
-            if out:
-                yield pd.concat(out)
-        if ckey is not None:
-            r = _bucket(cid, csim)
-            if r is not None:
-                yield r
+    def keep(S):
+        return S <= max_hamming
 
-    return parted.mapInPandas(
-        _scan, f"doc_a {id_type}, doc_b {id_type}, hamming int"
-    ).distinct()
+    return bucket_pairs(
+        bands, ["band", "band_val"], id_col, prepare, score, keep, max_bucket,
+        f"doc_a {id_type}, doc_b {id_type}, hamming int",
+    )

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from my_weather_spark.llm._util import bucket_pairs
 from my_weather_spark.session import local_frame
 
 
@@ -770,28 +771,17 @@ def srp_lsh_pairs(
     candidates are confined to equal (band, band_key) buckets, i.e.
     near-dup clusters, and everything else never pairs up.
 
-    The candidate generation and exact verify are FUSED per bucket:
+    Candidate generation and exact verify are FUSED per bucket by the
+    shared bucket scan (:func:`~my_weather_spark.llm._util.bucket_pairs`):
     singleton buckets are dropped on the narrow code rows first, the
-    vectors are joined onto the surviving rows, buckets are grouped
-    once, and each bucket scores its own all-pairs with one blocked
-    BLAS product, emitting only the over-threshold pairs. Shuffled
-    vector bytes are one (vector + code) row per COLLIDING (doc, band)
-    — Σ sizes of multi-member buckets — never one row per candidate
-    PAIR, which at near-dup-dense corpora is orders of magnitude
-    larger. Zero-norm vectors never reach the verify (dropped in
-    srp_codes), so cos is never NaN. Duplicate finds across bands
-    carry identical rounded cos, so the final distinct() collapses
-    them. A pathologically hot bucket (≫ corpus/2^band_bits) no longer
-    grinds one task quadratically: above ``max_bucket`` members the
-    bucket verifies HUB-AND-SPOKE — every member is scored against the
-    bucket's min-id member only (linear work, exact cosines on the
-    emitted pairs). The hot case in practice is near-identical
-    content, where hub pairs clear the threshold and downstream
-    connected components recovers the full cluster through the hub;
-    what is lost is the direct pairwise score between non-hub members
-    of an over-cap bucket. Widening band_bits remains the right first
-    response when hot buckets appear; the cap is the backstop that
-    bounds the damage while you do.
+    vectors are joined onto the surviving rows, and each bucket scores
+    its own pairs with one blocked BLAS product. Shuffled vector bytes
+    are one (vector + code) row per COLLIDING (doc, band), never one
+    row per candidate PAIR. Zero-norm vectors never reach the verify
+    (dropped in srp_codes), so cos is never NaN. Above ``max_bucket``
+    members a bucket verifies hub-and-spoke against its min-id member;
+    widening band_bits remains the right first response when hot
+    buckets appear, the cap is the backstop.
     """
     # The corpus projection feeds both the code pass and the vector
     # attach; checkpoint so an expensive upstream plan (e.g. a
@@ -812,101 +802,25 @@ def srp_lsh_pairs(
     )
     # Vectors ride to the surviving buckets via a JVM-side join onto
     # the code rows (Tungsten-format arrays, no Python round-trip) and
-    # cross into Python exactly once, at the mapInPandas verify
-    # boundary.
+    # cross into Python exactly once, at the verify boundary.
     fat = sized.join(proj, id_col)
-    parted = fat.repartition("band", "band_key").sortWithinPartitions(
-        "band", "band_key"
-    )
     id_type = corpus.schema[id_col].dataType.simpleString()
 
-    def _verify(batches):
+    def prepare(pdf):
         import numpy as np
-        import pandas as pd
 
-        def _bucket_pairs(ids, A):
-            A = A / np.linalg.norm(A, axis=1, keepdims=True)
-            if len(A) > max_bucket:
-                # hot bucket: hub-and-spoke verify (linear). hub = the
-                # min-id member, so id_a < id_b holds by construction.
-                hub = int(np.argmin(ids))
-                S = np.round(A @ A[hub], 6)
-                keep = S >= threshold
-                keep[hub] = False
-                if not keep.any():
-                    return []
-                return [
-                    pd.DataFrame(
-                        {
-                            "id_a": np.full(int(keep.sum()), ids[hub]),
-                            "id_b": ids[keep],
-                            "cos": S[keep],
-                        }
-                    )
-                ]
-            # blocked self-product keeps peak memory ~ block x n
-            n, out = len(A), []
-            block = 2048
-            for s in range(0, n, block):
-                S = np.round(A[s : s + block] @ A.T, 6)
-                bi, bj = np.nonzero(S >= threshold)
-                gi = bi + s
-                keep = gi < bj  # upper triangle only (each pair once)
-                if not keep.any():
-                    continue
-                ia, ib = ids[gi[keep]], ids[bj[keep]]
-                swap = ia > ib
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "id_a": np.where(swap, ib, ia),
-                            "id_b": np.where(swap, ia, ib),
-                            "cos": S[bi[keep], bj[keep]],
-                        }
-                    )
-                )
-            return out
+        A = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        return A / np.linalg.norm(A, axis=1, keepdims=True)
 
-        def _segments(pdf):
-            # rows arrive sorted by (band, band_key): buckets are
-            # contiguous segments — one vectorized boundary scan, one
-            # BLAS self-product per bucket, no per-group pandas calls.
-            bands = pdf["band"].to_numpy()
-            keys = pdf["band_key"].to_numpy()
-            cuts = np.flatnonzero((bands[1:] != bands[:-1]) | (keys[1:] != keys[:-1]))
-            starts = np.concatenate(([0], cuts + 1))
-            ends = np.concatenate((cuts + 1, [len(pdf)]))
-            ids = pdf[id_col].to_numpy()
-            A = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            out = []
-            for s, e in zip(starts, ends):
-                if e - s >= 2:
-                    out.extend(_bucket_pairs(ids[s:e], A[s:e]))
-            return out
+    def score(xa, xb):
+        return (xa @ xb.T).round(6)
 
-        # a bucket may straddle Arrow batch boundaries: hold the
-        # trailing (possibly incomplete) bucket back and prepend it to
-        # the next batch.
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            lb = pdf["band"].iloc[-1]
-            lk = pdf["band_key"].iloc[-1]
-            last = (pdf["band"] == lb) & (pdf["band_key"] == lk)
-            carry = pdf[last]
-            body = pdf[~last]
-            if len(body):
-                yield from _segments(body)
-        if carry is not None and len(carry) >= 2:
-            yield from _segments(carry)
+    def keep(S):
+        return S >= threshold
 
-    return (
-        parted.mapInPandas(_verify, schema=f"id_a {id_type}, id_b {id_type}, cos double")
-        .distinct()
+    return bucket_pairs(
+        fat, ["band", "band_key"], id_col, prepare, score, keep, max_bucket,
+        f"id_a {id_type}, id_b {id_type}, cos double",
     )
 
 

@@ -78,20 +78,9 @@ def url_scheme(col: Column | str) -> Column:
     return F.parse_url(c, F.lit("PROTOCOL"))
 
 
-def url_path(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.parse_url(c, F.lit("PATH"))
-
-
 def url_param(col: Column | str, key: str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.parse_url(c, F.lit("QUERY"), F.lit(key))
-
-
-def url_query_map(col: Column | str) -> Column:
-    """All query params as map<string,string> (str_to_map on QUERY)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.str_to_map(F.parse_url(c, F.lit("QUERY")), F.lit("&"), F.lit("="))
 
 
 # ---------------------------------------------------------------------
@@ -125,16 +114,3 @@ def threshold_bins(col: Column | str, thresholds: list[float], labels: list[str]
     for i in range(1, len(thresholds)):
         expr = expr.when(c < thresholds[i], labels[i])
     return expr.otherwise(labels[-1])
-
-
-# ---------------------------------------------------------------------
-# J4 fuzzy name match (reference: interfaces/config.py:54-59 via tregex):
-# best-match suggestion ranked by edit distance.
-def best_match(df, col: str, target: str, k: int = 1):
-    return (
-        df.select(col)
-        .withColumn("_lev", F.levenshtein(F.col(col), F.lit(target)))
-        .orderBy("_lev", col)
-        .limit(k)
-        .drop("_lev")
-    )

@@ -23,21 +23,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _ensure_reader_conf(spark: SparkSession) -> None:
     """The driver may hand us a session built without our defaults; all
@@ -155,13 +140,3 @@ def load_events(spark: SparkSession, sf_dir: str, period=None) -> DataFrame:
             (F.col("ts") >= F.lit(period.start)) & (F.col("ts") <= F.lit(period.end))
         )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -1,12 +1,15 @@
 """Source adapter tests: pagination contract, rate limiting, supervision."""
 
 import itertools
+import threading
+import time
 from datetime import datetime, timezone
+from types import SimpleNamespace
 
 import pytest
 
 from my_weather_spark.model import SeriesRef, UtcPeriod
-from my_weather_spark.pipeline import Service, ServiceManager
+from my_weather_spark.pipeline import ScheduledCollector, Service, ServiceManager
 from my_weather_spark.sources.file_source import ChunkedFileAdapter
 from my_weather_spark.sources.rate_limiter import RateLimiter, rate_limited
 
@@ -174,6 +177,68 @@ def test_service_manager_restarts_unhealthy():
     clock.t = 30
     assert mgr.tick() == {"collector": True}
     assert mgr.healthy()
+
+
+class _FlakyTask:
+    """Collection-task stand-in: the first two cycles raise, the third
+    blocks until released and then succeeds, later cycles succeed."""
+
+    period_spec = SimpleNamespace(wait_time=0.01)
+
+    def __init__(self):
+        self.calls = 0
+        self.release = threading.Event()
+
+    def collect(self, now=None):
+        self.calls += 1
+        if self.calls <= 2:
+            raise RuntimeError("source down")
+        if self.calls == 3:
+            self.release.wait(10)
+        return 1
+
+
+def _wait_until(cond, timeout=10.0):
+    deadline = time.monotonic() + timeout
+    while not cond():
+        assert time.monotonic() < deadline, "condition not reached"
+        time.sleep(0.005)
+
+
+def test_scheduled_collector_survives_failures():
+    task = _FlakyTask()
+    sc = ScheduledCollector(task)
+    sc.start()
+    try:
+        # blocked inside cycle 3: both failures are recorded, the loop
+        # is still alive
+        _wait_until(lambda: task.calls == 3)
+        assert sc.consecutive_failures == 2
+        assert isinstance(sc.last_error, RuntimeError)
+        assert not sc.healthy(max_consecutive_failures=2)
+        assert sc.healthy(max_consecutive_failures=3)
+        task.release.set()
+        _wait_until(lambda: sc.consecutive_failures == 0)
+        assert sc.last_error is None
+        assert sc.healthy(max_consecutive_failures=2)
+    finally:
+        task.release.set()
+        sc.stop()
+    assert not sc.healthy()  # a stopped loop is not healthy
+
+
+def test_scheduled_collector_run_n_cycles_sums_counts():
+    now = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    counts = iter([2, 3, 4])
+    seen = []
+
+    def collect(t):
+        seen.append(t)
+        return next(counts)
+
+    sc = ScheduledCollector(SimpleNamespace(collect=collect))
+    assert sc.run_n_cycles(3, now_fn=lambda: now) == 9
+    assert seen == [now, now, now]
 
 
 def test_chunked_pagination_no_boundary_gap(spark, tmp_path):
