@@ -4687,36 +4687,32 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's oracle check covers only the FIRST 50 registry entries
-# per round (queries() iterates insertion order). Round-11 window
-# (VERDICT r10 item 1 — rotate onto the now-stalest greens): (a) ALL
-# 26 r8 greens that sat out both r9 and r10 — two rounds stale by
-# r10, the verdict-named "r11 rotation debt" (the set computed from
-# CORRECTNESS_r08 minus r09 minus r10 keys; all 26 were full
-# hash-match greens in r8); (b) 24 of the 50 r9 greens that sat out
-# r10: the TPC-H block (q2/q4/q6/q7/q10-q20/q22, 16 queries), the
-# set-op/grouping block (anti/semi join, rollup, cube), and f1/f2/
-# f4/f7. Dropped from (b): f5_monthly_orders (passed the builder's
-# r10 out-of-window spot check) and f8_threshold_bins (operator F8
-# re-proven by r10-green part_size_bins) — both rotate with the r12
-# debt. The remaining 26 r9 greens are r12 rotation debt. Out this
-# round: all r10-checked names (1 round fresh) and the rows-only set
-# (covered by the sf0.001/0.01/0.1 hash pins in
-# tests/test_rows_only_pins.py — stronger than the driver's
-# rows-only count).
+# per round (queries() iterates insertion order). Round-15 window:
+# (c) the six near-dup queries rewritten in r12-r15 (MinHash bucket
+# join, SimHash/SRP bucket kernel, star connected components, dense
+# Jaccard), none of which had been in the window since r11; (a) 20 of
+# the r8 greens — dropped for them: above_customer_avg_orders,
+# distinct_users_per_type, json_props_extract, temperature_mix_counts,
+# text_repetition_stats and unimax_mix_alloc, compositions untouched
+# since r8; (b) the r9 TPC-H / set-op / f-family greens. The
+# rows-only set stays out (covered by the sf0.001/0.01/0.1 hash pins
+# in tests/test_rows_only_pins.py — stronger than the driver's
+# rows-only count), apart from srp_cosine_near_dup, which (c) names.
 _DRIVER_PRIORITY = [
-    # (a) round-8 greens, two rounds stale — the full stratum
-    "above_customer_avg_orders", "distinct_users_per_type",
-    "instant_interpolation_scaled", "json_props_extract",
+    # (c) near-dup queries rewritten since the window last moved
+    "minhash_lsh_pairs", "lsh_jaccard_near_dup", "minhash_signatures",
+    "near_dup_components", "srp_cosine_near_dup", "jaccard_pairs_by_source",
+    # (a) round-8 greens
+    "instant_interpolation_scaled",
     "line_boilerplate_clean", "mixed_interpretation_resample",
     "mm_frame_sample", "mm_jpeg_image_stats", "mm_payload_stats",
     "mm_wav_audio_stats", "nb_quality_flags", "pq_ann_topk",
     "resample_hourly", "resample_time_weighted_scaled",
     "running_total_scaled", "semantic_decontam_flags", "semdedup_kept",
     "simhash_hamming_pairs", "source_jsd_divergence",
-    "temperature_mix_counts", "text_fingerprint",
-    "text_repetition_stats", "unimax_mix_alloc", "value_deciles_scaled",
+    "text_fingerprint", "value_deciles_scaled",
     "vocab_top_words", "w5_sliding_count_scaled",
-    # (b) r9 greens one round stale — TPC-H / set-op / f-family block
+    # (b) r9 greens — TPC-H / set-op / f-family block
     "q2_min_cost_supplier", "q4_late_shipment_priority",
     "q6_forecast_revenue", "q7_nation_trade", "q10_returned_revenue",
     "q11_important_stock", "q12_ship_delay_priority",

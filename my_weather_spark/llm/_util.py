@@ -76,7 +76,9 @@ def bucket_pairs(
     id_b. A pair found in several bands carries the same score each
     time, and the final distinct() keeps one. Emitting it from its
     smallest band only would lose it whenever that band's bucket was
-    hub-degraded and neither doc was the hub.
+    hub-degraded and neither doc was the hub, unless each row carried
+    its doc's per-band hubs, as ``_hubs`` does in
+    ``dedup.band_key_pairs``; that would let the distinct() go.
     """
     a_col, b_col, s_col = StructType.fromDDL(schema).names
 

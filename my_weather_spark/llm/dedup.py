@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import gc
 from functools import reduce
-from operator import add
+from operator import add, or_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -120,13 +120,27 @@ def minhash_signatures(
     (docs x words x hashes) shuffle.
     """
     # posexplode the key expression in the SAME projection as the
-    # signature: exploding a separately projected wide key column lets
-    # Catalyst collapse the signature into every band's slice lambda
-    # (one md5 + 16-hash rebuild per band, plus one more for the
-    # inferred size(_keys) > 0 filter): 9.5 s against 1.2 s at sf0.1.
+    # signature: exploding a separate, unmaterialized key projection
+    # rebuilds the signature (6.4-7.0 s against 1.4-1.5 s at sf0.1 on
+    # 4 cores, best of 3).
     return _minhash_sigs(df, num_hashes, band_size, text_col, id_col).select(
         F.col(id_col),
         F.posexplode(_band_keys(num_hashes, band_size)).alias("band", "band_key"),
+    )
+
+
+def minhash_band_keys(
+    df: DataFrame,
+    num_hashes: int = 16,
+    band_size: int = 4,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(id, _keys): :func:`minhash_signatures`' band keys kept as one
+    array per doc (wide layout), the input of :func:`band_key_pairs`.
+    Materialize it before use: the pair join reads it more than once."""
+    return _minhash_sigs(df, num_hashes, band_size, text_col, id_col).select(
+        F.col(id_col), _band_keys(num_hashes, band_size).alias("_keys")
     )
 
 
@@ -138,10 +152,7 @@ def _minhash_sigs(
     id_col: str,
 ) -> DataFrame:
     """(id, _sigs): the ``num_hashes`` minhash signature of every doc
-    with at least one word. :func:`_band_keys` turns ``_sigs`` into the
-    per-band keys: posexploded by ``minhash_signatures`` (tall layout),
-    kept as one array by ``minhash_lsh_pairs`` (wide layout, so each
-    candidate join sees every band's key on one row)."""
+    with at least one word; :func:`_band_keys` turns it into band keys."""
     if num_hashes > len(_MINHASH_A):
         raise ValueError(f"at most {len(_MINHASH_A)} hash functions supported")
     if num_hashes % band_size != 0:
@@ -179,16 +190,25 @@ def _minhash_sigs(
 
 def _band_keys(num_hashes: int, band_size: int):
     """Band-key array over ``_sigs``: element b joins band b's
-    ``band_size`` signature values into one comma-separated key."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes // band_size - 1)),
-        lambda b: F.array_join(
-            F.transform(
-                F.slice(F.col("_sigs"), b * band_size + 1, band_size),
-                lambda x: x.cast("string"),
-            ),
-            ",",
-        ),
+    ``band_size`` signature values into one comma-separated key.
+
+    One slice per band, unrolled: ``_sigs`` is then referenced once per
+    band, so Catalyst keeps the signature in its own projection. A
+    ``transform`` over the band indices references it once, inside the
+    lambda, and CollapseProject inlines the whole signature build into
+    it, rebuilding it once per band (3.6 s against 1.3-1.6 s for the
+    4-band wide frame at sf0.1 on 4 cores, best of 3)."""
+    return F.array(
+        *[
+            F.array_join(
+                F.transform(
+                    F.slice(F.col("_sigs"), b * band_size + 1, band_size),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            )
+            for b in range(num_hashes // band_size)
+        ]
     )
 
 
@@ -221,125 +241,97 @@ def minhash_lsh_pairs(
     capped and uncapped plans are bit-identical on the oracle data;
     the degradation is asserted linear in test_llm.
     """
-    # Materialize the WIDE signature table once (the srp_lsh_pairs
-    # pattern): the guard's bucket-size aggregate plus every per-band
-    # join side would otherwise each replay the md5-per-word corpus
-    # pass — Catalyst can't exchange-reuse the subtrees because
-    # different filters/projections get pushed into each.
-    n_bands = num_hashes // band_size
-    wide = (
-        _minhash_sigs(df, num_hashes, band_size, text_col, id_col)
-        .select(F.col(id_col), _band_keys(num_hashes, band_size).alias("_keys"))
-        .localCheckpoint(eager=True)
+    # Materialize the wide key table once: the hot-bucket aggregate and
+    # both join sides read it, and each would otherwise replay the
+    # md5-per-word corpus pass.
+    wide = minhash_band_keys(df, num_hashes, band_size, text_col, id_col)
+    return band_key_pairs(
+        wide.localCheckpoint(eager=True), id_col, num_hashes // band_size, max_bucket
     )
-    # Hot-bucket detection via ONE aggregate over the exploded keys,
-    # not a window (a window over (band, band_key) would sort-shuffle
-    # every band row just to learn its bucket size). The hot table is
-    # tiny (≤ corpus/max_bucket rows, empty on healthy data) and is
-    # consumed by every band branch below — collect it once, with the
-    # hub's full key vector attached (needed to suppress star pairs
-    # already emitted by an earlier band), into a LocalRelation:
-    # branches then carry no copy of the signature plan, and Catalyst
-    # prunes the hub joins and star branches when it is empty.
+
+
+def band_key_pairs(
+    wide: DataFrame, id_col: str, n_bands: int, max_bucket: int
+) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, each pair exactly once: the docs
+    of a materialized :func:`minhash_band_keys` frame that share a band
+    bucket, with buckets over ``max_bucket`` members degraded to stars
+    around their min id (see :func:`minhash_lsh_pairs`).
+
+    One self-join on (band, key) for every band, so the plan does not
+    grow with ``n_bands``. Every row carries its doc's full key array
+    and ``_hubs``, a map band -> (hub, hub's keys) over its doc's hot
+    buckets, so a pair can be emitted by its SMALLEST candidate band
+    alone: band b drops it when an earlier band j had it as a candidate
+    (same band-j key and, for a hot band-j bucket, doc_a is the hub).
+    No pair-set distinct() is needed.
+    """
     tall = wide.select(
-        F.col(id_col), F.posexplode("_keys").alias("band", "band_key")
+        F.col(id_col), F.posexplode("_keys").alias("band", "_key"), "_keys"
     )
+    # ONE aggregate finds the hot buckets (a window over (band, _key)
+    # would sort-shuffle every row). The table is tiny (<= corpus /
+    # max_bucket rows, empty on healthy data); collected into a
+    # LocalRelation, Catalyst prunes the whole hub branch when it is
+    # empty, and otherwise the planner broadcasts it by size.
     hot = (
-        tall.groupBy("band", "band_key")
+        tall.groupBy("band", "_key")
         .agg(F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_hub"))
         .where(F.col("_n") > max_bucket)
-        .select("band", "band_key", "_hub")
         .join(
             wide.select(
                 F.col(id_col).alias("_hub"), F.col("_keys").alias("_hub_keys")
             ),
             "_hub",
         )
+        .select("band", "_key", "_hub", "_hub_keys")
     )
-    hot = local_frame(df.sparkSession, hot.collect(), hot.schema)
-    # Tag every doc with its per-band hub (NULL = that band's bucket is
-    # small): n_bands broadcast left-joins against the tiny hot table —
-    # the wide rows are never shuffled for the guard.
-    tagged = wide
-    for bi in range(n_bands):
-        hb = hot.where(F.col("band") == bi).select(
-            F.col("band_key").alias(f"_k{bi}"), F.col("_hub").alias(f"_hub{bi}")
+    hot = local_frame(wide.sparkSession, hot.collect(), hot.schema)
+    hubs = (
+        tall.join(hot, ["band", "_key"])
+        .groupBy(id_col)
+        .agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("band", F.struct("_hub", "_hub_keys")))
+            ).alias("_hubs")
         )
-        tagged = tagged.withColumn(f"_k{bi}", F.col("_keys")[bi]).join(
-            F.broadcast(hb), f"_k{bi}", "left"
-        )
+    )
+    tagged = tall.join(hubs, id_col, "left")
+    here = F.col("_hubs")[F.col("band")]
 
-    # EXACTLY-ONCE pair emission: a pair is emitted by its SMALLEST
-    # candidate band — band b emits it only when no earlier band j
-    # already had it as a candidate (same band-j key AND, for a hot
-    # band-j bucket, doc_a is that bucket's hub). Output is distinct by
-    # construction, so the old full pair-set distinct() — an exchange
-    # of the ENTIRE candidate set, measured ~2.3 s of this query's
-    # 2.6 s at sf0.1 and the dominant exchange at corpus scale — is
-    # gone; what it cost is one narrow self-join per band instead of
-    # one on the exploded table (same total probe count and bytes).
-    def _not_candidate_at(j: int, a_prefix: str, b_prefix: str):
-        same_key = F.col(f"{a_prefix}k{j}") == F.col(f"{b_prefix}k{j}")
-        emitted = F.col(f"{a_prefix}hub{j}").isNull() | (
-            F.col("doc_a") == F.col(f"{a_prefix}hub{j}")
-        )
-        return ~(same_key & emitted)
+    def first_band(doc_a, keys_a, keys_b, hubs):
+        # Plain column predicates (codegen'd), one per earlier band.
+        seen = [
+            (F.col("band") > j)
+            & (keys_a[j] == keys_b[j])
+            & (hubs[j]["_hub"].isNull() | (doc_a == hubs[j]["_hub"]))
+            for j in range(n_bands - 1)
+        ]
+        return ~reduce(or_, seen, F.lit(False))
 
-    parts = []
-    for bi in range(n_bands):
-        small = tagged.where(F.col(f"_hub{bi}").isNull())
-        a = small.select(
-            F.col(id_col).alias("doc_a"),
-            F.col(f"_k{bi}").alias("_jk"),
-            *[F.col(f"_k{j}").alias(f"_ak{j}") for j in range(bi)],
-            *[F.col(f"_hub{j}").alias(f"_ahub{j}") for j in range(bi)],
-        )
-        b = small.select(
-            F.col(id_col).alias("doc_b"),
-            F.col(f"_k{bi}").alias("_jk"),
-            *[F.col(f"_k{j}").alias(f"_bk{j}") for j in range(bi)],
-        )
-        p = (
-            a.join(b, "_jk")  # bucket join — the LSH step
-            .where(F.col("doc_a") < F.col("doc_b"))
-        )
-        for j in range(bi):
-            p = p.where(_not_candidate_at(j, "_a", "_b"))
-        parts.append(p.select("doc_a", "doc_b"))
-        # Hot buckets: hub-and-spoke to the bucket minimum (doc_a =
-        # hub < member). Members re-join the hot slice to see the
-        # hub's earlier-band keys; the member row carries its own
-        # earlier-band keys/hubs, and key-equality at band j implies
-        # hub and member share that band-j bucket (and hence its
-        # hotness), so the same smallest-band rule applies.
-        hb_full = hot.where(F.col("band") == bi).select(
-            F.col("band_key").alias(f"_k{bi}"), "_hub", "_hub_keys"
-        )
-        members = (
-            tagged.where(
-                F.col(f"_hub{bi}").isNotNull() & (F.col(id_col) != F.col(f"_hub{bi}"))
-            )
-            .join(F.broadcast(hb_full.drop("_hub")), f"_k{bi}")
-            .select(
-                F.col(f"_hub{bi}").alias("doc_a"),
-                F.col(id_col).alias("doc_b"),
-                "_hub_keys",
-                *[F.col(f"_k{j}").alias(f"_bk{j}") for j in range(bi)],
-                *[F.col(f"_hub{j}").alias(f"_bhub{j}") for j in range(bi)],
-            )
-        )
-        star = members
-        for j in range(bi):
-            same_key = F.col("_hub_keys")[j] == F.col(f"_bk{j}")
-            emitted = F.col(f"_bhub{j}").isNull() | (
-                F.col("doc_a") == F.col(f"_bhub{j}")
-            )
-            star = star.where(~(same_key & emitted))
-        parts.append(star.select("doc_a", "doc_b"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    small = tagged.where(here.isNull())
+    a = small.select(
+        F.col(id_col).alias("doc_a"), "band", "_key",
+        F.col("_keys").alias("_ka"), F.col("_hubs").alias("_ha"),
+    )
+    b = small.select(
+        F.col(id_col).alias("doc_b"), "band", "_key", F.col("_keys").alias("_kb")
+    )
+    pairs = (
+        a.join(b, ["band", "_key"])  # the bucket join — the LSH step
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .where(first_band(F.col("doc_a"), F.col("_ka"), F.col("_kb"), F.col("_ha")))
+    )
+    # Hot buckets: hub-and-spoke to the bucket minimum (doc_a = hub <
+    # member), straight from the member rows. Key equality at band j
+    # puts hub and member in one band-j bucket, so the member's
+    # ``_hubs`` decides the smallest-band rule as in the self-join.
+    star = tagged.where(here.isNotNull() & (F.col(id_col) != here["_hub"])).where(
+        first_band(here["_hub"], here["_hub_keys"], F.col("_keys"), F.col("_hubs"))
+    )
+    return pairs.select("doc_a", "doc_b").unionByName(
+        star.select(here["_hub"].alias("doc_a"), F.col(id_col).alias("doc_b"))
+    )
 
 
 # ----------------------------------------------------------------------

@@ -295,13 +295,16 @@ class SignatureStore:
         # 2. near dups vs the STORE: probe the bucket table with the
         # batch's bands (batch side broadcast — the store only scans),
         # verify colliding pairs by exact hashed-word Jaccard.
-        new_bands = dedup.minhash_signatures(
+        wide = dedup.minhash_band_keys(
             exact_clean.join(new_docs.select(id_col, text_col), id_col),
             self.num_hashes,
             self.band_size,
             text_col,
             id_col,
         ).cache()
+        new_bands = wide.select(
+            F.col(id_col), F.posexplode("_keys").alias("band", "band_key")
+        )
         store_cand = (
             self.bands(exclude_batch=batch_id)
             .join(
@@ -340,58 +343,21 @@ class SignatureStore:
         )
         store_dups = verified.select(F.col("_new_id").alias(id_col)).distinct()
 
-        # 3. near dups WITHIN the batch: bucket-join the new bands with
-        # themselves, verify, keep the smaller id. The self-join
-        # carries the SAME hot-bucket star guard as the corpus-wide
-        # minhash_lsh_pairs (dedup.py) — the earlier argument that the
-        # trigger bounds the batch was wrong in exactly the way the r8
-        # bench demonstrated: trigger(availableNow) over a one-file
-        # landing area makes the micro-batch the whole corpus
-        # (maxFilesPerTrigger bounds FILES, not rows), so an
-        # adversarial batch (one band key shared by every doc) would
-        # emit O(batch^2) candidate pairs from a single bucket.
-        # Buckets larger than self.max_bucket degrade to a STAR around
-        # the bucket's min id — linear pairs, and because the hub is
-        # the bucket minimum, star pairs keep the (_ia < _ib) / larger-
-        # id-loses orientation. Degradation contract MIRRORS
-        # minhash_lsh_pairs (non-hub members of a hot bucket are
-        # verified against the hub only, so a non-hub doc that dupes a
-        # sibling but NOT the hub survives) with one consequence
-        # AMPLIFIED here: a survivor is permanently ACCEPTED and
-        # persisted into the store, seeding all future batches —
-        # whereas in the batch pipeline a missed pair is often still
-        # recovered downstream via hub connectivity in the components
-        # step. Stores where exactness in hot buckets matters should
-        # raise max_bucket or run a periodic offline sweep
-        # (dedup.lsh_jaccard chain over the accepted corpus) to evict
-        # late-detected near-dups. For the realistic hot case
-        # (near-identical content — why the bucket is hot) every hub
-        # pair passes the verify and the accept set matches the
-        # unguarded plan exactly (pytest-pinned, test_incremental).
-        # The store-probe join above needs no guard: the store side
-        # holds only ACCEPTED (near-dup-distinct) docs and the batch
-        # side is broadcast, so a colliding bucket emits
-        # store-bucket-size x batch-collisions rows, never bucket^2.
-        hot = (
-            new_bands.groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_hub"))
-            .where(F.col("_n") > self.max_bucket)
-            .select("band", "band_key", "_hub")
-        )
-        tagged = new_bands.join(hot, ["band", "band_key"], "left")
-        small = tagged.where(F.col("_hub").isNull())
-        a = small.select(F.col(id_col).alias("_ia"), "band", "band_key")
-        b = small.select(F.col(id_col).alias("_ib"), "band", "band_key")
-        star = tagged.where(
-            F.col("_hub").isNotNull() & (F.col(id_col) != F.col("_hub"))
-        ).select(F.col("_hub").alias("_ia"), F.col(id_col).alias("_ib"))
-        batch_pairs = (
-            a.join(b, ["band", "band_key"])
-            .where(F.col("_ia") < F.col("_ib"))
-            .select("_ia", "_ib")
-            .unionByName(star)
-            .distinct()
-        )
+        # 3. near dups WITHIN the batch: the corpus-wide candidate join
+        # (dedup.band_key_pairs) over the batch's keys, verified, larger
+        # id loses. It carries the same hot-bucket star guard: with
+        # trigger(availableNow) over a one-file landing area the batch
+        # IS the corpus, so one shared band key would otherwise emit
+        # O(batch^2) pairs. Here the degradation is amplified: a non-hub
+        # doc that dupes a sibling but not the hub is ACCEPTED and seeds
+        # every later batch, so stores that need exactness in hot
+        # buckets should raise max_bucket. The store probe above needs
+        # no guard: the store holds only accepted docs and the batch
+        # side is broadcast, so a bucket emits store-bucket-size x
+        # batch-collisions rows, never bucket^2.
+        batch_pairs = dedup.band_key_pairs(
+            wide, id_col, self.num_hashes // self.band_size, self.max_bucket
+        ).select(F.col("doc_a").alias("_ia"), F.col("doc_b").alias("_ib"))
         wh = batch.select(F.col(id_col), F.col("word_hashes"))
         batch_dups = (
             batch_pairs.join(
@@ -451,7 +417,7 @@ class SignatureStore:
             n_accepted=n_accepted,
         )
         batch.unpersist()
-        new_bands.unpersist()
+        wide.unpersist()
         return accepted, report
 
 

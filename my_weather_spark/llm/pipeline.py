@@ -6,18 +6,17 @@ operators exactly the way a 100 TB run would chain them:
     [line-level boilerplate removal (optional)]
         -> quality filter -> exact dedup
         -> [exact duplicate-span drop (optional)]
-        -> MinHash-LSH candidates
-        -> Jaccard verify -> drop near-dups (keep smallest id)
+        -> MinHash-LSH candidates (one bucket self-join)
+        -> Jaccard verify
+        -> connected components over the verified pairs (large/small
+           star rounds); every component keeps its smallest id
         -> [semantic dedup over doc embeddings (optional, SemDeDup)]
         -> attach analysis columns (tokens, language, fingerprint)
 
-Every stage is a DataFrame transformation; the only materialization
-points are the ones a production run would checkpoint anyway (the
-candidate-pair set). Connected-component near-dup clustering is
-approximated by the standard "keep the smallest doc_id of every
-verified pair's union" greedy rule — one pass, no iteration; a full
-union-find (iterative) refinement can be layered on when cluster
-chains matter.
+Every stage is a DataFrame transformation. Each stage whose size the
+report counts is localCheckpoint()ed before that count, so no count
+re-runs the chain above it; the LSH key table and the candidate pairs
+are materialized inside their operators.
 """
 
 from __future__ import annotations

@@ -87,6 +87,70 @@ def test_minhash_hot_bucket_degrades_to_star(spark):
     assert {r["component"] for r in comps} == {0}
 
 
+@pytest.fixture(scope="module")
+def lsh_corpus(spark):
+    # Short docs over a 10-word vocabulary collide in many band buckets
+    # at every band size; 12 identical docs make one bucket per band
+    # that is hot under the small cap, and near-copies of them share
+    # some of those hot buckets but not all, so a pair's earlier band
+    # can be hub-degraded while a later one is small.
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(10)]
+    rows = [(i, " ".join(rng.choices(vocab, k=rng.randint(3, 6)))) for i in range(60)]
+    rows += [(100 + i, "w1 w2 w3 w4 w5") for i in range(12)]
+    rows += [(200 + i, "w1 w2 w3 w4 w" + str(6 + i % 4)) for i in range(8)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.parametrize("max_bucket", [4096, 6])
+@pytest.mark.parametrize("band_size", [8, 4, 2, 1])
+def test_minhash_lsh_pairs_exactly_once_matches_reference(lsh_corpus, band_size, max_bucket):
+    # Reference from the band rows in pure Python: all pairs of a bucket
+    # of at most max_bucket docs, hub (min id) spokes above it.
+    buckets = {}
+    for r in dedup.minhash_signatures(lsh_corpus, 16, band_size).collect():
+        buckets.setdefault((r["band"], r["band_key"]), []).append(r["doc_id"])
+    want = set()
+    for members in buckets.values():
+        members.sort()
+        if len(members) > max_bucket:
+            want |= {(members[0], m) for m in members[1:]}
+        else:
+            want |= {(a, b) for i, a in enumerate(members) for b in members[i + 1:]}
+    if max_bucket < 4096:
+        assert any(len(m) > max_bucket for m in buckets.values())
+    got = [
+        (r["doc_a"], r["doc_b"])
+        for r in dedup.minhash_lsh_pairs(lsh_corpus, 16, band_size, max_bucket=max_bucket).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+@pytest.mark.parametrize("band_size", [8, 4, 1])
+def test_minhash_band_keys_build_signature_once(docs, band_size):
+    # The signature stays in its own projection: inlined into the band
+    # keys it would be rebuilt once per band.
+    plan = (
+        dedup.minhash_band_keys(docs, 16, band_size)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert " AS _sigs#" in plan
+
+
+def test_minhash_lsh_pairs_plan_constant_in_band_count(docs):
+    lines = {
+        band_size: len(
+            dedup.minhash_lsh_pairs(docs, 16, band_size)
+            ._jdf.queryExecution().executedPlan().toString().splitlines()
+        )
+        for band_size in (8, 4, 2, 1)
+    }
+    assert len(set(lines.values())) == 1, lines
+
+
 def test_simhash_hot_bucket_degrades_to_star(spark):
     # Identical docs share a simhash — one hot (band, band_val) bucket.
     # Over the cap it emits hub spokes (linear), with exact hamming.
