@@ -1,30 +1,144 @@
-"""Distributed exact global ranking (100 TB checklist).
+"""Distributed exact twins of per-group windows (100 TB checklist).
 
-An unpartitioned ranking window (``row_number() OVER (ORDER BY ...)``)
-moves EVERY row to one partition — WindowExec warns, and at scale one
-task sorts the world. The standard distributed shape for an exact
-global rank keeps the sort parallel:
+A ranking, running or shift window partitioned by a hot key — or not
+partitioned at all — sorts each key's whole history on one task. Every
+scanner here keeps that sort parallel with one mechanism, the pin
+(:func:`_pin`):
 
-1. ``repartitionByRange`` on the order columns — Spark samples range
+1. ``repartitionByRange`` on (group, order) — Spark samples range
    bounds, so each partition holds a contiguous, disjoint slice of the
-   global order (skew-resistant: bounds adapt to the data);
-2. number rows WITHIN each partition (parallel, zero extra shuffle —
-   a running counter over the partition's Arrow batches);
-3. add per-partition offsets (a tiny count-per-partition aggregate,
-   cumulated driver-side — one row per partition — and broadcast back).
+   global order (skew-resistant: bounds adapt to the data) and a group
+   spans adjacent partitions only;
+2. ``sortWithinPartitions`` on the same keys, the partition id tagged
+   as ``_pid``, checkpointed eagerly — the boundary pass and the main
+   pass read the same partitions in the same row order.
 
-The result is bit-identical to the single-partition window whenever
-the order columns form a total order (callers must include a
-tie-breaking column, exactly as they must for ANY deterministic
-ranking). ntile/percent_rank derive from the rank arithmetically.
+What crosses partitions is tiny — one row per partition or per
+(partition, group) — cumulated by a window over that table (numbering,
+running sums) or on the driver (shift and fill boundaries), and
+broadcast back. Row numbers come from a JVM projection over the
+checkpoint scan; shifts, running sums and fills are one pandas pass
+each, carrying state across Arrow batches.
+
+Results are bit-identical to the window whenever the order columns
+totally order the rows of a group (callers include a tie-breaker, as
+they must for any deterministic window). ntile and percent_rank derive
+from the rank arithmetically.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
 
-from my_weather_spark.session import local_frame
+
+def _pin(
+    df: DataFrame, keys: list[Column], num_partitions: int | None
+) -> tuple[DataFrame, int]:
+    """(``df`` range-partitioned and sorted on ``keys``, tagged with
+    ``_pid`` and checkpointed; the partition count).
+
+    Every scanner reads the pinned frame at least twice — a boundary or
+    count pass, then the main pass — and the sampled range bounds must
+    not be re-derived between them.
+    """
+    n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    pinned = (
+        df.repartitionByRange(n_part, *keys)
+        .sortWithinPartitions(*keys)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    return pinned, n_part
+
+
+def _arrow_pass(pinned: DataFrame, kernel, new_cols: list) -> DataFrame:
+    """``mapInPandas(kernel)`` emitting the pinned columns plus
+    ``new_cols`` [(name, type)]."""
+    fields = pinned.schema.fields + [StructField(n, t) for n, t in new_cols]
+    return pinned.mapInPandas(kernel, schema=StructType(fields))
+
+
+def _key_ops():
+    """(eq, in_group) for the Arrow kernels that compare group keys.
+
+    ``eq(a, b)`` is elementwise equality under which NULL equals NULL,
+    as it does for a window's PARTITION BY: pandas renders NULL as
+    NaN/None/NaT by dtype, and NaN != NaN. ``in_group(pdf, cols, key)``
+    masks the rows whose ``cols`` equal the tuple ``key``. Built per
+    call, so a kernel captures them by value: a Python worker need not
+    be able to import this package.
+    """
+    import numpy as np
+    import pandas as pd
+
+    def eq(a, b):
+        return (a == b) | (pd.isna(a) & pd.isna(b))
+
+    def in_group(pdf, cols, key):
+        mask = np.ones(len(pdf), dtype=bool)
+        for c, v in zip(cols, key):
+            mask &= eq(pdf[c].to_numpy(), v)
+        return mask
+
+    return eq, in_group
+
+
+def _numbered(
+    df: DataFrame,
+    group_by: list[str],
+    order_by: list[str],
+    out_col: str,
+    n_col: str,
+    num_partitions: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(df + ``out_col``, the 1-based row number within the group in
+    ``order_by`` order, + ``n_col``, the group size; the tiny
+    per-(partition, group) offsets table, which carries ``n_col``).
+    ``group_by=[]`` numbers the whole frame as one group.
+
+    The pin makes each group a contiguous run of the global order, so
+    a row's number is its index within its partition plus one offset
+    per (partition, group): the group's rows in earlier partitions
+    minus the earlier groups' rows in this partition. The index is
+    ``monotonically_increasing_id() - (_pid << 33)`` — a narrow JVM
+    projection straight over the checkpoint scan, whose partitions are
+    the pinned ones. The offsets come from one COUNT per (partition,
+    group), about n_groups + n_partitions rows, broadcast back. The
+    group key is ``_pgk``, a non-null struct of the group columns:
+    struct equality compares fields null-safely, so NULL-group rows
+    keep their offsets (a raw-column equi-join would drop them).
+    """
+    from pyspark.sql.window import Window as W
+
+    pinned, _ = _pin(df, [F.col(c) for c in group_by + order_by], num_partitions)
+    key = ["_pid"]
+    if group_by:
+        pinned = pinned.withColumn("_pgk", F.struct(*group_by))
+        key.append("_pgk")
+    counts = pinned.groupBy(*key).agg(F.count(F.lit(1)).alias("_c"))
+    before = (W.unboundedPreceding, -1)
+    group = W.partitionBy(*key[1:])
+    off = F.coalesce(
+        F.sum("_c").over(group.orderBy("_pid").rowsBetween(*before)), F.lit(0)
+    )
+    if group_by:
+        earlier = W.partitionBy("_pid").orderBy("_pgk").rowsBetween(*before)
+        off = off - F.coalesce(F.sum("_c").over(earlier), F.lit(0))
+    offsets = counts.select(
+        *key, off.alias("_off"), F.sum("_c").over(group).alias(n_col)
+    )
+    index = F.monotonically_increasing_id() - F.shiftleft(
+        F.col("_pid").cast("long"), 33
+    )
+    out = (
+        pinned.withColumn(out_col, index)
+        .join(F.broadcast(offsets), key)
+        .withColumn(out_col, F.col(out_col) + F.col("_off") + 1)
+        .drop(*key, "_off")
+    )
+    return out, offsets
 
 
 def global_row_number(
@@ -37,61 +151,12 @@ def global_row_number(
 
     ``order_by`` must be a TOTAL order (include a tie-breaker) for a
     deterministic result. The total count rides along because every
-    derived analytic (ntile, percent_rank) needs it and it falls out
-    of the offset computation for free.
+    derived analytic (ntile, percent_rank) needs it; it is read off
+    the tiny offsets table.
     """
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in order_by]
-    parted = (
-        df.repartitionByRange(n_part, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
-        # materialize the ranged sort ONCE: the counts pass and the
-        # numbering pass below both consume it, and partition order
-        # must not be re-derived between them.
-        .localCheckpoint(eager=True)
-    )
-    # One row per partition after partial aggregation — tiny.
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    total = int(sum(counts.values()))
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if not counts:
-        empty = parted.drop("_pid").withColumn(out_col, F.lit(0).cast("long"))
-        return empty.where(F.lit(False)), 0
-    # Running counter over the partition's Arrow batches: batches of
-    # one partition arrive in order, so base+i is the local rank.
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema_out = StructType(
-        list(parted.schema.fields) + [StructField(out_col, LongType())]
-    )
-
-    def _number(batches):
-        base = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = range(base + 1, base + 1 + len(pdf))
-            base += len(pdf)
-            yield pdf
-
-    numbered = parted.mapInPandas(_number, schema=schema_out)
-    off_df = local_frame(
-        spark, [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
-    )
-    out = (
-        numbered.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, (F.col(out_col) + F.col("_off")).cast("long"))
-        .drop("_pid", "_off")
-    )
-    return out, total
+    out, offsets = _numbered(df, [], order_by, out_col, "_n", num_partitions)
+    total = offsets.agg(F.max("_n")).first()[0]
+    return out.drop("_n"), int(total or 0)
 
 
 def grouped_prefix_sum(
@@ -108,13 +173,11 @@ def grouped_prefix_sum(
 
     A per-key running sum window sends each key's ENTIRE history to one
     task: with a handful of hot keys (event types, tenant ids) that is
-    a straggler at 100 TB no matter how many executors exist. The
-    distributed shape mirrors global_row_number:
+    a straggler at 100 TB no matter how many executors exist. Here:
 
-    1. ``repartitionByRange`` on (group, order) — each partition holds
-       a CONTIGUOUS slice, so a group spans adjacent partitions only
-       and the per-(partition, group) partials table has ~n_groups +
-       n_partitions rows TOTAL (not n_groups x n_partitions);
+    1. the pin on (group, order) — the per-(partition, group) partials
+       table has ~n_groups + n_partitions rows TOTAL (not n_groups x
+       n_partitions);
     2. per-(partition, group) sums, cumulated per group across
        partitions with an ordinary window over that tiny table;
     3. within-partition per-group running sums via a carry over each
@@ -129,30 +192,18 @@ def grouped_prefix_sum(
     ``order_by`` must totally order rows WITHIN a group for a
     deterministic result (same as any running-sum window).
     """
-    from pyspark.sql.types import StructField, StructType
     from pyspark.sql.window import Window as W
 
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in group_by + order_by]
-    # `_pgk` is a non-null STRUCT of the group cols: struct equality
-    # compares fields null-safely, so keying the offsets aggregate and
-    # join by it keeps NULL-group rows (a raw-column equi-join would
-    # silently DROP them — NULL never equals NULL — even though every
-    # (pid, group) has its offset row by construction). It is built by
-    # a plain projection over the pinned frame on each side — never
-    # carried through the Arrow pass (struct cells cross pandas as
-    # per-row dicts; measured ~20% wall on a 100k-row consumer) and
+    pinned, _ = _pin(df, [F.col(c) for c in group_by + order_by], num_partitions)
+    # `_pgk` is a non-null STRUCT of the group cols, so the offsets
+    # aggregate and join keep NULL-group rows (see _numbered). It is
+    # built by a plain projection over the pinned frame on each side —
+    # never carried through the Arrow pass (struct cells cross pandas
+    # as per-row dicts; measured ~20% wall on a 100k-row consumer) and
     # never as an eqNullSafe join condition (measured ~100x Catalyst
     # size-estimate inflation downstream, flipping consumers'
     # broadcast joins to sort-merge).
-    parted = (
-        df.repartitionByRange(n_part, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    partials = parted.groupBy(
+    partials = pinned.groupBy(
         "_pid", F.struct(*group_by).alias("_pgk")
     ).agg(F.sum(value_col).alias("_s"))
     w_off = (
@@ -167,24 +218,15 @@ def grouped_prefix_sum(
     )
 
     gcols = list(group_by)
-    vtype = parted.schema[value_col].dataType
+    _, in_group = _key_ops()
 
     def _cumsum(batches):
-        import pandas as pd
-
         # NULL group values are ordinary partitions to the window this
-        # operator twins (PARTITION BY g treats NULL as one key), so
-        # they must be ordinary groups here too: dropna=False keeps
-        # them in the cumsum, and key comparisons go through a
-        # NaN-aware normalizer (pandas renders NULL as NaN/None/NaT
-        # depending on dtype, and NaN != NaN would silently break the
-        # cross-batch carry for a NULL-group run).
-        def _norm_key(row):
-            return tuple(None if pd.isna(x) else x for x in row)
-
-        # NULL values are skipped like the window's sum skips them: a
-        # row's sum is NULL only while its group has seen no value yet,
-        # so sum the filled values and count the non-NULL ones.
+        # operator twins, so dropna=False keeps them in the cumsum and
+        # the carry matches keys with in_group. NULL values are skipped
+        # like the window's sum skips them: a row's sum is NULL only
+        # while its group has seen no value yet, so sum the filled
+        # values and count the non-NULL ones.
         carry_key = None
         carry_val = 0
         carry_seen = 0
@@ -198,30 +240,21 @@ def grouped_prefix_sum(
             )
             local, seen = runs["_v"], runs["_n"]
             if carry_key is not None and len(pdf):
-                first = _norm_key(pdf.iloc[0][gcols])
-                if first == carry_key:
-                    # contiguous prefix of the batch continues the
-                    # carried group (rows are sorted by group), so the
-                    # prefix length is simply the run of matching rows
-                    mask = None
-                    for c, kv in zip(gcols, carry_key):
-                        col = pdf[c]
-                        m = (col.isna() if kv is None else (col == kv)).to_numpy()
-                        mask = m if mask is None else (mask & m)
-                    run = (~mask).argmax() if not mask.all() else len(pdf)
-                    local.iloc[:run] = local.iloc[:run] + carry_val
-                    seen.iloc[:run] = seen.iloc[:run] + carry_seen
+                # rows are sorted by group, so the rows continuing the
+                # carried group are the batch's leading run
+                mask = in_group(pdf, gcols, carry_key)
+                run = len(pdf) if mask.all() else int(mask.argmin())
+                local.iloc[:run] = local.iloc[:run] + carry_val
+                seen.iloc[:run] = seen.iloc[:run] + carry_seen
             if len(pdf):
-                carry_key = _norm_key(pdf.iloc[-1][gcols])
+                carry_key = tuple(pdf[c].iloc[-1] for c in gcols)
                 carry_val = local.iloc[-1]
                 carry_seen = seen.iloc[-1]
             pdf["_local"] = local.where(seen > 0)
             yield pdf
 
-    schema_out = StructType(
-        list(parted.schema.fields) + [StructField("_local", vtype)]
-    )
-    local = parted.mapInPandas(_cumsum, schema=schema_out)
+    vtype = pinned.schema[value_col].dataType
+    local = _arrow_pass(pinned, _cumsum, [("_local", vtype)])
     return (
         local.withColumn("_pgk", F.struct(*group_by))
         .join(F.broadcast(offsets), ["_pid", "_pgk"])
@@ -245,7 +278,7 @@ def _check_no_timestamp_carry(df, carry_cols):
     a carried struct takes the same object-array path and would
     otherwise bypass the guard (the asof-join fill struct carries
     ``rts_us`` for exactly this reason)."""
-    from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
+    from pyspark.sql.types import TimestampNTZType, TimestampType
 
     def _contains_timestamp(dt) -> bool:
         if isinstance(dt, (TimestampType, TimestampNTZType)):
@@ -264,6 +297,80 @@ def _check_no_timestamp_carry(df, carry_cols):
             )
 
 
+def _shift(
+    df: DataFrame,
+    group_by: list[str],
+    order_by: list[str],
+    cols: list[str],
+    suffix: str,
+    num_partitions: int | None,
+    ascending: bool,
+) -> DataFrame:
+    """df + ``<col><suffix>`` columns: each ``cols`` value from the
+    group's previous row in the pin, which sorts (group, order)
+    ``ascending`` for lag, or descending for lead — the previous row
+    in descending order is the next one in natural order (descending
+    sorts NULLs last, so it is the exact reverse).
+
+    The only rows whose predecessor lives in another partition are
+    each partition's first rows, and their predecessors are the last
+    rows of the nearest non-empty earlier partitions: the max struct
+    of (group, order, cols) per partition under an ascending pin, the
+    min struct under a descending one (struct comparison is
+    lexicographic in field order, NULLs first). Those rows, one per
+    partition, are collected, carried forward past empty range
+    partitions on the driver, and broadcast into a per-partition Arrow
+    shift that carries the last row across batches.
+    """
+    import numpy as np
+
+    _check_no_timestamp_carry(df, cols)
+    g = list(group_by)
+    keys = [F.col(c) for c in g + list(order_by)]
+    pinned, n_part = _pin(
+        df, keys if ascending else [k.desc() for k in keys], num_partitions
+    )
+    edge = F.max if ascending else F.min
+    last = {
+        r["_pid"]: r["_e"].asDict()
+        for r in pinned.groupBy("_pid")
+        .agg(edge(F.struct(*keys, *[F.col(c) for c in cols])).alias("_e"))
+        .collect()
+    }
+    seed, prev = {}, None
+    for pid in range(n_part):
+        seed[pid] = prev
+        prev = last.get(pid, prev)
+    eq, _ = _key_ops()
+
+    def _kernel(batches):
+        pid = prev = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            pdf = pdf.copy()
+            if pid is None:
+                pid = int(pdf["_pid"].iloc[0])
+                prev = seed.get(pid)
+            same = np.ones(len(pdf), dtype=bool)
+            for c in g:
+                v = pdf[c].to_numpy()
+                same[1:] &= eq(v[1:], v[:-1])
+                same[0] &= prev is not None and bool(eq(prev[c], v[0]))
+            for c in cols:
+                v = pdf[c].to_numpy()
+                out = np.empty(len(pdf), dtype=object)
+                out[1:] = v[:-1]
+                out[0] = None if prev is None else prev[c]
+                out[~same] = None
+                pdf[c + suffix] = out
+            prev = {c: pdf[c].iloc[-1] for c in g + cols}
+            yield pdf
+
+    new_cols = [(c + suffix, pinned.schema[c].dataType) for c in cols]
+    return _arrow_pass(pinned, _kernel, new_cols).drop("_pid")
+
+
 def grouped_lag(
     df: DataFrame,
     group_by: list[str],
@@ -278,96 +385,12 @@ def grouped_lag(
     ORDER BY order)``.
 
     A per-key lag window serializes each key's history through one
-    task. Here the data range-partitions on (group, order) — groups
-    are contiguous, so the only rows whose predecessor lives elsewhere
-    are each partition's FIRST rows, and their predecessors are each
-    partition's LAST rows: exactly one row per partition, collected
-    and carried forward driver-side (skipping empty range partitions)
-    and broadcast into a per-partition Arrow shift with batch carry.
-
-    ``order_by`` must be all-ascending (partition boundaries are
-    located with a max-struct) and total within a group for a
-    deterministic result — the same contract as the window it
-    replaces.
+    task; here one boundary row per partition crosses partitions (see
+    :func:`_shift`). ``order_by`` must be all-ascending and total
+    within a group for a deterministic result — the same contract as
+    the window it replaces.
     """
-    import numpy as np
-
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    g = list(group_by)
-    _check_no_timestamp_carry(df, lag_cols)
-    cols = [F.col(c) for c in g + list(order_by)]
-    parted = (
-        df.repartitionByRange(n_part, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    # struct comparison is lexicographic by field order: group cols
-    # FIRST, then order cols, so the max-struct is the partition's
-    # last row in (group, order) sort order
-    carry_fields = g + list(order_by) + list(lag_cols)
-    last_rows = {
-        r["_pid"]: r["_l"].asDict()
-        for r in parted.groupBy("_pid")
-        .agg(F.max(F.struct(*[F.col(c) for c in carry_fields])).alias("_l"))
-        .collect()
-    }
-    # predecessor of partition p's first row = last row of the nearest
-    # NON-EMPTY earlier partition (range partitions can be empty)
-    boundary = {}
-    prev = None
-    for pid in range(n_part + 1):
-        boundary[pid] = prev
-        if pid in last_rows:
-            prev = last_rows[pid]
-
-    from pyspark.sql.types import StructField, StructType
-
-    schema_out = StructType(
-        list(parted.schema.fields)
-        + [
-            StructField(c + suffix, parted.schema[c].dataType)
-            for c in lag_cols
-        ]
-    )
-    gcols = list(g)
-    lcols = list(lag_cols)
-
-    def _shift(batches):
-        pred = None  # dict of previous row's fields, or None
-        first = True
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf) == 0:
-                for c in lcols:
-                    pdf[c + suffix] = None
-                yield pdf
-                continue
-            if first:
-                pred = boundary.get(int(pdf["_pid"].iloc[0]))
-                first = False
-            # vectorized within-batch shift, group-change rows nulled
-            same = np.ones(len(pdf), dtype=bool)
-            for c in gcols:
-                v = pdf[c].to_numpy()
-                same[1:] &= v[1:] == v[:-1]
-            for c in lcols:
-                v = pdf[c].to_numpy()
-                out = np.empty(len(pdf), dtype=object)
-                out[1:] = v[:-1]
-                out[~same] = None
-                out[0] = (
-                    pred[c]
-                    if pred is not None
-                    and all(pred[cc] == pdf[cc].iloc[0] for cc in gcols)
-                    else None
-                )
-                pdf[c + suffix] = out
-            pred = {c: pdf[c].iloc[-1] for c in gcols + lcols}
-            yield pdf
-
-    return parted.mapInPandas(_shift, schema=schema_out).drop("_pid")
+    return _shift(df, group_by, order_by, lag_cols, suffix, num_partitions, True)
 
 
 def grouped_lead(
@@ -381,96 +404,10 @@ def grouped_lead(
     """df + ``<col><suffix>`` columns: each ``lead_cols`` value from
     the group's NEXT row in ``order_by`` order (NULL at group ends) —
     the mirror of :func:`grouped_lag` for ``lead()`` windows (the
-    end-extension / staircase shape: every per-series ``lead(ts)``).
-
-    Symmetric construction: the rows whose successor lives elsewhere
-    are each partition's LAST rows, and their successors are each
-    partition's FIRST rows — one row per partition, carried backward
-    past empty range partitions. Within a partition the Arrow pass
-    buffers one batch so each batch's last row can take its lead from
-    the NEXT batch's first row.
+    end-extension / staircase shape: every per-series ``lead(ts)``):
+    the same shift over the reversed pin.
     """
-    import numpy as np
-
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    g = list(group_by)
-    _check_no_timestamp_carry(df, lead_cols)
-    cols = [F.col(c) for c in g + list(order_by)]
-    parted = (
-        df.repartitionByRange(n_part, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    carry_fields = g + list(order_by) + list(lead_cols)
-    first_rows = {
-        r["_pid"]: r["_f"].asDict()
-        for r in parted.groupBy("_pid")
-        .agg(F.min(F.struct(*[F.col(c) for c in carry_fields])).alias("_f"))
-        .collect()
-    }
-    # successor of partition p's last row = first row of the nearest
-    # NON-EMPTY later partition
-    boundary = {}
-    nxt = None
-    for pid in range(n_part, -1, -1):
-        boundary[pid] = nxt
-        if pid in first_rows:
-            nxt = first_rows[pid]
-
-    from pyspark.sql.types import StructField, StructType
-
-    schema_out = StructType(
-        list(parted.schema.fields)
-        + [
-            StructField(c + suffix, parted.schema[c].dataType)
-            for c in lead_cols
-        ]
-    )
-    gcols = list(g)
-    lcols = list(lead_cols)
-
-    def _shift(batches):
-        def _within(pdf):
-            pdf = pdf.copy()
-            same = np.ones(len(pdf), dtype=bool)
-            for c in gcols:
-                v = pdf[c].to_numpy()
-                same[:-1] &= v[:-1] == v[1:]
-            for c in lcols:
-                v = pdf[c].to_numpy()
-                out = np.empty(len(pdf), dtype=object)
-                out[:-1] = v[1:]
-                out[~same] = None
-                out[-1] = None  # pending: filled from the next batch
-                pdf[c + suffix] = out
-            return pdf
-
-        def _finalize(pdf, succ):
-            if succ is not None and all(
-                succ[c] == pdf[c].iloc[-1] for c in gcols
-            ):
-                for c in lcols:
-                    col = pdf[c + suffix].to_numpy()
-                    col[-1] = succ[c]
-                    pdf[c + suffix] = col
-            return pdf
-
-        pid = None
-        held = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid is None:
-                pid = int(pdf["_pid"].iloc[0])
-            if held is not None:
-                yield _finalize(held, {c: pdf[c].iloc[0] for c in gcols + lcols})
-            held = _within(pdf)
-        if held is not None:
-            yield _finalize(held, boundary.get(pid))
-
-    return parted.mapInPandas(_shift, schema=schema_out).drop("_pid")
+    return _shift(df, group_by, order_by, lead_cols, suffix, num_partitions, False)
 
 
 def sliding_range_count(
@@ -711,83 +648,6 @@ def percent_rank_expr(rank_col: str, total: int) -> Column:
     return (F.col(rank_col) - 1) / F.lit(float(total - 1))
 
 
-def _grouped_numbered(
-    df: DataFrame,
-    group_col: str,
-    order_by: list[str],
-    out_col: str,
-    n_col: str,
-    num_partitions: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared engine behind grouped_row_number/grouped_exact_percentiles:
-    (numbered df, tiny per-group stats df with (group, n_col)).
-
-    Everything per-group is derived from ONE per-(partition, group)
-    COUNT aggregate over the checkpointed ranged sort — the group is
-    the LEADING range key, so each group is a contiguous run of the
-    global order and min_rank(g) = 1 + Σ_{g' < g} count(g'). That
-    count table has ~n_groups + n_partitions rows (each group spans
-    adjacent partitions only), so the cross-partition cumulations are
-    single-task windows over a tiny frame, and the Python numbering
-    pass over the full data runs exactly ONCE (the old shape re-ran it
-    for a stats aggregate over its own output).
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
-    from pyspark.sql.window import Window as W
-
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in [group_col, *order_by]]
-    parted = (
-        df.repartitionByRange(n_part, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    pg = parted.groupBy("_pid", group_col).agg(F.count(F.lit(1)).alias("_c"))
-    w_pid = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    pid_off = (
-        pg.groupBy("_pid")
-        .agg(F.sum("_c").alias("_pc"))
-        .select("_pid", F.coalesce(F.sum("_pc").over(w_pid), F.lit(0)).alias("_off"))
-    )
-    # group sizes + count of all preceding groups' rows, in the SAME
-    # ascending order the range partitioner used (leading sort key)
-    w_grp = W.orderBy(group_col).rowsBetween(W.unboundedPreceding, -1)
-    gstats = (
-        pg.groupBy(group_col)
-        .agg(F.sum("_c").cast("long").alias(n_col))
-        .select(
-            group_col,
-            n_col,
-            F.coalesce(F.sum(n_col).over(w_grp), F.lit(0)).alias("_prior"),
-        )
-    )
-    schema_out = StructType(
-        list(parted.schema.fields) + [StructField("_local", LongType())]
-    )
-
-    def _number(batches):
-        base = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["_local"] = range(base + 1, base + 1 + len(pdf))
-            base += len(pdf)
-            yield pdf
-
-    numbered = parted.mapInPandas(_number, schema=schema_out)
-    # global_rank = _local + _off; min_rank(group) = _prior + 1
-    out = (
-        numbered.join(F.broadcast(pid_off), "_pid")
-        .join(F.broadcast(gstats), group_col)
-        .withColumn(
-            out_col, (F.col("_local") + F.col("_off") - F.col("_prior")).cast("long")
-        )
-        .drop("_pid", "_local", "_off", "_prior")
-    )
-    return out, gstats.drop("_prior")
-
-
 def grouped_row_number(
     df: DataFrame,
     group_col: str,
@@ -802,18 +662,14 @@ def grouped_row_number(
 
     A per-group ranking window sends each group's entire history to
     one task — with a handful of hot groups (languages, sources) that
-    is a straggler at 100 TB. Distributed shape: ONE ranged global
-    sort on (group, *order_by), numbered within partitions in a single
-    Python pass, with per-partition and per-group offsets derived from
-    a tiny per-(partition, group) count aggregate broadcast back —
-    rank_in_group = local_rank + partition_offset - rows_in_prior_groups.
-    Contiguity of the global order within each group makes this exact;
-    ``order_by`` must total-order rows WITHIN a group (include a
-    tie-breaker), exactly as for any deterministic ranking.
+    is a straggler at 100 TB. Distributed shape (:func:`_numbered`):
+    ONE pinned sort on (group, *order_by), each row's index within its
+    partition from a JVM projection, plus a per-(partition, group)
+    offset broadcast back. A NULL group is one group, as in the
+    window. ``order_by`` must total-order rows WITHIN a group (include
+    a tie-breaker), exactly as for any deterministic ranking.
     """
-    out, _ = _grouped_numbered(
-        df, group_col, order_by, out_col, n_col, num_partitions
-    )
+    out, _ = _numbered(df, [group_col], order_by, out_col, n_col, num_partitions)
     return out
 
 
@@ -852,52 +708,212 @@ def grouped_exact_percentiles(
     Spark's exact ``percentile`` aggregate buffers every value per
     group on one task (the 100 TB killer) and ``approx_percentile``
     is not oracle-exact. This shape stays distributed: one ranged
-    global sort (grouped_row_number), then a TINY per-group target
-    table — ceil via pure integer math ((p*n + 99) div 100), portable
-    across engines — broadcast-joined back on (group, rank).
+    global sort (grouped_row_number, which carries the group size on
+    every row), then each row keeps the ps whose target rank it holds
+    — ceil via pure integer math ((p*n + 99) div 100), portable across
+    engines. No join.
 
     Rows with a NULL group or NULL value are the caller's problem:
-    the target join is an equality join (NULL group never matches,
-    exactly as in the SQL replay), and NULLs in ``value_col`` sort
-    first under Spark's ascending order but LAST in most SQL engines
-    — filter them out before calling if the column is nullable.
+    NULL-group rows are dropped (as the SQL replay's equality join
+    drops them), and NULLs in ``value_col`` sort first under Spark's
+    ascending order but LAST in most SQL engines — filter them out
+    before calling if the column is nullable.
     """
     for p in ps:
         if not (isinstance(p, int) and 1 <= p <= 100):
             raise ValueError(f"percentiles must be ints in 1..100, got {p!r}")
-    ranked, gstats = _grouped_numbered(
-        df.select(group_col, value_col, id_col),
+    ranked = grouped_row_number(
+        df.select(group_col, value_col, id_col).where(F.col(group_col).isNotNull()),
         group_col,
         [value_col, id_col],
         "grn",
         "n_group",
         num_partitions,
     )
-    # targets come from the TINY per-group stats table (never from the
-    # numbered output, which would re-run the full numbering pass);
-    # rename the target-side keys so the join is unambiguous
-    targets = (
-        gstats.select(
-            F.col(group_col).alias("_t_grp"),
-            F.explode(F.array(*[F.lit(p) for p in ps])).alias("p"),
-            F.col("n_group").alias("_n"),
-        )
-        .withColumn(
-            "_target",
-            F.floor((F.col("p").cast("long") * F.col("_n") + 99) / 100).cast("long"),
-        )
-        .drop("_n")
-    )
+    each_p = F.explode(F.array(*[F.lit(p) for p in ps])).alias("p")
+    target = F.floor((F.col("p").cast("long") * F.col("n_group") + 99) / 100)
     return (
-        ranked.join(
-            F.broadcast(targets),
-            on=[
-                F.col(group_col) == F.col("_t_grp"),
-                F.col("grn") == F.col("_target"),
-            ],
-        )
+        ranked.select(group_col, value_col, "grn", "n_group", each_p)
+        .where(F.col("grn") == target)
         .select(group_col, "p", value_col)
     )
+
+
+def _plain(v):
+    """A collected Row (struct fill col) as a plain dict, so an Arrow
+    pass can emit it back as a struct value."""
+    return v.asDict(recursive=True) if hasattr(v, "asDict") else v
+
+
+def _seeds(edges: dict, pids) -> dict:
+    """pid -> (group, value) that each partition inherits from the
+    partitions before it in ``pids`` order; ``edges`` maps the
+    non-empty ones to (edge group, has a value, that value)."""
+    seeds, cur_g, cur_v = {}, None, None
+    for pid in pids:
+        seeds[pid] = (cur_g, cur_v)
+        if pid in edges:
+            eg, has, ev = edges[pid]
+            if eg != cur_g:
+                cur_g, cur_v = eg, (_plain(ev) if has else None)
+            elif has:
+                cur_v = _plain(ev)
+    return seeds
+
+
+def _fills(
+    df: DataFrame,
+    group_by: list[str],
+    keys: list[Column],
+    fill_col: str,
+    fwd_col: str,
+    bwd_col: str | None,
+    num_partitions: int | None,
+) -> DataFrame:
+    """df + ``fwd_col`` — the last non-NULL ``fill_col`` at-or-before
+    each row of its group in the pinned ``keys`` order — and, unless
+    ``bwd_col`` is None, ``bwd_col`` — the first non-NULL at-or-after.
+
+    One summary Arrow pass emits a single row per partition: its
+    trailing group with that group's last non-NULL value, and its
+    leading group with that group's first non-NULL value. The driver
+    cumulates those rows into a seed per partition — forward over the
+    trailing edges, backward over the leading ones — and a second
+    Arrow pass fills per group, carrying the forward value across
+    batches and holding back the rows whose backward value has not
+    arrived yet (the current NULL run, never the partition). Held rows
+    are emitted late, so the row order of the result is unspecified,
+    like any shuffle output.
+    """
+    import pandas as pd
+
+    g = list(group_by)
+    _check_no_timestamp_carry(df, [fill_col])
+    pinned, n_part = _pin(df, keys, num_partitions)
+    ftype = pinned.schema[fill_col].dataType
+    fields = [StructField("_pid", IntegerType())]
+    for e in ("_t", "_l"):  # trailing edge, leading edge
+        fields += [StructField(e + c, pinned.schema[c].dataType) for c in g]
+        fields += [StructField(e + "has", BooleanType()), StructField(e + "val", ftype)]
+    edge_schema = StructType(fields)
+    _, in_group = _key_ops()
+
+    def _edges(batches):
+        pid = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            if pid is None:
+                pid = int(pdf["_pid"].iloc[0])
+                lead_g, lead_has, lead_val, lead_open = (
+                    tuple(pdf[c].iloc[0] for c in g), False, None, True
+                )
+                trail_g = None
+            # leading group's FIRST non-NULL, while its run is open
+            if lead_open and not lead_has:
+                mask = in_group(pdf, g, lead_g)
+                lead_open = bool(mask.all())
+                nn = pdf.loc[mask, fill_col].dropna()
+                if len(nn):
+                    lead_has, lead_val = True, nn.iloc[0]
+            # trailing group's LAST non-NULL
+            bg = tuple(pdf[c].iloc[-1] for c in g)
+            if bg != trail_g:
+                trail_g, trail_has, trail_val = bg, False, None
+            nn = pdf.loc[in_group(pdf, g, bg), fill_col].dropna()
+            if len(nn):
+                trail_has, trail_val = True, nn.iloc[-1]
+        if pid is not None:
+            row = {"_pid": pid, "_thas": trail_has, "_tval": trail_val,
+                   "_lhas": lead_has, "_lval": lead_val}
+            row.update(zip(["_t" + c for c in g], trail_g))
+            row.update(zip(["_l" + c for c in g], lead_g))
+            yield pd.DataFrame([row], columns=edge_schema.names)
+
+    rows = pinned.mapInPandas(_edges, schema=edge_schema).collect()
+
+    def _edge(e):
+        return {
+            r["_pid"]: (tuple(r[e + c] for c in g), r[e + "has"], r[e + "val"])
+            for r in rows
+        }
+
+    fwd_seed = _seeds(_edge("_t"), range(n_part))
+    bwd_seed = _seeds(_edge("_l"), reversed(range(n_part)))
+
+    def _fill(batches):
+        def resolve(held, value):
+            held = held.copy()
+            held[bwd_col] = pd.Series(
+                [value] * len(held), index=held.index, dtype=object
+            )
+            return held
+
+        pid = pending = pending_g = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            pdf = pdf.copy()
+            if pid is None:
+                pid = int(pdf["_pid"].iloc[0])
+                carry_g, carry_v = fwd_seed.get(pid, (None, None))
+            filled = pdf.groupby(g, sort=False)[fill_col].ffill()
+            if carry_g is not None and carry_v is not None:
+                # sorted by group, so rows matching the carried group
+                # are the leading run; NULLs there predate any value
+                mask = filled.isna().to_numpy() & in_group(pdf, g, carry_g)
+                if mask.any():
+                    filled = filled.astype(object)
+                    filled.loc[mask] = pd.Series(
+                        [carry_v] * int(mask.sum()),
+                        index=filled.index[mask],
+                        dtype=object,
+                    )
+            # pandas ffill leaves leading missing entries as float NaN
+            # even in object columns — normalize to None so Arrow can
+            # rebuild struct values
+            filled = filled.where(filled.notna(), None)
+            pdf[fwd_col] = filled
+            carry_g = tuple(pdf[c].iloc[-1] for c in g)
+            lv = filled.iloc[-1]
+            carry_v = None if lv is None or (lv != lv) else lv
+            if bwd_col is None:
+                yield pdf
+                continue
+            bwd = pdf.groupby(g, sort=False)[fill_col].bfill()
+            pdf[bwd_col] = bwd.where(bwd.notna(), None)
+            if pending is not None:
+                nn_mask = in_group(pdf, g, pending_g)
+                nn = pdf.loc[nn_mask, fill_col].dropna()
+                if len(nn):
+                    yield resolve(pending, nn.iloc[0])
+                    pending = None
+                elif not nn_mask.all():
+                    # the pending group ended inside the partition with
+                    # no later value — its backward fill is NULL
+                    yield resolve(pending, None)
+                    pending = None
+                # else: the group spans this whole batch with no value
+            # hold the trailing NULL run of the batch's last group; NULL
+            # rows of earlier groups are final (their group ended here)
+            hold = pdf[bwd_col].isna().to_numpy() & in_group(pdf, g, carry_g)
+            if not hold.any():
+                yield pdf
+                continue
+            if not hold.all():
+                yield pdf.loc[~hold]
+            if pending is None:
+                pending, pending_g = pdf.loc[hold], carry_g
+            else:
+                pending = pd.concat([pending, pdf.loc[hold]])
+        # partition end: held rows resolve from the later partitions'
+        # seed
+        if pending is not None:
+            seed_g, seed_v = bwd_seed.get(pid, (None, None))
+            yield resolve(pending, seed_v if seed_g == pending_g else None)
+
+    new_cols = [(fwd_col, ftype)] + ([(bwd_col, ftype)] if bwd_col else [])
+    return _arrow_pass(pinned, _fill, new_cols).drop("_pid")
 
 
 def grouped_last_fill(
@@ -917,13 +933,10 @@ def grouped_last_fill(
     columns, giving the mirrored backward fill ("first non-NULL
     at-or-after" in natural order) without a separate primitive.
 
-    Shape: range-partition on (group, order cols with direction) so
-    each partition is a contiguous slice; one summary Arrow pass emits
-    a single row per partition (trailing group + its last non-NULL
-    value); the driver cumulates those n_partitions rows into a
-    boundary seed per partition; a second Arrow pass does vectorized
-    per-group ffill with batch carry. No per-key history ever
-    serializes through one task.
+    Shape: see :func:`_fills` — the pin on (group, order cols with
+    direction), one summary row per partition, driver-cumulated seeds,
+    one fill pass. No per-key history ever serializes through one
+    task.
 
     Contracts: group cols non-NULL; NULL (not NaN) marks missing in
     ``fill_col`` (wrap doubles in a struct — as-of/interpolation
@@ -931,123 +944,12 @@ def grouped_last_fill(
     (group, order) need not be unique, but ties make the fill
     nondeterministic exactly as they do for the window it replaces.
     """
-    import pandas as pd
-
-    from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
-
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    g = list(group_by)
-    _check_no_timestamp_carry(df, [fill_col])
     asc = ascending or [True] * len(order_by)
-    sort_exprs = [F.col(c) for c in g] + [
-        F.col(c).asc() if a else F.col(c).desc()
-        for c, a in zip(order_by, asc)
+    keys = [F.col(c) for c in group_by] + [
+        F.col(c).asc() if a else F.col(c).desc() for c, a in zip(order_by, asc)
     ]
     out_col = out_col or fill_col + "_ff"
-    parted = (
-        df.repartitionByRange(n_part, *sort_exprs)
-        .sortWithinPartitions(*sort_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    ftype = parted.schema[fill_col].dataType
-    sum_schema = StructType(
-        [StructField("_pid", IntegerType())]
-        + [StructField(c, parted.schema[c].dataType) for c in g]
-        + [StructField("_has", BooleanType()), StructField("_val", ftype)]
-    )
-
-    def _summary(batches):
-        pid = None
-        last_g = None
-        has = False
-        val = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid is None:
-                pid = int(pdf["_pid"].iloc[0])
-            bg = tuple(pdf[c].iloc[-1] for c in g)
-            if bg != last_g:
-                last_g, has, val = bg, False, None
-            mask = pd.Series(True, index=pdf.index)
-            for c, v in zip(g, bg):
-                mask &= pdf[c] == v
-            nn = pdf.loc[mask, fill_col]
-            nn = nn[nn.notna()]
-            if len(nn):
-                val, has = nn.iloc[-1], True
-        if pid is not None:
-            row = {"_pid": pid, "_has": has, "_val": val}
-            for c, v in zip(g, last_g):
-                row[c] = v
-            yield pd.DataFrame([row], columns=[f.name for f in sum_schema.fields])
-
-    summaries = {
-        r["_pid"]: (tuple(r[c] for c in g), r["_has"], r["_val"])
-        for r in parted.mapInPandas(_summary, schema=sum_schema).collect()
-    }
-    # Row objects for struct fill cols -> plain dicts so the Arrow pass
-    # can emit them back as struct values.
-    def _plain(v):
-        return v.asDict(recursive=True) if hasattr(v, "asDict") else v
-
-    boundary = {}
-    cur_g, cur_v = None, None
-    for pid in range(n_part + 1):
-        boundary[pid] = (cur_g, cur_v)
-        s = summaries.get(pid)
-        if s is not None:
-            sg, has, sv = s
-            if sg != cur_g:
-                cur_g, cur_v = sg, (_plain(sv) if has else None)
-            elif has:
-                cur_v = _plain(sv)
-
-    fill_schema = StructType(
-        list(parted.schema.fields) + [StructField(out_col, ftype)]
-    )
-
-    def _fill(batches):
-        first = True
-        carry_g, carry_v = None, None
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf) == 0:
-                pdf[out_col] = None
-                yield pdf
-                continue
-            if first:
-                carry_g, carry_v = boundary.get(
-                    int(pdf["_pid"].iloc[0]), (None, None)
-                )
-                first = False
-            filled = pdf.groupby(g, sort=False)[fill_col].ffill()
-            if carry_g is not None and carry_v is not None:
-                # sorted by group, so rows matching the carried group
-                # are the leading run; nulls there predate any value
-                mask = filled.isna()
-                for c, v in zip(g, carry_g):
-                    mask &= pdf[c] == v
-                if mask.any():
-                    filled = filled.astype(object)
-                    filled.loc[mask] = pd.Series(
-                        [carry_v] * int(mask.sum()),
-                        index=filled.index[mask],
-                        dtype=object,
-                    )
-            # pandas ffill leaves leading missing entries as float NaN
-            # even in object columns — normalize to None so Arrow can
-            # rebuild struct values
-            filled = filled.where(filled.notna(), None)
-            pdf[out_col] = filled
-            carry_g = tuple(pdf[c].iloc[-1] for c in g)
-            lv = filled.iloc[-1]
-            carry_v = None if lv is None or (lv != lv) else lv
-            yield pdf
-
-    return parted.mapInPandas(_fill, schema=fill_schema).drop("_pid")
+    return _fills(df, group_by, keys, fill_col, out_col, None, num_partitions)
 
 
 def grouped_bidi_fill(
@@ -1065,8 +967,9 @@ def grouped_bidi_fill(
     mirror — ties resolve in reverse natural order). Two
     :func:`grouped_last_fill` calls shuffle and materialize the corpus
     twice (the reverse-direction call re-range-partitions the already
-    filled frame); this computes both directions over one partitioned
-    sort — at scale that is one corpus shuffle instead of two.
+    filled frame); this computes both directions over one pinned sort
+    (:func:`_fills`) — at scale that is one corpus shuffle instead of
+    two.
 
     NOTE the tie contract: a window `last(...) OVER (ORDER BY t DESC,
     tie ASC)` sees same-t rows in a DIFFERENT order than this mirror
@@ -1074,216 +977,6 @@ def grouped_bidi_fill(
     grid-on-data-point rule) must reconcile at the call site —
     interpolate_at patches the single divergent case (see its
     distributed path).
-
-    Streaming: forward fill carries one value per batch; the backward
-    fill holds back only rows whose next value hasn't arrived yet (the
-    current null-run — for grid interpolation that is the gap between
-    two data points, never the partition). Rows may be emitted out of
-    batch order; row order of the result is unspecified, like any
-    shuffle output.
     """
-    import pandas as pd
-
-    from pyspark.sql.types import BooleanType, IntegerType, StructField, StructType
-
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    g = list(group_by)
-    _check_no_timestamp_carry(df, [fill_col])
-    sort_exprs = [F.col(c) for c in g + list(order_by)]
-    parted = (
-        df.repartitionByRange(n_part, *sort_exprs)
-        .sortWithinPartitions(*sort_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    ftype = parted.schema[fill_col].dataType
-    sum_schema = StructType(
-        [StructField("_pid", IntegerType())]
-        # trailing group + its last non-null (forward boundary seed)
-        + [StructField("_t" + c, parted.schema[c].dataType) for c in g]
-        + [StructField("_thas", BooleanType()), StructField("_tval", ftype)]
-        # leading group + its first non-null (backward boundary seed)
-        + [StructField("_l" + c, parted.schema[c].dataType) for c in g]
-        + [StructField("_lhas", BooleanType()), StructField("_lval", ftype)]
-    )
-
-    def _summary(batches):
-        import pandas as pd
-
-        pid = None
-        lead_g, lead_has, lead_val, lead_open = None, False, None, True
-        trail_g, trail_has, trail_val = None, False, None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid is None:
-                pid = int(pdf["_pid"].iloc[0])
-                lead_g = tuple(pdf[c].iloc[0] for c in g)
-            # leading group's FIRST non-null: only while the leading
-            # group run is still open and unresolved
-            if lead_open and not lead_has:
-                mask = pd.Series(True, index=pdf.index)
-                for c, v in zip(g, lead_g):
-                    mask &= pdf[c] == v
-                if not mask.all():
-                    lead_open = False
-                nn = pdf.loc[mask, fill_col]
-                nn = nn[nn.notna()]
-                if len(nn):
-                    lead_has, lead_val = True, nn.iloc[0]
-            # trailing group's LAST non-null (same logic as
-            # grouped_last_fill's summary)
-            bg = tuple(pdf[c].iloc[-1] for c in g)
-            if bg != trail_g:
-                trail_g, trail_has, trail_val = bg, False, None
-            mask = pd.Series(True, index=pdf.index)
-            for c, v in zip(g, bg):
-                mask &= pdf[c] == v
-            nn = pdf.loc[mask, fill_col]
-            nn = nn[nn.notna()]
-            if len(nn):
-                trail_val, trail_has = nn.iloc[-1], True
-        if pid is not None:
-            row = {"_pid": pid, "_thas": trail_has, "_tval": trail_val,
-                   "_lhas": lead_has, "_lval": lead_val}
-            for c, v in zip(g, trail_g):
-                row["_t" + c] = v
-            for c, v in zip(g, lead_g):
-                row["_l" + c] = v
-            yield pd.DataFrame([row], columns=[f.name for f in sum_schema.fields])
-
-    rows = parted.mapInPandas(_summary, schema=sum_schema).collect()
-    summaries = {
-        r["_pid"]: (
-            tuple(r["_t" + c] for c in g), r["_thas"], r["_tval"],
-            tuple(r["_l" + c] for c in g), r["_lhas"], r["_lval"],
-        )
-        for r in rows
-    }
-
-    def _plain(v):
-        return v.asDict(recursive=True) if hasattr(v, "asDict") else v
-
-    fwd_boundary = {}
-    cur_g, cur_v = None, None
-    for pid in range(n_part + 1):
-        fwd_boundary[pid] = (cur_g, cur_v)
-        s = summaries.get(pid)
-        if s is not None:
-            tg, thas, tval = s[0], s[1], s[2]
-            if tg != cur_g:
-                cur_g, cur_v = tg, (_plain(tval) if thas else None)
-            elif thas:
-                cur_v = _plain(tval)
-    bwd_boundary = {}
-    cur_g, cur_v = None, None
-    for pid in range(n_part - 1, -2, -1):
-        bwd_boundary[pid] = (cur_g, cur_v)
-        s = summaries.get(pid)
-        if s is not None:
-            lg, lhas, lval = s[3], s[4], s[5]
-            if lg != cur_g:
-                cur_g, cur_v = lg, (_plain(lval) if lhas else None)
-            elif lhas:
-                # this partition's first non-null PRECEDES anything in
-                # later partitions — it wins for earlier rows
-                cur_v = _plain(lval)
-
-    fill_schema = StructType(
-        list(parted.schema.fields)
-        + [StructField(fwd_col, ftype), StructField(bwd_col, ftype)]
-    )
-
-    def _fill(batches):
-        import pandas as pd
-
-        first = True
-        carry_g, carry_v = None, None  # forward carry
-        pid = None
-        pending = None  # rows awaiting a backward value (one group)
-        pending_g = None
-
-        def resolve(pend, value):
-            pend = pend.copy()
-            col = pend[bwd_col].astype(object)
-            col.loc[:] = pd.Series([value] * len(pend), index=pend.index,
-                                   dtype=object)
-            pend[bwd_col] = col
-            return pend
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            if first:
-                pid = int(pdf["_pid"].iloc[0])
-                carry_g, carry_v = fwd_boundary.get(pid, (None, None))
-                first = False
-            # ---- forward fill (same as grouped_last_fill) ----
-            filled = pdf.groupby(g, sort=False)[fill_col].ffill()
-            if carry_g is not None and carry_v is not None:
-                mask = filled.isna()
-                for c, v in zip(g, carry_g):
-                    mask &= pdf[c] == v
-                if mask.any():
-                    filled = filled.astype(object)
-                    filled.loc[mask] = pd.Series(
-                        [carry_v] * int(mask.sum()),
-                        index=filled.index[mask], dtype=object,
-                    )
-            filled = filled.where(filled.notna(), None)
-            pdf[fwd_col] = filled
-            carry_g = tuple(pdf[c].iloc[-1] for c in g)
-            lv = filled.iloc[-1]
-            carry_v = None if lv is None or (lv != lv) else lv
-            # ---- backward fill within batch ----
-            bwd = pdf.groupby(g, sort=False)[fill_col].bfill()
-            bwd = bwd.where(bwd.notna(), None)
-            pdf[bwd_col] = bwd
-            # resolve pending rows against this batch
-            if pending is not None:
-                bmask = pd.Series(True, index=pdf.index)
-                for c, v in zip(g, pending_g):
-                    bmask &= pdf[c] == v
-                grows = pdf.loc[bmask, fill_col]
-                nn = grows[grows.notna()]
-                if len(nn):
-                    yield resolve(pending, _plain(nn.iloc[0]))
-                    pending, pending_g = None, None
-                elif not bmask.all():
-                    # the pending group ended inside the partition with
-                    # no later value — backward fill is NULL
-                    yield resolve(pending, None)
-                    pending, pending_g = None, None
-                # else: group spans this whole batch with no value —
-                # keep pending (null-run continues)
-            # rows whose backward value is still unknown: the trailing
-            # null-run of the batch's last group
-            unres = pdf[bwd_col].isna() if pdf[bwd_col].isna().any() else None
-            if unres is not None:
-                last_g = tuple(pdf[c].iloc[-1] for c in g)
-                tmask = pd.Series(True, index=pdf.index)
-                for c, v in zip(g, last_g):
-                    tmask &= pdf[c] == v
-                hold = pdf[bwd_col].isna() & tmask
-                # null bwd rows of EARLIER groups within this batch are
-                # final NULLs (their group ended in-batch)
-                emit = pdf.loc[~hold]
-                if len(emit):
-                    yield emit
-                held = pdf.loc[hold]
-                if len(held):
-                    if pending is None:
-                        pending, pending_g = held, last_g
-                    else:
-                        pending = pd.concat([pending, held])
-                continue
-            yield pdf
-        # partition end: pending rows resolve from the next partitions'
-        # boundary seed
-        if pending is not None:
-            bg_g, bg_v = bwd_boundary.get(pid, (None, None))
-            yield resolve(pending, bg_v if bg_g == pending_g else None)
-
-    return parted.mapInPandas(_fill, schema=fill_schema).drop("_pid")
+    keys = [F.col(c) for c in list(group_by) + list(order_by)]
+    return _fills(df, group_by, keys, fill_col, fwd_col, bwd_col, num_partitions)

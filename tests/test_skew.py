@@ -217,20 +217,41 @@ def test_grouped_row_number_and_ntile_col_match_window(spark):
     rows = [("hot", i, rng.choice([1.5, 2.5, 3.5])) for i in range(61)]
     rows += [("mid", 100 + i, rng.choice([1.5, 2.5])) for i in range(17)]
     rows += [("tiny", 200, 9.0), ("tiny", 201, 8.0)]
-    df = spark.createDataFrame(rows, "g string, id long, v double")
-    got = ranking.grouped_row_number(df, "g", ["v", "id"], num_partitions=7)
-    sel = got.select(
-        "g", "id", "grn", "n_group",
-        ranking.ntile_col_expr("grn", "n_group", 3).alias("nt"),
-    )
+    # a NULL group is one window partition: its rows must neither
+    # vanish nor shift the other groups' numbers
+    null_groups = [
+        (None if i % 3 == 0 else f"k{i % 2}", i, float(i % 5)) for i in range(24)
+    ]
     w = W.partitionBy("g").orderBy("v", "id")
-    want = df.select(
-        "g", "id",
-        F.row_number().over(w).cast("long").alias("grn"),
-        F.count(F.lit(1)).over(W.partitionBy("g")).alias("n_group"),
-        F.ntile(3).over(w).alias("nt"),
-    )
-    assert sel.subtract(want).count() == 0 and want.subtract(sel).count() == 0
+    for case, parts in ((rows, 7), (null_groups, 3)):
+        df = spark.createDataFrame(case, "g string, id long, v double")
+        got = ranking.grouped_row_number(df, "g", ["v", "id"], num_partitions=parts)
+        sel = got.select(
+            "g", "id", "grn", "n_group",
+            ranking.ntile_col_expr("grn", "n_group", 3).alias("nt"),
+        )
+        want = df.select(
+            "g", "id",
+            F.row_number().over(w).cast("long").alias("grn"),
+            F.count(F.lit(1)).over(W.partitionBy("g")).alias("n_group"),
+            F.ntile(3).over(w).alias("nt"),
+        )
+        assert sel.count() == len(case)
+        assert sel.subtract(want).count() == 0 and want.subtract(sel).count() == 0
+
+
+def test_row_numbering_plans_run_no_python(spark):
+    # numbering is a JVM projection over the pinned sort: no Python
+    # worker is started just to count rows
+    from my_weather_spark.ops import ranking
+
+    df = spark.createDataFrame([(i % 3, i) for i in range(50)], "g long, id long")
+    ranked, _ = ranking.global_row_number(df, ["id"], num_partitions=3)
+    grouped = ranking.grouped_row_number(df, "g", ["id"], num_partitions=3)
+    for out in (ranked, grouped):
+        assert len(out.collect()) == 50
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan and "MapInArrow" not in plan, plan
 
 
 def test_grouped_exact_percentiles(spark):
@@ -389,17 +410,27 @@ def test_grouped_lag_matches_window(spark):
         (i, rng.choice(["a", "b", "c"]), rng.randrange(0, 10000))
         for i in range(901)
     ]
-    df = spark.createDataFrame(rows, "id long, g string, v long")
+    # NULL integer groups: pandas renders them NaN, and NaN != NaN
+    null_groups = [(i, None if i % 3 == 0 else i % 2, i) for i in range(24)]
+    cases = [
+        # (rows, schema, partitions)
+        (rows, "id long, g string, v long", 5),
+        (null_groups, "id long, g long, v long", 1),
+        (null_groups, "id long, g long, v long", 3),
+    ]
+    w = W.partitionBy("g").orderBy("v", "id")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
-        got = ranking.grouped_lag(
-            df, ["g"], ["v", "id"], ["v"], num_partitions=5
-        ).select("id", "g", "v", "v_prev")
-        w = W.partitionBy("g").orderBy("v", "id")
-        want = df.withColumn("v_prev", F.lag("v").over(w)).select(
-            "id", "g", "v", "v_prev"
-        )
-        assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
+        for case, schema, parts in cases:
+            df = spark.createDataFrame(case, schema)
+            got = ranking.grouped_lag(
+                df, ["g"], ["v", "id"], ["v"], num_partitions=parts
+            ).select("id", "g", "v", "v_prev")
+            want = df.withColumn("v_prev", F.lag("v").over(w)).select(
+                "id", "g", "v", "v_prev"
+            )
+            assert got.count() == len(case)
+            assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
@@ -417,17 +448,27 @@ def test_grouped_lead_matches_window(spark):
         (i, rng.choice(["a", "b", "c"]), rng.randrange(0, 10000))
         for i in range(901)
     ]
-    df = spark.createDataFrame(rows, "id long, g string, v long")
+    # NULL integer groups: pandas renders them NaN, and NaN != NaN
+    null_groups = [(i, None if i % 3 == 0 else i % 2, i) for i in range(24)]
+    cases = [
+        # (rows, schema, partitions)
+        (rows, "id long, g string, v long", 5),
+        (null_groups, "id long, g long, v long", 1),
+        (null_groups, "id long, g long, v long", 3),
+    ]
+    w = W.partitionBy("g").orderBy("v", "id")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
-        got = ranking.grouped_lead(
-            df, ["g"], ["v", "id"], ["v"], num_partitions=5
-        ).select("id", "g", "v", "v_next")
-        w = W.partitionBy("g").orderBy("v", "id")
-        want = df.withColumn("v_next", F.lead("v").over(w)).select(
-            "id", "g", "v", "v_next"
-        )
-        assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
+        for case, schema, parts in cases:
+            df = spark.createDataFrame(case, schema)
+            got = ranking.grouped_lead(
+                df, ["g"], ["v", "id"], ["v"], num_partitions=parts
+            ).select("id", "g", "v", "v_next")
+            want = df.withColumn("v_next", F.lead("v").over(w)).select(
+                "id", "g", "v", "v_next"
+            )
+            assert got.count() == len(case)
+            assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
