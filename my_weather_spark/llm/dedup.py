@@ -421,45 +421,47 @@ def drop_span_duplicates(
     return df.join(keep, id_col, "left_semi")
 
 
+def word_hashes(text_col: str):
+    """Distinct 60-bit md5 hashes of :func:`word_array` — THE word set
+    every exact-Jaccard verify intersects, and the ``word_hashes``
+    column the incremental SignatureStore persists. ~3x cheaper to ship
+    and intersect than strings; exact up to a ~2^-60 collision."""
+    return F.array_distinct(
+        F.transform(word_array(text_col), lambda w: md5_prefix_long(w, 15))
+    )
+
+
+def jaccard_scored(pairs: DataFrame, min_jaccard: float) -> DataFrame:
+    """``pairs`` + ``jaccard`` = round6_portable(|a ∩ b| / |a ∪ b|) of
+    its :func:`word_hashes` columns ``_wa``/``_wb``, keeping ``jaccard
+    >= min_jaccard`` — THE verify score of the candidate, dense and
+    incremental paths, so all three agree at the threshold."""
+    return (
+        pairs.withColumn("_ni", F.size(F.array_intersect("_wa", "_wb")))
+        .withColumn(
+            "jaccard",
+            round6_portable(F.col("_ni") / (F.size("_wa") + F.size("_wb") - F.col("_ni"))),
+        )
+        .where(F.col("jaccard") >= min_jaccard)
+        .drop("_ni")
+    )
+
+
 def jaccard_for_candidates(
     df: DataFrame,
     candidates: DataFrame,
     min_jaccard: float = 0.0,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = True,
 ) -> DataFrame:
     """Exact word-set Jaccard scored ONLY for the given candidate pairs
     (doc_a, doc_b) — the verify step after LSH.
 
-    Joins each side's word-set ARRAY onto the pair list and intersects
-    in-row: cost is O(|candidates| x words-per-doc), never the
-    quadratic word-level self-join — this is the function to feed LSH
-    output at corpus scale.
-
-    When the candidate pair set is small relative to the corpus
-    (``4 x |pairs| < |docs|``), the corpus is PRE-FILTERED to docs that
-    appear in a candidate pair (semi-join on the distinct candidate
-    ids) BEFORE the word-split + md5 pass, so the parse+hash cost
-    tracks |candidate docs|, not |corpus|; AQE broadcasts the small id
-    list, so the corpus is never shuffled for it. The prefilter is
-    GATED because its cost is a distinct over 2 x |pairs| id rows,
-    which is bounded by the PAIR set, not by one corpus pass: in a
-    near-dup-dense corpus (|pairs| >> |docs|, candidate ids ~ the whole
-    corpus — the sf0.1 bench corpus measures 2.36 M pairs over 5 k
-    docs with 91% id coverage) it costs strictly more than the full
-    parse it would save, so the gate skips it and parses the corpus
-    once. The two counts driving the gate are one count on the pinned
-    pair set and one column-pruned corpus count — both trivial next to
-    either branch. Under the gate threshold, candidate-id coverage of
-    the corpus is at most 2 x |pairs| / |docs| < 50%, so the prefilter
-    saves more than half the parse and its distinct runs over fewer
-    rows than the corpus has.
-
-    ``hashed=True`` (default) intersects 60-bit md5 word hashes
-    (longs) instead of strings: ~3x cheaper to ship and intersect,
-    exact up to a ~2^-60-per-word-pair collision — negligible even at
-    100 TB. Set False to intersect raw words.
+    Joins each side's :func:`word_hashes` set onto the pair list and
+    scores in-row (:func:`jaccard_scored`): cost is O(|candidates| x
+    words-per-doc), never the quadratic word-level self-join — this is
+    the function to feed LSH output at corpus scale. The corpus is
+    parsed once; building the result runs no Spark job.
 
     The candidate side is explicitly spread over
     4 x defaultParallelism partitions before the verify: candidates
@@ -467,50 +469,23 @@ def jaccard_for_candidates(
     row), and byte-based AQE coalescing would happily fold millions
     of pairs onto one core.
     """
-    if hashed:
-        words = F.array_distinct(
-            F.transform(word_array(text_col), lambda w: md5_prefix_long(w, 15))
-        )
-    else:
-        words = word_array(text_col)
-    # The candidate frame is consumed at least twice below (the gate
-    # count + the verify join, plus the id prefilter when it wins) and
-    # is typically the output of an LSH chain — materialize it so that
-    # chain runs once, not per consumer.
-    cand = candidates.select("doc_a", "doc_b").localCheckpoint(eager=True)
-    n_pairs = cand.count()
-    n_docs = df.count()
-    base = df
-    if 4 * n_pairs < n_docs:
-        ids = (
-            cand.select(F.col("doc_a").alias(id_col))
-            .unionByName(cand.select(F.col("doc_b").alias(id_col)))
-            .distinct()
-        )
-        base = df.join(ids, id_col, "left_semi")
     # Lazy checkpoint: the word sets are shared by the two verify join
     # sides (materialized once, on first use) without a separate eager
     # job barrier serializing the parse behind the LSH chain.
     d = (
-        base.select(F.col(id_col), words.alias("_ws"))
+        df.select(F.col(id_col), word_hashes(text_col).alias("_ws"))
         .localCheckpoint(eager=False)
     )
     a = d.select(F.col(id_col).alias("doc_a"), F.col("_ws").alias("_wa"))
     b = d.select(F.col(id_col).alias("doc_b"), F.col("_ws").alias("_wb"))
     n_part = df.sparkSession.sparkContext.defaultParallelism * 4
-    return (
-        cand
+    pairs = (
+        candidates.select("doc_a", "doc_b")
         .repartition(n_part, "doc_a", "doc_b")
         .join(a, "doc_a")
         .join(b, "doc_b")
-        .withColumn("_ni", F.size(F.array_intersect("_wa", "_wb")))
-        .withColumn(
-            "jaccard",
-            round6_portable(F.col("_ni") / (F.size("_wa") + F.size("_wb") - F.col("_ni"))),
-        )
-        .where(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "jaccard")
     )
+    return jaccard_scored(pairs, min_jaccard).select("doc_a", "doc_b", "jaccard")
 
 
 def jaccard_pairs_dense(
@@ -522,18 +497,19 @@ def jaccard_pairs_dense(
 ) -> DataFrame:
     """Exact word-set Jaccard for every doc pair sharing
     ``pair_scope_col`` (e.g. 'source'): self-join docs within the scope
-    group, intersect word-set ARRAYS in-row (array_intersect). The
-    scoped all-pairs variant, for when an LSH pass isn't warranted; at
-    corpus scale feed LSH candidates to :func:`jaccard_for_candidates`
-    instead.
+    group and score their :func:`word_hashes` sets in-row
+    (:func:`jaccard_scored`). The scoped all-pairs variant, for when an
+    LSH pass isn't warranted; at corpus scale feed LSH candidates to
+    :func:`jaccard_for_candidates` instead.
     """
-    words = F.array_sort(word_array(text_col))
     # Materialized once: both self-join sides consume d, and an
-    # unmaterialized frame re-runs the parse + per-doc sort per side.
+    # unmaterialized frame re-runs the parse + hash pass per side.
     d = (
         _fan_out(df)
         .select(
-            F.col(id_col), F.col(pair_scope_col).alias("_scope"), words.alias("_ws")
+            F.col(id_col),
+            F.col(pair_scope_col).alias("_scope"),
+            word_hashes(text_col).alias("_ws"),
         )
         .localCheckpoint(eager=True)
     )
@@ -543,19 +519,8 @@ def jaccard_pairs_dense(
     b = d.select(
         F.col(id_col).alias("doc_b"), F.col("_scope"), F.col("_ws").alias("_wb")
     )
-    return (
-        a.join(b, "_scope")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("_ni", F.size(F.array_intersect("_wa", "_wb")))
-        .withColumn(
-            "jaccard",
-            round6_portable(
-                F.col("_ni") / (F.size("_wa") + F.size("_wb") - F.col("_ni"))
-            ),
-        )
-        .where(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    pairs = a.join(b, "_scope").where(F.col("doc_a") < F.col("doc_b"))
+    return jaccard_scored(pairs, min_jaccard).select("doc_a", "doc_b", "jaccard")
 
 
 # ----------------------------------------------------------------------
@@ -573,7 +538,6 @@ def connected_components_star(
     max_iter: int = 25,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    strict: bool = True,
     return_rounds: bool = False,
 ):
     """(doc_id, component) — component = smallest doc_id reachable.
@@ -585,7 +549,8 @@ def connected_components_star(
     star forest; labels fall out as the (node -> root) edges.
 
     With ``return_rounds=True`` returns (labels, rounds_used) so
-    convergence behavior is assertable in tests.
+    convergence behavior is assertable in tests. Raises RuntimeError
+    when the edge set has not converged in ``max_iter`` rounds.
     """
     def _summary(edges: DataFrame) -> tuple:
         # Order-invariant edge-set summary in ONE narrow aggregate (a
@@ -665,11 +630,10 @@ def connected_components_star(
         del small
         gc.collect()
     else:
-        if strict:
-            raise RuntimeError(
-                f"connected_components_star did not converge in {max_iter} "
-                f"rounds — raise max_iter"
-            )
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_iter} "
+            f"rounds — raise max_iter"
+        )
     roots = e.select(F.col("v").alias("doc_id")).subtract(
         e.select(F.col("u").alias("doc_id"))
     )

@@ -8,15 +8,16 @@ LSH-self-join per batch would cost O(corpus) per ingest; this store
 makes an ingest cost O(batch + matched buckets):
 
 - the store persists, per accepted doc, its LSH band keys (the bucket
-  table) and its 60-bit hashed WORD SET (for exact Jaccard verify
-  without retaining text) plus a content hash (exact-dup check);
+  table), its ``dedup.word_hashes`` set (for exact Jaccard verify
+  without retaining text) and a content hash (exact-dup check);
 - an incoming batch is hashed in-row, then probed against the store
   with the batch side BROADCAST on every join — the store is scanned
   (column-pruned, never shuffled) and only colliding buckets produce
   verify work;
-- verification is exact Jaccard over the stored word-hash sets — the
-  same arithmetic as ``jaccard_for_candidates(hashed=True)``, so batch
-  ingest and full-corpus rebuild agree on every accept/reject;
+- both verifies (batch vs store, and within the batch) score through
+  ``dedup.jaccard_scored``, the one score ``jaccard_for_candidates``
+  uses, rounding included — so batch ingest and full-corpus rebuild
+  agree on every accept/reject, pairs at the threshold too;
 - accepted docs append their band + word-set rows; rejected docs leave
   no trace. Within-batch duplicates resolve by smallest id first, so
   ingest order inside a batch never matters.
@@ -42,17 +43,6 @@ class IngestReport:
     n_exact_rejected: int
     n_near_rejected: int
     n_accepted: int
-
-
-def _word_hashes(text_col: str):
-    """Distinct 60-bit md5 word hashes, in-row (matches
-    jaccard_for_candidates(hashed=True) exactly — built from the same
-    shared tokenization/hash helpers, so they cannot drift)."""
-    return F.array_distinct(
-        F.transform(
-            dedup.word_array(text_col), lambda w: dedup.md5_prefix_long(w, 15)
-        )
-    )
 
 
 class SignatureStore:
@@ -269,7 +259,7 @@ class SignatureStore:
         batch = new_docs.select(
             F.col(id_col),
             F.md5(F.col(text_col)).alias("content_hash"),
-            _word_hashes(text_col).alias("word_hashes"),
+            dedup.word_hashes(text_col).alias("word_hashes"),
         ).cache()
 
         # 1. exact dups: within batch (keep smallest id per hash), then
@@ -318,30 +308,22 @@ class SignatureStore:
             .select(F.col("_new_id"), F.col("doc_id").alias("_old_id"))
             .distinct()
         )
-        verified = (
-            store_cand.join(
-                F.broadcast(
-                    batch.select(F.col(id_col).alias("_new_id"),
-                                 F.col("word_hashes").alias("_wa"))
-                ),
-                "_new_id",
-            )
-            .join(
-                self.docs(exclude_batch=batch_id).select(
-                    F.col("doc_id").alias("_old_id"),
-                    F.col("word_hashes").alias("_wb"),
-                ),
-                "_old_id",
-            )
-            .withColumn("_ni", F.size(F.array_intersect("_wa", "_wb")))
-            .withColumn(
-                "_j",
-                F.col("_ni")
-                / (F.size("_wa") + F.size("_wb") - F.col("_ni")),
-            )
-            .where(F.col("_j") >= self.jaccard_threshold)
+        store_pairs = store_cand.join(
+            F.broadcast(
+                batch.select(F.col(id_col).alias("_new_id"),
+                             F.col("word_hashes").alias("_wa"))
+            ),
+            "_new_id",
+        ).join(
+            self.docs(exclude_batch=batch_id).select(
+                F.col("doc_id").alias("_old_id"),
+                F.col("word_hashes").alias("_wb"),
+            ),
+            "_old_id",
         )
-        store_dups = verified.select(F.col("_new_id").alias(id_col)).distinct()
+        store_dups = dedup.jaccard_scored(
+            store_pairs, self.jaccard_threshold
+        ).select(F.col("_new_id").alias(id_col))
 
         # 3. near dups WITHIN the batch: the corpus-wide candidate join
         # (dedup.band_key_pairs) over the batch's keys, verified, larger
@@ -357,27 +339,20 @@ class SignatureStore:
         # batch-collisions rows, never bucket^2.
         batch_pairs = dedup.band_key_pairs(
             wide, id_col, self.num_hashes // self.band_size, self.max_bucket
-        ).select(F.col("doc_a").alias("_ia"), F.col("doc_b").alias("_ib"))
-        wh = batch.select(F.col(id_col), F.col("word_hashes"))
-        batch_dups = (
-            batch_pairs.join(
-                wh.select(F.col(id_col).alias("_ia"), F.col("word_hashes").alias("_wa")),
-                "_ia",
-            )
-            .join(
-                wh.select(F.col(id_col).alias("_ib"), F.col("word_hashes").alias("_wb")),
-                "_ib",
-            )
-            .withColumn("_ni", F.size(F.array_intersect("_wa", "_wb")))
-            .withColumn(
-                "_j", F.col("_ni") / (F.size("_wa") + F.size("_wb") - F.col("_ni"))
-            )
-            .where(F.col("_j") >= self.jaccard_threshold)
-            .select(F.col("_ib").alias(id_col))  # larger id loses
-            .distinct()
+        ).join(
+            batch.select(F.col(id_col).alias("doc_a"), F.col("word_hashes").alias("_wa")),
+            "doc_a",
+        ).join(
+            batch.select(F.col(id_col).alias("doc_b"), F.col("word_hashes").alias("_wb")),
+            "doc_b",
         )
+        batch_dups = dedup.jaccard_scored(
+            batch_pairs, self.jaccard_threshold
+        ).select(F.col("doc_b").alias(id_col))  # larger id loses
 
-        rejected_near = store_dups.unionByName(batch_dups).distinct()
+        # Duplicate ids are harmless: the left-anti join below ignores
+        # them.
+        rejected_near = store_dups.unionByName(batch_dups)
         # localCheckpoint (eager) SEVERS the lineage to the store scan:
         # the appends below change what self.docs()/self.bands() read,
         # and a lazy plan re-evaluated afterwards would see the batch's

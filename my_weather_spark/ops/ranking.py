@@ -745,16 +745,17 @@ def _plain(v):
     return v.asDict(recursive=True) if hasattr(v, "asDict") else v
 
 
-def _seeds(edges: dict, pids) -> dict:
+def _seeds(edges: dict, pids, same) -> dict:
     """pid -> (group, value) that each partition inherits from the
     partitions before it in ``pids`` order; ``edges`` maps the
-    non-empty ones to (edge group, has a value, that value)."""
+    non-empty ones to (edge group, has a value, that value), and
+    ``same`` compares two group tuples."""
     seeds, cur_g, cur_v = {}, None, None
     for pid in pids:
         seeds[pid] = (cur_g, cur_v)
         if pid in edges:
             eg, has, ev = edges[pid]
-            if eg != cur_g:
+            if not same(eg, cur_g):
                 cur_g, cur_v = eg, (_plain(ev) if has else None)
             elif has:
                 cur_v = _plain(ev)
@@ -796,7 +797,11 @@ def _fills(
         fields += [StructField(e + c, pinned.schema[c].dataType) for c in g]
         fields += [StructField(e + "has", BooleanType()), StructField(e + "val", ftype)]
     edge_schema = StructType(fields)
-    _, in_group = _key_ops()
+    eq, in_group = _key_ops()
+
+    def same(k1, k2):
+        # group tuples, NULL equal to NULL; None is "no group yet"
+        return k2 is not None and all(bool(eq(a, b)) for a, b in zip(k1, k2))
 
     def _edges(batches):
         pid = None
@@ -818,7 +823,7 @@ def _fills(
                     lead_has, lead_val = True, nn.iloc[0]
             # trailing group's LAST non-NULL
             bg = tuple(pdf[c].iloc[-1] for c in g)
-            if bg != trail_g:
+            if not same(bg, trail_g):
                 trail_g, trail_has, trail_val = bg, False, None
             nn = pdf.loc[in_group(pdf, g, bg), fill_col].dropna()
             if len(nn):
@@ -838,8 +843,8 @@ def _fills(
             for r in rows
         }
 
-    fwd_seed = _seeds(_edge("_t"), range(n_part))
-    bwd_seed = _seeds(_edge("_l"), reversed(range(n_part)))
+    fwd_seed = _seeds(_edge("_t"), range(n_part), same)
+    bwd_seed = _seeds(_edge("_l"), reversed(range(n_part)), same)
 
     def _fill(batches):
         def resolve(held, value):
@@ -857,7 +862,7 @@ def _fills(
             if pid is None:
                 pid = int(pdf["_pid"].iloc[0])
                 carry_g, carry_v = fwd_seed.get(pid, (None, None))
-            filled = pdf.groupby(g, sort=False)[fill_col].ffill()
+            filled = pdf.groupby(g, sort=False, dropna=False)[fill_col].ffill()
             if carry_g is not None and carry_v is not None:
                 # sorted by group, so rows matching the carried group
                 # are the leading run; NULLs there predate any value
@@ -880,7 +885,7 @@ def _fills(
             if bwd_col is None:
                 yield pdf
                 continue
-            bwd = pdf.groupby(g, sort=False)[fill_col].bfill()
+            bwd = pdf.groupby(g, sort=False, dropna=False)[fill_col].bfill()
             pdf[bwd_col] = bwd.where(bwd.notna(), None)
             if pending is not None:
                 nn_mask = in_group(pdf, g, pending_g)
@@ -910,7 +915,7 @@ def _fills(
         # seed
         if pending is not None:
             seed_g, seed_v = bwd_seed.get(pid, (None, None))
-            yield resolve(pending, seed_v if seed_g == pending_g else None)
+            yield resolve(pending, seed_v if same(pending_g, seed_g) else None)
 
     new_cols = [(fwd_col, ftype)] + ([(bwd_col, ftype)] if bwd_col else [])
     return _arrow_pass(pinned, _fill, new_cols).drop("_pid")
@@ -938,11 +943,12 @@ def grouped_last_fill(
     one fill pass. No per-key history ever serializes through one
     task.
 
-    Contracts: group cols non-NULL; NULL (not NaN) marks missing in
-    ``fill_col`` (wrap doubles in a struct — as-of/interpolation
-    already fill whole structs so (ts, value) pair from the same row);
-    (group, order) need not be unique, but ties make the fill
-    nondeterministic exactly as they do for the window it replaces.
+    Contracts: NULL (not NaN) marks missing in ``fill_col`` (wrap
+    doubles in a struct — as-of/interpolation already fill whole
+    structs so (ts, value) pair from the same row); a NULL group key
+    is one group, as in the window's PARTITION BY; (group, order) need
+    not be unique, but ties make the fill nondeterministic exactly as
+    they do for the window it replaces.
     """
     asc = ascending or [True] * len(order_by)
     keys = [F.col(c) for c in group_by] + [

@@ -241,6 +241,33 @@ def test_incremental_agrees_with_full_rebuild(spark, store, tmp_path):
     assert incremental_ids == full_ids
 
 
+def test_store_and_batch_verify_agree_at_threshold(spark, tmp_path):
+    # Docs over distinct synthetic words: A = [0, 92531), B =
+    # [7503, 100033) share 85,028 of a 100,033-word union, so J =
+    # 0.8499995 unrounded and 0.85 rounded. The batch verify keeps the
+    # pair at 0.85, so the store must reject B as well — within one
+    # batch, and then probing the stored A.
+    from my_weather_spark.llm import dedup
+
+    def words(lo, hi):
+        return " ".join(f"w{i}" for i in range(lo, hi))
+
+    docs = _docs(spark, [(0, words(0, 92531)), (1, words(7503, 100033))])
+    # precondition: LSH emits the pair, so both paths verify it
+    assert [tuple(r) for r in dedup.minhash_lsh_pairs(docs).collect()] == [(0, 1)]
+    cand = spark.createDataFrame([(0, 1)], "doc_a long, doc_b long")
+    got = dedup.jaccard_for_candidates(docs, cand, min_jaccard=0.85).collect()
+    assert [tuple(r) for r in got] == [(0, 1, 0.85)]
+
+    store = SignatureStore(spark, str(tmp_path / "sigstore"), jaccard_threshold=0.85)
+    accepted, rep = store.ingest(docs)
+    assert [r["doc_id"] for r in accepted.collect()] == [0]
+    assert rep.n_near_rejected == 1
+    # the rejected B left no trace, so it can arrive again
+    accepted, rep = store.ingest(docs.where("doc_id = 1"))
+    assert accepted.count() == 0 and rep.n_near_rejected == 1
+
+
 def test_batch_fingerprint_duplicate_rows_do_not_cancel(spark, store):
     # XOR alone cancels identical row pairs: {X,X,Y} and {Z,Z,Y} would
     # collide and a later distinct batch would be skipped as already

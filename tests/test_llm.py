@@ -187,10 +187,11 @@ def test_jaccard_verify_step(docs):
 
 
 def test_jaccard_for_candidates_prefilter_gate_branches(spark):
-    # The candidate-id prefilter is gated on 4*|pairs| < |docs|; both
-    # branches must score identical jaccards. 40 docs / 2 pairs takes
-    # the prefilter branch; the same pairs duplicated past the
-    # threshold take the full-parse branch.
+    # A pair's score must not depend on the rest of the candidate set:
+    # a sparse set (2 pairs over 40 docs) and a dense one (the same 2
+    # plus 12 more) score the shared pairs identically. (The sets once
+    # took the two sides of a since-removed size-gated corpus
+    # prefilter.)
     rows = [(i, f"unique words for document number {i} alpha beta") for i in range(36)]
     rows += [
         (100, "the quick brown fox jumps over the lazy dog"),
@@ -202,13 +203,12 @@ def test_jaccard_for_candidates_prefilter_gate_branches(spark):
     cand = spark.createDataFrame(
         [(100, 101), (100, 102)], "doc_a long, doc_b long"
     )
-    # prefilter branch: 4*2 < 40
+    # sparse candidate set
     got_pre = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup.jaccard_for_candidates(df, cand, min_jaccard=0.0).collect()
     }
-    # full-parse branch: enough extra distinct pairs to cross the gate
-    # (4 * 14 >= 40 docs); the shared pairs must score identically
+    # dense candidate set; the shared pairs must score identically
     extra = spark.createDataFrame(
         [(i, 103) for i in range(12)], "doc_a long, doc_b long"
     )
@@ -222,6 +222,24 @@ def test_jaccard_for_candidates_prefilter_gate_branches(spark):
         assert got_full[k] == v
     assert got_pre[(100, 101)] == 1.0
     assert 0.5 < got_pre[(100, 102)] < 1.0
+
+
+def test_jaccard_for_candidates_builds_without_a_spark_job(spark):
+    # Building the verify frame runs nothing: no count of the corpus or
+    # the candidates, no eager checkpoint. The candidate chain runs
+    # once, inside the frame's one consumer.
+    df = spark.createDataFrame(
+        [(0, "a b c"), (1, "a b d")], "doc_id long, text string"
+    )
+    cand = spark.createDataFrame([(0, 1)], "doc_a long, doc_b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("verify_build_only", "jaccard_for_candidates build")
+    try:
+        out = dedup.jaccard_for_candidates(df, cand)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("verify_build_only")) == []
+    assert [r["jaccard"] for r in out.collect()] == [0.5]
 
 
 def test_simhash_near_dups_close(docs):

@@ -525,29 +525,42 @@ def test_grouped_last_fill_matches_window_both_directions(spark):
         )
         for i in range(901)
     ]
-    df = spark.createDataFrame(
-        rows, "id long, g string, v long, s struct<t:long,x:double>"
+    # NULL integer groups: pandas renders them NaN, and NaN != NaN
+    null_groups = [
+        (i, None if i % 3 == 0 else i % 2, i,
+         None if i % 4 else {"t": i, "x": float(i)})
+        for i in range(24)
+    ]
+    cases = [
+        # (rows, group type, partitions)
+        (rows, "string", 5),
+        (null_groups, "long", 3),
+    ]
+    w = W.partitionBy("g").orderBy("v", "id").rowsBetween(W.unboundedPreceding, 0)
+    w2 = (
+        W.partitionBy("g")
+        .orderBy(F.desc("v"), F.desc("id"))
+        .rowsBetween(W.unboundedPreceding, 0)
     )
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
-        got = ranking.grouped_last_fill(
-            df, ["g"], ["v", "id"], "s", out_col="ff", num_partitions=5
-        )
-        w = W.partitionBy("g").orderBy("v", "id").rowsBetween(W.unboundedPreceding, 0)
-        want = df.withColumn("ff", F.last("s", ignorenulls=True).over(w))
-        assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
+        for case, gtype, parts in cases:
+            df = spark.createDataFrame(
+                case, f"id long, g {gtype}, v long, s struct<t:long,x:double>"
+            )
+            got = ranking.grouped_last_fill(
+                df, ["g"], ["v", "id"], "s", out_col="ff", num_partitions=parts
+            )
+            want = df.withColumn("ff", F.last("s", ignorenulls=True).over(w))
+            assert got.count() == len(case)
+            assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
 
-        got2 = ranking.grouped_last_fill(
-            df, ["g"], ["v", "id"], "s", out_col="ff",
-            ascending=[False, False], num_partitions=5,
-        )
-        w2 = (
-            W.partitionBy("g")
-            .orderBy(F.desc("v"), F.desc("id"))
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        want2 = df.withColumn("ff", F.last("s", ignorenulls=True).over(w2))
-        assert got2.subtract(want2).count() == 0 and want2.subtract(got2).count() == 0
+            got2 = ranking.grouped_last_fill(
+                df, ["g"], ["v", "id"], "s", out_col="ff",
+                ascending=[False, False], num_partitions=parts,
+            )
+            want2 = df.withColumn("ff", F.last("s", ignorenulls=True).over(w2))
+            assert got2.subtract(want2).count() == 0 and want2.subtract(got2).count() == 0
     finally:
         spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
@@ -663,25 +676,37 @@ def test_grouped_bidi_fill_matches_two_windows(spark):
         )
         for i in range(903)
     ]
-    df = spark.createDataFrame(
-        rows, "id long, g string, v long, s struct<t:long,x:double>"
+    # NULL integer groups: pandas renders them NaN, and NaN != NaN
+    null_groups = [
+        (i, None if i % 3 == 0 else i % 2, i,
+         None if i % 4 else {"t": i, "x": float(i)})
+        for i in range(24)
+    ]
+    cases = [
+        # (rows, group type, partitions)
+        (rows, "string", 5),
+        (null_groups, "long", 3),
+    ]
+    wf = W.partitionBy("g").orderBy("v", "id").rowsBetween(
+        W.unboundedPreceding, 0
+    )
+    wb = W.partitionBy("g").orderBy(F.desc("v"), F.desc("id")).rowsBetween(
+        W.unboundedPreceding, 0
     )
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
     try:
-        got = ranking.grouped_bidi_fill(
-            df, ["g"], ["v", "id"], "s", "fwd", "bwd", num_partitions=5
-        )
-        wf = W.partitionBy("g").orderBy("v", "id").rowsBetween(
-            W.unboundedPreceding, 0
-        )
-        wb = W.partitionBy("g").orderBy(F.desc("v"), F.desc("id")).rowsBetween(
-            W.unboundedPreceding, 0
-        )
-        want = df.withColumn(
-            "fwd", F.last("s", ignorenulls=True).over(wf)
-        ).withColumn("bwd", F.last("s", ignorenulls=True).over(wb))
-        assert got.count() == 903
-        assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
+        for case, gtype, parts in cases:
+            df = spark.createDataFrame(
+                case, f"id long, g {gtype}, v long, s struct<t:long,x:double>"
+            )
+            got = ranking.grouped_bidi_fill(
+                df, ["g"], ["v", "id"], "s", "fwd", "bwd", num_partitions=parts
+            )
+            want = df.withColumn(
+                "fwd", F.last("s", ignorenulls=True).over(wf)
+            ).withColumn("bwd", F.last("s", ignorenulls=True).over(wb))
+            assert got.count() == len(case)
+            assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
         # all-null and empty degenerate cases
         schema = "id long, g string, v long, s struct<t:long,x:double>"
         allnull = spark.createDataFrame(
