@@ -27,13 +27,13 @@ import gc
 from functools import reduce
 from operator import add, or_
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from my_weather_spark.llm._util import bucket_pairs
 from my_weather_spark.llm._util import fan_out as _fan_out
 from my_weather_spark.ops.timeseries import round6_portable
-from my_weather_spark.session import local_frame
+from my_weather_spark.session import checkpoint, local_frame
 
 
 # ----------------------------------------------------------------------
@@ -435,12 +435,16 @@ def jaccard_scored(pairs: DataFrame, min_jaccard: float) -> DataFrame:
     """``pairs`` + ``jaccard`` = round6_portable(|a ∩ b| / |a ∪ b|) of
     its :func:`word_hashes` columns ``_wa``/``_wb``, keeping ``jaccard
     >= min_jaccard`` — THE verify score of the candidate, dense and
-    incremental paths, so all three agree at the threshold."""
+    incremental paths, so all three agree at the threshold. A pair of
+    word-less docs shares no word and is dropped (its NULL score fails
+    the threshold), as a SQL word-join verify never emits it."""
     return (
         pairs.withColumn("_ni", F.size(F.array_intersect("_wa", "_wb")))
         .withColumn(
             "jaccard",
-            round6_portable(F.col("_ni") / (F.size("_wa") + F.size("_wb") - F.col("_ni"))),
+            round6_portable(
+                F.try_divide(F.col("_ni"), F.size("_wa") + F.size("_wb") - F.col("_ni"))
+            ),
         )
         .where(F.col("jaccard") >= min_jaccard)
         .drop("_ni")
@@ -530,9 +534,10 @@ def jaccard_pairs_dense(
 # in O(log n) rounds vs O(diameter) for neighbor-min propagation —
 # the difference between 3 and 60 full-edge shuffles on a long-chain
 # component, which is what makes CC tractable on a 100 TB-scale
-# near-dup graph. Each round is two self-describing hash aggregations
-# over the edge list; intermediates SHRINK monotonically toward the
-# star forest (edges point at component minima).
+# near-dup graph. Each round is two neighbourhood-minimum windows over
+# the edge list and ONE checkpoint job that also sizes the new edge
+# set; intermediates SHRINK monotonically toward the star forest
+# (edges point at component minima).
 def connected_components_star(
     pairs: DataFrame,
     max_iter: int = 25,
@@ -552,66 +557,53 @@ def connected_components_star(
     convergence behavior is assertable in tests. Raises RuntimeError
     when the edge set has not converged in ``max_iter`` rounds.
     """
-    def _summary(edges: DataFrame) -> tuple:
-        # Order-invariant edge-set summary in ONE narrow aggregate (a
-        # partial+final agg, no shuffle of the edge rows): count plus
-        # two independently-seeded 64-bit xor reductions. Edge sets
-        # are distinct, so xor cannot cancel duplicate rows (the
-        # batch_fingerprint failure mode) — and exactness never rests
-        # on the hashes anyway: equal sets ALWAYS summarize equal, so
-        # a differing summary is a sound "keep iterating", and an
-        # equal summary is confirmed with one exact subtract before
-        # the loop exits. A full set comparison every round would
-        # re-shuffle both edge sets (at 100 TB, doubling each round).
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("x1"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v, 7919))"), F.lit(0)).alias("x2"),
-        ).collect()[0]
-        return (row["n"], row["x1"], row["x2"])
-
-    e = (
+    # Order-invariant edge-set summary, measured by each edge set's own
+    # checkpoint job: count plus two independently-seeded 64-bit xor
+    # reductions. Edge sets are distinct, so xor cannot cancel
+    # duplicate rows — and exactness never rests on the hashes: equal
+    # sets ALWAYS summarize equal, so a differing summary is a sound
+    # "keep iterating", and an equal one is confirmed by one exact
+    # subtract before the loop exits.
+    xors = {
+        "x1": F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)),
+        "x2": F.coalesce(F.expr("bit_xor(xxhash64(u, v, 7919))"), F.lit(0)),
+    }
+    by_u = Window.partitionBy("u")
+    e, n, x = checkpoint(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .where(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )  # orient u > v
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        **xors,
     )
-    e_sum = _summary(e)
+    e_sum = (n, x)
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        # large-star over the undirected neighborhood
+        # large-star over the undirected neighborhood; m <= u < v, so
+        # no (v, m) edge is a self-loop
         und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = und.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
         large = (
-            und.join(m, "u")
+            und.withColumn("m", F.least(F.min("v").over(by_u), F.col("u")))
             .where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
             .distinct()
         )
-        # small-star over the (u > v)-oriented edges
-        m2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        joined = large.join(m2, "u")
-        small = (
-            joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(joined.select("u", F.col("m").alias("v")))
+        # small-star over the (u > v)-oriented edges: u and v both
+        # attach to u's neighbourhood minimum
+        small, n, x = checkpoint(
+            large.withColumn("m", F.min("v").over(by_u))
+            .select(F.explode(F.array("u", "v")).alias("u"), F.col("m").alias("v"))
             .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            **xors,
         )
-        # converged when the edge set is unchanged: cheap summary
-        # probe every round; on a summary match, ONE exact subtract
-        # confirms set equality (sets are distinct, so equal count +
-        # empty one-way difference <=> equality) — the expensive
-        # comparison runs once at convergence, not every round.
-        small_sum = _summary(small)
-        if small_sum == e_sum and small.subtract(e).limit(1).count() == 0:
+        # converged when the edge set is unchanged (sets are distinct,
+        # so equal count + empty one-way difference <=> equality); the
+        # subtract runs once, at convergence, not every round.
+        if (n, x) == e_sum and small.subtract(e).limit(1).count() == 0:
             e = small
             break
         # Release the superseded round's checkpoint blocks NOW: the
@@ -620,13 +612,12 @@ def connected_components_star(
         # only run at gc — without this, every round's edge set stays
         # pinned until the driver happens to collect, so peak storage
         # grows O(rounds x edges) instead of O(2 x edges). (Skipping
-        # the per-round checkpoint instead — "checkpoint every k
-        # rounds" — was evaluated and rejected: the summary probe is
-        # an action every round, and the next round references the
-        # un-materialized edge set four times, so a skipped
-        # checkpoint re-derives the round's two-join plan ~4x. The
-        # churn is the block RETENTION, not the write.)
-        e, e_sum = small, small_sum
+        # the per-round checkpoint instead was evaluated and rejected:
+        # the next round references the un-materialized edge set
+        # several times, so a skipped checkpoint re-derives the
+        # round's plan per reference. The churn is the block
+        # RETENTION, not the write.)
+        e, e_sum = small, (n, x)
         del small
         gc.collect()
     else:
@@ -634,13 +625,15 @@ def connected_components_star(
             f"connected_components_star did not converge in {max_iter} "
             f"rounds — raise max_iter"
         )
+    # A converged star forest gives every non-root node exactly one
+    # (node -> root) edge, and the roots come from a set difference,
+    # so the labels are unique without a distinct.
     roots = e.select(F.col("v").alias("doc_id")).subtract(
         e.select(F.col("u").alias("doc_id"))
     )
     labels = e.select(F.col("u").alias("doc_id"), F.col("v").alias("component")).unionByName(
         roots.select("doc_id", F.col("doc_id").alias("component"))
     )
-    labels = labels.distinct()
     if return_rounds:
         return labels, rounds
     return labels

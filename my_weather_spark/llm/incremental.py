@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from my_weather_spark.llm import dedup
+from my_weather_spark.session import checkpoint
 
 
 @dataclass
@@ -353,14 +354,13 @@ class SignatureStore:
         # Duplicate ids are harmless: the left-anti join below ignores
         # them.
         rejected_near = store_dups.unionByName(batch_dups)
-        # localCheckpoint (eager) SEVERS the lineage to the store scan:
-        # the appends below change what self.docs()/self.bands() read,
-        # and a lazy plan re-evaluated afterwards would see the batch's
-        # own rows and reject everything as a self-duplicate.
-        accepted_meta = exact_clean.join(
-            rejected_near, id_col, "left_anti"
-        ).localCheckpoint()
-        n_accepted = accepted_meta.count()
+        # The checkpoint SEVERS the lineage to the store scan: the
+        # appends below change what self.docs()/self.bands() read, and a
+        # lazy plan re-evaluated afterwards would see the batch's own
+        # rows and reject everything as a self-duplicate.
+        accepted_meta, n_accepted, _ = checkpoint(
+            exact_clean.join(rejected_near, id_col, "left_anti")
+        )
         n_near_rejected = n_batch - n_exact_rejected - n_accepted
 
         # 4. persist survivors' signatures. Transactional batches land

@@ -13,10 +13,9 @@ operators exactly the way a 100 TB run would chain them:
         -> [semantic dedup over doc embeddings (optional, SemDeDup)]
         -> attach analysis columns (tokens, language, fingerprint)
 
-Every stage is a DataFrame transformation. Each stage whose size the
-report counts is localCheckpoint()ed before that count, so no count
-re-runs the chain above it; the LSH key table and the candidate pairs
-are materialized inside their operators.
+Every stage is a DataFrame transformation. Each report count comes
+from the job that checkpoints its stage (``session.checkpoint``), so
+no count re-runs the chain above it.
 """
 
 from __future__ import annotations
@@ -37,6 +36,7 @@ from my_weather_spark.llm import (
     similarity,
     text as text_ops,
 )
+from my_weather_spark.session import checkpoint
 
 
 @dataclass
@@ -77,13 +77,8 @@ def clean_corpus(
     drops the larger — deterministic survivor choice, same rule as
     exact dedup, so re-runs are idempotent.
 
-    Each materialized stage is localCheckpoint(eager)ed before its
-    report count: the five counts are actions, and without the
-    lineage cut every one would re-trigger the whole upstream chain
-    (quality -> exact dedup -> LSH -> verify) — at 100 TB that is
-    re-running a corpus-wide LSH to print a log line. With the cuts,
-    stage N's count scans stage N's materialized output and nothing
-    upstream ever executes twice.
+    Each report count comes from the job that checkpoints its stage
+    (``session.checkpoint``), so nothing upstream ever executes twice.
     """
     n_input = docs.count()
 
@@ -106,17 +101,16 @@ def clean_corpus(
     if gopher_rules is not None:
         q = text_ops.gopher_filter(
             docs, text_col=text_col, id_col=id_col, **gopher_rules
-        ).localCheckpoint()
+        )
     else:
         q = text_ops.quality_filter(
             docs, min_words=min_words, max_punct_ratio=max_punct_ratio,
             text_col=text_col, id_col=id_col,
-        ).localCheckpoint()
-    n_quality = q.count()
+        )
+    q, n_quality, _ = checkpoint(q)
 
     # 2. exact dedup (hash groupBy)
-    exact = dedup.drop_exact_duplicates(q, text_col, id_col).localCheckpoint()
-    n_exact = exact.count()
+    exact, n_exact, _ = checkpoint(dedup.drop_exact_duplicates(q, text_col, id_col))
 
     # 2b. optional exact duplicate-span drop (Lee et al. style): runs
     # AFTER exact dedup (identical docs would trivially duplicate
@@ -124,11 +118,10 @@ def clean_corpus(
     # heavy span-sharers are usually the near-dups anyway)
     n_span = None
     if span_dedup_max_ratio is not None:
-        exact = dedup.drop_span_duplicates(
+        exact, n_span, _ = checkpoint(dedup.drop_span_duplicates(
             exact, n=span_dedup_n, max_dup_ratio=span_dedup_max_ratio,
             text_col=text_col, id_col=id_col,
-        ).localCheckpoint()
-        n_span = exact.count()
+        ))
 
     # 3. LSH candidates -> exact Jaccard scored ON THE CANDIDATES ONLY
     # (never the quadratic word-level self-join over the full corpus)
@@ -136,11 +129,10 @@ def clean_corpus(
         exact, num_hashes=num_hashes, band_size=band_size,
         text_col=text_col, id_col=id_col,
     )
-    verified = dedup.jaccard_for_candidates(
+    verified, n_pairs, _ = checkpoint(dedup.jaccard_for_candidates(
         exact, cand, min_jaccard=jaccard_threshold,
         text_col=text_col, id_col=id_col,
-    ).localCheckpoint()
-    n_pairs = verified.count()
+    ))
 
     # 4. drop near-dups: cluster the verified-pair graph (connected
     # components, so A-B-C chains collapse even without an A-C pair)
@@ -153,8 +145,7 @@ def clean_corpus(
     losers = components.where(F.col("doc_id") != F.col("component")).select(
         F.col("doc_id").alias(id_col)
     )
-    survivors = exact.join(losers, id_col, "left_anti").localCheckpoint()
-    n_near = survivors.count()
+    survivors, n_near, _ = checkpoint(exact.join(losers, id_col, "left_anti"))
 
     # 4b. optional semantic dedup (SemDeDup): embedding-space near-dups
     # the lexical stages can't see. Runs LAST of the dedup stages over
@@ -179,8 +170,9 @@ def clean_corpus(
         sem_losers = flags.where(~F.col("kept")).select(
             F.col(embedding_id_col).alias(id_col)
         )
-        survivors = survivors.join(sem_losers, id_col, "left_anti").localCheckpoint()
-        n_semdedup = survivors.count()
+        survivors, n_semdedup, _ = checkpoint(
+            survivors.join(sem_losers, id_col, "left_anti")
+        )
 
     # 5. analysis columns for the surviving corpus
     stats = text_ops.token_stats(survivors, text_col, id_col)
@@ -288,18 +280,15 @@ def curate_corpus(
     clean, clean_report = clean_corpus(
         docs, text_col=text_col, id_col=id_col, **clean_kwargs
     )
-    # Materialize the dedup chain ONCE (eager, lineage-truncating):
-    # every action below — the stage counts, the split groupBy, the
-    # n_chunks collect, and the caller's own consumption of `out` —
-    # would otherwise re-run quality->exact->LSH->verify->CC each time
-    # (~4x the dedup cost on the 100 TB path).
-    clean = clean.localCheckpoint()
-
+    # Each stage below is checkpointed by the job that counts it
+    # (clean_corpus's survivors are already materialized), so no later
+    # action — the caller's consumption of `out` included — re-runs an
+    # earlier stage.
     if benchmark is not None:
         clean = decontam.decontaminate(
             clean, benchmark, n=decontam_ngram, text_col=text_col, id_col=id_col
-        ).localCheckpoint()
-    n_decontam = clean.count()
+        )
+    clean, n_decontam, _ = checkpoint(clean)
 
     # optional CCNet-style LM quality gate: score against the quality
     # reference's bigram model AFTER dedup/decontam (scores the text
@@ -318,7 +307,7 @@ def curate_corpus(
             clean = lm.perplexity_filter(
                 clean, quality_ref, max_ppl=max_ppl, alpha=ppl_alpha,
                 text_col=text_col, id_col=id_col,
-            ).localCheckpoint()
+            )
         else:
             # CCNet's deployment form: per-group head/middle/tail
             # tiles instead of an absolute threshold
@@ -326,8 +315,8 @@ def curate_corpus(
                 clean, quality_ref, keep=ppl_keep_buckets,
                 group_col=ppl_bucket_group, alpha=ppl_alpha,
                 text_col=text_col, id_col=id_col,
-            ).localCheckpoint()
-        n_ppl = clean.count()
+            )
+        clean, n_ppl, _ = checkpoint(clean)
 
     # optional curated-vs-crawl NB classifier gate (GPT-3 App. A /
     # LLaMA fastText deployment): nb_pos marks the curated positive
@@ -336,11 +325,10 @@ def curate_corpus(
     # dedup/decontam, before mixing.
     n_nb = None
     if nb_pos is not None:
-        clean = classifier.nb_filter(
+        clean, n_nb, _ = checkpoint(classifier.nb_filter(
             clean, nb_pos, min_log_odds=nb_min_log_odds,
             text_col=text_col, id_col=id_col,
-        ).localCheckpoint()
-        n_nb = clean.count()
+        ))
 
     # optional BM25 topic-relevance gate (targeted-corpus curation:
     # keep documents that score against a topic seed query). Runs with
@@ -355,8 +343,7 @@ def curate_corpus(
             clean, relevance_query, text_col=text_col, id_col=id_col
         )
         keep = scores.where(F.col("score") >= min_bm25).select(id_col)
-        clean = clean.join(keep, id_col, "left_semi").localCheckpoint()
-        n_bm25 = clean.count()
+        clean, n_bm25, _ = checkpoint(clean.join(keep, id_col, "left_semi"))
 
     # optional DSIR importance resampling (Xie et al. 2023): shrink the
     # surviving pool to the dsir_k documents whose hashed-n-gram bag
@@ -369,11 +356,10 @@ def curate_corpus(
     if dsir_k is not None:
         if dsir_target is None:
             raise ValueError("dsir_k requires dsir_target")
-        clean = dsir_ops.resample(
+        clean, n_dsir, _ = checkpoint(dsir_ops.resample(
             clean, dsir_target, k=dsir_k, seed=seed + ":dsir",
             dim=dsir_dim, alpha=dsir_alpha, text_col=text_col, id_col=id_col,
-        ).localCheckpoint()
-        n_dsir = clean.count()
+        ))
 
     if mixing_rates and mix_temperature_total is not None:
         raise ValueError(
@@ -391,16 +377,14 @@ def curate_corpus(
             clean, mix_temperature_total, alpha=mix_temperature_alpha,
             strata_col=strata_col, seed=seed, id_col=id_col,
         )
-    n_mixed = clean.count()
 
     labels = ("train", "val", "test")[: len(split_weights)]
-    labeled = sampling.split_assign(
-        clean, weights=split_weights, labels=labels, seed=seed, id_col=id_col
+    labeled, n_mixed, split_counts = checkpoint(
+        sampling.split_assign(
+            clean, weights=split_weights, labels=labels, seed=seed, id_col=id_col
+        ),
+        **{lab: F.count_if(F.col("split") == lab) for lab in labels},
     )
-    split_counts = {
-        r["split"]: r["n"]
-        for r in labeled.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
 
     train = labeled.where(F.col("split") == "train")
     # Optional learned-tokenizer budgeting: train a BPE vocabulary on

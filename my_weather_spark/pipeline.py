@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from my_weather_spark.model import UtcPeriod
 from my_weather_spark.evaluate import TsEngine
+from my_weather_spark.session import checkpoint
 
 
 def utcnow() -> datetime:
@@ -101,10 +102,10 @@ class DataCollectionTask:
             "ts",
             "value",
         )
-        # materialize once: count + store must not re-run the source
-        # read (a paginated rate-limited fetch would double its calls)
-        bound = bound.localCheckpoint(eager=True)
-        n = bound.count()
+        # materialize once, counted by the same job: the store must not
+        # re-run the source read (a paginated rate-limited fetch would
+        # double its calls)
+        bound, n, _ = checkpoint(bound)
         self.engine.store_ts(bound, source=self.source, ingest_time=now)
         self.runs += 1
         return n

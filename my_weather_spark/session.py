@@ -16,7 +16,8 @@ from __future__ import annotations
 import os
 from typing import TYPE_CHECKING, Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:
@@ -60,6 +61,20 @@ def local_frame(
         [dict(zip(names, row)) for row in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema)
+
+
+def checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, int, dict]:
+    """(``df.localCheckpoint(eager=True)``, its row count, {name: value}
+    of the named aggregate columns ``aggs``) — all measured by the job
+    that writes the checkpoint (``DataFrame.observe``), so sizing a
+    stage runs no second action. Aggregates follow ``observe``'s rules:
+    deterministic, no DISTINCT, no window."""
+    obs = Observation()
+    out = df.observe(
+        obs, F.count(F.lit(1)).alias("n"), *(c.alias(k) for k, c in aggs.items())
+    ).localCheckpoint(eager=True)
+    metrics = dict(obs.get)
+    return out, metrics.pop("n"), metrics
 
 
 def python_rdd_scans(df: DataFrame) -> int:

@@ -396,12 +396,13 @@ def test_redact_pii_golden(spark):
 
 def test_clean_corpus_counts_do_not_reexecute_chain(spark, monkeypatch):
     # The five report counts are actions; without the per-stage
-    # localCheckpoint cuts each one re-plans the whole upstream
+    # checkpoint cuts each one re-plans the whole upstream
     # quality->exact->LSH->verify chain. Self-calibrating check: the
     # same pipeline with localCheckpoint no-op'd must plan strictly
     # more stages than the real (lineage-cutting) version, and the
     # real version's returned plan must scan a materialized RDD, not
     # the dedup chain.
+    from my_weather_spark.llm import dedup, pipeline
     from my_weather_spark.llm.pipeline import clean_corpus
 
     # Dup-free corpus: keeps connected-components trivial (its own
@@ -425,9 +426,23 @@ def test_clean_corpus_counts_do_not_reexecute_chain(spark, monkeypatch):
     real_ckpt = df_cls.localCheckpoint
     monkeypatch.setattr(df_cls, "localCheckpoint",
                         lambda self, eager=True: self)
+    # session.checkpoint reads its counts off the checkpoint job, which
+    # a no-op localCheckpoint never runs; the stand-in returns the frame
+    # uncut and computes the same aggregates with a separate action.
+    real_helper = pipeline.checkpoint
+
+    def uncut(df, **aggs):
+        row = df.agg(F.count(F.lit(1)).alias("n"),
+                     *(c.alias(k) for k, c in aggs.items())).collect()[0]
+        return df, row["n"], {k: row[k] for k in aggs}
+
+    for mod in (pipeline, dedup):
+        monkeypatch.setattr(mod, "checkpoint", uncut)
     sc.setJobGroup("cc_nockpt", "clean_corpus without lineage cuts")
     clean_corpus(docs, min_words=5)
     monkeypatch.setattr(df_cls, "localCheckpoint", real_ckpt)
+    for mod in (pipeline, dedup):
+        monkeypatch.setattr(mod, "checkpoint", real_helper)
     sc.setJobGroup("cc_ckpt", "clean_corpus with lineage cuts")
     out, rep = clean_corpus(docs, min_words=5)
     sc.setJobGroup(None, None)

@@ -179,11 +179,21 @@ def test_srp_hot_bucket_degrades_to_star(spark):
     }
 
 
-def test_jaccard_verify_step(docs):
+def test_jaccard_verify_step(docs, spark):
     jac = dedup.jaccard_pairs_dense(docs, "source", min_jaccard=0.5)
     j = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in jac.collect()}
     assert j[(0, 1)] == 1.0
     assert 0.5 <= j[(0, 2)] < 1.0
+    # Two word-less docs share no word: the pair is dropped (a SQL
+    # word-join verify never emits it) instead of dividing by an empty
+    # union, which ANSI mode raises for the whole query.
+    wordless = spark.createDataFrame(
+        [(0, "", "s"), (1, "  ", "s"), (2, "a b", "s")],
+        "doc_id long, text string, source string",
+    )
+    jac = dedup.jaccard_pairs_dense(wordless, "source", min_jaccard=0.0)
+    j = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in jac.collect()}
+    assert j == {(0, 2): 0.0, (1, 2): 0.0}
 
 
 def test_jaccard_for_candidates_prefilter_gate_branches(spark):
@@ -455,11 +465,27 @@ def test_connected_components_chains(spark):
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (7, 8)], "doc_a long, doc_b long"
     )
-    cc = {
-        r["doc_id"]: r["component"]
-        for r in dedup.connected_components_star(pairs).collect()
-    }
+    rows = dedup.connected_components_star(pairs).collect()
+    cc = {r["doc_id"]: r["component"] for r in rows}
     assert cc == {0: 0, 1: 0, 2: 0, 7: 7, 8: 7}
+    assert len(rows) == len(cc)  # one label per node; the dict hides repeats
+
+
+def test_connected_components_hub_plus_chain(spark):
+    # One hot node (0) adjacent to 20k members, plus a chain through the
+    # members: the neighbourhood minimum over the hub's partition and the
+    # label uniqueness (no final distinct) on one 20,001-node component.
+    n = 20_000
+    hub = spark.range(1, n + 1).select(
+        F.lit(0).cast("long").alias("doc_a"), F.col("id").alias("doc_b")
+    )
+    chain = spark.range(1, n).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    labels = dedup.connected_components_star(hub.unionByName(chain))
+    assert labels.count() == n + 1
+    assert labels.count() == labels.select("doc_id").distinct().count()
+    assert labels.where(F.col("component") != 0).count() == 0
 
 
 def test_connected_components_star_log_rounds(spark):
