@@ -47,7 +47,7 @@ def calib_record(mini: bool = False) -> dict | None:
     as first sketched — because the r10 degradation mode was mt-only
     (calib_mid st 296 ms healthy beside mt32 1521 ms degraded), and
     keeps mt32's 3 reps because short mt probes bias high enough to
-    flap the 900 ms threshold (measured in the same borderline
+    flap the degraded threshold (measured in the same borderline
     window: best-of-3 620-820 ms vs min-of-1 715-1416 ms) — see
     scripts/cpu_calib.py's --mini note.
     """
@@ -80,24 +80,32 @@ def _calib() -> list[float] | None:
     return [rec["st_ms"], rec["mt32_ms"]]
 
 
-# A window stamp is "degraded" when mt32 reads >= this absolute
-# threshold. Anchor: the pinned-BLAS healthy band has been stable at
-# mt32 ~536-610 ms across rounds 7-10 (BASELINE.md); the observed
-# degraded readings are 1142-3776 ms. 900 ms = ~1.5x the healthy
-# ceiling, the same multiplier cpu_calib.py's docstring prescribes,
-# and sits in the empty gap between the two observed populations.
-DEGRADED_MT32_MS = 900.0
+# A window stamp is "degraded" when its mt32 reads >= 1.5x the lowest
+# mt32 among the run's own full stamps — the multiplier cpu_calib.py's
+# docstring prescribes. The reference is the run's own best window, not
+# a fixed figure: a fixed 900 ms (1.5x the healthy mt32 of an earlier
+# host) tagged every stamp of a 4-core host whose healthy mt32 reads
+# 1.3-1.8 s, so every query read degraded and retries never ran.
+DEGRADED_MT32_FACTOR = 1.5
 
 
-def _stamp_degraded(stamp: list[float] | None) -> bool:
+def degraded_threshold(track: list[dict]) -> float | None:
+    """The mt32 threshold of a calib track: DEGRADED_MT32_FACTOR x the
+    lowest mt32 among its full stamps, or None when no full stamp has
+    one (then no stamp classifies as degraded)."""
+    mt32 = [s["stamp"][1] for s in track if s["full"] and s["stamp"] is not None]
+    return DEGRADED_MT32_FACTOR * min(mt32) if mt32 else None
+
+
+def _stamp_degraded(stamp: list[float] | None, threshold: float | None) -> bool:
     """None (calib unavailable) classifies as NOT degraded: the track
     then simply can't tag that segment, matching the pre-r11 behavior
     of edge-stamps-only artifacts."""
-    return stamp is not None and stamp[1] >= DEGRADED_MT32_MS
+    return stamp is not None and threshold is not None and stamp[1] >= threshold
 
 
 def track_span_degraded(
-    track: list[dict], lo: int, hi: int
+    track: list[dict], lo: int, hi: int, threshold: float | None
 ) -> bool:
     """True if any calib-track stamp bounding or inside the exec span
     (execs lo+1..hi; lo == hi-1 for a single rep) reads degraded —
@@ -120,7 +128,7 @@ def track_span_degraded(
     )
     bounds = [s for s in (below, above) if s is not None]
     inside = [s for s in track if lo < s["exec"] < hi]
-    return any(_stamp_degraded(s["stamp"]) for s in bounds + inside)
+    return any(_stamp_degraded(s["stamp"], threshold) for s in bounds + inside)
 
 
 # Bound the retry block (r11 solo-run lesson): a fully-degraded window
@@ -134,6 +142,7 @@ def plan_retries(
     degraded_queries: dict[str, list[int]],
     timings: dict[str, float],
     pre_stamp: list[float] | None,
+    threshold: float | None,
     cap: int = RETRY_CAP,
 ) -> tuple[list[str], list[str], str]:
     """Decide which degraded-flagged queries get an end-of-run retry
@@ -146,7 +155,7 @@ def plan_retries(
     they first shipped untested and unexecuted (the sf0.001 smoke
     flagged zero queries)."""
     order = sorted(degraded_queries, key=lambda n: -timings[n])
-    if _stamp_degraded(pre_stamp):
+    if _stamp_degraded(pre_stamp, threshold):
         return [], order, (
             "pre-retry stamp degraded; retries would carry the "
             "same window inflation"
@@ -263,7 +272,7 @@ def main() -> None:
     # ~2.5 s, see calib_record) every 25 TIMED executions, plus the
     # three full stamps, all carrying the exec-counter position, so
     # every rep is bounded by two stamps. A rep is tagged degraded if
-    # EITHER bounding stamp reads mt32 >= DEGRADED_MT32_MS
+    # EITHER bounding stamp reads mt32 >= the degraded threshold
     # (pessimistic: a window that flips between stamps can't be
     # localized closer than the stamp spacing); a query whose reps
     # were ALL degraded gets ONE end-of-run retry rep, reported
@@ -374,8 +383,10 @@ def main() -> None:
     # degraded. Retries get the heavy-block treatment (forced GC
     # before) and their own edge stamps so a retry taken in a still-
     # degraded window is recognizable as such.
+    threshold = degraded_threshold(calib_track)
+
     def _rep_degraded(e: int) -> bool:
-        return track_span_degraded(calib_track, e - 1, e)
+        return track_span_degraded(calib_track, e - 1, e, threshold)
 
     degraded_queries = {
         name: execs
@@ -396,7 +407,7 @@ def main() -> None:
         )
         retry_calib.append(pre)
         retry_order, retry_skipped, retry_skipped_reason = plan_retries(
-            degraded_queries, timings, pre
+            degraded_queries, timings, pre, threshold
         )
         for name in retry_order:
             gc.collect()
@@ -452,7 +463,7 @@ def main() -> None:
         # comparable across mini and full stamps; mini st is
         # single-rep and a sanity axis only.
         "calib_track": calib_track,
-        "degraded_mt32_threshold_ms": DEGRADED_MT32_MS,
+        "degraded_mt32_threshold_ms": threshold,
         # queries whose min-of-3 reps ALL ran inside degraded
         # segments (name -> rep exec positions); their `queries`
         # values carry window inflation. retry_timings holds ONE
@@ -488,7 +499,7 @@ def main() -> None:
     # Track-health summary for the compact line: [degraded, total]
     # stamp counts. The full track lives in the full record above.
     track_health = [
-        sum(1 for s in calib_track if _stamp_degraded(s["stamp"])),
+        sum(1 for s in calib_track if _stamp_degraded(s["stamp"], threshold)),
         len(calib_track),
     ]
     # Shrink the slowest-N list until the line fits — degrading

@@ -30,7 +30,6 @@ from operator import add, or_
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from my_weather_spark.llm._util import bucket_pairs
 from my_weather_spark.llm._util import fan_out as _fan_out
 from my_weather_spark.ops.timeseries import round6_portable
 from my_weather_spark.session import checkpoint, local_frame
@@ -254,9 +253,11 @@ def band_key_pairs(
     wide: DataFrame, id_col: str, n_bands: int, max_bucket: int
 ) -> DataFrame:
     """(doc_a, doc_b), doc_a < doc_b, each pair exactly once: the docs
-    of a materialized :func:`minhash_band_keys` frame that share a band
-    bucket, with buckets over ``max_bucket`` members degraded to stars
-    around their min id (see :func:`minhash_lsh_pairs`).
+    of a materialized ``(id, _keys)`` frame (one array of ``n_bands``
+    band keys per doc, e.g. :func:`minhash_band_keys` or the simhash
+    bands of :func:`simhash_hamming_pairs`) that share a band bucket,
+    with buckets over ``max_bucket`` members degraded to stars around
+    their min id (see :func:`minhash_lsh_pairs`).
 
     One self-join on (band, key) for every band, so the plan does not
     grow with ``n_bands``. Every row carries its doc's full key array
@@ -661,10 +662,7 @@ def simhash(
     # per-element (bits*words evals per doc — 6x slower measured at 60
     # bits), while the exploded form runs the per-bit signed sums in
     # whole-stage-codegen with map-side partial aggregation, so the
-    # shuffle carries only (docs x bits) partial sums. The aggregate's
-    # exchange is also reused by Catalyst when the result is
-    # self-joined (banded pair search) — the hashes are computed once,
-    # not once per join side.
+    # shuffle carries only (docs x bits) partial sums.
     wh = _fan_out(df).select(
         F.col(id_col),
         F.explode_outer(words).alias("_w"),
@@ -703,62 +701,40 @@ def simhash_hamming_pairs(
     max_bucket: int = 4096,
 ) -> DataFrame:
     """Candidate pairs within hamming distance ``max_hamming``:
-    (doc_a, doc_b, hamming), doc_a < doc_b.
+    (doc_a, doc_b, hamming), doc_a < doc_b, each pair exactly once.
 
     Pigeonhole banding: split the simhash into ``max_hamming + 1``
     bit-bands — any pair within the distance budget must agree EXACTLY
     on at least one band, so an equal-band bucket search finds all
-    true candidates; exact hamming (LUT popcount of the xor) then
-    filters false positives inside the shared bucket scan
-    (:func:`~my_weather_spark.llm._util.bucket_pairs`), which also
-    applies the ``max_bucket`` hub-and-spoke guard: identical docs
-    share a simhash, so one ultra-duplicated page is one
-    (band, band_val) bucket threatening B^2 pairs.
+    true candidates. The band values are the ``_keys`` of
+    :func:`band_key_pairs`, MinHash's bucket self-join, which emits
+    each candidate once and applies the ``max_bucket`` hub-and-spoke
+    guard (identical docs share a simhash, so one ultra-duplicated page
+    is one bucket per band threatening B^2 pairs); the exact hamming
+    distance (``bit_count`` of the xor) then drops false positives.
     """
-    import numpy as np
-
     n_bands = max_hamming + 1
     band_bits = bits // n_bands
     if band_bits == 0:
         raise ValueError(f"bits={bits} too small for {n_bands} bands")
-    h = simhash(df, bits, text_col, id_col)
-    bands = h.select(
-        id_col,
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.expr(f"(simhash >> {i * band_bits}) & {(1 << band_bits) - 1}")
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_val"),
+    keys = F.array(
+        *[
+            F.expr(f"(simhash >> {i * band_bits}) & {(1 << band_bits) - 1}")
+            for i in range(n_bands)
+        ]
     )
-    id_type = df.schema[id_col].dataType.simpleString()
-    # 16-bit popcount lookup table, built once here and shipped with
-    # the scorer (numpy < 2.0 has no native bitwise_count; unpackbits
-    # over 64 bool columns measured 11x slower than four LUT gathers
-    # per long).
-    lut = (
-        np.unpackbits(
-            np.arange(65536, dtype=np.uint16).astype(">u2").view(np.uint8).reshape(-1, 2),
-            axis=1,
+    wide = simhash(df, bits, text_col, id_col).select(
+        id_col, "simhash", keys.alias("_keys")
+    ).localCheckpoint(eager=True)
+    pairs = band_key_pairs(wide, id_col, n_bands, max_bucket)
+    side = wide.select(id_col, "simhash")
+    return (
+        pairs.join(side.toDF("doc_a", "_ha"), "doc_a")
+        .join(side.toDF("doc_b", "_hb"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).alias("hamming"),
         )
-        .sum(axis=1)
-        .astype(np.uint8)
-    )
-
-    def prepare(pdf):
-        return pdf["simhash"].to_numpy(dtype="int64")
-
-    def score(xa, xb):
-        x = xa[:, None] ^ xb[None, :]
-        return lut[x.view("uint16").reshape(*x.shape, 4)].sum(axis=-1, dtype="int32")
-
-    def keep(S):
-        return S <= max_hamming
-
-    return bucket_pairs(
-        bands, ["band", "band_val"], id_col, prepare, score, keep, max_bucket,
-        f"doc_a {id_type}, doc_b {id_type}, hamming int",
+        .where(F.col("hamming") <= max_hamming)
     )

@@ -174,15 +174,10 @@ def clean_corpus(
             survivors.join(sem_losers, id_col, "left_anti")
         )
 
-    # 5. analysis columns for the surviving corpus
-    stats = text_ops.token_stats(survivors, text_col, id_col)
-    lang = text_ops.language_id(survivors, text_col, id_col)
-    fp = text_ops.fingerprint(survivors, text_col=text_col, id_col=id_col)
-    out = (
-        survivors.join(stats, id_col)
-        .join(lang, id_col)
-        .join(fp, id_col)
-    )
+    # 5. analysis columns for the surviving corpus: one projection, so
+    # a consumer that reads the result twice (decontam) scans the
+    # survivors checkpoint once per read, with no join-backs
+    out = text_ops._with_analysis_columns(survivors, text_col)
     return out, CleanReport(
         n_input, n_quality, n_exact, n_near, n_pairs, n_span, n_semdedup
     )

@@ -41,18 +41,25 @@ def token_stats(
 
     n_tokens_est is the ceil(chars/4) BPE-ish heuristic; avg word
     length rounds to 6."""
+    return df.select(id_col, *_aliased(_token_stat_cols(text_col)))
+
+
+def _token_stat_cols(text_col: str) -> dict[str, Column]:
     t = F.col(text_col)
     w = _words(t)
-    return df.select(
-        id_col,
-        F.length(t).alias("n_chars"),
-        F.size(w).alias("n_words"),
-        F.ceil(F.length(t) / 4).cast("long").alias("n_tokens_est"),
-        round6_portable(
+    return {
+        "n_chars": F.length(t),
+        "n_words": F.size(w),
+        "n_tokens_est": F.ceil(F.length(t) / 4).cast("long"),
+        "avg_word_len": round6_portable(
             F.aggregate(w, F.lit(0).cast("long"), lambda a, x: a + F.length(x))
             / F.size(w)
-        ).alias("avg_word_len"),
-    )
+        ),
+    }
+
+
+def _aliased(cols: dict[str, Column]) -> list[Column]:
+    return [c.alias(name) for name, c in cols.items()]
 
 
 # ----------------------------------------------------------------------
@@ -122,6 +129,10 @@ def language_id(
 ) -> DataFrame:
     """(id, predicted_lang, lang_score). Deterministic tie-break:
     lexicographically smallest language code among maxima."""
+    return df.select(id_col, *_aliased(_language_cols(text_col)))
+
+
+def _language_cols(text_col: str) -> dict[str, Column]:
     t = F.lower(F.col(text_col))
     w = F.filter(F.split(t, r"\s+"), lambda x: x != "")
     scores = []
@@ -130,11 +141,7 @@ def language_id(
         hits = F.size(F.filter(w, lambda x: F.array_contains(markers, x)))
         scores.append(F.struct((-hits).alias("neg"), F.lit(lang).alias("lang"), hits.alias("hits")))
     best = F.array_min(F.array(*scores))
-    return df.select(
-        id_col,
-        best["lang"].alias("predicted_lang"),
-        best["hits"].alias("lang_score"),
-    )
+    return {"predicted_lang": best["lang"], "lang_score": best["hits"]}
 
 
 # ----------------------------------------------------------------------
@@ -160,20 +167,37 @@ def fingerprint(
     # O(shingle_len). Same shingle strings, so the SQL oracle
     # (char-based substr) is unchanged.
     b = _fan_out(df).select(
-        F.col(id_col), F.split(F.col(text_col), "").alias("_ch")
+        F.col(id_col), F.split(F.col(text_col), "").alias(_CHARS_COL)
     )
+    return b.select(id_col, _fingerprint_col(shingle_len, k).alias("fingerprint"))
+
+
+_CHARS_COL = "_ch"
+
+
+def _fingerprint_col(shingle_len: int, k: int) -> Column:
+    """The fingerprint over the char array bound as ``_CHARS_COL``."""
+    ch = F.col(_CHARS_COL)
     hashes = F.transform(
-        F.sequence(
-            F.lit(1), F.greatest(F.size("_ch") - (shingle_len - 1), F.lit(1))
-        ),
-        lambda p: F.md5(F.concat_ws("", F.slice("_ch", p, shingle_len))),
+        F.sequence(F.lit(1), F.greatest(F.size(ch) - (shingle_len - 1), F.lit(1))),
+        lambda p: F.md5(F.concat_ws("", F.slice(ch, p, shingle_len))),
     )
-    return b.select(
-        id_col,
-        F.array_join(
-            F.slice(F.array_sort(F.array_distinct(hashes)), 1, k), ","
-        ).alias("fingerprint"),
-    )
+    return F.array_join(F.slice(F.array_sort(F.array_distinct(hashes)), 1, k), ",")
+
+
+def _with_analysis_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """``df`` plus the columns of :func:`token_stats`,
+    :func:`language_id` and :func:`fingerprint` (defaults), built in one
+    projection over ``df`` instead of three frames joined back on the
+    id. A column of ``df`` with one of those names is replaced."""
+    bound = _fan_out(df).withColumn(_CHARS_COL, F.split(F.col(text_col), ""))
+    return bound.withColumns(
+        {
+            **_token_stat_cols(text_col),
+            **_language_cols(text_col),
+            "fingerprint": _fingerprint_col(8, 4),
+        }
+    ).drop(_CHARS_COL)
 
 
 # ----------------------------------------------------------------------

@@ -64,7 +64,7 @@ SANCTIONED_SCALED = {
 
 SANCTIONED_EXACT = {
     "mm_jpeg_image_stats",      # Spark entropy-decodes; oracle reads metadata
-    "simhash_hamming_pairs",    # fused kernel, ~5 fixed stage floors
+    "simhash_hamming_pairs",    # checkpointed 60-bit aggregate + band join: 2.4-2.7x at sf0.1 (r19)
     "q21_lone_returned_supplier",  # exchange-count floor, fusion reverted
     # r8 floor-probe decompositions (BASELINE.md round-8 table): the
     # honest-shuffle quartet's data-proportional work is at-or-under
@@ -94,8 +94,8 @@ def is_sanctioned(name: str) -> bool:
 # the degraded-window classification; import both so a cpu_calib
 # output change or threshold recalibration is fixed in one place.
 from bench import (  # noqa: E402
-    DEGRADED_MT32_MS,
     calib_record as calib_stamp,
+    degraded_threshold,
     track_span_degraded,
 )
 
@@ -285,6 +285,8 @@ def main() -> None:
             "full": True,
         })
 
+        threshold = degraded_threshold(track)
+
         def span_degraded(span: tuple[int, int]) -> bool:
             """True if any stamp bounding or inside the query's exec
             span reads degraded — the query's timings MAY carry window
@@ -292,7 +294,7 @@ def main() -> None:
             Shared implementation: bench.track_span_degraded (an
             earlier local copy dropped the above-bound for every span
             before the first mini stamp)."""
-            return track_span_degraded(track, span[0], span[1])
+            return track_span_degraded(track, span[0], span[1], threshold)
 
         artifact = {
             "metric": "spark_duckdb_ratio",
@@ -334,7 +336,7 @@ def main() -> None:
             # inflation (re-probe the flagged names before reading
             # them as plan evidence).
             "calib_track": track,
-            "degraded_mt32_threshold_ms": DEGRADED_MT32_MS,
+            "degraded_mt32_threshold_ms": threshold,
             "queries": {
                 r[0]: {
                     "spark_sec": round(r[1], 3),

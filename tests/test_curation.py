@@ -300,6 +300,43 @@ def test_curate_corpus_end_to_end(spark):
     assert rep.n_chunks >= 2  # at least one chunk per source stream
 
 
+def _analysis_corpus(spark, extra=""):
+    texts = [f"unique document {i} with its own words token{i} body content here"
+             for i in range(20)]
+    rows = [(i, t, "books") + ((-1,) if extra else ()) for i, t in enumerate(texts)]
+    return texts, spark.createDataFrame(
+        rows, "doc_id long, text string, source string" + extra
+    )
+
+
+def test_clean_corpus_replaces_input_analysis_column(spark):
+    # The analysis columns are computed in place over the survivors, so
+    # an input column of the same name is replaced, not duplicated.
+    from my_weather_spark.llm.pipeline import clean_corpus
+
+    texts, docs = _analysis_corpus(spark, ", n_chars long")
+    out, _ = clean_corpus(docs, min_words=5)
+    got = {r["doc_id"]: r["n_chars"] for r in out.select("doc_id", "n_chars").collect()}
+    assert got == {i: len(t) for i, t in enumerate(texts)}
+
+
+def test_decontaminate_clean_corpus_plan_has_no_join_backs(spark):
+    # decontam reads its input twice (n-gram flags and the anti-join);
+    # the clean frame must not bring token/language/fingerprint
+    # join-backs into either read: its two joins are the broadcast
+    # n-gram probe and the anti-join.
+    from my_weather_spark.llm.pipeline import clean_corpus
+
+    _, docs = _analysis_corpus(spark)
+    out, _ = clean_corpus(docs, min_words=5)
+    bench = spark.createDataFrame([(100, "some benchmark text")], "doc_id long, text string")
+    plan = (
+        decontam.decontaminate(out, bench)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("Join ") == 2, plan
+
+
 def test_curate_corpus_bin_packing_mode(spark):
     from my_weather_spark.llm.pipeline import curate_corpus
 

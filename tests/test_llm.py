@@ -151,6 +151,56 @@ def test_minhash_lsh_pairs_plan_constant_in_band_count(docs):
     assert len(set(lines.values())) == 1, lines
 
 
+@pytest.mark.parametrize("max_bucket", [4096, 6])
+@pytest.mark.parametrize("bits,max_hamming", [(16, 3), (60, 3), (32, 1)])
+def test_simhash_hamming_pairs_exactly_once_matches_reference(
+    lsh_corpus, bits, max_hamming, max_bucket
+):
+    # Reference from the simhashes in pure Python: bucket by each
+    # bit-band value, all pairs of a bucket of at most max_bucket docs,
+    # hub (min id) spokes above it, then the exact hamming filter.
+    h = {r["doc_id"]: r["simhash"] for r in dedup.simhash(lsh_corpus, bits).collect()}
+    n_bands = max_hamming + 1
+    band_bits = bits // n_bands
+    buckets = {}
+    for d, v in h.items():
+        for b in range(n_bands):
+            key = (b, (v >> b * band_bits) & ((1 << band_bits) - 1))
+            buckets.setdefault(key, []).append(d)
+    cand = set()
+    for members in buckets.values():
+        members.sort()
+        if len(members) > max_bucket:
+            cand |= {(members[0], m) for m in members[1:]}
+        else:
+            cand |= {(a, b) for i, a in enumerate(members) for b in members[i + 1:]}
+    if max_bucket < 4096:
+        assert any(len(m) > max_bucket for m in buckets.values())
+    want = {
+        (a, b, bin(h[a] ^ h[b]).count("1"))
+        for a, b in cand
+        if bin(h[a] ^ h[b]).count("1") <= max_hamming
+    }
+    got = [
+        (r["doc_a"], r["doc_b"], r["hamming"])
+        for r in dedup.simhash_hamming_pairs(
+            lsh_corpus, max_hamming, bits, max_bucket=max_bucket
+        ).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+def test_simhash_hamming_pairs_plan_constant_in_band_count(docs):
+    plans = {
+        max_hamming: dedup.simhash_hamming_pairs(docs, max_hamming, bits=16)
+        ._jdf.queryExecution().executedPlan().toString()
+        for max_hamming in (1, 3, 7)
+    }
+    assert len({len(p.splitlines()) for p in plans.values()}) == 1, plans
+    assert not any("MapInPandas" in p for p in plans.values())
+
+
 def test_simhash_hot_bucket_degrades_to_star(spark):
     # Identical docs share a simhash — one hot (band, band_val) bucket.
     # Over the cap it emits hub spokes (linear), with exact hamming.
@@ -1331,31 +1381,21 @@ def test_bm25_scores_golden_and_edges(spark):
         text_ops.bm25_scores(docs, [])
 
 
-def _simhash_carry_case(spark):
-    rows = [(i, f"doc number {i} with shared words alpha beta gamma delta") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    return lambda: dedup.simhash_hamming_pairs(df, max_hamming=3, bits=60)
-
-
-def _srp_carry_case(spark):
+def test_srp_scan_bucket_boundary_carry(spark):
+    """The SRP verify scans sorted partitions in Arrow batches; a
+    bucket spanning a batch boundary (or ending exactly ON one) must be
+    stitched, not split. Force 7-row batches and compare against the
+    result under default batching."""
     # 40 copies of one direction (plus per-row jitter) share every SRP
     # bucket, so each bucket spans several 7-row batches
     rows = [(i, [1.0, 2.0, 3.0, 4.0 + i * 1e-3]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    return lambda: similarity.srp_lsh_pairs(df, threshold=0.9, n_planes=32, band_bits=8)
 
+    def query():
+        return similarity.srp_lsh_pairs(df, threshold=0.9, n_planes=32, band_bits=8)
 
-@pytest.mark.parametrize(
-    "case", [_simhash_carry_case, _srp_carry_case], ids=["simhash", "srp"]
-)
-def test_simhash_kernel_bucket_boundary_carry(spark, case):
-    """The shared bucket-pair kernel scans sorted partitions in Arrow
-    batches; a bucket spanning a batch boundary (or ending exactly ON
-    one) must be stitched, not split. Force 7-row batches and compare
-    against the result under default batching."""
-    query = case(spark)
     want = sorted(map(tuple, query().collect()))
-    assert want  # the shared vocabulary / direction guarantees close pairs
+    assert want  # the shared direction guarantees close pairs
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
