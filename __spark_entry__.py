@@ -4447,8 +4447,8 @@ def f7_format_tiles(spark, sf_dir):
     dtss_serve_test.py:314: f'{v:0.2f} °C')."""
     e = load_table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
-        F.format_string("%.2f °C", F.min("value")).alias("min_text"),
-        F.format_string("%.2f °C", F.max("value")).alias("max_text"),
+        sc.format_value(F.min("value"), "°C").alias("min_text"),
+        sc.format_value(F.max("value"), "°C").alias("max_text"),
     )
 
 

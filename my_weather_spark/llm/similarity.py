@@ -1,14 +1,25 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — exact, one pass over the corpus
-per query batch, no index. Scale path: IVF-style bucketed search —
-assign corpus vectors to nearest of C centroid buckets once (an
-O(N*C) map-side pass), then probe only the best few buckets per query.
+Brute-force top-k, the tiled self-join, IVF buckets, SRP-LSH buckets
+and SemDeDup clusters score one cosine over different candidate sets.
+Every numpy path stacks its vectors with :func:`_unit` and scores them
+with :func:`_cos`; thresholded paths round to 6 places first, so both
+engines decide identically. The one JVM-side cosine is :func:`cosine`
+(brute force): it ranks on the oracle's unrounded cosines only as a
+sequential-double fold over the array order.
 
-All distance math is built-in higher-order functions
-(``zip_with`` + ``aggregate``) — JVM-side, no Python in the hot path.
-Accumulation is sequential double over the array order, which keeps
-results reproducible across engines.
+Zero-vector rule. A zero vector has no direction, so every cosine it
+takes part in is undefined, and an undefined cosine:
+
+- never meets a threshold;
+- ranks after every defined cosine;
+- wins an argmax only when every candidate is undefined, and then the
+  first candidate in the path's documented order wins;
+- is emitted as NULL.
+
+``_cos`` writes -inf for it, which gives the first three in numpy, and
+a path that emits the cosine turns -inf into NULL. The JVM ``cosine``
+is NULL through ``try_divide``, and ``F.desc`` ranks NULLs last.
 
 Scale notes (100 TB): queries are broadcast (a query batch is small by
 definition); the corpus stays partitioned — the cross join is a
@@ -20,10 +31,38 @@ sorted by centroid_id so bucket probes are partition-pruned scans.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from my_weather_spark.llm._util import fan_out as _fan_out
 from my_weather_spark.session import local_frame
+
+# Rows per blocked BLAS product in the tiled and SemDeDup kernels:
+# peak score memory is _BLOCK x (rows on the other side).
+_BLOCK = 2048
+
+
+def _unit(vectors) -> np.ndarray:
+    """Stack a vector column as float64 rows of unit length; a zero
+    vector stays a zero row."""
+    X = np.stack(vectors).astype(np.float64)
+    norms = np.linalg.norm(X, axis=1, keepdims=True)
+    return np.divide(X, norms, out=X, where=norms > 0)
+
+
+def _cos(A: np.ndarray, B: np.ndarray, rowwise: bool = False) -> np.ndarray:
+    """Cosine of unit rows: the A x B matrix, or A[i] . B[i] when
+    ``rowwise``; -inf wherever either row is zero."""
+    a, b = A.any(axis=1), B.any(axis=1)
+    if rowwise:
+        S = np.einsum("ij,ij->i", A, B)
+        S[~(a & b)] = -np.inf
+        return S
+    S = A @ B.T
+    S[~a] = -np.inf
+    S[:, ~b] = -np.inf
+    return S
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -46,7 +85,8 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """NULL when either vector is zero (the zero-vector rule)."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 # ----------------------------------------------------------------------
@@ -60,7 +100,7 @@ def brute_force_topk(
     """Exact top-k neighbors per query by cosine.
 
     Output: (query_id, neighbor_id, cos, rank). Self-matches excluded.
-    Ties broken by neighbor_id for determinism.
+    Ties, and undefined (NULL) cosines, are ranked by neighbor_id.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
@@ -68,8 +108,6 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     )
-    from my_weather_spark.llm._util import fan_out as _fan_out
-
     scored = (
         _fan_out(c).join(F.broadcast(q))  # broadcast NL: corpus stays distributed
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -83,91 +121,6 @@ def brute_force_topk(
     )
 
 
-def cosine_threshold_pairs(
-    corpus: DataFrame,
-    queries: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_query_rows: int = 65536,
-    ordered_pairs: bool = True,
-) -> DataFrame:
-    """All (query, neighbor) pairs with cosine >= threshold — the
-    embedding near-dup primitive (rank-free, so fully order-stable).
-
-    Implementation: the query side is collected to a dense matrix and
-    broadcast; each Arrow batch of the corpus does ONE BLAS matrix
-    product against it (mapInPandas), emitting only over-threshold
-    pairs. This is the standard block-matrix similarity pattern: the
-    corpus never shuffles, work is (corpus x queries) fused
-    multiply-adds, and the emitted pair set is sparse.
-
-    The query side must be BROADCAST-SIZED — that is enforced
-    (``max_query_rows``), not assumed: collecting an unbounded "query"
-    side is a driver OOM at scale. For corpus-x-corpus use
-    :func:`cosine_self_pairs`, which never collects anything.
-
-    ``ordered_pairs=True`` (default) is the SELF-JOIN mode: queries
-    are drawn from the corpus id space and each unordered pair is
-    emitted once as query_id < neighbor_id (the cosine_self_pairs
-    contract). For a DISJOINT query batch set ``ordered_pairs=False``
-    — every (query, neighbor) pair with query != neighbor is emitted;
-    with the default, a query whose id sorts above the corpus ids
-    would silently match nothing.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    c_id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {q_id_type}, neighbor_id {c_id_type}, cos double"
-    q_pdf = queries.select(id_col, vec_col).limit(max_query_rows + 1).toPandas()
-    if len(q_pdf) > max_query_rows:
-        raise ValueError(
-            f"query side exceeds max_query_rows={max_query_rows}; a "
-            "driver-collected query batch must be broadcast-sized — use "
-            "cosine_self_pairs for corpus-x-corpus similarity"
-        )
-    if len(q_pdf) == 0:
-        # an empty query batch has an empty answer, not an np.stack crash
-        return spark.createDataFrame([], out_schema)
-    q_ids = q_pdf[id_col].to_numpy()
-    q_mat = np.stack(q_pdf[vec_col].to_numpy()).astype(np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def _score(batches):
-        ids, mat = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            c_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = np.round(c_mat @ mat.T, 6)
-            if ordered_pairs:
-                # self-join mode: each unordered pair once
-                mask = (sims >= threshold) & (ids[None, :] < c_ids[:, None])
-            else:
-                # query-vs-corpus mode: self-matches excluded only
-                mask = (sims >= threshold) & (ids[None, :] != c_ids[:, None])
-            ci, qi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "query_id": ids[qi],
-                    "neighbor_id": c_ids[ci],
-                    "cos": sims[ci, qi],
-                }
-            )
-
-    from my_weather_spark.llm._util import fan_out as _fan_out
-
-    return _fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        _score, schema=out_schema
-    )
-
-
 def cosine_self_pairs(
     corpus: DataFrame,
     threshold: float,
@@ -175,9 +128,9 @@ def cosine_self_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact corpus-x-corpus cosine pairs >= threshold, fully
-    distributed — the tiled variant of :func:`cosine_threshold_pairs`
-    with NO driver-side collect.
+    """Exact corpus-x-corpus cosine pairs >= threshold as
+    (query_id, neighbor_id, cos), query_id < neighbor_id — fully
+    distributed, with no driver-side collect.
 
     Block-matrix self-join: rows hash into ``n_blocks`` blocks; each
     row explodes into its tile memberships over the (ga <= gb)
@@ -197,7 +150,6 @@ def cosine_self_pairs(
     (broadcast queries) and srp_lsh_pairs (sub-quadratic LSH) for the
     other points on the exact/approximate frontier.
     """
-    import numpy as np
     import pandas as pd
 
     # role 0: left side of an off-diagonal tile; 1: right side;
@@ -239,16 +191,12 @@ def cosine_self_pairs(
             return empty
         lids = lpdf[id_col].to_numpy()
         rids = rpdf[id_col].to_numpy()
-        A = np.stack(lpdf[vec_col].to_numpy()).astype(np.float64)
-        B = A if diag else np.stack(rpdf[vec_col].to_numpy()).astype(np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            A = A / np.linalg.norm(A, axis=1, keepdims=True)
-            B = A if diag else B / np.linalg.norm(B, axis=1, keepdims=True)
+        A = _unit(lpdf[vec_col])
+        B = A if diag else _unit(rpdf[vec_col])
         out = []
-        block = 2048
-        for s in range(0, len(A), block):
-            S = np.round(A[s : s + block] @ B.T, 6)
-            bi, bj = np.nonzero(S >= threshold)  # NaN never passes
+        for s in range(0, len(A), _BLOCK):
+            S = np.round(_cos(A[s : s + _BLOCK], B), 6)
+            bi, bj = np.nonzero(S >= threshold)
             ia, ib = lids[bi + s], rids[bj]
             # diagonal: strict upper triangle by id (each pair once);
             # off-diagonal blocks are disjoint, all cross pairs count
@@ -309,9 +257,9 @@ def semantic_decontam_flags(
     bench rows are id-sorted, and np.argmax takes the first maximum —
     so ties resolve to the lowest bench id, exactly the SQL replay's
     (cos DESC, bench_id ASC) order. The verdict compares the rounded
-    value, so both engines decide identically.
+    value, so both engines decide identically. A zero corpus vector
+    gets the lowest bench id, a NULL ``max_cos`` and no flag.
     """
-    import numpy as np
     import pandas as pd
 
     spark = corpus.sparkSession
@@ -328,11 +276,9 @@ def semantic_decontam_flags(
             f"benchmark side exceeds max_bench_rows={max_bench_rows}; a "
             "driver-collected benchmark must be broadcast-sized"
         )
-    b_ids = b_pdf[id_col].to_numpy()
-    b_mat = np.stack(b_pdf[vec_col].to_numpy()).astype(np.float64)
-    norms = np.linalg.norm(b_mat, axis=1, keepdims=True)
-    np.divide(b_mat, norms, out=b_mat, where=norms > 0)
-    bc = spark.sparkContext.broadcast((b_ids, b_mat))
+    bc = spark.sparkContext.broadcast(
+        (b_pdf[id_col].to_numpy(), _unit(b_pdf[vec_col]))
+    )
     thr = float(threshold)
 
     def _flag(batches):
@@ -340,22 +286,17 @@ def semantic_decontam_flags(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            anorm = np.linalg.norm(A, axis=1, keepdims=True)
-            np.divide(A, anorm, out=A, where=anorm > 0)
-            sims = np.round(A @ mat.T, 6)
+            sims = np.round(_cos(_unit(pdf[vec_col]), mat), 6)
             best = np.argmax(sims, axis=1)
-            rows = np.arange(len(A))
+            top = sims[np.arange(len(sims)), best]
             yield pd.DataFrame(
                 {
                     "_id": pdf[id_col].to_numpy(),
                     "bench_id": ids[best],
-                    "max_cos": sims[rows, best],
-                    "contaminated": sims[rows, best] >= thr,
+                    "max_cos": np.where(top > -np.inf, top, np.nan),
+                    "contaminated": top >= thr,
                 }
             )
-
-    from my_weather_spark.llm._util import fan_out as _fan_out
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     b_id_type = bench.schema[id_col].dataType.simpleString()
@@ -371,16 +312,10 @@ def semantic_decontam_flags(
 
 
 def _centroid_matrix(centroids: DataFrame, id_col: str, vec_col: str):
-    import numpy as np
-
-    pdf = centroids.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    # A zero-norm centroid (degenerate all-zero cluster) stays a zero
-    # row instead of NaN-poisoning every similarity against it.
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    np.divide(mat, norms, out=mat, where=norms > 0)
-    return ids, mat
+    """(ids, unit rows) in centroid id order — the order an all-undefined
+    argmax falls back to."""
+    pdf = centroids.select(id_col, vec_col).toPandas().sort_values(id_col)
+    return pdf[id_col].to_numpy(), _unit(pdf[vec_col])
 
 
 def _centroids_df(spark, mat, vec_col: str) -> DataFrame:
@@ -417,8 +352,6 @@ def ivf_centroids(
     driver. C stays FIXED as the corpus grows — recall is tuned with
     nprobe, cost of assignment stays O(N_train*C).
     """
-    import numpy as np
-
     from my_weather_spark.llm import sampling
 
     spark = corpus.sparkSession
@@ -440,10 +373,7 @@ def ivf_centroids(
     )
     if not seeds:
         return _centroids_df(spark, np.zeros((0, 1)), vec_col)
-    mat = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in seeds])
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    mat = mat / norms
+    mat = _unit([r[vec_col] for r in seeds])
     for _ in range(refine_iters):
         cdf = _centroids_df(spark, mat, vec_col)
         assigned = ivf_assign(
@@ -508,10 +438,10 @@ def ivf_assign(
     ``fan_out=False`` skips the small-input repartition — right when
     the very next op is itself a shuffle that supplies the
     parallelism (semantic_dedup's cluster groupBy), since the assign
-    is O(k x dim) per row, cheap relative to what follows.
+    is O(k x dim) per row, cheap relative to what follows. A zero
+    vector goes to the first centroid of the matrix (centroid id
+    order, or the caller's ``_cmat`` order).
     """
-    import numpy as np
-
     spark = corpus.sparkSession
     c_ids, c_mat = _cmat or _centroid_matrix(centroids, "centroid_id", vec_col)
     bc = spark.sparkContext.broadcast((c_ids, c_mat))
@@ -523,14 +453,10 @@ def ivf_assign(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            A /= np.linalg.norm(A, axis=1, keepdims=True)
-            best = np.argmax(A @ mat.T, axis=1)
+            best = np.argmax(_cos(_unit(pdf[vec_col]), mat), axis=1)
             out = pdf[[id_col, vec_col]].copy()
             out[centroid_id_col] = ids[best]
             yield out
-
-    from my_weather_spark.llm._util import fan_out as _fan_out
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     vec_type = corpus.schema[vec_col].dataType.simpleString()
@@ -565,12 +491,9 @@ def ivf_topk(
     assigned on the fly.
 
     The query side is driver-collected to pick probe buckets, so it
-    must be broadcast-sized — enforced via ``max_query_rows`` (the
-    same guard as :func:`cosine_threshold_pairs`); an unbounded
-    collect here is a driver OOM at scale.
+    must be broadcast-sized — enforced via ``max_query_rows``; an
+    unbounded collect here is a driver OOM at scale.
     """
-    import numpy as np
-
     spark = index.sparkSession
     # Collect the (tiny) centroid matrix once; reused for both bucket
     # assignment and driver-side probe selection.
@@ -593,9 +516,7 @@ def ivf_topk(
         return spark.createDataFrame(
             [], f"query_id {q_id_type}, neighbor_id {n_id_type}, cos double, rank int"
         )
-    q_mat = np.stack(q_pdf[vec_col].to_numpy()).astype(np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    sims = q_mat @ c_mat.T
+    sims = _cos(_unit(q_pdf[vec_col]), c_mat)
     _cast = int if q_id_type in ("bigint", "int", "smallint", "tinyint") else (lambda x: x)
     probe_rows = []
     for qi, qid in enumerate(q_pdf[id_col].tolist()):
@@ -624,25 +545,17 @@ def ivf_topk(
     # Score candidate rows vectorized (one einsum per Arrow batch)
     # instead of per-row interpreted HOF evaluation.
     def _score(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf["_cv"].to_numpy()).astype(np.float64)
-            B = np.stack(pdf["_qv"].to_numpy()).astype(np.float64)
-            num = np.einsum("ij,ij->i", A, B)
-            den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            # zero-norm corpus vectors have no direction: rank them
-            # LAST (-inf), not first (NaN sorts above every real cos
-            # under desc ordering and would displace true neighbors)
-            cos = np.where(den > 0, num / np.where(den > 0, den, 1.0), -np.inf)
+            cos = np.round(_cos(_unit(pdf["_cv"]), _unit(pdf["_qv"]), rowwise=True), 6)
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"],
                     "neighbor_id": pdf["neighbor_id"],
-                    "cos": np.round(cos, 6),
+                    "cos": np.where(cos > -np.inf, cos, np.nan),
                 }
             )
 
@@ -689,10 +602,8 @@ def srp_codes(
     Zero-norm vectors (e.g. hashed-BoW of wordless docs) have no
     direction and are dropped here: every zero vector lands in the
     same sign-bit bucket (all bits 0), pairing all of them, and their
-    cosine is NaN — never a meaningful near-dup.
+    cosine is undefined — never a near-dup.
     """
-    import numpy as np
-
     if band_bits >= 63:
         raise ValueError("band_bits must fit a signed 64-bit band_key")
     if n_planes % band_bits != 0:
@@ -702,7 +613,6 @@ def srp_codes(
     schema = f"{id_col} {id_type}, band int, band_key long"
 
     def _code(batches):
-        import numpy as np
         import pandas as pd
 
         # Hyperplanes are regenerated per task from the fixed seed
@@ -734,8 +644,6 @@ def srp_codes(
                 )
             yield pd.concat(out)
 
-    from my_weather_spark.llm._util import fan_out as _fan_out
-
     return _fan_out(corpus.select(id_col, vec_col)).mapInPandas(_code, schema)
 
 
@@ -757,7 +665,7 @@ def srp_lsh_pairs(
     band_bits) to the threshold: at cos 0.95 the defaults give
     ~1 - (1 - 0.899^16)^16 ≈ 0.96; more bands → higher recall, more
     candidates. This is the corpus-x-corpus scale path where the dense
-    block-matrix pass (cosine_threshold_pairs) would be quadratic:
+    block-matrix pass (cosine_self_pairs) would be quadratic:
     candidates are confined to equal (band, band_key) buckets, i.e.
     near-dup clusters, and everything else never pairs up.
 
@@ -772,7 +680,7 @@ def srp_lsh_pairs(
     threshold leave the scan. Shuffled vector bytes are one (vector +
     code) row per COLLIDING (doc, band), never one row per candidate
     PAIR. Zero-norm vectors never reach the verify (dropped in
-    srp_codes), so cos is never NaN. Above ``max_bucket`` members a
+    srp_codes). Above ``max_bucket`` members a
     bucket verifies hub-and-spoke against its min-id member (linear
     work, and the per-task skew bound: a bucket is scanned by exactly
     one task); widening band_bits remains the right first response
@@ -810,20 +718,19 @@ def srp_lsh_pairs(
     id_type = corpus.schema[id_col].dataType.simpleString()
 
     def _scan(batches):
-        import numpy as np
         import pandas as pd
 
         def _pairs(ids, X, out):
             n = len(ids)
             if n > max_bucket:
                 hub = int(np.argmin(ids))
-                S = (X[hub : hub + 1] @ X.T).round(6)[0]
+                S = _cos(X[hub : hub + 1], X).round(6)[0]
                 m = S >= threshold
                 m[hub] = False
                 out.append((np.full(int(m.sum()), ids[hub]), ids[m], S[m]))
                 return
             for s in range(0, n - 1, 256):
-                S = (X[s : s + 256] @ X[s:].T).round(6)
+                S = _cos(X[s : s + 256], X[s:]).round(6)
                 bi, bj = np.nonzero(S >= threshold)
                 up = bi < bj
                 bi, bj = bi[up], bj[up]
@@ -841,10 +748,9 @@ def srp_lsh_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             part = [
                 pdf[id_col].to_numpy(),
-                A / np.linalg.norm(A, axis=1, keepdims=True),
+                _unit(pdf[vec_col]),
                 pdf["band"].to_numpy(),
                 pdf["band_key"].to_numpy(),
             ]
@@ -884,7 +790,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     seed: str = "semdedup",
     keep: str = "min_id",
-    block: int = 2048,
 ) -> DataFrame:
     """Semantic (embedding-space) near-dup removal, SemDeDup-style
     (Abbas et al. 2023, arXiv:2303.09540): partition the corpus into
@@ -921,14 +826,16 @@ def semantic_dedup(
     Scale shape (100 TB): anchor matrix broadcasts (k x dim); the
     assign pass is narrow (one BLAS argmax per Arrow batch, no join —
     ivf_assign); then ONE shuffle on cluster_id and a per-cluster
-    blocked upper-triangle BLAS (block x m tiles, memory-bounded).
+    blocked upper-triangle BLAS (_BLOCK x m tiles, memory-bounded).
     Work is the inherent sum of m_c^2 within-cluster comparisons —
     ``n_clusters`` is the lever and must scale with the corpus
     (k ~ N / target_cluster_size) to bound both skew and quadratic
     cost, exactly the published SemDeDup deployment shape. No
     counterpart in the reference repo (no embedding path there).
+
+    A zero vector joins the lowest-ticket anchor's cluster and is always
+    kept.
     """
-    import numpy as np
     import pandas as pd
 
     from my_weather_spark.llm.sampling import _ticket
@@ -952,48 +859,32 @@ def semantic_dedup(
     if not seeds:
         return corpus.sparkSession.createDataFrame([], out_schema)
     seed_ids = np.asarray([r[id_col] for r in seeds])  # int or string ids
-    mat = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in seeds])
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    np.divide(mat, norms, out=mat, where=norms > 0)
-
+    mat = _unit([r[vec_col] for r in seeds])
     assigned = ivf_assign(
         corpus, None, id_col, vec_col,
         centroid_id_col="cluster_id", _cmat=(seed_ids, mat),
         fan_out=False,  # the cluster groupBy right after is the fan-out
         centroid_id_type=id_type,
     )
-    # anchor vectors by anchor id — only the diversity keep needs them
-    # in the kernel (k x dim, broadcast-sized by construction)
-    anchors = None
-    if keep == "far_from_anchor":
-        anchors = corpus.sparkSession.sparkContext.broadcast(
-            {
-                sid.item() if hasattr(sid, "item") else sid: mat[i]
-                for i, sid in enumerate(seed_ids)
-            }
-        )
 
     def _dedup_cluster(key, pdf):
         ids_raw = pdf[id_col].to_numpy()
-        A = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            A /= np.linalg.norm(A, axis=1, keepdims=True)
+        A = _unit(pdf[vec_col])
         if keep == "min_id":
             order = np.argsort(ids_raw, kind="stable")
         else:
-            # ascending anchor-cosine = farthest-from-center first;
-            # NaN (zero-norm) sorts last — lowest priority, and its
-            # NaN pair cosines never pass the threshold anyway
-            ac = A @ anchors.value[key[0]]
+            # ascending anchor-cosine = farthest-from-center first (the
+            # k x dim anchor matrix rides in the kernel's closure); a
+            # zero vector's place is moot, it never hits
+            ac = _cos(A, mat[seed_ids == key[0]])[:, 0]
             order = np.lexsort((ids_raw, ac))
         ids = ids_raw[order]
         A = A[order]
         m = len(ids)
         dropped = np.zeros(m, dtype=bool)
-        for s in range(0, m, block):
-            gi = np.arange(s, min(s + block, m))
-            S = np.round(A[gi] @ A.T, 6)
-            hit = S >= threshold  # NaN (zero-norm vec) never passes
+        for s in range(0, m, _BLOCK):
+            gi = np.arange(s, min(s + _BLOCK, m))
+            hit = np.round(_cos(A[gi], A), 6) >= threshold
             # rows are priority-sorted: column j is dropped when some
             # strictly higher-priority row i (i < j in sort order) hits
             mask = np.arange(m)[None, :] > gi[:, None]

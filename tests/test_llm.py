@@ -616,9 +616,7 @@ def test_srp_lsh_vs_brute_force(spark):
     }
     brute = {
         (r["query_id"], r["neighbor_id"]): r["cos"]
-        for r in similarity.cosine_threshold_pairs(
-            corpus, corpus, threshold=0.95
-        ).collect()
+        for r in similarity.cosine_self_pairs(corpus, threshold=0.95).collect()
     }
     assert len(brute) == 45  # 15 clusters x 3 intra-cluster pairs
     # precision exact: every SRP pair is a true pair with the same cosine
@@ -639,42 +637,40 @@ def test_srp_lsh_vs_brute_force(spark):
     assert len(srp_wide) >= 0.85 * len(brute)
 
 
-def test_cosine_self_pairs_matches_broadcast_variant(spark, sf_dir):
+@pytest.mark.parametrize("n_blocks", [1, 4, 8])
+def test_cosine_self_pairs_matches_numpy_reference(spark, sf_dir, n_blocks):
+    import numpy as np
+
     from my_weather_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     blocked = {
         (r["query_id"], r["neighbor_id"]): r["cos"]
-        for r in similarity.cosine_self_pairs(emb, threshold=0.3, n_blocks=4).collect()
+        for r in similarity.cosine_self_pairs(
+            emb, threshold=0.3, n_blocks=n_blocks
+        ).collect()
     }
-    bcast = {
-        (r["query_id"], r["neighbor_id"]): r["cos"]
-        for r in similarity.cosine_threshold_pairs(emb, emb, threshold=0.3).collect()
+    rows = sorted((r["vec_id"], r["embedding"]) for r in emb.collect())
+    ids = np.array([i for i, _ in rows])
+    A = np.array([v for _, v in rows], dtype=np.float64)
+    A /= np.linalg.norm(A, axis=1, keepdims=True)
+    S = np.round(A @ A.T, 6)
+    want = {
+        (int(ids[i]), int(ids[j])): float(S[i, j])
+        for i, j in zip(*np.nonzero(S >= 0.3))
+        if i < j
     }
-    assert blocked == bcast and len(blocked) > 0
+    assert blocked == want and len(blocked) > 0
 
 
-def test_cosine_threshold_pairs_disjoint_query_batch(spark, sf_dir):
+def test_ivf_topk_empty_query_batch(spark, sf_dir):
     from my_weather_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # a query whose id sorts ABOVE every corpus id: the ordered
-    # (self-join) mode would silently drop all its matches
-    q = emb.where(F.col("vec_id") == 3).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    got = similarity.cosine_threshold_pairs(
-        emb, q, threshold=0.99, ordered_pairs=False
-    ).collect()
-    # vec 3's own corpus copy has cosine 1.0 with it
-    assert any(r["neighbor_id"] == 3 and r["cos"] == 1.0 for r in got)
-
     # an empty query batch returns an empty frame, not an np.stack crash
     empty = emb.where(F.col("vec_id") < 0)
-    assert similarity.cosine_threshold_pairs(emb, empty, threshold=0.5).count() == 0
-    idx = emb  # raw corpus accepted by ivf_topk
     cents = similarity.ivf_centroids(emb, n_centroids=4, refine_iters=0)
-    assert similarity.ivf_topk(idx, empty, cents, k=2).count() == 0
+    assert similarity.ivf_topk(emb, empty, cents, k=2).count() == 0
 
 
 def test_semantic_decontam_flags(spark):
@@ -820,12 +816,82 @@ def test_ivf_topk_zero_norm_vector_not_top_ranked(spark):
     assert all(not math.isnan(r["cos"]) for r in top)
 
 
-def test_cosine_threshold_pairs_query_size_guard(spark, sf_dir):
+def test_ivf_topk_query_size_guard(spark, sf_dir):
     from my_weather_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
+    cents = similarity.ivf_centroids(emb, n_centroids=4, refine_iters=0)
     with pytest.raises(ValueError, match="broadcast-sized"):
-        similarity.cosine_threshold_pairs(emb, emb, threshold=0.3, max_query_rows=10)
+        similarity.ivf_topk(emb, emb, cents, max_query_rows=10)
+
+
+# The zero-vector rule (llm/similarity.py module docstring) on one
+# input: a zero vector among three real ones whose real cosines are all
+# negative, so a zero scored as 0.0 would pass threshold -1, win every
+# argmax and rank first. No oracle table has a zero vector, and DuckDB's
+# list_cosine_similarity gives it -1.0, so only this test pins the rule.
+_ZERO_ROWS = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [-0.6, 0.8]), (3, [-0.6, -0.8])]
+_REAL_PAIRS = {(0, 2): -0.6, (0, 3): -0.6, (2, 3): -0.28}
+# (neighbor_id, cos, rank) of the top-k paths, by query
+_ZERO_TOPK = {0: [(2, -0.6, 1), (3, -0.6, 2), (1, None, 3)],
+              1: [(0, None, 1), (2, None, 2), (3, None, 3)]}
+
+
+def _zero_case(spark, path, query):
+    emb = spark.createDataFrame(_ZERO_ROWS, "vec_id long, embedding array<double>")
+    cents = emb.withColumnRenamed("vec_id", "centroid_id")
+    shifted = lambda df: df.select((F.col("vec_id") + 10).alias("vec_id"), "embedding")
+    if path in ("brute_force_topk", "ivf_topk"):
+        q = emb.where(F.col("vec_id") == query)
+        got = (similarity.brute_force_topk(emb, q) if path == "brute_force_topk"
+               else similarity.ivf_topk(emb, q, cents, nprobe=4))
+        got = [(r["neighbor_id"], r["cos"], r["rank"]) for r in got.orderBy("rank").collect()]
+        return got, _ZERO_TOPK[query]
+    if path == "cosine_self_pairs":
+        got = similarity.cosine_self_pairs(emb, threshold=-1.0).collect()
+        return {(r["query_id"], r["neighbor_id"]): r["cos"] for r in got}, _REAL_PAIRS
+    if path == "semantic_decontam_flags:zero_corpus_row":
+        bench = shifted(emb.where(F.col("vec_id") != 1))
+        got = similarity.semantic_decontam_flags(emb, bench, threshold=-1.0).collect()
+        # the zero row falls back to the first bench id
+        want = {0: (10, 1.0, True), 1: (10, None, False), 2: (12, 1.0, True), 3: (13, 1.0, True)}
+        return {r["vec_id"]: tuple(r)[1:] for r in got}, want
+    if path == "semantic_decontam_flags:zero_bench_row":
+        corpus = shifted(emb.where(F.col("vec_id") == 0))
+        bench = emb.where(F.col("vec_id") != 0)
+        got = similarity.semantic_decontam_flags(corpus, bench, threshold=-1.0).collect()
+        return [tuple(r) for r in got], [(10, 2, -0.6, True)]
+    if path == "ivf_assign":
+        got = similarity.ivf_assign(emb, cents.where(F.col("centroid_id") != 0)).collect()
+        # vector 0 ties between centroids 2 and 3; the zero vector
+        # falls back to the first centroid in id order
+        return {r["vec_id"]: r["centroid_id"] for r in got}, {0: 2, 1: 1, 2: 2, 3: 3}
+    if path == "srp_lsh_pairs":
+        # one-bit bands: two of the three real vectors share a bucket
+        got = similarity.srp_lsh_pairs(emb, threshold=-1.0, n_planes=2, band_bits=1)
+        got = {(r["id_a"], r["id_b"]): r["cos"] for r in got.collect()}
+        assert got
+        return got, {p: _REAL_PAIRS.get(p) for p in got}
+    got = similarity.semantic_dedup(emb, n_clusters=1, threshold=-1.0).collect()
+    return {r["vec_id"]: r["kept"] for r in got}, {0: True, 1: True, 2: False, 3: False}
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@pytest.mark.parametrize("path,query", [
+    ("brute_force_topk", 0),
+    ("brute_force_topk", 1),
+    ("cosine_self_pairs", None),
+    ("semantic_decontam_flags:zero_corpus_row", None),
+    ("semantic_decontam_flags:zero_bench_row", None),
+    ("ivf_assign", None),
+    ("ivf_topk", 0),
+    ("ivf_topk", 1),
+    ("srp_lsh_pairs", None),
+    ("semantic_dedup", None),
+])
+def test_zero_vector_rule(spark, path, query):
+    got, want = _zero_case(spark, path, query)
+    assert got == want
 
 
 def test_srp_lsh_zero_norm_vectors_never_pair(spark):
