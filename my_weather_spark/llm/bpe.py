@@ -348,10 +348,9 @@ def token_counts(
     was learned on. The join is inner, so a word absent from the
     vocab silently drops from both n_words and n_tokens — that is
     exact for the training corpus (every cleaned word is in the
-    vocab by construction) but undercounts on out-of-vocab text. For
-    arbitrary/unseen text use :func:`bpe_apply` /
-    :func:`bpe_apply_batched`, which tokenize OOV words through the
-    merge order instead of a vocab lookup."""
+    vocab by construction) but undercounts on out-of-vocab text, whose
+    words would have to be tokenized by replaying the merge list in
+    order instead of a vocab lookup."""
     n = words.select("word", F.size(_unwrap_syms("wstr")).alias("n_syms"))
     d = docs.select(
         id_col,
@@ -371,150 +370,3 @@ def token_counts(
             round6_portable(F.col("n_tokens") / F.col("n_words")),
         )
     )
-
-
-def bpe_apply(
-    df: DataFrame,
-    merges,
-    text_col: str = "text",
-    out_col: str = "tokens",
-) -> DataFrame:
-    """Tokenize arbitrary (including UNSEEN) text with a learned merge
-    list — the inference half of the tokenizer. Appends ``out_col``,
-    an array<string> of BPE tokens for the whole text (per-word
-    symbol sequences concatenated in word order, each word ending in
-    its END_MARK-bearing token).
-
-    Seen words tokenize exactly as the training vocab (pinned in
-    tests); unseen words fall out of the same merge order, which is
-    what makes a BPE vocabulary open-ended.
-
-    Scale shape: one narrow in-row projection — each word wraps to the
-    \\x1f/\\x02 symbol encoding, the T merges apply as T chained
-    literal replaces (merge ORDER is the tokenizer; T is fixed at
-    train time, so the expression tree is static), and the results
-    split back to symbols. No shuffle, no join, no UDF.
-
-    The expression tree is T Replace nodes deep, so T is capped at
-    512: beyond that, plan analysis cost grows per-merge and
-    whole-stage codegen falls back to interpretation (64KB method
-    limit). Production-scale vocabularies (10k-32k merges) use
-    :func:`bpe_apply_batched` (bit-identical output, pinned in
-    tests) — and corpus-internal tokenization should use the vocab
-    join (:func:`token_counts` path), which is
-    merge-count-independent.
-    """
-    if len(merges) > 512:
-        raise ValueError(
-            f"bpe_apply caps the in-row expression tree at 512 merges, "
-            f"got {len(merges)}; use bpe_apply_batched for "
-            f"production-scale vocabularies"
-        )
-    words = _clean_words(F.coalesce(F.col(text_col), F.lit("")))
-
-    def tokenize_word(w: Column) -> Column:
-        s = _wrap_syms(F.concat(F.split(w, ""), F.array(F.lit(END_MARK))))
-        for _step, lhs, rhs, merged, _freq in merges:
-            pat = SEP_L + lhs + SEP_R + SEP_L + rhs + SEP_R
-            s = F.replace(s, F.lit(pat), F.lit(SEP_L + merged + SEP_R))
-        return F.split(
-            F.substring(s, F.lit(2), F.length(s) - 2), SEP_R + SEP_L
-        )
-
-    return df.withColumn(
-        out_col, F.flatten(F.transform(words, tokenize_word))
-    )
-
-
-def bpe_apply_batched(
-    df: DataFrame,
-    merges,
-    text_col: str = "text",
-    out_col: str = "tokens",
-) -> DataFrame:
-    """bpe_apply for production-scale merge lists (10k-32k merges):
-    the merge list broadcasts once and an Arrow-batched kernel runs
-    the SAME sequential greedy algorithm per word — for each merge in
-    learned order, one left-to-right non-overlapping pass — so the
-    output is bit-identical to the expression path (pinned in tests)
-    with no plan-depth or codegen limit.
-
-    Per-batch costs: distinct words memoize their segmentation (the
-    per-batch vocabulary is far smaller than the token stream), and a
-    merge is skipped in O(1) when either side is absent from the
-    word's current symbol set — for a w-symbol word only O(w) of the
-    T merges can ever fire, so the scan is T set-probes plus O(w)
-    real passes, not T passes.
-
-    Scale shape: one narrow mapInPandas projection — no shuffle, no
-    join; the broadcast is len(merges) tuples (a few MB at 32k).
-    """
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        [(m[1], m[2], m[3]) for m in merges]
-    )
-    # StructType-built schema (not a DDL string) so column names that
-    # would need backtick quoting survive; an existing out_col is
-    # replaced in place, mirroring bpe_apply's withColumn semantics.
-    tok_field = StructField(out_col, ArrayType(StringType()))
-    fields = [
-        tok_field if f.name == out_col else f for f in df.schema.fields
-    ]
-    if out_col not in df.columns:
-        fields.append(tok_field)
-    schema = StructType(fields)
-
-    def _tokenize(batches):
-        import re
-
-        # Java \s+ semantics ([ \t\n\x0b\f\r]), NOT str.split(): Python
-        # splits on all Unicode whitespace (\xa0, U+2000-U+200A,
-        # \x1c-\x1f, ...) which would desynchronize this kernel from
-        # the F.split(r"\s+") expression path on real web text.
-        java_ws = re.compile("[ \t\n\x0b\f\r]+")
-        mlist = bc.value
-
-        def segment(word: str) -> list[str]:
-            syms = list(word) + [END_MARK]
-            have = set(syms)
-            for lhs, rhs, merged in mlist:
-                if lhs not in have or rhs not in have:
-                    continue
-                out, i, fired = [], 0, False
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and syms[i] == lhs
-                        and syms[i + 1] == rhs
-                    ):
-                        out.append(merged)
-                        i += 2
-                        fired = True
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                if fired:
-                    syms = out
-                    have = set(syms)
-            return syms
-
-        for pdf in batches:
-            memo: dict[str, list[str]] = {}
-            toks = []
-            for t in pdf[text_col]:
-                row: list[str] = []
-                for w in java_ws.split(t or ""):
-                    if not w or SEP_L in w or SEP_R in w:
-                        continue
-                    got = memo.get(w)
-                    if got is None:
-                        got = memo[w] = segment(w)
-                    row.extend(got)
-                toks.append(row)
-            out_pdf = pdf.copy()
-            out_pdf[out_col] = toks
-            yield out_pdf
-
-    return df.mapInPandas(_tokenize, schema=schema)

@@ -1,14 +1,14 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with a typed
-metadata struct; decode / feature-extract / resize / frame-sample run
-as Arrow-batched pandas functions over ``mapInPandas``. Three decoder
+metadata struct; decode runs as Arrow-batched pandas functions over
+``mapInPandas``, and frame sampling is a pure-SQL manifest. Decoder
 tiers:
 
 - ``decoder='ppm'`` — a REAL codec, dependency-free: binary PPM (P6) /
-  PGM (P5) parsed and re-encoded with numpy (header parse including
-  comments, pixel decode, nearest-neighbor resize). Proves the decode
-  path end to end on an actual image format.
+  PGM (P5) parsed with numpy (header parse including comments, pixel
+  decode). Proves the decode path end to end on an actual image
+  format.
 - ``decoder='jpeg'`` — a REAL compressed codec, dependency-free:
   baseline JPEG (SOF0, canonical Huffman, dequant + IDCT, YCbCr)
   implemented in pure numpy (my_weather_spark.llm.jpeg). Grayscale and
@@ -71,35 +71,21 @@ IMAGE_FEATURES_SCHEMA = (
 # PPM/PGM (netpbm binary) codec — pure numpy, no external library.
 # P6 = RGB (3 channels), P5 = grayscale (1 channel), maxval <= 255.
 
-def encode_ppm(arr) -> bytes:
-    """(h, w) uint8 -> P5 bytes; (h, w, 3) uint8 -> P6 bytes."""
-    import numpy as np
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        magic = b"P5"
-        h, w = a.shape
-    elif a.ndim == 3 and a.shape[2] == 3:
-        magic = b"P6"
-        h, w = a.shape[:2]
-    else:
-        raise ValueError(f"unsupported array shape {a.shape}")
-    return magic + b"\n%d %d\n255\n" % (w, h) + a.tobytes()
-
-
-def _parse_netpbm(b: bytes, pos: int):
-    """Parse one P5/P6 image starting at ``pos``; returns
-    (uint8 array, end offset) — the offset enables streaming several
-    concatenated frames out of one payload (the raw-video container).
+def decode_ppm(b: bytes):
+    """P5/P6 bytes -> uint8 array (h, w) or (h, w, 3). Handles
+    whitespace runs and ``#`` comments in the header per the netpbm
+    spec; raises ValueError on anything else (the caller decides
+    whether a corrupt payload fails the batch or is filtered first).
     """
     import numpy as np
 
-    if b[pos : pos + 2] not in (b"P5", b"P6"):
+    b = bytes(b)
+    if b[:2] not in (b"P5", b"P6"):
         raise ValueError("not a binary PGM/PPM payload")
-    channels = 3 if b[pos : pos + 2] == b"P6" else 1
+    channels = 3 if b[:2] == b"P6" else 1
     # header = magic + 3 ints (w, h, maxval) separated by whitespace,
     # with optional '#...' comments; one whitespace byte ends it
-    pos, fields = pos + 2, []
+    pos, fields = 2, []
     while len(fields) < 3:
         while pos < len(b) and b[pos : pos + 1].isspace():
             pos += 1
@@ -121,42 +107,7 @@ def _parse_netpbm(b: bytes, pos: int):
     data = np.frombuffer(b, dtype=np.uint8, count=n, offset=pos)
     if data.size < n:
         raise ValueError("truncated pixel data")
-    arr = data.reshape((h, w, 3) if channels == 3 else (h, w))
-    return arr, pos + n
-
-
-def decode_ppm(b: bytes):
-    """P5/P6 bytes -> uint8 array (h, w) or (h, w, 3). Handles
-    whitespace runs and ``#`` comments in the header per the netpbm
-    spec; raises ValueError on anything else (the caller decides
-    whether a corrupt payload fails the batch or is filtered first).
-    """
-    arr, _ = _parse_netpbm(bytes(b), 0)
-    return arr
-
-
-def split_ppm_frames(b: bytes):
-    """Concatenated-P6/P5 payload (the raw ``video/x-ppm-seq``
-    container) -> list of frame arrays."""
-    b = bytes(b)
-    frames, pos = [], 0
-    while pos < len(b):
-        arr, pos = _parse_netpbm(b, pos)
-        frames.append(arr)
-    if not frames:
-        raise ValueError("empty frame sequence")
-    return frames
-
-
-def _nearest_resize(a, target_w: int, target_h: int):
-    """Nearest-neighbor resize via numpy index arrays (the pixel-center
-    mapping OpenCV/Pillow-NEAREST use: src = floor((i + 0.5) * s/t))."""
-    import numpy as np
-
-    h, w = a.shape[:2]
-    rows = np.minimum(((np.arange(target_h) + 0.5) * h / target_h).astype(np.int64), h - 1)
-    cols = np.minimum(((np.arange(target_w) + 0.5) * w / target_w).astype(np.int64), w - 1)
-    return a[rows][:, cols]
+    return data.reshape((h, w, 3) if channels == 3 else (h, w))
 
 
 def media_ppm_from_documents(docs: DataFrame, width: int = 16, height: int = 16) -> DataFrame:
@@ -296,7 +247,7 @@ def decode_image_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
             payloads = pdf["payload"]
             # NULL payloads (never-fetched assets) yield NULL-feature
             # rows instead of crashing the whole Arrow batch — the same
-            # contract in every tier (see resize_images' fake tier).
+            # contract in every tier.
             if decoder in ("ppm", "jpeg"):
                 if decoder == "jpeg":
                     from my_weather_spark.llm.jpeg import decode_jpeg as _dec
@@ -392,148 +343,10 @@ def media_videos_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(
-    df: DataFrame, target_w: int, target_h: int, decoder: str = "fake"
-) -> DataFrame:
-    """Resize pass: payload -> resized payload + updated meta, as an
-    Arrow-batched narrow map (mapInPandas, no shuffle).
-
-    ``ppm``: REAL resize — decode netpbm, numpy nearest-neighbor
-    remap, re-encode; the output payload is a valid image at the
-    target size.
-    ``jpeg``: REAL resize through the baseline JPEG codec — decode,
-    nearest-neighbor remap, re-encode (quality 50); lossy like any
-    real JPEG round trip.
-    ``fake``: deterministic pseudo-resize — the output payload is the
-    input bytes tiled/truncated to exactly ``target_w*target_h`` bytes
-    (one byte per output pixel), so output size, schema, and
-    determinism are all testable without a codec.
-    ``real``: the Pillow resample call site — NotImplementedError.
-    """
-    if decoder not in ("ppm", "jpeg", "fake", "real"):
-        raise ValueError(f"unknown decoder {decoder!r}")
-    out_len = int(target_w) * int(target_h)
-
-    def _resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError(
-                    "real image resize requires Pillow — not available in "
-                    "this environment; plug the resample call here"
-                )
-            if decoder in ("ppm", "jpeg"):
-                if decoder == "jpeg":
-                    from my_weather_spark.llm.jpeg import (
-                        decode_jpeg as _dec,
-                        encode_jpeg as _enc,
-                    )
-                else:
-                    _dec, _enc = decode_ppm, encode_ppm
-                # NULL payloads stay NULL (a real resize of nothing is
-                # nothing); size fields NULL alongside so consumers can
-                # distinguish "resized to WxH" from "never fetched".
-                yield pd.DataFrame(
-                    {
-                        "asset_id": pdf["asset_id"],
-                        "payload": [
-                            None
-                            if b is None
-                            else _enc(
-                                _nearest_resize(
-                                    _dec(b), int(target_w), int(target_h)
-                                )
-                            )
-                            for b in pdf["payload"]
-                        ],
-                        "width": [
-                            None if b is None else int(target_w)
-                            for b in pdf["payload"]
-                        ],
-                        "height": [
-                            None if b is None else int(target_h)
-                            for b in pdf["payload"]
-                        ],
-                    }
-                )
-                continue
-
-            def _fake_resize(b):
-                # NULL payloads (never-fetched assets) resize to a zero
-                # image rather than crashing the batch.
-                b = (bytes(b) if b is not None else b"") or b"\x00"
-                reps = -(-out_len // len(b))  # ceil
-                return (b * reps)[:out_len]
-
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "payload": pdf["payload"].map(_fake_resize),
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    # Like the sibling manifests, operate on this op's media type only
-    # (an audio row's NULL-width meta has no business in a resize pass).
-    df = df.where(F.col("media_type") == "image")
-    resized = df.select("asset_id", "payload").mapInPandas(
-        _resize, schema="asset_id long, payload binary, width int, height int"
-    )
-    # Rejoin the untouched metadata and overwrite the size fields —
-    # the join key is the asset id, both sides partition by it.
-    meta_side = df.select("asset_id", "media_type", "meta")
-    return resized.join(meta_side, "asset_id").select(
-        "asset_id",
-        "media_type",
-        "payload",
-        F.struct(
-            F.col("width"),
-            F.col("height"),
-            F.col("meta.n_channels").alias("n_channels"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.duration_s").alias("duration_s"),
-            F.col("meta.codec").alias("codec"),
-        ).alias("meta"),
-    )
-
-
-def audio_chunk_manifest(
-    df: DataFrame, chunk_s: float = 30.0, target_rate: int = 16000
-) -> DataFrame:
-    """Audio resample/chunk plan: one row per (asset_id, chunk_idx)
-    with the sample range a distributed resample pass would read.
-    The codec step (actual PCM resample) is the stubbed part; the
-    manifest math — chunk boundaries in source-rate samples and the
-    output sample count at ``target_rate`` — is real and exact."""
-    dur = F.coalesce(F.col("meta.duration_s"), F.lit(0.0))
-    rate = F.coalesce(F.col("meta.sample_rate"), F.lit(target_rate))
-    n_chunks = F.greatest(F.ceil(dur / chunk_s), F.lit(1)).cast("int")
-    base = df.where(F.col("media_type") == "audio").select(
-        "asset_id",
-        rate.alias("src_rate"),
-        dur.alias("duration_s"),
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
-    )
-    start_s = F.col("chunk_idx") * F.lit(chunk_s)
-    end_s = F.least(start_s + F.lit(chunk_s), F.col("duration_s"))
-    # round() before the long cast: durations like 30.29 are not
-    # binary-exact (30.28999...), and a bare cast TRUNCATES the
-    # 4639.9999... product to 4639 instead of 4640 samples.
-    return base.select(
-        "asset_id",
-        "chunk_idx",
-        F.round(start_s * F.col("src_rate")).cast("long").alias("src_start_sample"),
-        F.round(end_s * F.col("src_rate")).cast("long").alias("src_end_sample"),
-        F.round((end_s - start_s) * F.lit(target_rate)).cast("long").alias("out_samples"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # WAV (RIFF PCM16) codec — pure numpy, no external library. The audio
-# twin of the netpbm tier: real container parse + real resample math,
-# with compressed codecs (mp3/opus) stubbed exactly like JPEG above.
+# twin of the netpbm tier: real container parse, with compressed
+# codecs (mp3/opus) stubbed exactly like JPEG above.
 
 def encode_wav(samples, sample_rate: int) -> bytes:
     """int16 array (n,) mono or (n, ch) -> canonical 44-byte-header
@@ -593,24 +406,6 @@ def decode_wav(b: bytes):
     else:
         a = a[:, None]
     return int(rate), a
-
-
-def resample_pcm(samples, src_rate: int, dst_rate: int):
-    """Linear-interpolation resample of int16 PCM (n, ch) — the real
-    resample arithmetic (np.interp per channel at the output sample
-    times), not a stub."""
-    import numpy as np
-
-    a = np.asarray(samples)
-    if src_rate == dst_rate or a.shape[0] == 0:
-        return a.astype(np.int16)
-    n_out = max(1, int(round(a.shape[0] * dst_rate / src_rate)))
-    t_out = np.arange(n_out) * (src_rate / dst_rate)
-    t_src = np.arange(a.shape[0])
-    out = np.stack(
-        [np.interp(t_out, t_src, a[:, c]) for c in range(a.shape[1])], axis=1
-    )
-    return np.clip(np.round(out), -32768, 32767).astype(np.int16)
 
 
 def media_wav_from_documents(
@@ -735,201 +530,3 @@ def decode_audio_features(df: DataFrame, decoder: str = "wav") -> DataFrame:
     return df.where(F.col("media_type") == "audio").select(
         "asset_id", "payload"
     ).mapInPandas(_decode, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def resample_audio(
-    df: DataFrame, target_rate: int, decoder: str = "wav"
-) -> DataFrame:
-    """Resample pass: WAV payload -> WAV payload at ``target_rate`` as
-    an Arrow-batched narrow map (no shuffle) — real linear-interp
-    resample for PCM16, the compressed-codec call site stubbed."""
-    if decoder not in ("wav", "real"):
-        raise ValueError(f"unknown decoder {decoder!r}")
-
-    def _resample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
-        for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError(
-                    "compressed audio resample requires ffmpeg — not available "
-                    "in this environment; plug the codec call here"
-                )
-            payloads = []
-            for b in pdf["payload"]:
-                if b is None:
-                    # NULL payload resamples to NULL (see decode tiers)
-                    payloads.append(None)
-                    continue
-                rate, a = decode_wav(b)
-                payloads.append(
-                    encode_wav(resample_pcm(a, rate, target_rate), target_rate)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["asset_id"], "payload": payloads}
-            )
-
-    resampled = df.where(F.col("media_type") == "audio").select(
-        "asset_id", "payload"
-    ).mapInPandas(_resample, schema="asset_id long, payload binary")
-    meta_side = df.where(F.col("media_type") == "audio").select(
-        "asset_id", "media_type", "meta"
-    )
-    return resampled.join(meta_side, "asset_id").select(
-        "asset_id",
-        "media_type",
-        "payload",
-        F.struct(
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.col("meta.n_channels").alias("n_channels"),
-            F.lit(target_rate).alias("sample_rate"),
-            F.col("meta.duration_s").alias("duration_s"),
-            F.col("meta.codec").alias("codec"),
-        ).alias("meta"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Raw video container: concatenated P6 frames ("video/x-ppm-seq") —
-# the video twin of the netpbm/WAV tiers. Frame extraction against it
-# is REAL (per-frame parse + pixel features); compressed video keeps
-# the ffmpeg stub in decoder='real'.
-
-def media_ppm_video_from_documents(
-    docs: DataFrame, width: int = 8, height: int = 8, fps: int = 2
-) -> DataFrame:
-    """Video table whose payloads are REAL frame sequences:
-    (n_chars % 8) + 2 concatenated P6 frames per document, each frame's
-    pixels tiled from the text bytes at a per-frame offset (so frames
-    differ deterministically)."""
-
-    def _build(batches):
-        import numpy as np
-        import pandas as pd
-
-        px = width * height * 3
-        for pdf in batches:
-            payloads, durs = [], []
-            for text in pdf["text"]:
-                raw = (text or "x").encode("utf-8") or b"x"
-                n_frames = (len(text or "") % 8) + 2
-                u = np.frombuffer(raw, dtype=np.uint8)
-                tiled = np.tile(u, -(-(px + n_frames) // len(u)) + 1)
-                frames = [
-                    encode_ppm(tiled[i : i + px].reshape(height, width, 3))
-                    for i in range(n_frames)
-                ]
-                payloads.append(b"".join(frames))
-                durs.append(n_frames / fps)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "duration_s": durs,
-                }
-            )
-
-    built = docs.select("doc_id", "text").mapInPandas(
-        _build, schema="asset_id long, payload binary, duration_s double"
-    )
-    return built.select(
-        "asset_id",
-        F.lit("video").alias("media_type"),
-        "payload",
-        F.struct(
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.lit(3).alias("n_channels"),
-            F.lit(fps).alias("sample_rate"),  # frames/s for raw video
-            F.col("duration_s").alias("duration_s"),
-            F.lit("video/x-ppm-seq").alias("codec"),
-        ).alias("meta"),
-    )
-
-
-FRAME_FEATURES_SCHEMA = (
-    "asset_id long, frame_idx int, frame_ts_s double, width int, "
-    "height int, mean_intensity double"
-)
-
-
-def extract_frame_features(
-    df: DataFrame, every_n_seconds: float = 1.0, decoder: str = "ppmv"
-) -> DataFrame:
-    """Sample frames per the frame_sample_manifest plan and decode the
-    SAMPLED frames to pixel features — the distributed frame-extraction
-    pass the manifest exists for.
-
-    Scale shape: the manifest's rows collapse to ONE row per asset
-    (collect_list of sampled indices — bounded by duration/every_n),
-    join the payload table once on asset_id, decode each payload once
-    in a narrow Arrow map, and emit one row per sampled frame. The
-    payload is never replicated per frame and never shuffles twice.
-
-    ``ppmv``: REAL extraction from the concatenated-P6 container.
-    ``real``: the ffmpeg/pyav call site — NotImplementedError.
-    """
-    if decoder not in ("ppmv", "real"):
-        raise ValueError(f"unknown decoder {decoder!r}")
-    manifest = frame_sample_manifest(df, every_n_seconds)
-    wanted = manifest.groupBy("asset_id").agg(
-        F.collect_list(F.struct("frame_idx", "frame_ts_s")).alias("_frames")
-    )
-    vids = df.where(F.col("media_type") == "video").select(
-        "asset_id", "payload", F.col("meta.sample_rate").alias("_fps")
-    )
-    joined = vids.join(wanted, "asset_id")
-
-    def _extract(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError(
-                    "compressed video frame extraction requires ffmpeg/pyav — "
-                    "not available in this environment; plug the codec here"
-                )
-            rows = []
-            for aid, payload, fps, frames in zip(
-                pdf["asset_id"], pdf["payload"], pdf["_fps"], pdf["_frames"]
-            ):
-                if payload is None:
-                    # never-fetched asset: one NULL-feature row per
-                    # sampled frame keeps the manifest contract (one
-                    # row per planned frame) without crashing the batch
-                    for fr in frames:
-                        rows.append(
-                            {
-                                "asset_id": aid,
-                                "frame_idx": int(fr["frame_idx"]),
-                                "frame_ts_s": float(fr["frame_ts_s"]),
-                                "width": None,
-                                "height": None,
-                                "mean_intensity": None,
-                            }
-                        )
-                    continue
-                arrs = split_ppm_frames(payload)
-                for fr in frames:
-                    # sampled timestamp -> source frame at the
-                    # container's frame rate, clamped to the last frame
-                    src = min(int(float(fr["frame_ts_s"]) * fps), len(arrs) - 1)
-                    a = arrs[src]
-                    rows.append(
-                        {
-                            "asset_id": aid,
-                            "frame_idx": int(fr["frame_idx"]),
-                            "frame_ts_s": float(fr["frame_ts_s"]),
-                            "width": a.shape[1],
-                            "height": a.shape[0],
-                            "mean_intensity": round(float(np.mean(a)), 6),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[
-                "asset_id", "frame_idx", "frame_ts_s", "width", "height",
-                "mean_intensity",
-            ])
-
-    return joined.mapInPandas(_extract, schema=FRAME_FEATURES_SCHEMA)

@@ -49,53 +49,6 @@ TSINFO_SCHEMA = T.StructType(
     ]
 )
 
-# --- dimension tables (FIXTURES.md §2, reference: domain.py) -----------
-STATION_SCHEMA = T.StructType(
-    [
-        T.StructField("station_id", T.StringType(), False),
-        T.StructField("station_name", T.StringType(), False),
-        T.StructField("date_setup", T.TimestampType(), True),
-        T.StructField("last_setup", T.TimestampType(), True),
-        T.StructField("last_status_store", T.TimestampType(), True),
-        T.StructField("last_upgrade", T.TimestampType(), True),
-        T.StructField("wifi_status", T.IntegerType(), True),
-        T.StructField("reachable", T.BooleanType(), True),
-        T.StructField("co2_calibrating", T.BooleanType(), True),
-        T.StructField(
-            "place",
-            T.StructType(
-                [
-                    T.StructField("altitude", T.DoubleType(), True),
-                    T.StructField("city", T.StringType(), True),
-                    T.StructField("country", T.StringType(), True),
-                    T.StructField("timezone", T.StringType(), True),
-                    T.StructField("location", T.ArrayType(T.DoubleType()), True),
-                ]
-            ),
-            True,
-        ),
-        T.StructField("dashboard_data", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-MODULE_SCHEMA = T.StructType(
-    [
-        T.StructField("module_id", T.StringType(), False),
-        T.StructField("station_id", T.StringType(), False),
-        T.StructField("module_name", T.StringType(), False),
-        T.StructField("type", T.StringType(), True),
-        T.StructField("data_type", T.ArrayType(T.StringType()), True),
-        T.StructField("last_setup", T.TimestampType(), True),
-        T.StructField("last_message", T.TimestampType(), True),
-        T.StructField("last_seen", T.TimestampType(), True),
-        T.StructField("firmware", T.IntegerType(), True),
-        T.StructField("rf_status", T.IntegerType(), True),
-        T.StructField("battery_vp", T.IntegerType(), True),
-        T.StructField("battery_percent", T.IntegerType(), True),
-        T.StructField("reachable", T.BooleanType(), True),
-    ]
-)
-
 # Fixed 10-entry measurement catalog (reference: domain.py:110-121).
 MEASUREMENT_TYPES: list[tuple[str, str, str]] = [
     ("Temperature", "°C", POINT_INSTANT_VALUE),

@@ -1,83 +1,15 @@
-"""Skew-resistant aggregation + bucketing helpers (100 TB checklist).
+"""Bucketed tables (100 TB checklist).
 
-Two standard Spark scale patterns, packaged:
-
-* **Salted two-phase aggregation** — a hot grouping key (one series
-  with billions of points, one event_type dominating the stream) turns
-  a groupBy into a single straggler task. Salting splits each key into
-  ``n_salt`` sub-groups for the first (heavy) shuffle, then combines
-  the partials in a second (tiny) shuffle. Only valid for reassociable
-  aggregates (sum/count/min/max — avg is derived as sum/count).
-
-* **Bucketed tables** — pre-hash-partition + sort a table on its join/
-  group key at write time (`bucketBy`), so later equi-joins and
-  aggregations on that key read co-located, pre-sorted buckets and
-  skip the exchange entirely. This is how the observation store would
-  be laid out for repeated series-keyed analytics at 100 TB.
+Pre-hash-partition + sort a table on its join/group key at write time
+(`bucketBy`), so later equi-joins and aggregations on that key read
+co-located, pre-sorted buckets and skip the exchange entirely. This is
+how the observation store would be laid out for repeated series-keyed
+analytics at 100 TB.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-_REASSOCIABLE = {
-    "sum": F.sum,
-    "count": F.count,
-    "min": F.min,
-    "max": F.max,
-}
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    n_salt: int = 16,
-) -> DataFrame:
-    """Two-phase skew-safe groupBy.
-
-    ``aggs``: out_col -> (fn, in_col) with fn in sum/count/min/max/avg.
-    avg is computed as salted sum / salted count (exact).
-
-    Phase 1 groups by (keys + random salt) — the heavy shuffle now has
-    n_salt times the key cardinality, so a hot key spreads over n_salt
-    reducers. Phase 2 re-combines per key — its input is only
-    (|keys| x n_salt) rows.
-    """
-    needs: dict[str, tuple[str, str]] = {}
-    for out, (fn, col) in aggs.items():
-        if fn == "avg":
-            needs[f"__sum_{out}"] = ("sum", col)
-            needs[f"__cnt_{out}"] = ("count", col)
-        elif fn in _REASSOCIABLE:
-            needs[out] = (fn, col)
-        else:
-            raise ValueError(f"{fn!r} is not reassociable; cannot salt")
-
-    salted = df.withColumn("_salt", (F.rand(seed=42) * n_salt).cast("int"))
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        *[_REASSOCIABLE[fn](col).alias(out) for out, (fn, col) in needs.items()]
-    )
-    recombine = {
-        "sum": F.sum,
-        "count": F.sum,  # counts combine by summing partial counts
-        "min": F.min,
-        "max": F.max,
-    }
-    phase2 = phase1.groupBy(*keys).agg(
-        *[recombine[fn](out).alias(out) for out, (fn, _) in needs.items()]
-    )
-    # resolve avg columns
-    final_cols = list(keys)
-    for out, (fn, col) in aggs.items():
-        if fn == "avg":
-            final_cols.append(
-                (F.col(f"__sum_{out}") / F.col(f"__cnt_{out}")).alias(out)
-            )
-        else:
-            final_cols.append(F.col(out))
-    return phase2.select(*final_cols)
 
 
 def write_bucketed(

@@ -663,27 +663,9 @@ def rdp_downsample(df: DataFrame, epsilon: float | None = None) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Wide/pivoted view (SURVEY.md §1.3): long format is canonical; the
-# wide per-timestamp view is derived on demand.
-def wide_view(
-    df: DataFrame, series_values: list[str] | None = None, agg: str = "avg"
-) -> DataFrame:
-    """Pivot long (series_id, ts, value) to one column per series.
-
-    Pass ``series_values`` explicitly in production — without it Spark
-    must run an extra distinct() job to discover pivot columns.
-    """
-    aggs = {"avg": F.avg("value"), "last": F.max_by("value", TS), "sum": F.sum("value")}
-    if agg not in aggs:
-        raise ValueError(f"unknown agg {agg!r}")  # same contract as resample
-    piv = df.groupBy(TS).pivot(SERIES, series_values)
-    return piv.agg(aggs[agg])
-
-
-# ----------------------------------------------------------------------
 # Batch sessionization (gaps-and-islands): a new session starts after
-# more than `gap_seconds` of silence within a series. The batch twin of
-# streaming.sessionized (session_window); one shuffle on series_id.
+# more than `gap_seconds` of silence within a series; one shuffle on
+# series_id.
 def sessionize(
     df: DataFrame, gap_seconds: int, order_tiebreak: str | None = None
 ) -> DataFrame:

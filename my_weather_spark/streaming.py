@@ -1,4 +1,4 @@
-"""Structured Streaming pipelines (SURVEY.md §2 T1/T2 + stream windows).
+"""Structured Streaming pipelines (SURVEY.md §2 T1/T2/T4/T5).
 
 The reference's collection loop is a scheduled micro-batch: every
 ``wait_time`` seconds read a trailing window from the source and store
@@ -12,9 +12,9 @@ path for dedup semantics), with checkpointing for exactly-once sink
 behavior. Late data is handled twice over: the watermark bounds state,
 and the idempotent merge makes re-delivery harmless.
 
-Also provides the streaming windows the reference never had but a
-Spark engine gets for free: tumbling/sliding windowed aggregation and
-session windows — plus a custom stateful operator
+Also provides watermark-bounded late-data dedup (T2), the streaming
+twin of the curation front stages, a ``StreamingQueryListener``
+watchdog (T5) and a custom stateful operator
 (``applyInPandasWithState``) for in-plane burst detection, the
 data-plane twin of the control-plane rate limiter (T4).
 """
@@ -82,60 +82,6 @@ def stream_collect(
     return writer.start()
 
 
-# ----------------------------------------------------------------------
-# Streaming windowed aggregation with late-data watermark.
-def windowed_stats(
-    stream: DataFrame,
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Tumbling (or sliding) per-series min/max/avg/count with a
-    watermark bounding late data — the streaming twin of
-    ops.timeseries.resample/series_stats."""
-    w = (
-        F.window("ts", window, slide)
-        if slide
-        else F.window("ts", window)
-    )
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("series_id", w.alias("win"))
-        .agg(
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.avg("value").alias("avg_value"),
-            F.count("value").alias("n_points"),
-        )
-        .select(
-            "series_id",
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "min_value",
-            "max_value",
-            "avg_value",
-            "n_points",
-        )
-    )
-
-
-def sessionized(stream: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour") -> DataFrame:
-    """Session windows per series: a session closes after ``gap`` of
-    silence (dynamic-length window — state bounded by the watermark)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("series_id", F.session_window("ts", gap).alias("sess"))
-        .agg(F.count("value").alias("n_points"), F.avg("value").alias("avg_value"))
-        .select(
-            "series_id",
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "n_points",
-            "avg_value",
-        )
-    )
-
-
 def dedup_late_stream(stream: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     """Streaming dedup on (series_id, ts) within the watermark horizon —
     the in-plane analog of the store's merge dedup for at-least-once
@@ -183,135 +129,6 @@ def curated_doc_stream(
         .dropDuplicatesWithinWatermark(["_content_hash"])
         .drop("_content_hash")
     )
-
-
-# ----------------------------------------------------------------------
-# Continuous aggregate (the "hypertable rollup" pattern): a bucketed
-# per-series rollup table kept fresh by the collection stream. The
-# refresh RECOMPUTES affected date partitions from the merge-store
-# instead of adding deltas, so it is idempotent by construction —
-# foreachBatch redelivery, overlapping re-reads, and late data all
-# converge to the same partition content (a pure function of store
-# state). Late points refresh only their own (old) date partition.
-ROLLUP_SCHEMA = (
-    "series_id string, bucket_start timestamp, n_points long, "
-    "sum_value double, min_value double, max_value double, date date"
-)
-
-
-def refresh_rollup_dates(
-    store: TsStore,
-    rollup_path: str,
-    dates: list,
-    bucket_seconds: int = 3600,
-    source: str = "stream",
-) -> None:
-    """Recompute the rollup rows of the given UTC dates from the store
-    and dynamically overwrite exactly those date partitions.
-
-    ``bucket_seconds`` must divide a day so no bucket straddles a date
-    boundary (a straddling bucket would need rows from a date outside
-    the refresh set).
-    """
-    if 86_400 % bucket_seconds != 0:
-        raise ValueError("bucket_seconds must divide 86400 (no midnight-straddling buckets)")
-    if not dates:
-        return
-    # Bucket starts are UTC-epoch-aligned and the store's date
-    # partitions are UTC days; to_date() follows the SESSION tz, so a
-    # non-UTC session would tag bucket rows with the wrong partition
-    # date and dynamic overwrite would clobber a neighboring date.
-    from my_weather_spark.store import ensure_utc_session
-
-    ensure_utc_session(store.spark)
-    bucket_us = bucket_seconds * 1_000_000
-    rows = store._read_all().where(
-        (F.col("source") == source) & F.col("date").isin(list(dates))
-    )
-    bucket = F.timestamp_micros(
-        (F.floor(F.unix_micros("ts") / bucket_us) * bucket_us).cast("long")
-    )
-    rolled = (
-        rows.groupBy("series_id", bucket.alias("bucket_start"))
-        .agg(
-            F.count("value").alias("n_points"),
-            F.sum("value").alias("sum_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .withColumn("date", F.to_date("bucket_start"))
-    )
-    # The plan reads the STORE, not the rollup being overwritten, so no
-    # lineage break is needed. Store rows are never deleted under merge
-    # semantics, so every refreshed date always produces replacement
-    # rows for its partition.
-    rolled.write.partitionBy("date").option(
-        "partitionOverwriteMode", "dynamic"
-    ).mode("overwrite").parquet(rollup_path)
-
-
-def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
-    """The continuous-aggregate serving view: mergeable partials plus
-    the derived mean (sum/n). Reads are partition-pruned on ``date``."""
-    from my_weather_spark.ops.timeseries import round6_portable
-
-    df = spark.read.schema(ROLLUP_SCHEMA).parquet(rollup_path)
-    return df.withColumn(
-        "avg_value", round6_portable(F.col("sum_value") / F.col("n_points"))
-    )
-
-
-def continuous_rollup(
-    spark: SparkSession,
-    landing_dir: str,
-    store: TsStore,
-    rollup_path: str,
-    checkpoint_dir: str,
-    bucket_seconds: int = 3600,
-    source: str = "stream",
-    trigger_available_now: bool = True,
-    processing_time: str = "5 minutes",
-    query_name: str | None = None,
-):
-    """Collection stream + continuous aggregate: each micro-batch
-    merges into the TsStore (idempotent merge-on-write), then refreshes
-    the rollup partitions of every date the batch touched.
-
-    Returns the StreamingQuery. Late data is handled by construction —
-    a late point merges into its original date partition of the store
-    and that single date's rollup partition recomputes; no watermark
-    state, no delta double-counting, unbounded lateness tolerated at
-    the cost of one partition rewrite."""
-    obs = stream_observations(spark, landing_dir)
-
-    def _merge_and_refresh(batch_df: DataFrame, batch_id: int) -> None:
-        # The batch feeds three actions (empty probe, store merge, date
-        # collect); uncached, each re-reads the landing files.
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.isEmpty():
-                return
-            store.store(batch_df, source=source, overwrite_on_write=False)
-            dates = [
-                r["d"]
-                for r in batch_df.select(F.to_date("ts").alias("d")).distinct().collect()
-            ]
-            refresh_rollup_dates(store, rollup_path, dates, bucket_seconds, source)
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        obs.writeStream.foreachBatch(_merge_and_refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 # ----------------------------------------------------------------------

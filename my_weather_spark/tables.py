@@ -64,14 +64,10 @@ def _ensure_reader_conf(spark: SparkSession) -> None:
         )
 
 
-# Backwards-compatible alias (older call sites / tests).
-_ensure_nanos_readable = _ensure_reader_conf
-
-
 # DataFrames are immutable lazy plans, so the loaded table for a given
 # (session, dir, name) can be shared across queries; memoizing skips the
 # per-call file listing + footer/schema read (a fixed ~50-100 ms tax on
-# every query in a 70-query bench run). Keyed by applicationId so a
+# every query of a full bench run). Keyed by applicationId so a
 # restarted session never sees stale plans.
 #
 # The memo assumes BENCH DATA IS IMMUTABLE within an application: a

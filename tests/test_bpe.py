@@ -6,7 +6,6 @@ token_counts readout."""
 import collections
 
 import pytest
-from pyspark.sql import functions as F
 
 from my_weather_spark.llm import bpe
 
@@ -132,53 +131,6 @@ def test_n_merges_validated(spark):
         bpe.learn_bpe(_docs(spark, TEXTS), n_merges=0)
 
 
-def test_bpe_apply_inference(spark):
-    docs = _docs(spark, ["low lower lowest newer new"])
-    merges, words = bpe.learn_bpe(docs, n_merges=4)
-    assert [m[3] for m in merges] == ["lo", "low", "er", "ew"]
-    # seen words tokenize exactly as the training vocab
-    seen = bpe.bpe_apply(docs, merges).collect()[0].tokens
-    vocab = {
-        r.word: r.s
-        for r in words.select("word", bpe._unwrap_syms("wstr").alias("s")).collect()
-    }
-    exp = [t for w in "low lower lowest newer new".split() for t in vocab[w]]
-    assert seen == exp
-    # UNSEEN words fall out of the same merge order
-    unseen = spark.createDataFrame(
-        [(1, "lowly now"), (2, ""), (3, None)], ["doc_id", "text"]
-    )
-    got = {r.doc_id: r.tokens for r in bpe.bpe_apply(unseen, merges).collect()}
-    assert got[1] == ["low", "l", "y", "</w>", "n", "o", "w", "</w>"]
-    assert got[2] == [] and got[3] == []
-
-
-def test_bpe_apply_no_merges_is_char_split(spark):
-    df = spark.createDataFrame([(0, "ab c")], ["doc_id", "text"])
-    out = bpe.bpe_apply(df, []).collect()[0].tokens
-    assert out == ["a", "b", "</w>", "c", "</w>"]
-
-
-def test_bpe_apply_merge_cap(spark):
-    df = spark.createDataFrame([(0, "ab")], ["doc_id", "text"])
-    fake = [(i, "a", "b", "ab", 1) for i in range(1, 514)]
-    with pytest.raises(ValueError):
-        bpe.bpe_apply(df, fake)
-
-
-def test_bpe_apply_batched_matches_expression_path(spark):
-    docs = _docs(spark, TEXTS)
-    merges, _ = bpe.learn_bpe(docs, n_merges=8)
-    unseen = spark.createDataFrame(
-        [(100, "lowest cattle than aaaaa"), (101, ""), (102, None)],
-        ["doc_id", "text"],
-    )
-    both = docs.unionByName(unseen)
-    exp = {r.doc_id: r.tokens for r in bpe.bpe_apply(both, merges).collect()}
-    got = {r.doc_id: r.tokens for r in bpe.bpe_apply_batched(both, merges).collect()}
-    assert got == exp
-
-
 def test_batched_learn_matches_greedy_at_depth(spark):
     # a morphologically-rich Zipf corpus where the batched rounds
     # actually batch: the merge list must be bit-identical to the
@@ -207,67 +159,3 @@ def test_batched_learn_matches_greedy_at_depth(spark):
     merges, _ = bpe.learn_bpe(_docs(spark, texts), n_merges=n)
     assert merges == ref
     assert bpe.LAST_LEARN_ROUNDS <= int(0.65 * n)
-
-
-def test_bpe_apply_batched_unicode_whitespace_parity(spark):
-    # str.split() treats \xa0 / \x85 / U+2000-range / \x1c-\x1f as
-    # whitespace; Spark's \s+ does not. The kernel must mirror the
-    # expression path's Java semantics: the \xa0-joined word stays ONE
-    # word, and the \x1f-bearing word is dropped whole (not split into
-    # two kept words)
-    texts = [
-        "plain\xa0glued words",
-        "drop\x1fme keep",
-        "em\u2003quad\x85nel next",
-        "tab\tok\nnew",
-    ]
-    merges, _ = bpe.learn_bpe(_docs(spark, TEXTS), n_merges=6)
-    df = _docs(spark, texts)
-    exp = {r.doc_id: r.tokens for r in bpe.bpe_apply(df, merges).collect()}
-    got = {
-        r.doc_id: r.tokens for r in bpe.bpe_apply_batched(df, merges).collect()
-    }
-    assert got == exp
-    # sanity on the semantics themselves, not just parity
-    assert "".join(exp[0]) == "plain\xa0glued</w>words</w>"
-    assert "".join(exp[1]) == "keep</w>"
-    assert "".join(exp[2]) == "em\u2003quad\x85nel</w>next</w>"
-    assert "".join(exp[3]) == "tab</w>ok</w>new</w>"
-
-
-def test_bpe_apply_batched_odd_columns_and_out_col_collision(spark):
-    # schema is built as StructType, so names needing backticks work;
-    # an existing out_col is replaced in place like bpe_apply does
-    merges, _ = bpe.learn_bpe(_docs(spark, TEXTS), n_merges=4)
-    df = spark.createDataFrame(
-        [(0, "low lower", "x")], ["doc id", "text", "tokens"]
-    )
-    exp = bpe.bpe_apply(df, merges)
-    got = bpe.bpe_apply_batched(df, merges)
-    assert got.columns == exp.columns == ["doc id", "text", "tokens"]
-    assert got.collect() == exp.collect()
-
-
-def test_bpe_apply_batched_large_merge_list(spark):
-    # a 600-merge list (beyond the expression path's 512 cap) learned
-    # by the pure-Python reference over a rich synthetic vocabulary —
-    # the kernel must apply the same sequential algorithm
-    import itertools
-
-    vocab = [
-        "".join(p)
-        for p in itertools.product("abcdef", repeat=5)
-    ][:800]
-    texts = [" ".join(vocab[i::40]) for i in range(40)]
-    ref_merges, ref_words = _ref_bpe(texts, 600)
-    assert len(ref_merges) == 600
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], ["doc_id", "text"]
-    )
-    got = {
-        r.doc_id: r.tokens
-        for r in bpe.bpe_apply_batched(df, ref_merges).collect()
-    }
-    for i, t in enumerate(texts):
-        exp = [tok for w in t.split() for tok in ref_words[w]]
-        assert got[i] == exp

@@ -404,62 +404,6 @@ def test_frame_sample_manifest(spark):
     assert rows[-1]["frame_ts_s"] == 3.0
 
 
-def test_resize_images_fake_decoder(spark):
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(b"abc"), (64, 64, 3, None, None, "raw")),
-            (2, "image", bytearray(b""), (64, 64, 3, None, None, "raw")),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    out = multimodal.resize_images(media, 8, 4, decoder="fake")
-    rows = {r["asset_id"]: r for r in out.collect()}
-    assert set(rows) == {1, 2}
-    # fake resize: exactly target_w*target_h payload bytes, tiled input
-    assert len(rows[1]["payload"]) == 32
-    assert bytes(rows[1]["payload"])[:6] == b"abcabc"
-    assert len(rows[2]["payload"]) == 32  # empty payload still resizes
-    # meta size fields rewritten, rest preserved
-    assert rows[1]["meta"]["width"] == 8 and rows[1]["meta"]["height"] == 4
-    assert rows[1]["meta"]["n_channels"] == 3 and rows[1]["meta"]["codec"] == "raw"
-    # determinism: same input -> same payload
-    again = {r["asset_id"]: r for r in
-             multimodal.resize_images(media, 8, 4, decoder="fake").collect()}
-    assert bytes(again[1]["payload"]) == bytes(rows[1]["payload"])
-
-
-def test_resize_images_real_decoder_raises(spark):
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(b"xx"), (64, 64, 3, None, None, "raw"))],
-        multimodal.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="NotImplementedError|real image resize"):
-        multimodal.resize_images(media, 8, 8, decoder="real").collect()
-
-
-def test_audio_chunk_manifest(spark):
-    media = spark.createDataFrame(
-        [
-            (5, "audio", None, (None, None, 1, 44100, 70.0, "pcm")),
-            (6, "image", None, (64, 64, 3, None, None, "raw")),  # filtered out
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = sorted(
-        multimodal.audio_chunk_manifest(media, chunk_s=30.0, target_rate=16000).collect(),
-        key=lambda r: r["chunk_idx"],
-    )
-    assert [r["asset_id"] for r in rows] == [5, 5, 5]
-    assert [r["chunk_idx"] for r in rows] == [0, 1, 2]
-    assert rows[0]["src_start_sample"] == 0
-    assert rows[0]["src_end_sample"] == 30 * 44100
-    assert rows[0]["out_samples"] == 30 * 16000
-    # final partial chunk: 10 s
-    assert rows[2]["src_start_sample"] == 60 * 44100
-    assert rows[2]["src_end_sample"] == 70 * 44100
-    assert rows[2]["out_samples"] == 10 * 16000
-
-
 def test_language_id_markers(spark):
     df = spark.createDataFrame(
         [
@@ -1001,20 +945,18 @@ def test_ppm_codec_golden_and_header_comments():
 
     from my_weather_spark.llm import multimodal as mm
 
-    # 2x2 RGB golden: encode -> decode round-trips bit-exact
+    # 2x2 RGB golden: decodes bit-exact
     arr = np.array(
         [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [10, 20, 30]]], dtype=np.uint8
     )
-    b = mm.encode_ppm(arr)
-    assert b.startswith(b"P6\n2 2\n255\n")
-    back = mm.decode_ppm(b)
+    back = mm.decode_ppm(b"P6\n2 2\n255\n" + arr.tobytes())
     assert back.shape == (2, 2, 3) and (back == arr).all()
     # header comments + whitespace runs per the netpbm spec
     commented = b"P6\n# a comment\n 2  2 # wxh\n255\n" + arr.tobytes()
     assert (mm.decode_ppm(commented) == arr).all()
     # grayscale P5
     g = np.array([[0, 128], [64, 255]], dtype=np.uint8)
-    assert (mm.decode_ppm(mm.encode_ppm(g)) == g).all()
+    assert (mm.decode_ppm(b"P5\n2 2\n255\n" + g.tobytes()) == g).all()
     # corrupt payloads raise, not garbage
     import pytest as _pytest
 
@@ -1022,21 +964,6 @@ def test_ppm_codec_golden_and_header_comments():
         mm.decode_ppm(b"JFIF....")
     with _pytest.raises(ValueError):
         mm.decode_ppm(b"P6\n4 4\n255\n" + b"\x00" * 5)
-
-
-def test_ppm_nearest_resize_golden():
-    import numpy as np
-
-    from my_weather_spark.llm import multimodal as mm
-
-    a = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    up = mm._nearest_resize(a, 8, 8)
-    assert up.shape == (8, 8)
-    # pixel-center mapping: output row i samples src row floor((i+.5)/2)
-    assert (up[0] == up[1]).all() and up[0, 0] == a[0, 0] and up[7, 7] == a[3, 3]
-    down = mm._nearest_resize(a, 2, 2)
-    assert down.shape == (2, 2)
-    assert (down == np.array([[a[1, 1], a[1, 3]], [a[3, 1], a[3, 3]]])).all()
 
 
 def test_multimodal_ppm_real_decode_through_spark(spark, sf_dir):
@@ -1056,13 +983,6 @@ def test_multimodal_ppm_real_decode_through_spark(spark, sf_dir):
     payload = media.where(F.col("asset_id") == rows[0]["asset_id"]).first()["payload"]
     arr = mm.decode_ppm(payload)
     assert rows[0]["mean_intensity"] == float(np.mean(arr))
-
-    resized = mm.resize_images(media, 8, 6, decoder="ppm")
-    out = resized.limit(5).collect()
-    for r in out:
-        a = mm.decode_ppm(r["payload"])
-        assert a.shape == (6, 8, 3)
-        assert r["meta"]["width"] == 8 and r["meta"]["height"] == 6
 
 
 def test_wav_codec_golden_and_resample():
@@ -1089,14 +1009,6 @@ def test_wav_codec_golden_and_resample():
     # corrupt/unsupported raise
     with _pytest.raises(ValueError):
         mm.decode_wav(b"ID3\x03....")
-    # linear resample: a ramp stays a ramp (exact at matching points),
-    # length scales by the rate ratio
-    ramp = np.arange(0, 1000, dtype=np.int16)[:, None]
-    up = mm.resample_pcm(ramp, 1000, 2000)
-    assert up.shape[0] == 2000 and up[0, 0] == 0 and abs(int(up[-1, 0]) - 999) <= 1
-    assert (np.diff(up[:, 0].astype(int)) >= 0).all()
-    down = mm.resample_pcm(ramp, 1000, 500)
-    assert down.shape[0] == 500 and (np.diff(down[:, 0].astype(int)) >= 0).all()
 
 
 def test_multimodal_wav_real_decode_through_spark(spark, sf_dir):
@@ -1117,53 +1029,6 @@ def test_multimodal_wav_real_decode_through_spark(spark, sf_dir):
         assert r["sample_rate"] == 1000 and r["n_channels"] == 1
         assert r["duration_s"] == meta[aid]["meta"]["duration_s"]
         assert r["rms"] > 0 and 0 < r["peak"] <= 32767
-    # resample halves the sample count (duration preserved)
-    res = mm.resample_audio(media, target_rate=500, decoder="wav")
-    out = res.limit(5).collect()
-    for r in out:
-        rate, a = mm.decode_wav(r["payload"])
-        assert rate == 500
-        assert abs(a.shape[0] - 500 * r["meta"]["duration_s"]) <= 1
-        assert r["meta"]["sample_rate"] == 500
-
-
-def test_ppm_video_split_and_extract_through_spark(spark, sf_dir):
-    import numpy as np
-
-    from my_weather_spark.llm import multimodal as mm
-    from my_weather_spark.tables import load_table
-
-    # container golden: two concatenated frames round-trip
-    f0 = np.zeros((2, 3, 3), dtype=np.uint8)
-    f1 = np.full((2, 3, 3), 200, dtype=np.uint8)
-    frames = mm.split_ppm_frames(mm.encode_ppm(f0) + mm.encode_ppm(f1))
-    assert len(frames) == 2 and (frames[0] == f0).all() and (frames[1] == f1).all()
-
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    media = mm.media_ppm_video_from_documents(docs, width=8, height=8, fps=2)
-    feats = mm.extract_frame_features(media, every_n_seconds=0.5, decoder="ppmv")
-    rows = feats.collect()
-    assert len(rows) > 0
-    one = media.first()
-    arrs = mm.split_ppm_frames(one["payload"])
-    n_frames = len(arrs)
-    assert abs(one["meta"]["duration_s"] - n_frames / 2) < 1e-9
-    mine = sorted(
-        (r for r in rows if r["asset_id"] == one["asset_id"]),
-        key=lambda r: r["frame_idx"],
-    )
-    # every 0.5 s over duration at 2 fps -> one sampled row per frame
-    assert len(mine) == n_frames
-    for r in mine:
-        src = min(int(r["frame_ts_s"] * 2), n_frames - 1)
-        assert r["mean_intensity"] == round(float(np.mean(arrs[src])), 6)
-        assert r["width"] == 8 and r["height"] == 8
-    # frames genuinely differ (per-frame byte offset)
-    if n_frames > 1:
-        assert any(
-            mine[i]["mean_intensity"] != mine[0]["mean_intensity"]
-            for i in range(1, n_frames)
-        )
 
 
 def test_jpeg_codec_goldens_and_errors():
@@ -1238,12 +1103,6 @@ def test_multimodal_jpeg_real_decode_through_spark(spark, sf_dir):
     assert len(nrows) == 30
     assert any(r["mean_intensity"] is None for r in nrows)
     assert any(r["mean_intensity"] is not None for r in nrows)
-    # resize through the codec: output payloads are valid JPEGs at the
-    # target size
-    resized = mm.resize_images(media, 8, 8, decoder="jpeg")
-    for r in resized.limit(3).collect():
-        a = J.decode_jpeg(r["payload"])
-        assert a.shape == (8, 8)
 
 
 def test_lm_perplexity_scores_and_filter(spark):

@@ -1,56 +1,8 @@
 """Skew/bucketing scale-pattern tests."""
 
-from datetime import datetime, timezone
-
 from pyspark.sql import functions as F
 
-from my_weather_spark.ops.skew import salted_agg, write_bucketed
-from my_weather_spark.ops.timeseries import wide_view
-
-
-def _dt(s):
-    return datetime.fromtimestamp(s, tz=timezone.utc)
-
-
-def test_salted_agg_matches_plain_groupby(spark):
-    # one hot key (90% of rows) + tail keys
-    rows = [("hot", float(i % 7)) for i in range(9000)] + [
-        (f"k{i % 10}", float(i)) for i in range(1000)
-    ]
-    df = spark.createDataFrame(rows, "k string, v double")
-    plain = {
-        r["k"]: (r["s"], r["c"], r["mn"], r["mx"], r["a"])
-        for r in df.groupBy("k")
-        .agg(
-            F.sum("v").alias("s"),
-            F.count("v").alias("c"),
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-            F.avg("v").alias("a"),
-        )
-        .collect()
-    }
-    salted = {
-        r["k"]: (r["s"], r["c"], r["mn"], r["mx"], r["a"])
-        for r in salted_agg(
-            df,
-            ["k"],
-            {
-                "s": ("sum", "v"),
-                "c": ("count", "v"),
-                "mn": ("min", "v"),
-                "mx": ("max", "v"),
-                "a": ("avg", "v"),
-            },
-            n_salt=8,
-        ).collect()
-    }
-    assert set(plain) == set(salted)
-    for k in plain:
-        assert plain[k][1] == salted[k][1]  # counts exact
-        assert abs(plain[k][0] - salted[k][0]) < 1e-6
-        assert plain[k][2:4] == salted[k][2:4]
-        assert abs(plain[k][4] - salted[k][4]) < 1e-9
+from my_weather_spark.ops.skew import write_bucketed
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
@@ -74,19 +26,6 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS bt_left")
         spark.sql("DROP TABLE IF EXISTS bt_right")
-
-
-def test_wide_view_pivot(spark):
-    rows = [
-        ("temp", _dt(0), 20.0),
-        ("hum", _dt(0), 55.0),
-        ("temp", _dt(60), 21.0),
-        ("hum", _dt(60), 54.0),
-    ]
-    df = spark.createDataFrame(rows, "series_id string, ts timestamp, value double")
-    wide = wide_view(df, ["temp", "hum"]).orderBy("ts").collect()
-    assert wide[0]["temp"] == 20.0 and wide[0]["hum"] == 55.0
-    assert wide[1]["temp"] == 21.0 and wide[1]["hum"] == 54.0
 
 
 # ----------------------------------------------------------------------

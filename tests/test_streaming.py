@@ -1,9 +1,8 @@
 """Structured Streaming tests: collection-into-store (T1/T2),
-windowed/session aggregation, streaming dedup, stateful burst flags."""
+streaming dedup, the curation stream, the watchdog (T5) and stateful
+burst flags (T4)."""
 
 from datetime import datetime, timezone
-
-import pytest
 
 from my_weather_spark import streaming as st
 from my_weather_spark.model import UtcPeriod
@@ -38,51 +37,6 @@ def test_stream_collect_merges_idempotently(spark, tmp_path):
     assert [r["value"] for r in got] == [0.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0]
 
 
-def test_windowed_stats_stream(spark, tmp_path):
-    landing = str(tmp_path / "landing2")
-    _obs(spark, [(0, 1), (30, 3), (70, 5), (90, 7)]).write.mode("append").parquet(landing)
-    stream = st.stream_observations(spark, landing)
-    agg = st.windowed_stats(stream, window="1 minute", watermark="10 minutes")
-    # append mode only emits watermark-finalized windows; a drained
-    # availableNow run never advances past the last event, so assert on
-    # the complete-mode materialization instead.
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("winstats")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        r["window_start"].second + r["window_start"].minute * 60: r
-        for r in spark.sql("SELECT * FROM winstats").collect()
-    }
-    assert rows[0]["n_points"] == 2 and rows[0]["avg_value"] == 2.0
-    assert rows[60]["n_points"] == 2 and rows[60]["max_value"] == 7.0
-
-
-def test_sessionized_stream(spark, tmp_path):
-    landing = str(tmp_path / "landing3")
-    # two bursts separated by > gap
-    _obs(spark, [(0, 1), (60, 1), (4000, 1), (4030, 1)]).write.mode("append").parquet(
-        landing
-    )
-    stream = st.stream_observations(spark, landing)
-    q = (
-        st.sessionized(stream, gap="10 minutes", watermark="2 hours")
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM sessions ORDER BY session_start").collect()
-    assert len(rows) == 2
-    assert [r["n_points"] for r in rows] == [2, 2]
-
-
 def test_dedup_late_stream(spark, tmp_path):
     landing = str(tmp_path / "landing4")
     # epoch-0 timestamps equal the stream's initial watermark and get
@@ -100,78 +54,6 @@ def test_dedup_late_stream(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert spark.sql("SELECT count(*) c FROM deduped").collect()[0]["c"] == 2
-
-
-def test_continuous_rollup_matches_batch_recompute(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    landing = str(tmp_path / "cr_landing")
-    rollup = str(tmp_path / "cr_rollup")
-    store = TsStore(spark, str(tmp_path / "cr_store"))
-    DAY = 86400
-    B = 1_700_006_400  # midnight UTC + some days
-
-    # wave 1: two series across two dates
-    pts1 = [(B + i * 1800, i) for i in range(8)]            # date 0, 4 hourly buckets
-    pts2 = [(B + DAY + i * 1800, 10 + i) for i in range(4)]  # date 1
-    _obs(spark, pts1, "sA").unionByName(_obs(spark, pts2, "sB")).write.mode(
-        "append"
-    ).parquet(landing)
-    q = st.continuous_rollup(spark, landing, store, rollup, str(tmp_path / "cr_ck1"))
-    q.awaitTermination(120)
-
-    def _expect():
-        rows = store._read_all().where(F.col("source") == "stream")
-        bucket = F.timestamp_micros(
-            (F.floor(F.unix_micros("ts") / 3_600_000_000) * 3_600_000_000).cast("long")
-        )
-        return {
-            (r["series_id"], r["bucket_start"]): (
-                r["n"], r["s"], r["mn"], r["mx"]
-            )
-            for r in rows.groupBy("series_id", bucket.alias("bucket_start"))
-            .agg(
-                F.count("value").alias("n"), F.sum("value").alias("s"),
-                F.min("value").alias("mn"), F.max("value").alias("mx"),
-            )
-            .collect()
-        }
-
-    def _got():
-        return {
-            (r["series_id"], r["bucket_start"]): (
-                r["n_points"], r["sum_value"], r["min_value"], r["max_value"]
-            )
-            for r in st.read_rollup(spark, rollup).collect()
-        }
-
-    assert _got() == _expect()
-
-    # wave 2: LATE data into date 0 (new point + replay of an old one)
-    # and fresh data on date 2
-    late = [(B + 900, 99)] + pts1[:1]
-    pts3 = [(B + 2 * DAY + i * 1800, 50 + i) for i in range(3)]
-    _obs(spark, late, "sA").unionByName(_obs(spark, pts3, "sC")).write.mode(
-        "append"
-    ).parquet(landing)
-    q = st.continuous_rollup(spark, landing, store, rollup, str(tmp_path / "cr_ck1"))
-    q.awaitTermination(120)
-    got2 = _got()
-    assert got2 == _expect()
-    # the late point landed in its original bucket
-    assert got2[("sA", _dt(B).replace(tzinfo=None))][0] == 3  # B, B+900, B+1800
-
-    # redelivery: same landing files under a FRESH checkpoint — the
-    # recompute-from-store design must converge to identical content
-    q = st.continuous_rollup(spark, landing, store, rollup, str(tmp_path / "cr_ck2"))
-    q.awaitTermination(120)
-    assert _got() == got2
-
-
-def test_refresh_rollup_rejects_straddling_bucket(spark, tmp_path):
-    store = TsStore(spark, str(tmp_path / "rr_store"))
-    with pytest.raises(ValueError, match="divide 86400"):
-        st.refresh_rollup_dates(store, str(tmp_path / "rr"), [None], bucket_seconds=7000)
 
 
 def test_curated_doc_stream(spark, tmp_path):
