@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from my_weather_spark.model import SeriesRef, TSINFO_SCHEMA, UtcPeriod
@@ -50,7 +50,7 @@ class ChunkedFileAdapter(SourceAdapter):
     # -- S1: one rate-limited block ------------------------------------
     def _fetch_block(
         self,
-        spark: SparkSession,
+        df: DataFrame,
         urls: list[str],
         lo_epoch: float,
         hi_epoch: float,
@@ -63,7 +63,6 @@ class ChunkedFileAdapter(SourceAdapter):
         self.calls_made += 1
         lo = datetime.fromtimestamp(lo_epoch, tz=timezone.utc)
         hi = datetime.fromtimestamp(hi_epoch, tz=timezone.utc)
-        df = spark.read.parquet(self.path)
         upper = (F.col("ts") <= F.lit(hi)) if inclusive_end else (F.col("ts") < F.lit(hi))
         return (
             df.where(F.col("series_id").isin(urls))
@@ -77,6 +76,9 @@ class ChunkedFileAdapter(SourceAdapter):
         span = period.end_epoch - period.start_epoch
         chunk_span = self.max_points * self.nominal_dt
         n_chunks = max(1, math.ceil(span / chunk_span)) if span > 0 else 1
+        # one relation for every chunk: building it infers the schema
+        # from the parquet footers, which runs a Spark job
+        df = spark.read.parquet(self.path)
         # Chunks are HALF-OPEN [lo, lo+span) except the last, which is
         # inclusive of period.end — no coverage gap between chunks for
         # fractional-second timestamps, no double-read of boundaries.
@@ -85,7 +87,7 @@ class ChunkedFileAdapter(SourceAdapter):
             lo = period.start_epoch + i * chunk_span
             last = i == n_chunks - 1
             hi = period.end_epoch if last else lo + chunk_span
-            chunks.append(self._fetch_block(spark, urls, lo, hi, inclusive_end=last))
+            chunks.append(self._fetch_block(df, urls, lo, hi, inclusive_end=last))
         out = chunks[0]
         for c in chunks[1:]:
             out = out.unionByName(c)  # U1: chunks disjoint by construction

@@ -24,12 +24,12 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from my_weather_spark.model import OBSERVATION_SCHEMA, UtcPeriod
 from my_weather_spark.ops.timeseries import merge_dedup, period_filter
-from my_weather_spark.session import local_frame
+from my_weather_spark.session import checkpoint, local_frame
 
 PARTITION_COLS = ["source", "date"]
 
@@ -62,10 +62,41 @@ def ensure_utc_session(spark: SparkSession) -> None:
         )
 
 
+def _mode_gap(entries: Column) -> Column:
+    """The spacing with the largest total count in ``entries`` (an
+    array of (key=spacing, value=count) structs, a spacing may repeat),
+    the smallest on a tie — dt_mode's rule — or NULL when no entry has
+    a spacing >= 0. One pass over the sorted entries sums each run of
+    equal spacings and keeps the first largest run."""
+    runs = F.array_sort(F.filter(entries, lambda e: e["key"] >= 0))
+
+    def step(a, e):
+        same = e["key"] == a["k"]
+        ended = ~same & (a["n"] > a["best_n"])  # NULL at the first entry
+        return F.struct(
+            e["key"].alias("k"),
+            F.when(same, a["n"] + e["value"]).otherwise(e["value"]).alias("n"),
+            F.when(ended, a["k"]).otherwise(a["best"]).alias("best"),
+            F.when(ended, a["n"]).otherwise(a["best_n"]).alias("best_n"),
+        )
+
+    long0, null = F.lit(0).cast("long"), F.lit(None).cast("long")
+    zero = F.struct(
+        null.alias("k"), long0.alias("n"), null.alias("best"), long0.alias("best_n")
+    )
+    return F.aggregate(
+        runs,
+        zero,
+        step,
+        lambda a: F.when(a["n"] > a["best_n"], a["k"]).otherwise(a["best"]),
+    )
+
+
 class TsStore:
     def __init__(self, spark: SparkSession, path: str) -> None:
         self.spark = spark
         self.path = path
+        self._v2 = False  # sidecar seen or written with v2 columns
 
     # -- helpers --------------------------------------------------------
     def _exists(self) -> bool:
@@ -158,12 +189,18 @@ class TsStore:
         )
         # Collapse intra-batch duplicate (series_id, ts) rows ONCE and
         # materialize: the data write and the catalog summary both
-        # consume the survivors (each used to re-run the window).
-        # Pre-deduping the batch before the merge-path union is
-        # equivalent: the survivor is the max under a total order
-        # (ingest_time desc, value desc), so dropping batch-local
-        # losers first cannot change the combined winner.
-        deduped = merge_dedup(incoming).localCheckpoint(eager=True)
+        # consume the survivors (each used to re-run the window), and no
+        # later step re-runs the caller's frame. Pre-deduping the batch
+        # before the merge-path union is equivalent: the survivor is the
+        # max under a total order (ingest_time desc, value desc), so
+        # dropping batch-local losers first cannot change the combined
+        # winner. The same job observes the batch's dates: a batch
+        # carries one literal source, so its touched (source, date)
+        # partitions are known on the driver with no further job.
+        deduped, _, seen = checkpoint(
+            merge_dedup(incoming), _dates=F.collect_set("date")
+        )
+        dates = sorted(seen["_dates"])
 
         if not self._exists():
             deduped.write.partitionBy(*PARTITION_COLS).mode(
@@ -173,16 +210,18 @@ class TsStore:
             # exist is necessarily stale (the store was deleted out of
             # band) — overwrite it with just this batch instead of
             # merging ghost series into a brand-new store's catalog.
-            self._update_catalog(deduped, replace=False, fresh=True, source=source)
+            self._update_catalog(deduped, source, dates, fresh=True)
             return
 
         if overwrite_on_write:
             # Replace whole series: drop ALL existing rows of the
             # incoming series ids (any date), keep other series. This
             # rewrites the dataset (static overwrite) — the rare path;
-            # the reference default is merge.
+            # the reference default is merge. The ids come from the
+            # batch checkpoint, not the caller's frame (a second read of
+            # a landing file).
             keep = self._read_all().join(
-                F.broadcast(incoming.select("series_id").distinct()),
+                F.broadcast(deduped.select("series_id").distinct()),
                 "series_id",
                 "left_anti",
             )
@@ -191,16 +230,13 @@ class TsStore:
             out.write.partitionBy(*PARTITION_COLS).option(
                 "partitionOverwriteMode", "static"
             ).mode("overwrite").parquet(self.path)
-            self._update_catalog(deduped, replace=True, source=source)
+            self._update_catalog(deduped, source, dates, replace=True)
             return
-        else:
-            # Merge path: only read partitions the incoming batch touches.
-            touched = deduped.select(*PARTITION_COLS).distinct()
-            existing = self._read_all().join(
-                F.broadcast(touched), PARTITION_COLS, "left_semi"
-            )
-            out = merge_dedup(deduped.unionByName(existing))
 
+        # Merge path: only read the partitions the batch touches, pruned
+        # by literal (source, date) filters at planning time.
+        existing = self._read_all().where(self._touched(source, dates))
+        out = merge_dedup(deduped.unionByName(existing))
         # Write to the final location with dynamic partition overwrite
         # (scoped per-write option, not session-global conf). The union
         # plan reads the parquet files being overwritten, so materialize
@@ -213,7 +249,19 @@ class TsStore:
         # catalog rows for the touched partitions recompute from the
         # checkpointed post-merge content (out), not the batch alone:
         # a replaced point's old stats must leave the sidecar too
-        self._update_catalog(out, replace=False, source=source, touched=touched)
+        self._update_catalog(out, source, dates)
+
+    @staticmethod
+    def _touched(source: str, dates: list) -> Column:
+        """The (source, date) partitions a batch touches, as a literal
+        predicate: it prunes partitions statically, with no join."""
+        # NULL-safe: ``~_touched`` keeps a NULL-date row, as the
+        # anti-join it replaces did.
+        return (
+            (F.col("source") == F.lit(source))
+            & F.col("date").isNotNull()
+            & F.col("date").isin(dates)
+        )
 
     # -- catalog sidecar ---------------------------------------------------
     # One row per (series_id, source, date) — the exact unit the data
@@ -223,25 +271,29 @@ class TsStore:
     # RECOMPUTING the touched partitions' rows from the post-merge data
     # (idempotent: same landed data -> same stats) and keeping every
     # other row, so find(fast=True) answers the reference's TsInfo
-    # fields — now INCLUDING n_points and delta_t — in O(catalog rows)
+    # fields — INCLUDING n_points and delta_t — in O(catalog rows)
     # instead of scanning the data (at 100 TB a find() scan reads every
     # partition). Cross-partition spacings are reconstructed at read
     # time from consecutive rows' (max_ts, next min_ts); see find().
     # The sidecar is hive-partitioned by ``source``, and the hot path —
     # the merge-mode store() that a micro-batch cadence hits every
     # cycle — rewrites ONLY the touched source's partition (dynamic
-    # partition overwrite): per-cycle catalog work is O(series-dates in
-    # that source), not O(the whole store). The rare whole-catalog
-    # rewrites (whole-series replace, fresh store, legacy-layout
-    # migration) use a static overwrite, which also clears
-    # pre-partitioning flat files. The sidecar lives BESIDE the data
-    # root, not inside it: the whole-series replace path writes the
-    # dataset with a STATIC overwrite, which truncates everything under
-    # the root — a nested sidecar would be wiped mid-update. The
+    # partition overwrite, one file, no exchange): it reads that one
+    # partition and drops the touched dates' rows by a literal filter
+    # built from the batch's observed dates, so per-cycle catalog work
+    # is O(series-dates in that source), not O(the whole store). The
+    # rare whole-catalog rewrites (whole-series replace, fresh store,
+    # legacy-layout migration) use a static overwrite, which also
+    # clears pre-partitioning flat files. The sidecar lives BESIDE the
+    # data root, not inside it: the whole-series replace path writes
+    # the dataset with a STATIC overwrite, which truncates everything
+    # under the root — a nested sidecar would be wiped mid-update. The
     # sidecar is derived state: a torn write is repaired by
     # rebuild_catalog(), never by trusting it blindly; a pre-v2 sidecar
     # (per-series grain, no stats columns) triggers the same
-    # rebuild-from-data migration.
+    # rebuild-from-data migration. Only this class writes the sidecar
+    # and it always writes v2, so once a TsStore has seen (or written)
+    # a v2 sidecar it stops re-reading the parquet footers to ask.
     @property
     def _catalog_path(self) -> str:
         return self.path.rstrip("/") + "_catalog"
@@ -270,50 +322,44 @@ class TsStore:
         exact path's count("value")), n_spacings (distinct spacing
         count) and dt_hist — the histogram of microsecond spacings
         between consecutive ts WITHIN the partition (NULL for
-        single-point partitions and above DT_HIST_CAP). The window and
-        both aggregates key on the partition columns, so this is
-        O(batch) work aligned with the data write's own shuffle."""
+        single-point partitions and above DT_HIST_CAP). One row per
+        (partition key, spacing) carries the partial stats too, so the
+        lag window's exchange is the only one: both aggregates key on
+        its partition columns."""
         keys = ["series_id", "source", "date"]
         w = W.partitionBy(*keys).orderBy("ts")
-        gaps = df.select(
-            *keys,
-            "ts",
-            "value",
-            "ingest_time",
-            (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))).alias(
-                "_gap"
-            ),
-        )
-        stats = gaps.groupBy(*keys).agg(
-            F.min("ts").alias("data_period_start"),
-            F.max("ts").alias("data_period_end"),
-            F.min("ingest_time").alias("created"),
-            F.max("ingest_time").alias("modified"),
-            F.count("value").cast("long").alias("n_points"),
-        )
-        hist = (
-            gaps.where(F.col("_gap").isNotNull())
+        per_gap = (
+            df.withColumn(
+                "_gap", F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
+            )
             .groupBy(*keys, "_gap")
-            .agg(F.count(F.lit(1)).cast("long").alias("_n"))
-            .groupBy(*keys)
             .agg(
-                F.count(F.lit(1)).cast("long").alias("n_spacings"),
-                F.map_from_entries(
-                    F.collect_list(F.struct("_gap", "_n"))
-                ).alias("_full_hist"),
-            )
-            .select(
-                *keys,
-                "n_spacings",
-                F.when(
-                    F.col("n_spacings") <= cls.DT_HIST_CAP,
-                    F.col("_full_hist"),
-                ).alias("dt_hist"),
+                F.min("ts").alias("_t0"),
+                F.max("ts").alias("_t1"),
+                F.min("ingest_time").alias("_i0"),
+                F.max("ingest_time").alias("_i1"),
+                F.count("value").alias("_nv"),
+                F.count(F.lit(1)).cast("long").alias("_n"),
             )
         )
-        return stats.join(hist, keys, "left").withColumn(
-            "n_spacings", F.coalesce(F.col("n_spacings"), F.lit(0).cast("long"))
+        stats = per_gap.groupBy(*keys).agg(
+            F.min("_t0").alias("data_period_start"),
+            F.max("_t1").alias("data_period_end"),
+            F.min("_i0").alias("created"),
+            F.max("_i1").alias("modified"),
+            F.sum("_nv").cast("long").alias("n_points"),
+            F.count("_gap").cast("long").alias("n_spacings"),
+            F.map_from_entries(
+                F.collect_list(
+                    F.when(F.col("_gap").isNotNull(), F.struct("_gap", "_n"))
+                )
+            ).alias("_full_hist"),
         )
+        n = F.col("n_spacings")
+        return stats.withColumn(
+            "dt_hist",
+            F.when((n > 0) & (n <= cls.DT_HIST_CAP), F.col("_full_hist")),
+        ).drop("_full_hist")
 
     def _catalog_schema(self):
         from pyspark.sql import types as T
@@ -338,14 +384,17 @@ class TsStore:
     def _catalog_is_v2(self) -> bool:
         """True when the on-disk sidecar carries the v2 per-date stats
         columns; a v1 sidecar (per-series grain) reads as stale and is
-        rebuilt from data (schema inference is a metadata-only read)."""
-        try:
-            names = set(
-                self.spark.read.parquet(self._catalog_path).schema.fieldNames()
-            )
-        except Exception:
-            return False
-        return {"date", "n_points", "n_spacings", "dt_hist"} <= names
+        rebuilt from data. The schema inference runs a footer-reading
+        job, so a positive answer is kept: migration is one-way."""
+        if not self._v2:
+            try:
+                names = set(
+                    self.spark.read.parquet(self._catalog_path).schema.fieldNames()
+                )
+            except Exception:
+                return False
+            self._v2 = {"date", "n_points", "n_spacings", "dt_hist"} <= names
+        return self._v2
 
     def _catalog_is_partitioned(self) -> bool:
         jvm = self.spark._jvm
@@ -357,23 +406,31 @@ class TsStore:
                 return True
         return False
 
+    def _read_catalog(self) -> DataFrame:
+        return self.spark.read.schema(self._catalog_schema()).parquet(
+            self._catalog_path
+        )
+
     def _write_catalog(self, df: DataFrame, dynamic: bool) -> None:
         # the overwrite reads the files being replaced — cut lineage.
-        # repartition by source -> one task (one file) per source
-        # partition; a partition holds at most one row per series.
+        # One file per source partition (a partition holds at most one
+        # row per series-date): a dynamic write carries one source, so
+        # it coalesces to one task; a static rewrite hashes by source.
         df = df.localCheckpoint(eager=True)
+        df = df.coalesce(1) if dynamic else df.repartition("source")
         mode = "dynamic" if dynamic else "static"
-        df.repartition("source").write.partitionBy("source").option(
+        df.write.partitionBy("source").option(
             "partitionOverwriteMode", mode
         ).mode("overwrite").parquet(self._catalog_path)
+        self._v2 = True
 
     def _update_catalog(
         self,
         landed: DataFrame,
-        replace: bool,
+        source: str,
+        dates: list,
+        replace: bool = False,
         fresh: bool = False,
-        source: str | None = None,
-        touched: DataFrame | None = None,
     ) -> None:
         # ``landed`` is what the data write actually landed for the
         # partitions it rewrote: the checkpointed post-merge content of
@@ -398,9 +455,7 @@ class TsStore:
             # clears the old-layout files.
             self.rebuild_catalog()
             return
-        old = self.spark.read.schema(self._catalog_schema()).parquet(
-            self._catalog_path
-        )
+        old = self._read_catalog()
         if replace:
             # whole-series replace: the old rows of the incoming
             # series are dropped, not merged (they vouch for data that
@@ -409,31 +464,19 @@ class TsStore:
             # it mirrors the data path, which is itself a full static
             # overwrite on replace.
             old = old.join(
-                F.broadcast(batch.select("series_id").distinct()),
+                F.broadcast(landed.select("series_id").distinct()),
                 "series_id",
                 "left_anti",
             )
             self._write_catalog(old.unionByName(batch), dynamic=False)
             return
-        # merge path (the micro-batch hot path): only the touched
-        # source's partition is read (partition-pruned by the filter —
-        # a store() batch carries exactly one literal source, passed
-        # through as a string so no job runs to discover it) and only
-        # it is rewritten (dynamic overwrite) — every other source's
-        # sidecar file stays byte-identical on disk. Within it, rows
-        # for the touched (source, date) combos are replaced by the
-        # recomputed batch rows; untouched dates' rows are kept as-is.
-        if source is not None:
-            srcs = [source]
-        else:
-            srcs = [
-                r["source"] for r in landed.select("source").distinct().collect()
-            ]
-        old_touched = old.where(F.col("source").isin(srcs))
-        if touched is None:
-            touched = landed.select(*PARTITION_COLS).distinct()
-        keep = old_touched.join(
-            F.broadcast(touched), PARTITION_COLS, "left_anti"
+        # merge path (the micro-batch hot path): only the batch's
+        # source partition is read and rewritten, so every other
+        # source's sidecar file stays byte-identical on disk. Within
+        # it, the touched dates' rows are replaced by the recomputed
+        # batch rows; untouched dates' rows are kept as-is.
+        keep = old.where(F.col("source") == F.lit(source)).where(
+            ~self._touched(source, dates)
         )
         self._write_catalog(keep.unionByName(batch), dynamic=True)
 
@@ -562,8 +605,8 @@ class TsStore:
 
         ``fast=True`` answers from the catalog sidecar maintained at
         store() time — O(catalog rows), and NO data scan (not even
-        file listing) unless an O(catalog) existence probe finds
-        series the sidecar cannot answer exactly; exactly the
+        file listing) unless the catalog answer itself marks series
+        the sidecar cannot answer exactly; exactly the
         reference's repository-metadata semantics (its data_period and
         created/modified also come from tracked metadata, not a scan),
         and since the v2 sidecar it returns n_points and delta_t too:
@@ -589,14 +632,15 @@ class TsStore:
         scans the data.
 
         Snapshot binding: with ``exact_fallback=True`` the returned
-        DataFrame is bound to the CATALOG STATE AT CALL TIME (the
-        catalog is checkpointed alongside the fallback existence
-        probe, so the probe's plan-shape decision and the executed
-        plan always agree) — series stored after find() returns do not
-        appear when the result is executed later. The fallback scan
-        itself reads current data files within the snapshot's
-        fallback partitions. With ``exact_fallback=False`` the result
-        is fully lazy and reflects the catalog at execution time.
+        DataFrame is bound to the CATALOG STATE AT CALL TIME: the
+        per-series answer is checkpointed once, and the job that writes
+        it also counts the series needing the fallback, so that count's
+        plan-shape decision and the returned rows always agree — series
+        stored after find() returns do not appear when the result is
+        executed later. The fallback scan itself reads current data
+        files within the snapshot's fallback partitions. With
+        ``exact_fallback=False`` the result is fully lazy and reflects
+        the catalog at execution time.
 
         delta_t (exact path) is the per-series mode of point spacing
         (dt_mode — the store knows the actual cadence). point_fx and
@@ -611,40 +655,18 @@ class TsStore:
             if not self._catalog_exists() or not self._catalog_is_v2():
                 # pre-sidecar or pre-v2 store: one-time migration scan
                 self.rebuild_catalog()
-            cat_df = self.spark.read.schema(self._catalog_schema()).parquet(
-                self._catalog_path
-            )
+            cat_df = self._read_catalog()
             if source is not None:
                 cat_df = cat_df.where(F.col("source") == source)
             if pattern is not None:
                 cat_df = cat_df.where(F.col("series_id").rlike(pattern))
-            if exact_fallback:
-                # Pin ONE call-time catalog snapshot (r8 ADVICE): the
-                # needs_scan existence probe below runs a job NOW, but
-                # the returned DataFrame is lazy — without this pin a
-                # store() between find() and execution would re-read
-                # the catalog with the plan shape already frozen, and a
-                # newly interleaved/capped series would silently get
-                # NULL delta_t despite the exact-equal guarantee.
-                # Checkpointing the (filtered, tiny) catalog makes the
-                # probe decision and the executed plan read the same
-                # state; the probe job was already being paid, so this
-                # adds no extra scan. Checkpoint blocks stay pinned in
-                # executor storage until the Python-side DataFrame is
-                # garbage collected — a long-lived driver calling
-                # find() in a loop accumulates pinned (catalog-sized,
-                # i.e. tiny) blocks until its references drop; callers
-                # holding many results can del them or gc.collect() to
-                # release (r9 ADVICE). The exact_fallback=False path
-                # stays fully lazy/zero-job by design (metadata-only
-                # callers; NULL delta_t there is the documented answer
-                # for unanswerable series either way).
-                cat_df = cat_df.localCheckpoint(eager=True)
-            # order a series' partition rows by period start: when they
+            # The lag window and the one aggregate below both key on
+            # series_id: the answer plans on one exchange and no join.
+            # Order a series' partition rows by period start: when they
             # don't interleave, the full ts-sorted point sequence is
             # exactly their concatenation, so total spacings = stored
             # within-partition histograms + one boundary gap per
-            # consecutive row pair (next min_ts - prev max_ts)
+            # consecutive row pair (next min_ts - prev max_ts).
             worder = W.partitionBy("series_id").orderBy(
                 "data_period_start", "data_period_end", "source", "date"
             )
@@ -653,65 +675,75 @@ class TsStore:
                 F.unix_micros("data_period_start")
                 - F.unix_micros(F.lag("data_period_end").over(worder)),
             )
+            # series the sidecar cannot answer exactly: partitions
+            # interleave in time (concatenation order is not ts order),
+            # or a partition overflowed DT_HIST_CAP (histogram dropped)
+            # — routed to the pruned exact scan (exact_fallback) or to
+            # NULL delta_t
+            needs_scan = F.max(
+                (F.col("_bgap") < 0) | (F.col("n_spacings") > self.DT_HIST_CAP)
+            )
+            # each row's spacings: its histogram entries plus its
+            # boundary gap (a first row's NULL gap and an interleaved
+            # row's negative one drop out in _mode_gap)
+            spacings = F.concat(
+                F.coalesce(
+                    F.map_entries("dt_hist"),
+                    F.array().cast("array<struct<key:bigint,value:bigint>>"),
+                ),
+                F.array(
+                    F.struct(
+                        F.col("_bgap").alias("key"),
+                        F.lit(1).cast("long").alias("value"),
+                    )
+                ),
+            )
             # aggregate by series only (a series stored under several
             # sources merges, exactly like the exact path's groupBy)
-            base = r.groupBy(F.col("series_id").alias("name")).agg(
+            info = r.groupBy("series_id").agg(
                 F.min("data_period_start").alias("data_period_start"),
                 F.max("data_period_end").alias("data_period_end"),
                 F.min("created").alias("created"),
                 F.max("modified").alias("modified"),
                 F.sum("n_points").cast("long").alias("n_points"),
-                # series the sidecar cannot answer exactly: partitions
-                # interleave in time (concatenation order is not ts
-                # order), or a partition overflowed DT_HIST_CAP
-                # (histogram dropped) — routed to the pruned exact
-                # scan (exact_fallback) or to NULL delta_t
-                F.max(
-                    (F.col("_bgap") < 0)
-                    | (F.col("n_spacings") > self.DT_HIST_CAP)
-                ).alias("_needs_scan"),
+                needs_scan.alias("_needs_scan"),
+                # the snapshot's partitions of a fallback series
+                F.when(
+                    needs_scan, F.collect_list(F.struct(*PARTITION_COLS))
+                ).alias("_parts"),
+                # exact-path delta_t is dt_mode_seconds: micros/1e6
+                (
+                    _mode_gap(F.flatten(F.collect_list(spacings)))
+                    / F.lit(1_000_000.0)
+                ).alias("_dt"),
             )
-            within = r.select(
-                "series_id", F.explode("dt_hist").alias("_gap", "_n")
-            )
-            bounds = r.where(F.col("_bgap") >= 0).select(
-                "series_id",
-                F.col("_bgap").alias("_gap"),
-                F.lit(1).cast("long").alias("_n"),
-            )
-            wmode = W.partitionBy("series_id").orderBy(
-                F.desc("_cnt"), F.asc("_gap")
-            )
-            modes = (
-                within.unionByName(bounds)
-                .groupBy("series_id", "_gap")
-                .agg(F.sum("_n").alias("_cnt"))
-                .withColumn("_rn", F.row_number().over(wmode))
-                .where(F.col("_rn") == 1)
-                .select(
-                    F.col("series_id").alias("name"),
-                    # exact-path delta_t is dt_mode_seconds: micros/1e6
-                    (F.col("_gap") / F.lit(1_000_000.0))
-                    .cast("double")
-                    .alias("_dt"),
+            n_scan = 0
+            if exact_fallback:
+                # Pin the finished answer at call time, counting the
+                # series that need the fallback scan in the same job:
+                # the plan-shape decision below and the rows returned
+                # then read ONE catalog state, and a store() between
+                # find() and execution changes neither. Checkpoint
+                # blocks stay pinned in executor storage until the
+                # Python-side DataFrame is garbage collected — a
+                # long-lived driver calling find() in a loop holds
+                # (catalog-sized, i.e. tiny) blocks until its references
+                # drop; del them or gc.collect() to release. The
+                # exact_fallback=False path stays fully lazy and
+                # job-free by design (metadata-only callers; NULL
+                # delta_t there is the documented answer for
+                # unanswerable series either way).
+                info, _, seen = checkpoint(
+                    info, _nn=F.count_if(F.col("_needs_scan"))
                 )
-            )
-            info = base.join(modes, "name", "left")
-            # Existence probe FIRST (one O(catalog) job): the common
-            # store has no interleaved/capped series, and the pure
-            # metadata path must then stay scan-free — without this
-            # guard the fallback subtree would still list the data
-            # root's files at planning time on every find(fast).
-            needs_scan = exact_fallback and (
-                base.where(F.col("_needs_scan")).limit(1).count() > 0
-            )
-            if needs_scan:
+                n_scan = seen["_nn"]
+            if n_scan:
                 # recompute delta_t for JUST the series the sidecar
-                # can't answer: scan pruned to their (source, date)
-                # partitions — the partition list is O(fallback
-                # series' partitions) and broadcast, so dynamic
-                # partition pruning keeps reads proportional to the
-                # fallback subset, not the store. The series
+                # can't answer: scan pruned to the snapshot's (source,
+                # date) partitions of those series — the partition list
+                # is O(fallback series' partitions) and broadcast, so
+                # dynamic partition pruning keeps reads proportional to
+                # the fallback subset, not the store. The series
                 # semi-join is corpus-derived (left to AQE).
                 # BOUNDARY: the pruning needs the hive layout this
                 # store writes (partitionBy source/date). On a
@@ -719,30 +751,24 @@ class TsStore:
                 # still filters CORRECTLY but prunes no files — run
                 # rebuild_catalog()/migration first if fast-path scan
                 # cost matters there.
-                fb = base.where(F.col("_needs_scan")).select(
-                    F.col("name").alias("series_id")
-                )
-                fb_parts = (
-                    r.join(fb, "series_id", "left_semi")
-                    .select(*PARTITION_COLS)
-                    .distinct()
-                )
+                fb = info.where(F.col("_needs_scan"))
+                fb_parts = fb.select(F.inline("_parts")).distinct()
                 fb_data = (
                     self._read_all()
                     .join(F.broadcast(fb_parts), PARTITION_COLS, "left_semi")
-                    .join(fb, "series_id", "left_semi")
+                    .join(fb.select("series_id"), "series_id", "left_semi")
                 )
                 exact_modes = dt_mode(fb_data).select(
-                    F.col("series_id").alias("name"),
+                    "series_id",
                     F.col("dt_mode_seconds").alias("_dt_exact"),
                 )
-                info = info.join(exact_modes, "name", "left")
+                info = info.join(exact_modes, "series_id", "left")
             else:
                 info = info.withColumn(
                     "_dt_exact", F.lit(None).cast("double")
                 )
             info = info.select(
-                "name",
+                F.col("series_id").alias("name"),
                 "data_period_start",
                 "data_period_end",
                 "created",

@@ -87,6 +87,24 @@ def test_chunked_pagination_covers_period(spark, backing):
     assert adapter.calls_made == 5
 
 
+def test_chunked_read_builds_one_relation(spark, backing):
+    # Every chunk filters the same parquet relation: building a 3-chunk
+    # read infers the schema from the footers once (one Spark job), not
+    # once per chunk.
+    path, url = backing
+    adapter = ChunkedFileAdapter("chunked", path, max_points_per_call=1024, nominal_dt_seconds=300)
+    period = UtcPeriod(0, 3 * 1024 * 300 - 300)
+    sc = spark.sparkContext
+    sc.setJobGroup("chunked_read_build", "chunked_read_build")
+    try:
+        out = adapter.read(spark, [SeriesRef.parse(url)], period)
+    finally:
+        sc.setJobGroup(None, None)
+    assert adapter.calls_made == 3
+    assert len(sc.statusTracker().getJobIdsForGroup("chunked_read_build")) == 1
+    assert out.count() == 3 * 1024
+
+
 def test_chunked_rate_limited(spark, backing):
     path, url = backing
     clock = FakeClock()

@@ -771,3 +771,149 @@ def test_find_fast_is_bound_to_call_time_catalog_snapshot(spark, tmp_path):
     assert fresh["m"]["n_points"] == 6
     assert fresh["m"]["delta_t"] == exact["m"]["delta_t"]
     assert fresh["m"]["delta_t"] is not None
+
+
+def _jobs(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran) under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _hourly(spark, first_hour, hours, n_series=3, bump=0.0):
+    rows = [
+        (f"s/{i}", _dt(h * 3600), float(h) + bump)
+        for i in range(n_series)
+        for h in range(first_hour, first_hour + hours)
+    ]
+    return spark.createDataFrame(rows, "series_id string, ts timestamp, value double")
+
+
+def test_merge_store_and_find_fast_job_budget(spark, tmp_path):
+    """The micro-batch hot path runs a fixed number of Spark jobs: a
+    merge-mode store() is 8 (batch checkpoint 2, merge checkpoint 2,
+    data write 1, catalog checkpoint 2, catalog write 1) and
+    find(fast=True) plus its collect is 3 (answer checkpoint 2, collect
+    1). Touched partitions are pruned by literal filters, the sidecar
+    schema is not re-inferred, and the single-source catalog write has
+    no exchange."""
+    store = TsStore(spark, str(tmp_path / "budget_store"))
+    store.store(_hourly(spark, 0, 48), source="src1", ingest_time=_dt(1000))
+    store.store(_hourly(spark, 24, 36), source="src1", ingest_time=_dt(2000))
+    batch = _hourly(spark, 40, 30, bump=0.5).localCheckpoint(eager=True)
+    _, n_store = _jobs(
+        spark,
+        "budget_merge_store",
+        lambda: store.store(batch, source="src1", ingest_time=_dt(3000)),
+    )
+    rows, n_find = _jobs(
+        spark, "budget_find_fast", lambda: store.find(fast=True).collect()
+    )
+    assert (n_store, n_find) == (8, 3)
+    assert {r["name"]: r["n_points"] for r in rows} == {f"s/{i}": 70 for i in range(3)}
+
+
+def test_merge_store_leaves_untouched_partitions_byte_identical(spark, tmp_path):
+    """A merge store() touching 2 of a source's 3 dates rewrites only
+    those two data partitions and only that source's catalog partition:
+    the third date's data files and the other source's catalog file stay
+    byte-identical, and find(fast=True) still equals find()."""
+    import hashlib
+    from pathlib import Path
+
+    root = tmp_path / "prune_store"
+    store = TsStore(spark, str(root))
+    store.store(_hourly(spark, 0, 72), source="a", ingest_time=_dt(1000))
+    store.store(_hourly(spark, 0, 24), source="b", ingest_time=_dt(1000))
+
+    def digest(d):
+        return {
+            p.name: hashlib.md5(p.read_bytes()).hexdigest()
+            for p in sorted(Path(d).glob("*.parquet"))
+        }
+
+    day0 = root / "source=a" / "date=1970-01-01"
+    day1 = root / "source=a" / "date=1970-01-02"
+    cat_b = Path(store._catalog_path) / "source=b"
+    before = {d: digest(d) for d in (day0, day1, cat_b)}
+    assert all(before.values())
+
+    # days 1 and 2 of source a: replaced points and new series
+    store.store(
+        _hourly(spark, 30, 30, n_series=4, bump=0.5),
+        source="a",
+        ingest_time=_dt(2000),
+    )
+    assert digest(day0) == before[day0]
+    assert digest(cat_b) == before[cat_b]
+    assert digest(day1) != before[day1]
+
+    cols = ("data_period_start", "data_period_end", "created", "modified",
+            "n_points", "delta_t")
+
+    def rows(fast):
+        return {
+            r["name"]: tuple(r[c] for c in cols)
+            for r in store.find(fast=fast).collect()
+        }
+
+    exact = rows(False)
+    assert rows(True) == exact
+    # s/0: 72 points under a and 24 under b; s/3 is new in the batch
+    assert exact["s/0"][4] == 96 and exact["s/3"][4] == 30
+    got = {
+        (r["series_id"], r["ts"]): r["value"]
+        for r in store.scan(["s/0"], source="a").collect()
+    }
+    assert got[("s/0", _dt(29 * 3600).replace(tzinfo=None))] == 29.0
+    assert got[("s/0", _dt(30 * 3600).replace(tzinfo=None))] == 30.5
+
+
+def test_store_replace_path_reads_its_input_once(spark, tmp_path):
+    """overwrite_on_write=True takes the replaced series from the batch
+    checkpoint: the caller's frame (a landing-file read, say) is
+    evaluated by exactly one job, so each input row passes once."""
+    store = TsStore(spark, str(tmp_path / "replace_once"))
+    store.store(_hourly(spark, 0, 24), source="src1", ingest_time=_dt(1000))
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(s):
+        seen.add(1)
+        return s
+
+    batch = _hourly(spark, 48, 5, n_series=2).withColumn(
+        "series_id", F.udf(tap, "string")("series_id")
+    )
+    store.store(batch, source="src1", overwrite_on_write=True, ingest_time=_dt(2000))
+    assert seen.value == 10
+    got = {r["name"]: r["n_points"] for r in store.find(fast=True).collect()}
+    assert got == {"s/0": 5, "s/1": 5, "s/2": 24}
+
+
+def test_find_fast_delta_t_mode_ties_match_exact(spark, tmp_path):
+    """find(fast) folds each series' spacing counts — histograms and
+    boundary gaps over several dates — to dt_mode's answer: the most
+    frequent spacing, the smallest one on a tie."""
+    day = 86400
+    # t: spacings 60 x2 and 120 x2 (a tie -> 60), the last 120 across
+    # the date boundary; w: 30 x1 and 90 x3, 90 across the boundary
+    ts = {
+        "t": [day - 240, day - 180, day - 120, day, day + 120],
+        "w": [day - 120, day - 90, day, day + 90, day + 180],
+    }
+    store = TsStore(spark, str(tmp_path / "tie_store"))
+    store.store(
+        spark.createDataFrame(
+            [(s, _dt(t), 1.0) for s, ts_s in ts.items() for t in ts_s],
+            "series_id string, ts timestamp, value double",
+        ),
+        source="src1",
+        ingest_time=_dt(1000),
+    )
+    fast = {r["name"]: r["delta_t"] for r in store.find(fast=True).collect()}
+    exact = {r["name"]: r["delta_t"] for r in store.find().collect()}
+    assert fast == exact == {"t": 60.0, "w": 90.0}
