@@ -7,12 +7,14 @@ per scheme, flatten, and restore input order by the carried index
 (reference: weather/service/dtss_host.py:197-245,
 weather/data_sources/netatmo/repository.py:220-265).
 
-Spark-native: the query manifest is (query_index, series_id); store-
-scheme refs become ONE pruned parquet scan; source-scheme refs go to
-adapters returning DataFrames; everything unions into a single lazy
-plan; order restoration is an ``orderBy(query_index)`` at the collect
-edge (order carried as data, never assumed from row order —
-SURVEY.md §7 hard-part 4).
+Spark-native: the query manifest is one map literal series_id ->
+query positions; store-scheme refs become ONE pruned parquet scan;
+source-scheme refs go to adapters returning DataFrames; everything
+unions into a single lazy plan; order restoration is an
+``orderBy(query_index)`` at the edge that reads rows in order,
+``evaluate()``, and not under the collection cycle's store (order
+carried as data, never assumed from row order — SURVEY.md §7 hard-part
+4).
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from my_weather_spark.model import SeriesRef, UtcPeriod
-from my_weather_spark.session import EngineSession, local_frame
+from my_weather_spark.session import EngineSession, json_literal
 from my_weather_spark.store import TsStore
 
 STORE_SCHEME = "shyft"
@@ -57,6 +59,16 @@ class TsEngine:
         (query_index, ts). Duplicate ids keep their positions (the
         reference preserves the input vector 1:1).
         """
+        # O1: order restoration at the edge that reads the rows in order
+        return self.evaluate_unordered(series_ids, period).orderBy(
+            "query_index", "ts"
+        )
+
+    def evaluate_unordered(self, series_ids: list[str], period: UtcPeriod) -> DataFrame:
+        """``evaluate()``'s rows in no particular order, for a consumer
+        that does not read them in order (the collection cycle's store):
+        the global sort costs a range-sampling job and an exchange, and
+        the optimizer keeps it under a window."""
         if not series_ids:
             raise ValueError("evaluate() requires at least one series id")
         refs = [SeriesRef.parse(s) for s in series_ids]  # raises on bad url
@@ -68,11 +80,13 @@ class TsEngine:
 
         parts: list[DataFrame] = []
         for scheme, idxs in by_scheme.items():
-            urls = [refs[i].url for i in idxs]
+            positions: dict[str, list[int]] = defaultdict(list)
+            for i in idxs:
+                positions[refs[i].url].append(i)
             if scheme == STORE_SCHEME:
                 if self.store is None:
                     raise KeyError("no TsStore attached for shyft:// refs")
-                data = self.store.scan(series_ids=list(set(urls)), period=period)
+                data = self.store.scan(series_ids=list(positions), period=period)
                 # The store merge-dedups only WITHIN a source partition;
                 # the same series stored under two sources would return
                 # duplicate (query_index, ts) rows here and silently
@@ -84,32 +98,31 @@ class TsEngine:
             else:
                 adapter = self.session.adapter(scheme)  # raises on unknown
                 # Dedupe refs before the adapter call: data is keyed by
-                # series_id and the manifest join below fans results
-                # back out to every (duplicate) query position.
-                unique_refs = list({refs[i].url: refs[i] for i in idxs}.values())
+                # series_id and the manifest below fans results back out
+                # to every (duplicate) query position.
+                unique_refs = [refs[ix[0]] for ix in positions.values()]
                 data = adapter.read(self.spark, unique_refs, period)
                 data = data.select("series_id", "ts", "value").where(
                     (F.col("ts") >= F.lit(period.start))
                     & (F.col("ts") <= F.lit(period.end))
                 )
-            # Re-attach query indices: duplicates fan out via the
-            # manifest join (broadcast — the manifest is tiny). The
-            # manifest is a LocalRelation: built as a Python RDD it cost
-            # a Python-worker job on every query just to ship its rows.
-            manifest = local_frame(
-                self.spark,
-                [(i, refs[i].url) for i in idxs],
-                "query_index int, series_id string",
+            # Re-attach query indices: the manifest is one map literal
+            # url -> query positions, and each row explodes its entry, so
+            # duplicate refs fan out with no join and no broadcast job.
+            manifest = json_literal(positions, "map<string,array<int>>")
+            parts.append(
+                data.select(
+                    F.explode(manifest[F.col("series_id")]).alias("query_index"),
+                    "series_id",
+                    "ts",
+                    "value",
+                )
             )
-            parts.append(data.join(F.broadcast(manifest), "series_id", "inner"))
 
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        # O1: order restoration at the edge.
-        return out.select("query_index", "series_id", "ts", "value").orderBy(
-            "query_index", "ts"
-        )
+        return out
 
     # ------------------------------------------------------------------
     def find(self, query: str) -> DataFrame:
@@ -131,12 +144,13 @@ class TsEngine:
         overwrite_on_write: bool = False,
         source: str = "default",
         ingest_time: datetime | None = None,
-    ) -> None:
+    ) -> int:
         """Write path (reference: DtsClient.store_ts, merge semantics
-        — data_collection_task.py:121-126)."""
+        — data_collection_task.py:121-126). Returns the number of rows
+        in ``df``, as ``TsStore.store`` does."""
         if self.store is None:
             raise KeyError("no TsStore attached")
-        self.store.store(
+        return self.store.store(
             df,
             source=source,
             overwrite_on_write=overwrite_on_write,

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from my_weather_spark.model import UtcPeriod
 from my_weather_spark.evaluate import TsEngine
-from my_weather_spark.session import checkpoint
+from my_weather_spark.session import json_literal
 
 
 def utcnow() -> datetime:
@@ -88,25 +88,24 @@ class DataCollectionTask:
         self.runs = 0
 
     def collect(self, now: datetime | None = None) -> int:
-        """One read->store cycle; returns number of points stored."""
+        """One read->store cycle; returns the number of points read,
+        which ``store()`` counts as it materializes the batch."""
         period = self.period_spec.period(now)
-        result = self.engine.evaluate(self.read_ts, period)
+        # The store reads the rows unordered: no global sort for it.
+        result = self.engine.evaluate_unordered(self.read_ts, period)
         # Rebind query ids -> store ids positionally (reference:
         # data_collection_task.py:121-126). query_index is a dense
-        # position, so a literal-array lookup does it with no join: a
-        # mapping frame built as a Python RDD cost a Python-worker job
-        # on every cycle just to ship its rows.
-        store_ids = F.array(*[F.lit(s) for s in self.store_ts])
+        # position, so a lookup in one array literal does it with no
+        # join and no per-id JVM call.
+        store_ids = json_literal(self.store_ts, "array<string>")
         bound = result.select(
             F.element_at(store_ids, F.col("query_index") + 1).alias("series_id"),
             "ts",
             "value",
         )
-        # materialize once, counted by the same job: the store must not
-        # re-run the source read (a paginated rate-limited fetch would
-        # double its calls)
-        bound, n, _ = checkpoint(bound)
-        self.engine.store_ts(bound, source=self.source, ingest_time=now)
+        # store() materializes its batch once, so the source is read
+        # once (a paginated rate-limited fetch would double its calls)
+        n = self.engine.store_ts(bound, source=self.source, ingest_time=now)
         self.runs += 1
         return n
 

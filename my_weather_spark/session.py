@@ -13,6 +13,7 @@ Arrow is enabled for the few pandas-UDF code paths.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import TYPE_CHECKING, Iterable, Sequence
 
@@ -61,6 +62,18 @@ def local_frame(
         [dict(zip(names, row)) for row in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema)
+
+
+def json_literal(value: list | dict, ddl: str) -> Column:
+    """A driver-side list or dict as ONE literal column of type ``ddl``
+    (``array<string>``, ``map<string,array<int>>``, ...).
+
+    ``F.array(*map(F.lit, xs))`` and ``isin(xs)`` cost py4j round trips
+    per element; this is ``from_json`` over one JSON string literal,
+    seven round trips at any length. The string is a constant, so
+    ``ConstantFolding`` evaluates the parse once while optimizing and
+    the plan holds a plain array or map literal."""
+    return F.from_json(F.lit(json.dumps(value, separators=(",", ":"))), ddl)
 
 
 def checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, int, dict]:

@@ -11,20 +11,25 @@ the rate limiter (repository.py:119-120).
 Spark-native scale story: pagination is a *source contract*, not a
 driver bottleneck — the chunk manifest (ref × chunk-range) is computed
 up front from the period and dt, so all blocks can be planned at once;
-block reads here are parquet scans with pushed predicates, and chunks
-union lazily into one DataFrame (no collect).
+block reads here are parquet scans with pushed ts predicates, and
+chunks union lazily into one DataFrame (no collect).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from my_weather_spark.model import SeriesRef, TSINFO_SCHEMA, UtcPeriod
+from my_weather_spark.session import json_literal
 from my_weather_spark.sources.base import SourceAdapter
 from my_weather_spark.sources.rate_limiter import RateLimiter
+
+
+# the backing file's columns, all the adapter reads
+BACKING_SCHEMA = "series_id string, ts timestamp, value double"
 
 
 class ChunkedFileAdapter(SourceAdapter):
@@ -47,11 +52,16 @@ class ChunkedFileAdapter(SourceAdapter):
         self.rate_limiters = rate_limiters or []
         self.calls_made = 0  # observability: how many block calls happened
 
+    def _relation(self, spark) -> DataFrame:
+        # The declared schema: inferring it reads the parquet footers,
+        # one Spark job per read.
+        return spark.read.schema(BACKING_SCHEMA).parquet(self.path)
+
     # -- S1: one rate-limited block ------------------------------------
     def _fetch_block(
         self,
         df: DataFrame,
-        urls: list[str],
+        urls: Column,
         lo_epoch: float,
         hi_epoch: float,
         inclusive_end: bool,
@@ -65,20 +75,21 @@ class ChunkedFileAdapter(SourceAdapter):
         hi = datetime.fromtimestamp(hi_epoch, tz=timezone.utc)
         upper = (F.col("ts") <= F.lit(hi)) if inclusive_end else (F.col("ts") < F.lit(hi))
         return (
-            df.where(F.col("series_id").isin(urls))
+            df.where(F.array_contains(urls, F.col("series_id")))
             .where((F.col("ts") >= F.lit(lo)) & upper)
             .select("series_id", "ts", "value")
         )
 
     # -- S2: paginated scan over a chunk manifest ------------------------
     def read(self, spark, refs: list[SeriesRef], period: UtcPeriod) -> DataFrame:
-        urls = [r.url for r in refs]
+        # one literal for any number of refs: isin() costs JVM calls
+        # per id
+        urls = json_literal([r.url for r in refs], "array<string>")
         span = period.end_epoch - period.start_epoch
         chunk_span = self.max_points * self.nominal_dt
         n_chunks = max(1, math.ceil(span / chunk_span)) if span > 0 else 1
-        # one relation for every chunk: building it infers the schema
-        # from the parquet footers, which runs a Spark job
-        df = spark.read.parquet(self.path)
+        # one relation for every chunk
+        df = self._relation(spark)
         # Chunks are HALF-OPEN [lo, lo+span) except the last, which is
         # inclusive of period.end — no coverage gap between chunks for
         # fractional-second timestamps, no double-read of boundaries.
@@ -94,7 +105,7 @@ class ChunkedFileAdapter(SourceAdapter):
         return out
 
     def find(self, spark, query: SeriesRef) -> DataFrame:
-        df = spark.read.parquet(self.path)
+        df = self._relation(spark)
         # Literal prefix match, NOT rlike on the raw url: an unescaped
         # unanchored regex overmatches ('.../1' also hits '.../10') and
         # a url containing regex metachars would throw or mis-match.

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from my_weather_spark.model import OBSERVATION_SCHEMA, UtcPeriod
@@ -166,11 +166,15 @@ class TsStore:
         source: str = "default",
         overwrite_on_write: bool = False,
         ingest_time: datetime | None = None,
-    ) -> None:
+    ) -> int:
         """Write observations. ``overwrite_on_write=False`` (the
         reference default) merges: existing points at the same
         (series_id, ts) are replaced by the newest ingest, all other
         existing points are kept.
+
+        Returns the number of rows in ``df``, duplicates included,
+        counted by the job that materializes the batch: ``df`` is
+        evaluated once, so a caller hands its source read straight in.
         """
         ensure_utc_session(self.spark)
         it = ingest_time or datetime.now(tz=timezone.utc)
@@ -196,10 +200,16 @@ class TsStore:
         # dropping batch-local losers first cannot change the combined
         # winner. The same job observes the batch's dates: a batch
         # carries one literal source, so its touched (source, date)
-        # partitions are known on the driver with no further job.
-        deduped, _, seen = checkpoint(
-            merge_dedup(incoming), _dates=F.collect_set("date")
+        # partitions are known on the driver with no further job, and
+        # so is the input row count, observed below the window.
+        counted = Observation()
+        deduped, n_kept, seen = checkpoint(
+            merge_dedup(incoming.observe(counted, F.count(F.lit(1)).alias("n"))),
+            _dates=F.collect_set("date"),
         )
+        # A batch the optimizer proves empty loses that observation with
+        # its subtree; any input row leaves a survivor.
+        n_rows = counted.get["n"] if n_kept else 0
         dates = sorted(seen["_dates"])
 
         if not self._exists():
@@ -211,7 +221,7 @@ class TsStore:
             # band) — overwrite it with just this batch instead of
             # merging ghost series into a brand-new store's catalog.
             self._update_catalog(deduped, source, dates, fresh=True)
-            return
+            return n_rows
 
         if overwrite_on_write:
             # Replace whole series: drop ALL existing rows of the
@@ -231,7 +241,7 @@ class TsStore:
                 "partitionOverwriteMode", "static"
             ).mode("overwrite").parquet(self.path)
             self._update_catalog(deduped, source, dates, replace=True)
-            return
+            return n_rows
 
         # Merge path: only read the partitions the batch touches, pruned
         # by literal (source, date) filters at planning time.
@@ -250,6 +260,7 @@ class TsStore:
         # checkpointed post-merge content (out), not the batch alone:
         # a replaced point's old stats must leave the sidecar too
         self._update_catalog(out, source, dates)
+        return n_rows
 
     @staticmethod
     def _touched(source: str, dates: list) -> Column:

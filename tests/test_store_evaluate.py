@@ -14,12 +14,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from my_weather_spark.evaluate import TsEngine
-from my_weather_spark.model import UtcPeriod
+from my_weather_spark.model import SeriesRef, UtcPeriod
 from my_weather_spark.pipeline import (
     DataCollectionPeriodAbsolute,
+    DataCollectionPeriodRelative,
     DataCollectionTask,
 )
 from my_weather_spark.session import EngineSession
+from my_weather_spark.sources.file_source import ChunkedFileAdapter
 from my_weather_spark.sources.heartbeat import HeartbeatAdapter
 from my_weather_spark.sources.mock import MockAdapter
 from my_weather_spark.store import TsStore
@@ -462,8 +464,9 @@ def test_find_fast_catalog_sidecar(spark, tmp_path):
     exact = {r["name"]: r for r in store.find().collect()}
     fast = {r["name"]: r for r in store.find(fast=True).collect()}
     assert set(fast) == set(exact) == {sid_a, sid_b}
-    # the sidecar answers the reference TsInfo fields without a scan,
-    # and the monotone merge tracked both extensions + both ingests
+    # the sidecar answers the reference TsInfo fields without a scan:
+    # the touched partition's rows, recomputed from the merged data,
+    # carry both extensions and both ingests
     for sid in (sid_a, sid_b):
         for f in ("data_period_start", "data_period_end", "created", "modified"):
             assert fast[sid][f] == exact[sid][f], (sid, f)
@@ -728,10 +731,11 @@ def test_catalog_legacy_flat_layout_migrates(spark, tmp_path):
 
 def test_find_fast_is_bound_to_call_time_catalog_snapshot(spark, tmp_path):
     """find(fast, exact_fallback=True) pins the catalog snapshot at
-    call time (r8 ADVICE): the fallback existence probe decides the
-    plan shape eagerly, so the lazy result must read the SAME state —
-    a store() between find() and execution must not surface a newly
-    interleaved series with the fallback branch already pruned away
+    call time: the needs-scan count, observed by the job that
+    checkpoints the answer, decides the plan shape eagerly, so the lazy
+    result must read the SAME state — a store() between find() and
+    execution must not surface a newly interleaved series with the
+    fallback branch already pruned away
     (which would yield NULL delta_t despite the exact-equal
     guarantee). The held DataFrame answers as of find(); a fresh
     find() sees the new state exactly."""
@@ -917,3 +921,180 @@ def test_find_fast_delta_t_mode_ties_match_exact(spark, tmp_path):
     fast = {r["name"]: r["delta_t"] for r in store.find(fast=True).collect()}
     exact = {r["name"]: r["delta_t"] for r in store.find().collect()}
     assert fast == exact == {"t": 60.0, "w": 90.0}
+
+
+# -- the collection cycle over a file source -------------------------------------
+def _cycle(spark, tmp_path, read_ids, store_ids=None, hours=6):
+    """A DataCollectionTask over a ``cloud://`` ChunkedFileAdapter
+    serving ``hours`` of 5-minute points per read id, and its store
+    holding the first half of them, so the cycle takes the merge path.
+    Store ids default to the read ids under ``shyft://``."""
+    store_ids = store_ids or [u.replace("cloud", "shyft", 1) for u in read_ids]
+    schema = "series_id string, ts timestamp, value double"
+    backing = str(tmp_path / "cycle_source")
+    steps = range(0, hours * 3600, 300)
+    spark.createDataFrame(
+        [(u, _dt(t), float(t % 97)) for u in read_ids for t in steps], schema
+    ).write.parquet(backing)
+    sess = EngineSession(spark)
+    sess.register_adapter(ChunkedFileAdapter("cloud", backing))
+    engine = TsEngine(sess, TsStore(spark, str(tmp_path / "cycle_store")))
+    first_half = steps[: len(steps) // 2]
+    engine.store_ts(
+        spark.createDataFrame(
+            [(s, _dt(t), -1.0) for s in store_ids for t in first_half], schema
+        ),
+        ingest_time=_dt(0),
+    )
+    period = DataCollectionPeriodRelative(start_offset=hours * 3600)
+    task = DataCollectionTask("cycle", engine, read_ids, store_ids, period)
+    return task, _dt(hours * 3600 - 300)
+
+
+def test_collection_cycle_job_budget(spark, tmp_path):
+    """A merge-path collect() over a ChunkedFileAdapter runs 8 Spark
+    jobs, all of them store()'s: the batch is materialized once (by the
+    store), the source read infers no schema, the rebind and the query
+    manifest are literals (no broadcast job) and the store's input is
+    not sorted. It ran 13 when collect() checkpointed the rebound batch
+    itself ahead of the store's own checkpoint and read evaluate()'s
+    globally sorted rows."""
+    task, now = _cycle(spark, tmp_path, [f"cloud://st/{i}/t" for i in range(5)])
+    n, jobs = _jobs(spark, "cycle_budget", lambda: task.collect(now=now))
+    assert (n, jobs) == (5 * 72, 8)
+
+
+def test_collection_cycle_reads_its_source_once(spark, tmp_path):
+    """Every source row passes through the cycle's one job exactly once:
+    the store's batch checkpoint is the only materialization."""
+    task, now = _cycle(spark, tmp_path, [f"cloud://st/{i}/t" for i in range(3)])
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(v):
+        seen.add(1)
+        return v
+
+    adapter = task.engine.session.adapter("cloud")
+    read = adapter.read
+    adapter.read = lambda *a: read(*a).withColumn(
+        "value", F.udf(tap, "double")("value")
+    )
+    assert task.collect(now=now) == 3 * 72
+    assert seen.value == 3 * 72
+
+
+def test_collection_cycle_jvm_calls_do_not_grow_with_refs(spark, tmp_path):
+    """Planning a cycle costs a fixed number of py4j round trips, however
+    many refs it rebinds: each id list is one JSON literal, not one
+    ``lit`` per id (``isin`` and ``F.array`` of literals cost about eight
+    calls per id). py4j's garbage-collection notices are not counted;
+    they arrive whenever Python frees a JVM handle."""
+    import gc
+
+    from pyspark import SparkContext
+
+    ids = [f"cloud://st/{i}/t" for i in range(250)]
+    task, now = _cycle(spark, tmp_path, ids, hours=1)
+    small = DataCollectionTask(
+        "small", task.engine, ids[:5], task.store_ts[:5], task.period_spec
+    )
+    client = SparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *args, **kwargs):
+        calls[0] += not command.startswith("m\nd\n")
+        return send(command, *args, **kwargs)
+
+    def count(t):
+        calls[0] = 0
+        gc.collect()
+        client.send_command = counting
+        try:
+            t.collect(now=now)
+        finally:
+            client.send_command = send
+        return calls[0]
+
+    count(small)  # warm: first-use class lookups
+    n_small, n_large = count(small), count(task)
+    assert n_large - n_small <= 20, (n_small, n_large)
+
+
+def test_collection_ids_with_quotes_escapes_and_non_ascii_round_trip(spark, tmp_path):
+    """Ids travel as JSON literals through the adapter filter, the query
+    manifest and the rebind: quotes, backslashes, percent signs and
+    non-ASCII characters must come back byte-for-byte."""
+    odd = ["it's", 'say "hi"', "back\\slash", "100%", "Ærø ☃ 😀", "tab\there"]
+    read_ids = [f"cloud://st/{s}" for s in odd]
+    store_ids = [f"shyft://odd/{s}/v" for s in odd]
+    task, now = _cycle(spark, tmp_path, read_ids, store_ids, hours=1)
+    adapter = task.engine.session.adapter("cloud")
+    hour = UtcPeriod(0, 3600)
+    got = adapter.read(spark, [SeriesRef.parse(u) for u in read_ids], hour)
+    assert {r["series_id"] for r in got.collect()} == set(read_ids)
+    refs = read_ids + read_ids[:1]
+    positions = {}
+    for r in task.engine.evaluate(refs, hour).collect():
+        positions.setdefault(r["query_index"], set()).add(r["series_id"])
+    assert positions == {i: {u} for i, u in enumerate(refs)}
+    assert task.collect(now=now) == len(odd) * 12
+    stored = {}
+    for r in task.engine.store.scan(series_ids=store_ids).collect():
+        stored[r["series_id"]] = stored.get(r["series_id"], 0) + 1
+    assert stored == dict.fromkeys(store_ids, 12)
+
+
+def test_collection_two_refs_bound_to_one_store_id_count_rows_read(engine):
+    """collect() returns the rows read, not the points the merge keeps:
+    two refs rebound to one store id deliver 2 x 10 rows for 10
+    points. store() counts its input likewise, also a provably empty
+    one."""
+    task = DataCollectionTask(
+        "two_to_one",
+        engine,
+        ["mock1://s/1", "mock1://s/2"],
+        ["shyft://one", "shyft://one"],
+        DataCollectionPeriodAbsolute(_dt(0), _dt(9)),
+    )
+    assert task.collect(now=_dt(100)) == 20
+    rows = engine.evaluate(["shyft://one"], UtcPeriod(0, 9)).collect()
+    assert len(rows) == 10
+    empty = engine.spark.range(1).select(
+        F.lit("shyft://one").alias("series_id"),
+        F.lit(None).cast("timestamp").alias("ts"),
+        F.lit(1.0).alias("value"),
+    ).where(F.lit(False))
+    assert engine.store_ts(empty, ingest_time=_dt(200)) == 0
+
+
+def test_cycle_and_evaluate_plans_fold_their_literals(spark, tmp_path, monkeypatch):
+    """The id lists are parsed while optimizing (no JsonToStructs is left
+    to run per row), and the query manifest is a map lookup, not a
+    broadcast join: neither the evaluate plan nor the cycle's batch
+    plans a BroadcastHashJoin."""
+    ids = [f"cloud://st/{i}/t" for i in range(3)]
+    task, now = _cycle(spark, tmp_path, ids, hours=1)
+    batches = []
+    store = TsStore.store
+
+    def recording(self, df, *args, **kwargs):
+        batches.append(df)
+        return store(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(TsStore, "store", recording)
+    task.collect(now=now)
+    frames = {
+        "evaluate": task.engine.evaluate(
+            ids + task.store_ts + ids[:1], UtcPeriod(0, 3600)
+        ),
+        "cycle batch": batches[0],
+    }
+    for name, df in frames.items():
+        qe = df._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
+        assert "JsonToStructs" not in optimized, name
+        assert "from_json" not in optimized, name
+        assert "BroadcastHashJoin" not in physical, name
+        assert "BroadcastExchange" not in physical, name
