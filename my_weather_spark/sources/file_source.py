@@ -61,7 +61,7 @@ class ChunkedFileAdapter(SourceAdapter):
     def _fetch_block(
         self,
         df: DataFrame,
-        urls: Column,
+        wanted: Column,
         lo_epoch: float,
         hi_epoch: float,
         inclusive_end: bool,
@@ -75,16 +75,21 @@ class ChunkedFileAdapter(SourceAdapter):
         hi = datetime.fromtimestamp(hi_epoch, tz=timezone.utc)
         upper = (F.col("ts") <= F.lit(hi)) if inclusive_end else (F.col("ts") < F.lit(hi))
         return (
-            df.where(F.array_contains(urls, F.col("series_id")))
+            df.where(wanted)
             .where((F.col("ts") >= F.lit(lo)) & upper)
             .select("series_id", "ts", "value")
         )
 
     # -- S2: paginated scan over a chunk manifest ------------------------
     def read(self, spark, refs: list[SeriesRef], period: UtcPeriod) -> DataFrame:
-        # one literal for any number of refs: isin() costs JVM calls
-        # per id
-        urls = json_literal([r.url for r in refs], "array<string>")
+        # One literal for any number of refs: isin() costs JVM calls per
+        # id. array_contains is not pushed down to parquet; the ids'
+        # range is, so row groups outside it are still skipped.
+        ids = [r.url for r in refs]
+        sid = F.col("series_id")
+        wanted = sid.between(min(ids), max(ids)) & F.array_contains(
+            json_literal(ids, "array<string>"), sid
+        )
         span = period.end_epoch - period.start_epoch
         chunk_span = self.max_points * self.nominal_dt
         n_chunks = max(1, math.ceil(span / chunk_span)) if span > 0 else 1
@@ -98,7 +103,7 @@ class ChunkedFileAdapter(SourceAdapter):
             lo = period.start_epoch + i * chunk_span
             last = i == n_chunks - 1
             hi = period.end_epoch if last else lo + chunk_span
-            chunks.append(self._fetch_block(df, urls, lo, hi, inclusive_end=last))
+            chunks.append(self._fetch_block(df, wanted, lo, hi, inclusive_end=last))
         out = chunks[0]
         for c in chunks[1:]:
             out = out.unionByName(c)  # U1: chunks disjoint by construction

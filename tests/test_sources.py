@@ -1,6 +1,7 @@
 """Source adapter tests: pagination contract, rate limiting, supervision."""
 
 import itertools
+import re
 import threading
 import time
 from datetime import datetime, timezone
@@ -103,6 +104,28 @@ def test_chunked_read_builds_one_relation(spark, backing):
     assert adapter.calls_made == 3
     assert len(sc.statusTracker().getJobIdsForGroup("chunked_read_build")) == 0
     assert out.count() == 3 * 1024
+
+
+def test_chunked_read_pushes_an_id_predicate_to_parquet(spark, backing):
+    # The ids travel as one array literal, which parquet cannot push
+    # down; the scan must still push a series_id predicate (not just
+    # IsNotNull) so a file laid out by series skips other row groups.
+    path, url = backing
+    adapter = ChunkedFileAdapter("chunked", path)
+    refs = [SeriesRef.parse(url), SeriesRef.parse("chunked://station/2")]
+    out = adapter.read(spark, refs, UtcPeriod(0, 3000))
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")  # the plan string abbreviates the list
+    try:
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    pushed = [line for line in plan.splitlines() if "PushedFilters" in line]
+    assert pushed
+    for line in pushed:
+        assert re.search(r"PushedFilters: \[[^\]]*\w+\(series_id,", line), line
+    assert out.count() == 11
 
 
 def test_chunked_rate_limited(spark, backing):
