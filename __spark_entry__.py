@@ -1248,30 +1248,6 @@ def w1_lag_delta(spark, sf_dir):
     )
 
 
-@_q("w1_lag_delta_scaled", _W1_SQL)
-def w1_lag_delta_scaled(spark, sf_dir):
-    """The SAME per-series lag the 100 TB way: a per-key lag window
-    serializes each key's history through one task, so the scaled twin
-    uses ops/ranking.grouped_lag — range-partitioned contiguous
-    slices, within-partition Arrow shift with batch carry, and exactly
-    one boundary row per partition handed forward. Shares
-    w1_lag_delta's oracle bit-for-bit."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        "ts",
-        F.unix_micros("ts").alias("_us"),
-    )
-    lagged = ranking_ops.grouped_lag(
-        e, ["event_type"], ["ts", "event_id"], ["_us"]
-    )
-    return lagged.select(
-        "event_type",
-        "event_id",
-        (F.col("_us") - F.col("_us_prev")).alias("delta_us"),
-    )
-
-
 @_q(
     "a4_dt_mode",
     f"""
@@ -1328,12 +1304,13 @@ def w5_sliding_count(spark, sf_dir):
 
 @_q("w5_sliding_count_scaled", _W5_SQL)
 def w5_sliding_count_scaled(spark, sf_dir):
-    """The SAME sliding-range count the 100 TB way: a range-frame
-    window is a per-key serial scan, so the scaled twin decomposes
-    count[s-600, s] = cum(s) - cum(s-601) over dense 600s-bin prefix
-    sums (ops/ranking.sliding_range_count — grouped_prefix_sum on a
-    tiny (key, bin) table + bucket joins bounded by one bin). Counting
-    is exact, so it shares w5_sliding_count's oracle bit-for-bit."""
+    """The SAME sliding-range count without a per-key serial scan: a
+    range-frame window sorts each key on one task, so the scaled twin
+    decomposes count[s-600, s] = cum(s) - cum(s-601) over dense
+    600s-bin prefix sums (ops/ranking.sliding_range_count — a running
+    sum over a tiny (key, bin) table + bucket joins bounded by one
+    bin). Counting is exact, so it shares w5_sliding_count's oracle
+    bit-for-bit."""
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1373,32 +1350,6 @@ def running_total(spark, sf_dir):
             / 100.0,
             2,
         ).alias("running_value"),
-    )
-
-
-@_q("running_total_scaled", _RUNNING_TOTAL_SQL)
-def running_total_scaled(spark, sf_dir):
-    """The SAME per-type running total computed the 100 TB way: a
-    per-key ordered window sends each key's entire history to ONE task
-    (5 event types = 5 tasks no matter the cluster), so the scaled
-    twin uses ops/ranking.grouped_prefix_sum — range-partitioned
-    contiguous slices, per-(partition, key) partials cumulated over a
-    tiny table, within-partition Arrow carry. Integer cents make the
-    distributed sum bit-identical to the sequential window, so it
-    shares running_total's oracle."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        "ts",
-        F.round(F.col("value") * 100).cast("long").alias("_cents"),
-    )
-    cum = ranking_ops.grouped_prefix_sum(
-        e, ["event_type"], ["ts", "event_id"], "_cents", out_col="_cum"
-    )
-    return cum.select(
-        "event_id",
-        "event_type",
-        F.round(F.col("_cum").cast("long") / 100.0, 2).alias("running_value"),
     )
 
 
@@ -1551,58 +1502,6 @@ def w2_end_extension(spark, sf_dir):
     )
 
 
-@_q("w2_end_extension_scaled", _W2_SQL)
-def w2_end_extension_scaled(spark, sf_dir):
-    """The SAME end-of-validity extension with ZERO windows: deltas
-    via ops/ranking.grouped_lag (one boundary row per partition), the
-    per-series dt-mode and last point via max_by / max-struct
-    aggregations (partial+final combine, no per-series ordered scan).
-    Shares w2_end_extension's oracle bit-for-bit."""
-    e = _events_series(spark, sf_dir)
-    hourly = ts_ops.resample(e, "1 hour", "avg").withColumn(
-        "value", ts_ops.round6_portable(F.col("value"))
-    )
-    h = hourly.select(
-        "series_id", "ts", "value",
-        F.expr("unix_micros(ts) div 1000000").alias("_sec"),
-    )
-    lagged = ranking_ops.grouped_lag(h, ["series_id"], ["ts"], ["_sec"])
-    deltas = lagged.where(F.col("_sec_prev").isNotNull()).select(
-        "series_id", (F.col("_sec") - F.col("_sec_prev")).alias("_dt")
-    )
-    # mode with ties toward the SMALLEST dt: lexicographic max of
-    # (count, -dt) — pure aggregation, no ranking window
-    mode = (
-        deltas.groupBy("series_id", "_dt")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy("series_id")
-        .agg(
-            F.max(
-                F.struct(F.col("_c"), (-F.col("_dt")).alias("_nd"), F.col("_dt"))
-            ).alias("_m")
-        )
-        .select("series_id", F.col("_m._dt").alias("_dt"))
-    )
-    last = (
-        h.groupBy("series_id")
-        .agg(F.max_by(F.struct("_sec", "value"), "ts").alias("_l"))
-        .select(
-            "series_id",
-            F.col("_l._sec").alias("_sec"),
-            F.col("_l.value").alias("value"),
-        )
-    )
-    synthetic = last.join(mode, "series_id").select(
-        "series_id",
-        ((F.col("_sec") + F.col("_dt")) * 1_000_000).alias("ts_us"),
-        "value",
-    )
-    base = hourly.select(
-        "series_id", F.unix_micros("ts").alias("ts_us"), "value"
-    )
-    return base.unionByName(synthetic)
-
-
 @_q(
     "w3_staircase",
     """
@@ -1737,7 +1636,11 @@ _ASOF_SQL = """
     """
 
 
-def _asof_views(spark, sf_dir, distributed_fill):
+@_q("asof_join_views", _ASOF_SQL)
+def asof_join_views(spark, sf_dir):
+    """As-of join (range/as-of row of SURVEY §2): latest 'view' value
+    at-or-before each 'click', per user — via the engine's
+    union+window asof_join (one shuffle, no pandas)."""
     e = load_table(spark, sf_dir, "events")
     clicks = e.where(F.col("event_type") == "click").select(
         F.col("user_id").cast("string").alias("series_id"), "ts", "value"
@@ -1745,36 +1648,13 @@ def _asof_views(spark, sf_dir, distributed_fill):
     views = e.where(F.col("event_type") == "view").select(
         F.col("user_id").cast("string").alias("series_id"), "ts", "value"
     )
-    out = ts_ops.asof_join(
-        clicks,
-        views,
-        right_value_col="prior_view_value",
-        distributed_fill=distributed_fill,
-    )
+    out = ts_ops.asof_join(clicks, views, right_value_col="prior_view_value")
     return out.select(
         F.col("series_id").cast("long").alias("user_id"),
         F.unix_micros("ts").alias("ts_us"),
         F.col("value").alias("click_value"),
         "prior_view_value",
     )
-
-
-@_q("asof_join_views", _ASOF_SQL)
-def asof_join_views(spark, sf_dir):
-    """As-of join (range/as-of row of SURVEY §2): latest 'view' value
-    at-or-before each 'click', per user — via the engine's
-    union+window asof_join (one shuffle, no pandas)."""
-    return _asof_views(spark, sf_dir, distributed_fill=False)
-
-
-@_q("asof_join_views_scaled", _ASOF_SQL)
-def asof_join_views_scaled(spark, sf_dir):
-    """The SAME as-of join the 100 TB way: the union+forward-fill's
-    one per-series window becomes ops/ranking.grouped_last_fill —
-    range-partitioned (series, ts, side) slices, one boundary struct
-    per partition, vectorized Arrow ffill. Fill pairing is exact, so
-    it shares asof_join_views' oracle bit-for-bit."""
-    return _asof_views(spark, sf_dir, distributed_fill=True)
 
 
 @_q(
@@ -3650,29 +3530,11 @@ def ccnet_ppl_buckets(spark, sf_dir):
     third, tail the candidate-drop third. Same reference split as
     lm_perplexity_scores (every 97th doc); this row SUBSUMES that
     query (identical per-doc columns through the same model CTEs).
-    Windowed BASE variant (plain per-language ntile — fine at toy
-    scale); `ccnet_ppl_buckets_scaled` is the ranged-sort twin sharing
-    this oracle bit-for-bit. Unscored short docs keep a NULL bucket."""
+    Unscored short docs keep a NULL bucket."""
     docs = load_table(spark, sf_dir, "documents")
     ref = docs.where(F.col("doc_id") % 97 == 0)
     corpus = docs.where(F.col("doc_id") % 97 != 0)
-    return llm_lm.ppl_buckets(corpus, ref, group_col="lang", distributed=False)
-
-
-@_q("ccnet_ppl_buckets_scaled", _CCNET_SQL)
-def ccnet_ppl_buckets_scaled(spark, sf_dir):
-    """Distributed twin of ccnet_ppl_buckets (same oracle,
-    bit-identical): ops/ranking.grouped_row_number + integer
-    ntile_col_expr replace the per-language ntile window — which sorts
-    each language on ONE task, the canonical straggler at 100 TB with
-    few, huge languages. Pays the ranged-sort machinery at toy scale
-    BY DESIGN (the w5/deciles/doc_length `_scaled` precedent);
-    (ppl, doc_id) is a total order so both forms replay the oracle's
-    window exactly."""
-    docs = load_table(spark, sf_dir, "documents")
-    ref = docs.where(F.col("doc_id") % 97 == 0)
-    corpus = docs.where(F.col("doc_id") % 97 != 0)
-    return llm_lm.ppl_buckets(corpus, ref, group_col="lang", distributed=True)
+    return llm_lm.ppl_buckets(corpus, ref, group_col="lang")
 
 
 _DOCLEN_PCTL_SQL = """
@@ -4230,22 +4092,6 @@ def resample_time_weighted_q(spark, sf_dir):
     )
 
 
-@_q("resample_time_weighted_scaled", _TWA_SQL)
-def resample_time_weighted_scaled(spark, sf_dir):
-    """The SAME time-weighted resample the 100 TB way: its only window
-    is the per-series lead(t), which with few series serializes each
-    series through one task — the scaled twin swaps it for
-    ops/ranking.grouped_lead (the lag shift over a descending ranged
-    sort, one boundary row per partition). Segment pairing is
-    exact, the bucket explode + hash-agg downstream are already
-    distributed, so it shares resample_time_weighted's oracle
-    bit-for-bit."""
-    e = _events_series(spark, sf_dir).select("series_id", "ts", "value")
-    return ts_ops.resample_time_weighted(
-        e, bucket_seconds=6 * 3600, exact_value_decimals=2, distributed_lead=True
-    )
-
-
 _INTERP_SQL = """
     WITH pts AS (
       SELECT event_type AS s, epoch_us(ts) AS t, value AS v FROM events),
@@ -4284,22 +4130,6 @@ def instant_interpolation(spark, sf_dir):
     lerped onto the hourly grid via the engine's interpolate_at."""
     e = _events_series(spark, sf_dir).select("series_id", "ts", "value")
     out = ts_ops.interpolate_at(e, grid_dt_seconds=3600)
-    return out.select("series_id", F.unix_micros("ts").alias("t_us"), "value")
-
-
-@_q("instant_interpolation_scaled", _INTERP_SQL)
-def instant_interpolation_scaled(spark, sf_dir):
-    """The SAME linear interpolation the 100 TB way: both per-series
-    fill windows (bracketing point before/after each grid time) come
-    from ONE ops/ranking.grouped_bidi_fill pass over a single
-    range-partitioned sort — the backward fill streams with a
-    hold-back buffer, and interpolate_at patches the one tie case
-    where a grid point lands exactly on a data point (NULL _next at
-    the last data point -> equal-t _prev, where the lerp degenerates
-    to v0). The arithmetic is unchanged, so it shares
-    instant_interpolation's oracle bit-for-bit."""
-    e = _events_series(spark, sf_dir).select("series_id", "ts", "value")
-    out = ts_ops.interpolate_at(e, grid_dt_seconds=3600, distributed_fill=True)
     return out.select("series_id", F.unix_micros("ts").alias("t_us"), "value")
 
 
@@ -4675,14 +4505,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's oracle check covers only the FIRST 50 registry entries
-# per round (queries() iterates insertion order). Round-16 window:
-# (d) all ten ops/ranking twins, whose scanners were rewritten onto one
-# pin, one shift kernel and one fill kernel in r16 — five of them new
-# to the window (w1_lag_delta_scaled, w2_end_extension_scaled,
-# asof_join_views_scaled, doc_length_percentiles_scaled,
-# ccnet_ppl_buckets_scaled); (c) the six near-dup queries rewritten in
-# r12-r15 (MinHash bucket join, SimHash/SRP bucket kernel, star
-# connected components, dense Jaccard); (a) 10 of the r8 greens — five
+# per round (queries() iterates insertion order). The window holds:
+# (d) the three ops/ranking scanner queries (value_deciles_scaled,
+# w5_sliding_count_scaled, doc_length_percentiles_scaled) and the
+# seven window queries whose shift, fill, prefix-sum and per-group
+# row-number scanner twins were deleted when they measured no faster
+# than the window on a hot key (SKEW_r24.json): w1_lag_delta,
+# w2_end_extension, running_total, resample_time_weighted,
+# asof_join_views, instant_interpolation, ccnet_ppl_buckets;
+# (c) the six near-dup queries rewritten in r12-r15 (MinHash bucket
+# join, SimHash/SRP bucket kernel, star connected components, dense
+# Jaccard); (a) 10 of the r8 greens — five
 # more moved to (d), and dropped for (d)'s newcomers: the four mm_*
 # payload queries and vocab_top_words, compositions untouched since
 # r8; (b) the r9 TPC-H / set-op / f-family greens. The rows-only set
@@ -4690,12 +4523,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # tests/test_rows_only_pins.py — stronger than the driver's rows-only
 # count), apart from srp_cosine_near_dup, which (c) names.
 _DRIVER_PRIORITY = [
-    # (d) ops/ranking twins
-    "value_deciles_scaled", "running_total_scaled", "w5_sliding_count_scaled",
-    "w1_lag_delta_scaled", "w2_end_extension_scaled",
-    "resample_time_weighted_scaled", "asof_join_views_scaled",
-    "instant_interpolation_scaled", "doc_length_percentiles_scaled",
-    "ccnet_ppl_buckets_scaled",
+    # (d) ops/ranking scanners and the window bases of the deleted twins
+    "value_deciles_scaled", "running_total", "w5_sliding_count_scaled",
+    "w1_lag_delta", "w2_end_extension",
+    "resample_time_weighted", "asof_join_views",
+    "instant_interpolation", "doc_length_percentiles_scaled",
+    "ccnet_ppl_buckets",
     # (c) near-dup queries rewritten in r12-r15
     "minhash_lsh_pairs", "lsh_jaccard_near_dup", "minhash_signatures",
     "near_dup_components", "srp_cosine_near_dup", "jaccard_pairs_by_source",

@@ -254,7 +254,6 @@ def ppl_buckets(
     alpha: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    distributed: bool = True,
 ) -> DataFrame:
     """CCNet's head/middle/tail perplexity bucketing (Wenzek et al.
     2020 §4.3): per ``group_col`` (per language in the paper), rank
@@ -265,17 +264,11 @@ def ppl_buckets(
     score (NULL ppl) keep a NULL bucket, exactly as they carry no
     evidence either way.
 
-    Scale shape (``distributed=True``, the default): a per-group ntile
-    window would sort each language on ONE task (languages are few and
-    huge — the canonical straggler); this uses
-    ops.ranking.grouped_row_number (one ranged global sort + a tiny
-    per-group broadcast) and derives the tile with pure integer
-    arithmetic (ntile_col_expr) — bit-identical to the window and
-    engine-portable. ``distributed=False`` runs the plain ntile window
-    instead (faster at toy scale, same rows bit-for-bit — the
-    asof/interpolate ``distributed_fill`` convention). Tie order
-    (ppl, id) is total, so the bucketing is deterministic and
-    replayable in the SQL oracle.
+    Shape: one per-group row_number + count window, the tile derived
+    with pure integer arithmetic (ntile_col_expr) — bit-identical to
+    the ntile window and engine-portable. Tie order (ppl, id) is
+    total, so the bucketing is deterministic and replayable in the SQL
+    oracle.
     """
     if len(labels) != k:
         raise ValueError(f"need exactly k={k} labels, got {len(labels)}")
@@ -289,57 +282,30 @@ def ppl_buckets(
     scored = perplexity_scores(
         src, ref, alpha, text_col, id_col, carry_cols=(gc,)
     )
-    if distributed:
-        # checkpoint the scored corpus ONCE: both branches below
-        # would otherwise re-run the whole LM scoring chain — the
-        # dsir scored-keys rule. LAZY so materialization piggybacks
-        # on the first consumer's job.
-        scored = scored.localCheckpoint(eager=False)
-        ranked = ranking.grouped_row_number(
-            scored.where(F.col("ppl").isNotNull()), gc, ["ppl", id_col]
-        )
-        # ranked rows carry every scored column, so the bucket is
-        # computed IN PLACE and the scoreless docs union back with a
-        # NULL bucket — no corpus-size join back (the old
-        # scored JOIN buckets shape shuffled two corpus-size frames
-        # by id just to re-attach one derived column).
-        bucketed = ranked.select(
-            *scored.columns,
-            F.element_at(
-                label_arr, ranking.ntile_col_expr("grn", "n_group", k)
-            ).alias("bucket"),
-        )
-        unscored = scored.where(F.col("ppl").isNull()).withColumn(
-            "bucket", F.lit(None).cast("string")
-        )
-        out = bucketed.unionByName(unscored)
-    else:
-        # Single window pass, no checkpoint, no join back: NULL-ppl
-        # docs sort LAST within their group (isNull() ascending), so
-        # scored docs hold row numbers 1..m where m = count(ppl) over
-        # the group (count ignores NULLs) — exactly the ranks the
-        # filtered ntile(k) would assign — and ntile_col_expr turns
-        # (rank, m) into the identical tile by integer arithmetic.
-        # NULL-ppl docs keep a NULL bucket via the when().
-        from pyspark.sql import Window as W
+    # Single window pass, no checkpoint, no join back: NULL-ppl docs
+    # sort LAST within their group (isNull() ascending), so scored docs
+    # hold row numbers 1..m where m = count(ppl) over the group (count
+    # ignores NULLs) — exactly the ranks the filtered ntile(k) would
+    # assign — and ntile_col_expr turns (rank, m) into the identical
+    # tile by integer arithmetic. NULL-ppl docs keep a NULL bucket via
+    # the when().
+    from pyspark.sql import Window as W
 
-        w = W.partitionBy(gc).orderBy(
-            F.col("ppl").isNull(), "ppl", id_col
-        )
-        out = (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .withColumn("_m", F.count("ppl").over(W.partitionBy(gc)))
-            .withColumn(
-                "bucket",
-                F.when(
-                    F.col("ppl").isNotNull(),
-                    F.element_at(
-                        label_arr, ranking.ntile_col_expr("_rn", "_m", k)
-                    ),
+    w = W.partitionBy(gc).orderBy(F.col("ppl").isNull(), "ppl", id_col)
+    out = (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .withColumn("_m", F.count("ppl").over(W.partitionBy(gc)))
+        .withColumn(
+            "bucket",
+            F.when(
+                F.col("ppl").isNotNull(),
+                F.element_at(
+                    label_arr, ranking.ntile_col_expr("_rn", "_m", k)
                 ),
-            )
-            .drop("_rn", "_m")
+            ),
         )
+        .drop("_rn", "_m")
+    )
     if group_col is None:
         out = out.drop(gc)
     return out

@@ -85,7 +85,6 @@ def pack_bins(
     group_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    scaled: bool = False,
 ) -> DataFrame:
     """(id, group, n_tokens, size_class, bin_in_class): whole-document
     bin packing into ``capacity``-token bins — harmonic size classes
@@ -102,11 +101,6 @@ def pack_bins(
     NULL ``token_col`` value) are coalesced to 0 first, so they take
     the documented zero path (one slot, ``n_tokens`` = 0) instead of
     propagating NULL through the classing arithmetic.
-
-    ``scaled=True`` swaps the per-(group, class) ranking window for
-    ops.ranking.grouped_row_number's ranged global sort — same rows
-    bit for bit (pinned in tests); use it when a single (group, class)
-    stratum would swamp one task at true corpus scale.
     """
     if capacity <= 0:
         raise ValueError(f"capacity must be positive, got {capacity}")
@@ -131,19 +125,8 @@ def pack_bins(
         tokens.alias("n_tokens"),
         size_class.alias("size_class"),
     )
-    if scaled:
-        from my_weather_spark.ops.ranking import grouped_row_number
-
-        # struct key, not a string concat: no separator-collision risk
-        # for group values containing the join byte (structs are
-        # orderable, so the ranged sort and groupBy both take them).
-        key = F.struct(F.col(group_col), F.col("size_class"))
-        ranked = grouped_row_number(
-            base.withColumn("_pg", key), "_pg", [id_col], out_col="_rn"
-        ).drop("_pg", "n_group")
-    else:
-        w = W.partitionBy(group_col, "size_class").orderBy(id_col)
-        ranked = base.withColumn("_rn", F.row_number().over(w))
+    w = W.partitionBy(group_col, "size_class").orderBy(id_col)
+    ranked = base.withColumn("_rn", F.row_number().over(w))
     rn = F.col("_rn").cast("long")
     return ranked.select(
         id_col,

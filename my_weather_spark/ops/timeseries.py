@@ -144,41 +144,16 @@ def interpretation_expand(
     point_fx: str | None = None,
     *,
     point_fx_col: str | None = None,
-    distributed_lead: bool = False,
 ) -> DataFrame:
     if (point_fx is None) == (point_fx_col is None):
         raise ValueError("give exactly one of point_fx / point_fx_col")
-
-    def _with_next(frame: DataFrame) -> DataFrame:
-        # the one window here is the per-series lead(ts); with few hot
-        # series the distributed twin (ops.ranking.grouped_lead) keeps
-        # the expansion parallel — same contract as resample's flag
-        if distributed_lead:
-            from my_weather_spark.ops.ranking import grouped_lead
-
-            # carry MICROS, not the timestamp itself: the Arrow shift
-            # moves lead values through object arrays, where datetime64
-            # round-trips shift under the session timezone; integers
-            # are exact (same convention as resample's twin)
-            return (
-                grouped_lead(
-                    frame.withColumn("_tl", F.unix_micros(F.col(TS))),
-                    [SERIES],
-                    [TS],
-                    ["_tl"],
-                    suffix="_n",
-                )
-                .withColumn("_next_ts", F.timestamp_micros(F.col("_tl_n")))
-                .drop("_tl", "_tl_n")
-            )
-        return frame.withColumn("_next_ts", F.lead(TS).over(_series_window()))
+    with_next = df.withColumn("_next_ts", F.lead(TS).over(_series_window()))
 
     if point_fx is not None:
         if point_fx == POINT_INSTANT_VALUE:
             return df.select(SERIES, TS, VALUE)
         if point_fx != POINT_AVERAGE_VALUE:
             raise ValueError(f"unknown point interpretation {point_fx!r}")
-        with_next = _with_next(df)
         pairs = with_next.select(
             SERIES,
             F.explode(
@@ -197,7 +172,6 @@ def interpretation_expand(
     # interpretations raise at runtime (CaseWhen evaluates raise_error
     # only on rows that fall through both branches).
     fx = F.col(point_fx_col)
-    with_next = _with_next(df)
 
     def _pt(t):
         return F.struct(t.alias(TS), F.col(VALUE).alias(VALUE))
@@ -340,7 +314,6 @@ def resample_time_weighted(
     df: DataFrame,
     bucket_seconds: int,
     exact_value_decimals: int | None = None,
-    distributed_lead: bool = False,
 ) -> DataFrame:
     """(series_id, bucket_us, twa_value, covered_us).
 
@@ -354,14 +327,6 @@ def resample_time_weighted(
     sum exact integer units instead of doubles — the v*overlap products
     are large (value x microseconds), so a double sum's rounding error
     is order-dependent; integer sums are reproducible across engines.
-
-    ``distributed_lead``: the only window here is the per-series
-    ``lead(t)`` — with FEW series (the hot-key shape) it serializes
-    each series' history through one task. True swaps it for
-    ops.ranking.grouped_lead (range-partitioned contiguous slices, one
-    boundary row per partition): identical output — lead pairing is
-    exact, not a float reorder — everything downstream is already a
-    distributed explode + hash-agg.
     """
     w_us = int(bucket_seconds) * 1_000_000
     pts = df.select(
@@ -369,27 +334,9 @@ def resample_time_weighted(
         F.unix_micros(F.col(TS)).alias("_t"),
         F.col(VALUE).alias("_v"),
     )
-    if distributed_lead:
-        from my_weather_spark.ops.ranking import grouped_lead
-
-        # carry a duplicate of _t so the boundary struct has distinct
-        # field names (order col and lead col must not collide)
-        segs = (
-            grouped_lead(
-                pts.withColumn("_tl", F.col("_t")),
-                [SERIES],
-                ["_t"],
-                ["_tl"],
-                suffix="_n",
-            )
-            .withColumnRenamed("_tl_n", "_tn")
-            .drop("_tl")
-        )
-    else:
-        segs = pts.withColumn(
-            "_tn", F.lead("_t").over(W.partitionBy(SERIES).orderBy("_t"))
-        )
-    segs = segs.where(F.col("_tn").isNotNull() & (F.col("_tn") > F.col("_t")))
+    segs = pts.withColumn(
+        "_tn", F.lead("_t").over(W.partitionBy(SERIES).orderBy("_t"))
+    ).where(F.col("_tn").isNotNull() & (F.col("_tn") > F.col("_t")))
     exploded = segs.select(
         SERIES,
         "_t",
@@ -444,7 +391,6 @@ def resample_by_interpretation(
     point_fx_col: str,
     bucket_seconds: int,
     exact_value_decimals: int | None = None,
-    distributed_lead: bool = False,
 ) -> DataFrame:
     """(series_id, point_fx, bucket_us, value, covered_us); covered_us
     is NULL on INSTANT series (a point mean covers no time span).
@@ -473,9 +419,7 @@ def resample_by_interpretation(
     avg_in = checked.where(F.col(point_fx_col) == POINT_AVERAGE_VALUE).select(
         SERIES, TS, VALUE
     )
-    twa = resample_time_weighted(
-        avg_in, bucket_seconds, exact_value_decimals, distributed_lead=distributed_lead
-    )
+    twa = resample_time_weighted(avg_in, bucket_seconds, exact_value_decimals)
     avg_arm = twa.select(
         SERIES,
         F.lit(POINT_AVERAGE_VALUE).alias(point_fx_col),
@@ -491,9 +435,7 @@ def resample_by_interpretation(
 # the lerp of the bracketing points. Spark-native via the same
 # union-tag + forward/backward struct-fill trick as asof_join: one
 # shuffle on series_id, no pandas.
-def interpolate_at(
-    df: DataFrame, grid_dt_seconds: int, distributed_fill: bool = False
-) -> DataFrame:
+def interpolate_at(df: DataFrame, grid_dt_seconds: int) -> DataFrame:
     """(series_id, ts, value): values lerped onto the grid of multiples
     of ``grid_dt_seconds`` covering each series' span. Grid points
     outside [first, last] of a series are not emitted (no
@@ -541,42 +483,12 @@ def interpolate_at(
         .orderBy(F.desc("_t_us"), F.asc("_is_grid"))
         .rowsBetween(W.unboundedPreceding, 0)
     )
-    if distributed_fill:
-        # both fills are per-series serial scans; the distributed twin
-        # (ops.ranking.grouped_bidi_fill) computes BOTH directions from
-        # ONE range-partitioned sort — one corpus shuffle instead of
-        # the two that back-to-back grouped_last_fill calls cost (the
-        # reverse-direction call re-partitions the already-filled
-        # frame). The bidi mirror's backward tie order differs from
-        # w_next's (t desc, is_grid asc) ONLY when a grid point lands
-        # exactly on a data point; there the forward fill already holds
-        # that data point (t0 == t), so the lerp degenerates to v0
-        # whatever _next is — except when no strictly-later point
-        # exists and the mirror leaves _next NULL, which the coalesce
-        # patch below resolves to the equal-t _prev (bit-equal to the
-        # window path; pinned in test_skew).
-        from my_weather_spark.ops.ranking import grouped_bidi_fill
-
-        filled = grouped_bidi_fill(
-            merged, [SERIES], ["_t_us", "_is_grid"], "_p", "_prev", "_next"
-        )
-        filled = filled.withColumn(
-            "_next",
-            F.coalesce(
-                F.col("_next"),
-                F.when(F.col("_prev.t") == F.col("_t_us"), F.col("_prev")),
-            ),
-        )
-        filled = filled.where(F.col("_is_grid") == 1).where(
-            F.col("_prev").isNotNull() & F.col("_next").isNotNull()
-        )
-    else:
-        filled = (
-            merged.withColumn("_prev", F.last("_p", ignorenulls=True).over(w_prev))
-            .withColumn("_next", F.last("_p", ignorenulls=True).over(w_next))
-            .where(F.col("_is_grid") == 1)
-            .where(F.col("_prev").isNotNull() & F.col("_next").isNotNull())
-        )
+    filled = (
+        merged.withColumn("_prev", F.last("_p", ignorenulls=True).over(w_prev))
+        .withColumn("_next", F.last("_p", ignorenulls=True).over(w_next))
+        .where(F.col("_is_grid") == 1)
+        .where(F.col("_prev").isNotNull() & F.col("_next").isNotNull())
+    )
     t, t0, v0, t1, v1 = (
         F.col("_t_us"),
         F.col("_prev.t"),
@@ -743,19 +655,14 @@ def asof_join(
     right: DataFrame,
     tolerance_seconds: int | None = None,
     right_value_col: str = "right_value",
-    distributed_fill: bool = False,
 ) -> DataFrame:
     # The right row forward-fills as ONE struct so (ts, value) always
     # pair from the SAME row — filling them independently would let a
     # NULL-valued right point contribute its timestamp while an older
     # point contributes its value, and the tolerance check would then
-    # validate the wrong timestamp. The right ts is carried as
-    # unix_micros, not a timestamp: the distributed fill path moves the
-    # struct through an Arrow object-array boundary carry, and the
-    # engine convention is "carry unix_micros, never timestamps"
-    # (grouped_lag/grouped_lead RAISE on timestamp carry cols; a struct
-    # field would bypass that guard). The tolerance check below already
-    # compares micros, so nothing rebuilds a timestamp.
+    # validate the wrong timestamp. The right ts rides as unix_micros
+    # because the tolerance check below compares micros, so nothing
+    # rebuilds a timestamp.
     l = left.select(
         SERIES, TS, VALUE, F.lit(1).alias("_is_l"),
         F.lit(None).cast("struct<rts_us:bigint,rv:double>").alias("_r"),
@@ -769,25 +676,15 @@ def asof_join(
     merged = l.unionByName(r)
     # Right rows sort before left rows at equal ts so "at-or-before"
     # includes the simultaneous right point.
-    if distributed_fill:
-        # the per-series fill window is the one serial scan here; the
-        # distributed twin range-partitions (series, ts) and carries
-        # one boundary struct per partition (ops.ranking)
-        from my_weather_spark.ops.ranking import grouped_last_fill
-
-        out = grouped_last_fill(
-            merged, [SERIES], [TS, "_is_l"], "_r", out_col="_r_ff"
-        ).where(F.col("_is_l") == 1)
-    else:
-        w = (
-            W.partitionBy(SERIES)
-            .orderBy(TS, "_is_l")
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        out = (
-            merged.withColumn("_r_ff", F.last("_r", ignorenulls=True).over(w))
-            .where(F.col("_is_l") == 1)
-        )
+    w = (
+        W.partitionBy(SERIES)
+        .orderBy(TS, "_is_l")
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    out = (
+        merged.withColumn("_r_ff", F.last("_r", ignorenulls=True).over(w))
+        .where(F.col("_is_l") == 1)
+    )
     rv = F.col("_r_ff.rv")
     if tolerance_seconds is not None:
         in_tol = (

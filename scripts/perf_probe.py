@@ -50,15 +50,8 @@ from my_weather_spark.session import get_spark
 # (Their windowed bases share the same oracle at ~1x; the twins pay
 # ranged-sort insurance by design.)
 SANCTIONED_SCALED = {
-    "asof_join_views_scaled",
-    "ccnet_ppl_buckets_scaled",
     "doc_length_percentiles_scaled",
-    "instant_interpolation_scaled",
-    "resample_time_weighted_scaled",
-    "running_total_scaled",
     "value_deciles_scaled",
-    "w1_lag_delta_scaled",
-    "w2_end_extension_scaled",
     "w5_sliding_count_scaled",
 }
 

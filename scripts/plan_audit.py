@@ -62,9 +62,8 @@ CARTESIAN_OK = {
     # reference vocab size V is a one-row broadcast crossjoin
     "lm_perplexity_scores",
     # same lm model CTEs (vocab-size one-row crossjoin) under the
-    # CCNet bucketing queries (windowed base + ranged twin)
+    # CCNet bucketing query
     "ccnet_ppl_buckets",
-    "ccnet_ppl_buckets_scaled",
     # corpus word-distribution map is a ONE-ROW broadcast crossjoin
     # onto the strata-cardinality frame (llm/text.strata_divergence)
     "source_jsd_divergence",
@@ -105,12 +104,6 @@ EXPECT: dict[str, list[str]] = {
     # benchmark/decontam probes broadcast the small side
     "decontam_flags": ["BroadcastHashJoin"],
     "lm_perplexity_scores": ["BroadcastHashJoin"],
-    # per-group tile stats must broadcast onto the ranked corpus. No
-    # expectation on the windowed base: its model broadcasts live
-    # INSIDE the scored-corpus localCheckpoint, invisible to the
-    # audited top-level plan (same reason dsir has no pushed-filter
-    # expectation).
-    "ccnet_ppl_buckets_scaled": ["BroadcastHashJoin"],
     # percentile targets must broadcast onto the ranked corpus
     # (the windowed base variant has no join — scaled twin only)
     "doc_length_percentiles_scaled": ["BroadcastHashJoin"],

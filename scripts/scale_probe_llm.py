@@ -40,7 +40,7 @@ QUERIES = [
     "approx_distinct_users",
     "line_boilerplate_clean",
     "stream_curated_front",
-    "ccnet_ppl_buckets_scaled",
+    "ccnet_ppl_buckets",
     "nb_quality_flags",
     "source_jsd_divergence",
     "doc_length_percentiles_scaled",

@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
 
-DEFAULT_QUERIES = ["q1_pricing_summary", "minhash_lsh_pairs", "running_total_scaled"]
+DEFAULT_QUERIES = ["q1_pricing_summary", "minhash_lsh_pairs", "running_total"]
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_T2", "/root/testdata/sf0.01")
 
 

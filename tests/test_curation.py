@@ -207,14 +207,6 @@ def test_pack_bins_invariants_and_scaled_parity(spark):
     df = spark.createDataFrame(rows, "doc_id long, source string, n_tok long")
     packed = packing.pack_bins(df, capacity=100, token_col="n_tok").collect()
 
-    # the scaled (ranged-sort) path is bit-identical to the window path
-    scaled = packing.pack_bins(
-        df, capacity=100, token_col="n_tok", scaled=True
-    ).collect()
-    assert sorted(map(tuple, scaled), key=lambda t: t[0]) == sorted(
-        map(tuple, packed), key=lambda t: t[0]
-    )
-
     zero = next(r for r in packed if r["doc_id"] == 240)
     assert zero["n_tokens"] == 0 and zero["size_class"] == 100
 
@@ -617,46 +609,10 @@ def test_ppl_buckets_match_window_and_null_for_short(spark):
     for did, r in by_id.items():
         if r["ppl"] is not None:
             assert r["bucket"] == want[did], did
-    # both dispatch arms produce identical rows (the _scaled twin rule)
-    base = lm.ppl_buckets(docs, ref, group_col="lang", distributed=False)
-    assert base.subtract(got).count() == 0 and got.subtract(base).count() == 0
     with pytest.raises(ValueError):
         lm.ppl_buckets(docs, ref, k=3, labels=("a", "b"))
     with pytest.raises(ValueError):
         lm.ppl_bucket_filter(docs, ref, keep=("head", "torso"))
-
-
-def test_ppl_buckets_distributed_attaches_bucket_in_place(spark):
-    # Regression guard for the r11 optimization: the distributed path
-    # must not re-attach the derived bucket column via a corpus-size
-    # join (the old shape planned a SortMergeJoin of two corpus-size
-    # frames by id); buckets are computed in place on the ranked rows
-    # and the scoreless docs union back.
-    from my_weather_spark.llm import lm
-
-    ref = spark.createDataFrame(
-        [(900, "the cat sat on the mat and the dog sat on the rug")],
-        "doc_id long, text string",
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat today", "en"),
-            (2, "the dog sat on the rug again", "en"),
-            (3, "zq glorp wibble frobnicate snork", "en"),
-            (4, "short", "en"),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    got = lm.ppl_buckets(docs, ref, group_col="lang", distributed=True)
-    # Execute first: under AQE the pre-action executedPlan is the
-    # initial adaptive plan; the guard must hold on what actually ran
-    # (AQE re-planning could otherwise reintroduce a join unseen).
-    got.collect()
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan, plan[:800]
-    assert "SortMergeJoin" not in plan, plan[:800]
-    assert "ShuffledHashJoin" not in plan, plan[:800]
-    assert "Union" in plan, plan[:800]
 
 
 def test_curate_corpus_ppl_bucket_stage(spark):

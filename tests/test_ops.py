@@ -431,3 +431,47 @@ def test_interpolate_at_on_point_and_bounds(spark):
     df = _series(spark, [(3, 30), (6, 60), (12, 0)])
     got = {r["ts"].second: r["value"] for r in ts_ops.interpolate_at(df, 3).collect()}
     assert got == {3: 30.0, 6: 60.0, 9: 30.0, 12: 0.0}
+
+
+def test_per_series_windows_keep_series_apart(spark):
+    # two series interleaved in time: each per-series lead/fill window
+    # pairs points only within its own series
+    a = _series(spark, [(0, 10), (30, 0), (120, 99)], "a")
+    b = _series(spark, [(10, 4), (50, 8), (60, 1)], "b")
+    both = a.unionByName(b)
+    twa = {
+        (r["series_id"], r["bucket_us"]): (r["twa_value"], r["covered_us"])
+        for r in ts_ops.resample_time_weighted(both, 60).collect()
+    }
+    # a: 10 over [0, 30), 0 over [30, 120); b: 4 over [10, 50), 8 over [50, 60)
+    assert twa == {
+        ("a", 0): (5.0, 60_000_000),
+        ("a", 60_000_000): (0.0, 60_000_000),
+        ("b", 0): (4.8, 50_000_000),
+    }
+
+    right = _series(spark, [(5, 50), (25, 52)], "a").unionByName(
+        _series(spark, [(15, 70)], "b")
+    )
+    left = _series(spark, [(20, 1)], "a").unionByName(
+        _series(spark, [(20, 2), (30, 3)], "b")
+    )
+    key = lambda r: (r["series_id"], r["value"])
+    got = sorted(ts_ops.asof_join(left, right).collect(), key=key)
+    assert [r["right_value"] for r in got] == [50.0, 70.0, 70.0]
+    got_tol = sorted(
+        ts_ops.asof_join(left, right, tolerance_seconds=12).collect(), key=key
+    )
+    assert [r["right_value"] for r in got_tol] == [None, 70.0, None]
+
+    pts = _series(spark, [(0, 0), (10, 100)], "a").unionByName(
+        _series(spark, [(5, 50), (15, 0)], "b")
+    )
+    lerp = {
+        (r["series_id"], r["ts"].second): r["value"]
+        for r in ts_ops.interpolate_at(pts, 5).collect()
+    }
+    assert lerp == {
+        ("a", 0): 0.0, ("a", 5): 50.0, ("a", 10): 100.0,
+        ("b", 5): 50.0, ("b", 10): 25.0, ("b", 15): 0.0,
+    }
